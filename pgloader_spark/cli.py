@@ -472,6 +472,8 @@ def main(argv: list[str] | None = None) -> int:
     )
     spark = get_spark("pgloader_spark", master=args.master)
     try:
+        from pgloader_spark.sources.pgwire import PGConn
+
         # BEFORE/AFTER LOAD DO/EXECUTE statements run against the
         # PostgreSQL target when there is one (api.lisp's
         # pgsql-execute-with-timing surface).  A legacy INI file may
@@ -482,17 +484,34 @@ def main(argv: list[str] | None = None) -> int:
             sql_runner = None
             tgt = one_cmd.target or args.target or ""
             if tgt.startswith(("postgresql://", "pgsql://", "postgres://")):
-                from pgloader_spark.sources.pgwire import PGConn
-
                 def sql_runner(stmt: str, tgt: str = tgt) -> None:
                     with PGConn(tgt) as conn:
                         conn.query(stmt)
+
+            # execute() lands a postgresql:// target (TARGET or the
+            # command's INTO) through this sink; a parquet dir after it
+            dest = args.target or one_cmd.target
+            is_pg = bool(dest) and dest.startswith(
+                ("postgresql://", "pgsql://", "postgres://")
+            )
+
+            def copy_sink(df, table, dest=dest, cmd=one_cmd) -> int:
+                from pgloader_spark.sources.pg_live import (
+                    quote_qualified,
+                    write_pg_copy,
+                )
+
+                if cmd.options.get("truncate"):
+                    with PGConn(dest) as conn:
+                        conn.query(f"TRUNCATE {quote_qualified(table)}")
+                return write_pg_copy(df, dest, table)
 
             ctx = ExecutionContext(
                 spark=spark,
                 root_dir=args.root_dir,
                 on_error_stop=args.on_error_stop,
                 sql_runner=sql_runner,
+                sink=copy_sink if is_pg else None,
             )
             if one_cmd.source_kind == "database":
                 from pgloader_spark.plans.executor import execute_database
@@ -500,43 +519,8 @@ def main(argv: list[str] | None = None) -> int:
                 reports.extend(execute_database(ctx, one_cmd))
                 continue
             report = execute(ctx, one_cmd)
-            # parquet-dir targets land the data; a postgresql:// target
-            # goes through the COPY sink (live server required); a
-            # .load file's own INTO target sinks the same way
-            dest = args.target or one_cmd.target
-            is_pg = bool(dest) and dest.startswith(
-                ("postgresql://", "pgsql://", "postgres://")
-            )
             if dest and not is_pg:
                 report.result.write.mode("overwrite").parquet(dest)
-            elif dest:
-                from pgloader_spark.sources.pg_live import (
-                    quote_qualified,
-                    write_pg_copy,
-                )
-
-                if one_cmd.options.get("truncate"):
-                    sql_runner(f"TRUNCATE {quote_qualified(report.table)}")
-                try:
-                    write_pg_copy(report.result, dest, report.table)
-                finally:
-                    # WITH drop indexes: rebuild even when the COPY
-                    # fails — the statements are duplicate-tolerant,
-                    # and a failed load must not leave the target
-                    # stripped of its indexes/constraints
-                    if report.post_load:
-                        from pgloader_spark.plans.orchestrate import (
-                            run_post_load,
-                        )
-
-                        run_post_load(
-                            dest, report.post_load, transactional=False
-                        )
-                        if report.post_load_file:
-                            try:
-                                os.unlink(report.post_load_file)
-                            except OSError:
-                                pass
             reports.append(report)
 
         if args.regress:

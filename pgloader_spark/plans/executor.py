@@ -8,16 +8,17 @@ rejects) -> sink. The reference's reader/writer thread kernels
 scheduling; its per-batch retry maps onto the validation-first design
 in ``pgloader_spark.sinks.validate``.
 
-The sink is pluggable: a ``postgresql://`` target goes through JDBC /
-COPY (needs a live server); tests and lake pipelines use the parquet
-sink or just take the returned DataFrame.
+The sink is pluggable (``ExecutionContext.sink``): the CLI's COPY
+into a ``postgresql://`` target is the sink, one Spark pass that counts
+rows as it writes; tests and lake pipelines pass a parquet sink or
+take the returned DataFrame.
 """
 
 from __future__ import annotations
 
 import logging
 import os
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 log = logging.getLogger(__name__)
 
@@ -45,11 +46,6 @@ class LoadReport:
     loaded: int = 0
     errors: int = 0
     result: DataFrame | None = None
-    # index-rebuild DDL deferred past a caller-side sink (WITH drop
-    # indexes when the caller, not ctx.sink, lands the data); the
-    # on-disk recovery copy survives a crash before the rebuild runs
-    post_load: list[str] = field(default_factory=list)
-    post_load_file: str | None = None
     # where the load actually landed (qualified PG table or parquet
     # path) — recorded by the writer so verify load never re-derives it
     target_path: str | None = None
@@ -66,11 +62,11 @@ class ExecutionContext:
     root_dir: str = "/tmp/pgloader_spark"
     on_error_stop: bool = False
     sql_runner: object | None = None  # callable(sql) for BEFORE/AFTER LOAD DO
-    # callable(df, table) that runs the terminal action (parquet write,
-    # COPY, ...).  When provided, execute() counts rows DURING that
-    # action via an Observation — one distributed pass, the way the
-    # reference counts while it COPYs (src/pg-copy/copy-rows-in-
-    # batch.lisp) — instead of cache + count + caller-side sink.
+    # callable(df, table) that runs the terminal action (the CLI's
+    # TRUNCATE + COPY, a parquet write, ...).  execute() counts rows
+    # DURING that action via an Observation — one distributed pass,
+    # the way the reference counts while it COPYs (src/pg-copy/copy-
+    # rows-in-batch.lisp) — instead of cache + count for the caller.
     sink: object | None = None
 
 
@@ -370,15 +366,12 @@ def apply_column_casts(df: DataFrame, cmd: LoadCommand) -> DataFrame:
 
 
 def validation_rules(cmd: LoadCommand) -> list[ColumnRule]:
-    """Target column types -> try-cast validity rules (§7 step 7)."""
-    rules = []
-    for col in cmd.columns:
-        base = (col.cast_to or "").split("(")[0].strip().lower()
-        cast = _PG_TO_SPARK_CAST.get(base)
-        if cast:
-            # projection already cast; validation is on the projected col
-            rules.append(ColumnRule(col.name))
-    return rules
+    """Rules that can reject a projected row (§7 step 7): none for a
+    file load.  ``project()`` already try-casts typed columns (a failed
+    cast is NULL there) and a file load knows no NOT NULL or CHECK of
+    its target, so a per-column rule would be ``lit(True)`` — and cost
+    ``load_with_isolation`` a cache()+count() scan for zero rejects."""
+    return []
 
 
 def execute_archive(ctx: ExecutionContext, cmd: LoadCommand) -> list[LoadReport]:
@@ -1225,7 +1218,7 @@ def execute(ctx: ExecutionContext, cmd: LoadCommand) -> LoadReport:
     if rules:
         res = load_with_isolation(
             projected,
-            [ColumnRule(r.name, not_null=False) for r in rules],
+            rules,
             ctx.root_dir,
             "pgloader",
             table,
@@ -1236,13 +1229,15 @@ def execute(ctx: ExecutionContext, cmd: LoadCommand) -> LoadReport:
     else:
         good = projected
 
-    # WITH drop indexes: drop before the load, rebuild after — the
-    # reference's kernel for fast data-only loads into existing tables
+    # WITH drop indexes: drop before the sink's load, rebuild after —
+    # the reference's kernel for fast data-only loads into existing
+    # tables.  Without a sink nothing lands here, so nothing drops.
     rebuild_stmts: list[str] = []
     rebuild_file = None
     tgt_dsn = cmd.target or ""
     if (
-        (cmd.options.get("drop_indexes") or cmd.options.get("reindex"))
+        ctx.sink is not None
+        and (cmd.options.get("drop_indexes") or cmd.options.get("reindex"))
         and tgt_dsn.startswith(("postgresql://", "pgsql://", "postgres://"))
     ):
         from pgloader_spark.sources.pg_live import capture_and_drop_indexes
@@ -1282,7 +1277,7 @@ def execute(ctx: ExecutionContext, cmd: LoadCommand) -> LoadReport:
             report.loaded = good.count()
             report.result = good
     finally:
-        if rebuild_stmts and ctx.sink is not None:
+        if rebuild_stmts:
             # the data landed (or failed) inside this call: rebuild
             # NOW, success or not — the statements are
             # duplicate-tolerant (IF NOT EXISTS / run_post_load skips
@@ -1297,13 +1292,6 @@ def execute(ctx: ExecutionContext, cmd: LoadCommand) -> LoadReport:
                 except OSError:
                     pass
     report.read = report.loaded + report.errors
-
-    if rebuild_stmts and ctx.sink is None:
-        # the caller sinks report.result itself (cli write_pg_copy):
-        # hand the rebuild DDL back to run after that COPY; the
-        # recovery script stays on disk until the caller succeeds
-        report.post_load = rebuild_stmts
-        report.post_load_file = rebuild_file
 
     for stmt in cmd.after_load:
         if ctx.sql_runner:

@@ -164,6 +164,26 @@ def plan_range_partitions(
     )
 
 
+def range_frame(spark: SparkSession, ranges: list[tuple[int, int]]) -> DataFrame:
+    """``lo long, hi long``, one row per read range, in
+    min(len(ranges), defaultParallelism) partitions — Spark's own
+    LocalTableScanExec rule.  ``createDataFrame`` would slice even one
+    range into defaultParallelism partitions, each empty one still a
+    Python read task; literal arrays indexed by ``spark.range`` ids add
+    no shuffle and no Python stage."""
+    from pyspark.sql import functions as F
+
+    k = max(min(len(ranges), spark.sparkContext.defaultParallelism), 1)
+    return spark.range(len(ranges), numPartitions=k).select(
+        *[
+            F.array(*[F.lit(r[i]) for r in ranges])
+            .cast("array<long>")[F.col("id")]
+            .alias(name)
+            for i, name in enumerate(("lo", "hi"))
+        ]
+    )
+
+
 def minmax_probe_sql(table: str, pk: str) -> str:
     """`SELECT min(pk), max(pk)+1 FROM t` (mysql.lisp:35-44) — run
     through a 1-row JDBC read before planning ranges."""

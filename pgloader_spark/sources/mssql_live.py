@@ -29,6 +29,7 @@ from pgloader_spark.sources.jdbc import (
     mssql_fkeys_sql,
     mssql_indexes_sql,
     mssql_select_expr,
+    range_frame,
 )
 from pgloader_spark.sources.mysql_live import ROWS_PER_RANGE, _convert_cell
 from pgloader_spark.sources.tdswire import MsConn, parse_ms_dsn
@@ -209,7 +210,7 @@ def read_mssql_table(
         where = f" WHERE [{pk}] >= {{lo}} AND [{pk}] < {{hi}}"
     if not ranges:
         return spark.createDataFrame([], schema)
-    ranges_df = spark.createDataFrame(ranges, "lo long, hi long")
+    ranges_df = range_frame(spark, ranges)
 
     def fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         with MsConn(dsn) as conn:

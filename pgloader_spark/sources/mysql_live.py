@@ -46,6 +46,7 @@ from pgloader_spark.sources.jdbc import (
     mysql_row_counts_sql,
     mysql_select_expr,
     mysql_table_comments_sql,
+    range_frame,
 )
 from pgloader_spark.sources.mywire import MyConn, parse_my_dsn
 
@@ -250,7 +251,7 @@ def read_mysql_table(
         where = f" WHERE `{pk}` >= {{lo}} AND `{pk}` < {{hi}}"
     if not ranges:
         return spark.createDataFrame([], schema)
-    ranges_df = spark.createDataFrame(ranges, "lo long, hi long")
+    ranges_df = range_frame(spark, ranges)
 
     def fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         with MyConn(dsn) as conn:

@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from pgloader_spark.casting import CastEngine, SourceField
-from pgloader_spark.sources.jdbc import pg_columns_sql
+from pgloader_spark.sources.jdbc import pg_columns_sql, range_frame
 from pgloader_spark.sources.pgwire import PGConn, PGError
 
 PAGES_PER_RANGE = 1000  # matches plan_ctid_partitions
@@ -287,9 +287,12 @@ def _ctid_ranges(dsn: str, table: str, pages_per_range: int) -> list[tuple[int, 
         where = f"oid = '{rc}'::regclass"
     else:
         where = f"relname = '{table}'"
+    # the main fork's current size, not relpages: that planner estimate
+    # stays 0 until a VACUUM/ANALYZE, and a just-loaded table must split
     with PGConn(dsn) as conn:
         _, rows = conn.query(
-            f"SELECT GREATEST(relpages, 1) FROM pg_class WHERE {where}"
+            "SELECT GREATEST(pg_relation_size(oid) / "
+            f"current_setting('block_size')::int, 1) FROM pg_class WHERE {where}"
         )
     relpages = int(rows[0][0]) if rows else 1
     n = max(math.ceil(relpages / pages_per_range), 1)
@@ -358,7 +361,7 @@ def read_pg_table(
     names = [f.name for f in fields]
     spark_types = [sf.dataType for sf in schema.fields]
     ranges = _ctid_ranges(dsn, table, pages_per_range)
-    ranges_df = spark.createDataFrame(ranges, "lo long, hi long")
+    ranges_df = range_frame(spark, ranges)
     col_list = ", ".join(f'"{n}"' for n in names)
     from_ref = quote_qualified(table)
 
@@ -718,15 +721,15 @@ def write_pg_copy(
             conn.copy_in(stmt, chunks())
         yield pd.DataFrame({"n": [total], "rejects": [[]], "errs": [[]]})
 
-    from pyspark.sql import functions as F
-
     out = lines.mapInPandas(
         sink, "n long, rejects array<string>, errs array<string>"
     )
-    if not isolate:
-        return out.agg(F.sum("n")).collect()[0][0] or 0
+    # one result row per COPY stream, summed on the driver: an agg()
+    # here would add an exchange stage to every COPY
     rows = out.collect()
     loaded = sum(r["n"] for r in rows)
+    if not isolate:
+        return loaded
     all_rej = [x for r in rows for x in (r["rejects"] or [])]
     all_errs = [x for r in rows for x in (r["errs"] or [])]
     if reject_dir is not None and all_rej:

@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from pgloader_spark.casting import CastEngine, SourceField
+from pgloader_spark.sources.jdbc import range_frame
 
 ROWS_PER_RANGE = 10_000  # reference *rows-per-range*, src/params.lisp:142
 
@@ -200,7 +201,7 @@ def read_sqlite_table(
     ranges = _rowid_ranges(db_path, table, rows_per_range)
     if not ranges:
         return spark.createDataFrame([], schema)
-    ranges_df = spark.createDataFrame(ranges, "lo long, hi long")
+    ranges_df = range_frame(spark, ranges)
 
     col_list = ", ".join(f'"{n}"' for n in names)
 

@@ -2060,6 +2060,83 @@ def test_load_csv_with_drop_indexes_rebuilds(seeded, spark, tmp_path):
             c.query("INSERT INTO di_people VALUES (1, 'dup')")
 
 
+def test_load_csv_with_drop_indexes_rebuilds_after_failed_copy(
+    seeded, spark, tmp_path
+):
+    """A COPY the server rejects fails the load (so `python -m
+    pgloader_spark` exits non-zero), and WITH drop indexes still
+    rebuilds the index and PK and removes its recovery script."""
+    from pgloader_spark.cli import main
+
+    with PGConn(seeded) as c:
+        c.query("DROP TABLE IF EXISTS dif_people")
+        c.query("CREATE TABLE dif_people (id bigint PRIMARY KEY, name text)")
+        c.query("CREATE INDEX dif_people_name_idx ON dif_people (name)")
+    csv = tmp_path / "dif.csv"
+    # untyped target columns: 'not-a-number' reaches the server's COPY
+    csv.write_text("1,ada\nnot-a-number,grace\n")
+    load = tmp_path / "dif.load"
+    load.write_text(
+        f"LOAD CSV FROM '{csv}' (id, name)\n"
+        f"  INTO {seeded}?dif_people (id, name)\n"
+        "  WITH truncate, drop indexes, fields terminated by ',';\n"
+    )
+    root = tmp_path / "rej"
+    with pytest.raises(Exception, match="22P02"):
+        main([str(load), "--master", "local[4]", "--root-dir", str(root)])
+    assert list(root.rglob("*.rebuild.sql")) == []
+    with PGConn(seeded) as c:
+        _, rows = c.query(
+            "SELECT indexname FROM pg_indexes WHERE tablename = 'dif_people'"
+            " ORDER BY indexname"
+        )
+        assert [r[0] for r in rows] == ["dif_people_name_idx", "dif_people_pkey"]
+        c.query("INSERT INTO dif_people VALUES (1, 'ada')")
+        with pytest.raises(PGError, match="23505"):
+            c.query("INSERT INTO dif_people VALUES (1, 'dup')")
+
+
+def test_cli_load_csv_runs_at_most_two_spark_jobs(
+    seeded, spark, tmp_path, capsys
+):
+    """A file LOAD into PostgreSQL is one Spark pass: the COPY counts
+    rows while it writes, with no cache()+count() and no validate scan
+    before it.  A value that fails its cast still loads as NULL."""
+    import json
+
+    from pgloader_spark.cli import main
+
+    with PGConn(seeded) as c:
+        c.query("DROP TABLE IF EXISTS jc_people")
+        c.query("CREATE TABLE jc_people (id bigint, name text, score numeric)")
+    csv = tmp_path / "jc.csv"
+    csv.write_text(
+        "".join(f"{i},user_{i},{i}.5\n" for i in range(1, 101)) + "x,bad,1\n"
+    )
+    load = tmp_path / "jc.load"
+    load.write_text(
+        f"LOAD CSV FROM '{csv}' (id, name, score)\n"
+        f"  INTO {seeded}?jc_people (id bigint, name text, score numeric)\n"
+        "  WITH fields terminated by ',';\n"
+    )
+    sc = spark.sparkContext
+    capsys.readouterr()
+    sc.setJobGroup("cli_csv_load", "cli LOAD CSV job count")
+    try:
+        assert main([str(load), "--master", "local[4]", "--summary", "json",
+                     "--root-dir", str(tmp_path / "rej")]) == 0
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("cli_csv_load")) <= 2
+    (table,) = json.loads(capsys.readouterr().out)["tables"]
+    assert (table["read"], table["loaded"], table["errors"]) == (101, 101, 0)
+    with PGConn(seeded) as c:
+        _, rows = c.query(
+            "SELECT count(*), count(id), sum(score)::int FROM jc_people"
+        )
+        assert rows == [("101", "100", "5101")]
+
+
 def test_run_parallel_indexes_builds_concurrently(seeded):
     """The idx-kernel shape: N CREATE INDEX statements across
     concurrent connections, duplicate-tolerant per statement."""

@@ -86,6 +86,24 @@ def test_range_partitioned_read(spark, db):
     assert sorted(r["id"] for r in df.collect()) == [1, 2, 3, 4]
 
 
+@pytest.mark.parametrize("rows_per_range", [1, 2, 10])
+def test_read_has_one_partition_per_range_and_none_empty(
+    spark, db, rows_per_range
+):
+    """min(ranges, defaultParallelism) read tasks, none of them empty:
+    every empty partition would still cost a Python reader task."""
+    n_ranges = -(-4 // rows_per_range)  # rowids 1..4
+    df = read_sqlite_table(spark, db, "people", rows_per_range=rows_per_range)
+    sizes = df.rdd.glom().map(len).collect()
+    assert len(sizes) == min(n_ranges, spark.sparkContext.defaultParallelism)
+    assert 0 not in sizes and sum(sizes) == 4
+
+
+def test_read_empty_table(spark, db):
+    df = read_sqlite_table(spark, db, "empty_t")
+    assert df.count() == 0 and df.columns == ["x", "y"]
+
+
 def test_migrate_whole_db(spark, db, tmp_path):
     counts = migrate_sqlite_to_parquet(spark, db, str(tmp_path / "lake"))
     assert counts == {"people": 4, "empty_t": 0}
