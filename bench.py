@@ -100,7 +100,7 @@ if _SUBSET:
 
 def bench_etl_load(spark, sf_dir: str, workdir: str) -> dict | None:
     """Full pgloader-parity path: CSV -> parse LOAD command -> project/
-    cast -> validate -> parquet sink.  The reference's headline number
+    cast -> parquet sink.  The reference's headline number
     is single-node COPY throughput (BASELINE.md: 550-694k rows/s);
     this measures the same rows/sec for our engine end-to-end.
 
@@ -144,7 +144,7 @@ LOAD CSV
     ctx = ExecutionContext(
         spark=spark,
         root_dir=workdir,
-        sink=lambda df, _t: df.write.mode("overwrite").parquet(sink),
+        sink=lambda df, _t, _cmd: df.write.mode("overwrite").parquet(sink),
     )
     parsed = parse_load(cmd)
     execute(ctx, parsed)  # warm pass (codegen), same as query headlines

@@ -396,7 +396,12 @@ def main(argv: list[str] | None = None) -> int:
         load_plugin_file(plugin)
 
     from pgloader_spark.parsers import loadcmd as _loadcmd
-    from pgloader_spark.plans.executor import ExecutionContext, execute
+    from pgloader_spark.plans.executor import (
+        ExecutionContext,
+        execute,
+        execute_archive,
+        execute_database,
+    )
     from pgloader_spark.session import get_spark
 
     context_vars = _load_context_vars(args.context) if args.context else {}
@@ -488,40 +493,38 @@ def main(argv: list[str] | None = None) -> int:
                     with PGConn(tgt) as conn:
                         conn.query(stmt)
 
-            # execute() lands a postgresql:// target (TARGET or the
-            # command's INTO) through this sink; a parquet dir after it
+            # execute() lands rows through the sink: the COPY sink for a
+            # postgresql:// target (TARGET or the command's INTO), a
+            # parquet write for a directory
             dest = args.target or one_cmd.target
-            is_pg = bool(dest) and dest.startswith(
-                ("postgresql://", "pgsql://", "postgres://")
-            )
-
-            def copy_sink(df, table, dest=dest, cmd=one_cmd) -> int:
-                from pgloader_spark.sources.pg_live import (
-                    quote_qualified,
-                    write_pg_copy,
-                )
-
-                if cmd.options.get("truncate"):
-                    with PGConn(dest) as conn:
-                        conn.query(f"TRUNCATE {quote_qualified(table)}")
-                return write_pg_copy(df, dest, table)
-
             ctx = ExecutionContext(
                 spark=spark,
                 root_dir=args.root_dir,
                 on_error_stop=args.on_error_stop,
                 sql_runner=sql_runner,
-                sink=copy_sink if is_pg else None,
             )
-            if one_cmd.source_kind == "database":
-                from pgloader_spark.plans.executor import execute_database
+            if dest and dest.startswith(
+                ("postgresql://", "pgsql://", "postgres://")
+            ):
+                from pgloader_spark.sources.pg_live import file_load_sink
 
+                ctx.sink = file_load_sink(dest, ctx.root_dir, ctx.on_error_stop)
+            elif dest:
+                # an archive's nested tables each get their own directory
+                per_table = one_cmd.source_kind == "archive"
+
+                def parquet_sink(df, table, _cmd, dest: str = dest,
+                                 per_table: bool = per_table) -> None:
+                    path = os.path.join(dest, table) if per_table else dest
+                    df.write.mode("overwrite").parquet(path)
+
+                ctx.sink = parquet_sink
+            if one_cmd.source_kind == "database":
                 reports.extend(execute_database(ctx, one_cmd))
-                continue
-            report = execute(ctx, one_cmd)
-            if dest and not is_pg:
-                report.result.write.mode("overwrite").parquet(dest)
-            reports.append(report)
+            elif one_cmd.source_kind == "archive":
+                reports.extend(execute_archive(ctx, one_cmd))
+            else:
+                reports.append(execute(ctx, one_cmd))
 
         if args.regress:
             from pgloader_spark.plans.regress import (

@@ -2,20 +2,20 @@
 
 The Spark re-expression of pgloader's lifecycle (SURVEY §3.4): parsed
 ``LoadCommand`` -> source read (one distributed scan) -> projection
-(one ``select`` of Column expressions) -> validation split (good /
-rejects) -> sink. The reference's reader/writer thread kernels
-(``src/load/copy-data.lisp:61-156``) map onto Spark's own task
-scheduling; its per-batch retry maps onto the validation-first design
-in ``pgloader_spark.sinks.validate``.
+(one ``select`` of Column expressions) -> sink. The reference's
+reader/writer thread kernels (``src/load/copy-data.lisp:61-156``) map
+onto Spark's own task scheduling; its per-batch retry with reject
+files lives in the COPY sink (``sources.pg_live.file_load_sink``).
 
-The sink is pluggable (``ExecutionContext.sink``): the CLI's COPY
-into a ``postgresql://`` target is the sink, one Spark pass that counts
-rows as it writes; tests and lake pipelines pass a parquet sink or
-take the returned DataFrame.
+The sink is pluggable (``ExecutionContext.sink``): a file load into a
+``postgresql://`` target lands through ``file_load_sink``, one Spark
+pass that counts rows as it writes; tests and lake pipelines pass a
+parquet sink or take the returned DataFrame.
 """
 
 from __future__ import annotations
 
+import contextlib
 import logging
 import os
 from dataclasses import dataclass
@@ -27,7 +27,8 @@ from pyspark.sql import functions as F
 
 from pgloader_spark.parsers.loadcmd import LoadCommand
 from pgloader_spark.parsers.sexp import compile_using
-from pgloader_spark.sinks.validate import ColumnRule, load_with_isolation
+# unused here; kept importable because perfbench/trace.py wraps it by name
+from pgloader_spark.sinks.validate import load_with_isolation  # noqa: F401
 from pgloader_spark.sources.copytext import CopyOptions, read_copy_text
 from pgloader_spark.sources.csv import CsvOptions, read_csv, read_inline
 from pgloader_spark.sources.db3 import read_dbf
@@ -62,11 +63,12 @@ class ExecutionContext:
     root_dir: str = "/tmp/pgloader_spark"
     on_error_stop: bool = False
     sql_runner: object | None = None  # callable(sql) for BEFORE/AFTER LOAD DO
-    # callable(df, table) that runs the terminal action (the CLI's
-    # TRUNCATE + COPY, a parquet write, ...).  execute() counts rows
-    # DURING that action via an Observation — one distributed pass,
-    # the way the reference counts while it COPYs (src/pg-copy/copy-
-    # rows-in-batch.lisp) — instead of cache + count for the caller.
+    # callable(df, table, cmd) that runs the terminal action (the CLI's
+    # file_load_sink COPY, a parquet write, ...); cmd is the command
+    # being landed, so a LOAD ARCHIVE's nested WITH/SET options apply.
+    # execute() counts rows DURING that action via an Observation — one
+    # distributed pass, the way the reference counts while it COPYs
+    # (src/pg-copy/copy-rows-in-batch.lisp) — instead of cache + count.
     sink: object | None = None
 
 
@@ -365,15 +367,6 @@ def apply_column_casts(df: DataFrame, cmd: LoadCommand) -> DataFrame:
     return out
 
 
-def validation_rules(cmd: LoadCommand) -> list[ColumnRule]:
-    """Rules that can reject a projected row (§7 step 7): none for a
-    file load.  ``project()`` already try-casts typed columns (a failed
-    cast is NULL there) and a file load knows no NOT NULL or CHECK of
-    its target, so a per-column rule would be ``lit(True)`` — and cost
-    ``load_with_isolation`` a cache()+count() scan for zero rejects."""
-    return []
-
-
 def execute_archive(ctx: ExecutionContext, cmd: LoadCommand) -> list[LoadReport]:
     """LOAD ARCHIVE: fetch/expand the archive, then run each nested
     command with its FILENAME MATCHING resolved against the extracted
@@ -484,6 +477,48 @@ def _resolve_script(path: str, cmd: LoadCommand) -> str:
     base = cmd.source_dir or "."
     cand = os.path.join(base, path)
     return cand if os.path.exists(cand) else path
+
+
+@contextlib.contextmanager
+def _indexes_dropped(dsn: str, tables: list[str], root_dir: str):
+    """WITH drop indexes / reindex, the reference's kernel for fast
+    loads into existing tables: drop every index of TABLES, run the
+    block's load, then rebuild them whether the load succeeded or not.
+    Each table's rebuild DDL is written to ``<root_dir>/pgloader/
+    <table>.rebuild.sql`` before the load runs, so a crash before the
+    rebuild leaves it on disk instead of a target silently stripped of
+    its keys; a finished rebuild removes the file."""
+    from pgloader_spark.plans.orchestrate import run_post_load
+    from pgloader_spark.sources.pg_live import capture_and_drop_indexes
+    from pgloader_spark.sources.pgwire import PGError
+
+    rebuilds: list[tuple[list[str], str]] = []
+    try:
+        for table in tables:
+            try:
+                stmts = capture_and_drop_indexes(dsn, table)
+            except PGError as exc:  # the table may not exist yet
+                log.warning("drop indexes: %s: %s", table, exc)
+                continue
+            if not stmts:
+                continue
+            rdir = os.path.join(root_dir, "pgloader")
+            os.makedirs(rdir, exist_ok=True)
+            path = os.path.join(rdir, f"{table.replace('.', '_')}.rebuild.sql")
+            with open(path, "w") as fh:
+                fh.write("\n".join(stmts) + "\n")
+            rebuilds.append((stmts, path))
+        yield
+    finally:
+        for stmts, path in rebuilds:
+            # duplicate-tolerant (run_post_load skips existing objects),
+            # so a partial load never leaves the target without keys
+            errors: list[str] = []
+            run_post_load(dsn, stmts, transactional=False, errors=errors)
+            for err in errors:
+                log.warning("index rebuild: %s", err)
+            with contextlib.suppress(OSError):
+                os.unlink(path)
 
 
 def _apply_cast_transforms(df, fields, engine) -> "DataFrame":
@@ -972,62 +1007,47 @@ def execute_database(ctx: ExecutionContext, cmd: LoadCommand) -> list[LoadReport
                         )
                         break
 
-    # WITH drop indexes: for loads into pre-existing tables (data
-    # only / create no tables), drop every target index first and
-    # rebuild after the COPY — bulk-load-then-index beats maintaining
-    # btrees row by row (the reference's drop-indexes kernel)
-    rebuild_stmts: list[str] = []
-    # WITH reindex = drop indexes before + create indexes after
-    # (docs/ref/pgsql.rst) — same kernel, one more spelling
-    if pg_target and (
+    # WITH drop indexes (or its spelling WITH reindex): for loads into
+    # pre-existing tables (data only / create no tables), drop every
+    # target index first and rebuild after the COPYs, failed or not —
+    # bulk-load-then-index beats maintaining btrees row by row
+    drop_indexes = pg_target and (
         cmd.options.get("drop_indexes") or cmd.options.get("reindex")
-    ):
-        from pgloader_spark.sources.pg_live import capture_and_drop_indexes
-
-        for tbl in tables.values():
-            try:
-                rebuild_stmts += capture_and_drop_indexes(
-                    target, _qualified(tbl)
-                )
-            except Exception as exc:  # noqa: BLE001 — table may not exist yet
-                log.warning("drop indexes: %s: %s", tbl.name, exc)
-
+    )
     reports: list[LoadReport] = []
     # WITH workers = N (copy-data.lisp:64-66 / migrate-database.lisp
     # worker-pool knob) -> concurrent COPY streams per table
     n_writers = int(cmd.options.get("workers", 0)) or None
     schema_only = bool(cmd.options.get("schema_only"))
-    for t in catalog_fields:
-        tbl = tables[t]
-        if schema_only:
-            reports.append(LoadReport(table=tbl.name, read=0, loaded=0))
-            continue
-        df = _read(ctx.spark, src_loc, t, engine=engine)
-        df = _apply_cast_transforms(df, catalog_fields[t], engine)
-        df = df.toDF(*[c.name for c in tbl.columns])
-        if pg_target:
-            # one distributed pass: the COPY sink reports rows loaded
-            tgt_path = _qualified(tbl)
-            n = write_pg_copy(df, target, tgt_path, n_writers=n_writers)
-        else:
-            tgt_path = os.path.join(target or ctx.root_dir, f"{tbl.name}.parquet")
-            df.write.mode("overwrite").parquet(tgt_path)
-            n = ctx.spark.read.parquet(tgt_path).count()
-        reports.append(
-            LoadReport(
-                table=tbl.name, read=n, loaded=n, result=df, target_path=tgt_path
+    with _indexes_dropped(
+        target,
+        [_qualified(tbl) for tbl in tables.values()] if drop_indexes else [],
+        ctx.root_dir,
+    ):
+        for t in catalog_fields:
+            tbl = tables[t]
+            if schema_only:
+                reports.append(LoadReport(table=tbl.name, read=0, loaded=0))
+                continue
+            df = _read(ctx.spark, src_loc, t, engine=engine)
+            df = _apply_cast_transforms(df, catalog_fields[t], engine)
+            df = df.toDF(*[c.name for c in tbl.columns])
+            if pg_target:
+                # one distributed pass: the COPY sink reports rows loaded
+                tgt_path = _qualified(tbl)
+                n = write_pg_copy(df, target, tgt_path, n_writers=n_writers)
+            else:
+                tgt_path = os.path.join(
+                    target or ctx.root_dir, f"{tbl.name}.parquet"
+                )
+                df.write.mode("overwrite").parquet(tgt_path)
+                n = ctx.spark.read.parquet(tgt_path).count()
+            reports.append(
+                LoadReport(
+                    table=tbl.name, read=n, loaded=n, result=df,
+                    target_path=tgt_path,
+                )
             )
-        )
-
-    if rebuild_stmts:
-        from pgloader_spark.plans.orchestrate import run_post_load
-
-        rebuild_errors: list[str] = []
-        run_post_load(
-            target, rebuild_stmts, transactional=False, errors=rebuild_errors
-        )
-        for err in rebuild_errors:
-            log.warning("index rebuild: %s", err)
 
     # complete phase (complete-pgsql-database): PK promotion ->
     # indexes -> FKs -> sequence resets -> CHECKs -> triggers ->
@@ -1214,83 +1234,34 @@ def execute(ctx: ExecutionContext, cmd: LoadCommand) -> LoadReport:
     if cmd.cast_rules:
         projected = apply_column_casts(projected, cmd)
 
-    rules = validation_rules(cmd)
-    if rules:
-        res = load_with_isolation(
-            projected,
-            rules,
-            ctx.root_dir,
-            "pgloader",
-            table,
-            on_error_stop=ctx.on_error_stop or bool(cmd.options.get("on_error_stop")),
-        )
-        good = res.good
-        report.errors = res.error_count or 0
-    else:
-        good = projected
-
-    # WITH drop indexes: drop before the sink's load, rebuild after —
-    # the reference's kernel for fast data-only loads into existing
-    # tables.  Without a sink nothing lands here, so nothing drops.
-    rebuild_stmts: list[str] = []
-    rebuild_file = None
+    # WITH drop indexes: drop before the sink's load, rebuild after.
+    # Without a sink nothing lands here, so nothing drops.
     tgt_dsn = cmd.target or ""
-    if (
+    drop_indexes = (
         ctx.sink is not None
         and (cmd.options.get("drop_indexes") or cmd.options.get("reindex"))
         and tgt_dsn.startswith(("postgresql://", "pgsql://", "postgres://"))
-    ):
-        from pgloader_spark.sources.pg_live import capture_and_drop_indexes
-
-        rebuild_stmts = capture_and_drop_indexes(tgt_dsn, table)
-        if rebuild_stmts:
-            # recovery script FIRST: a crash anywhere before the
-            # rebuild leaves the DDL on disk instead of a target
-            # silently stripped of its indexes and constraints
-            rdir = os.path.join(ctx.root_dir, "pgloader")
-            os.makedirs(rdir, exist_ok=True)
-            rebuild_file = os.path.join(
-                rdir, f"{table.replace('.', '_')}.rebuild.sql"
-            )
-            with open(rebuild_file, "w") as fh:
-                fh.write(";\n".join(rebuild_stmts) + ";\n")
-
-    try:
+    )
+    with _indexes_dropped(tgt_dsn, [table] if drop_indexes else [], ctx.root_dir):
         if ctx.sink is not None:
             from pyspark.sql import Observation
 
             obs = Observation()
-            good = good.observe(obs, F.count(F.lit(1)).alias("n"))
-            ret = ctx.sink(good, table)
+            rows = projected.observe(obs, F.count(F.lit(1)).alias("n"))
+            ret = ctx.sink(rows, table, cmd)
             n_seen = int(obs.get["n"])
             if isinstance(ret, int):
-                # a counting sink (write_pg_copy with reject isolation)
-                # reports what the server actually accepted; the delta is
-                # server-side rejects (fk-reject.load, overflow.load)
+                # a counting sink (the COPY sink) reports what the
+                # server actually accepted; the delta is server-side
+                # rejects (fk-reject.load, overflow.load)
                 report.loaded = ret
-                report.errors += n_seen - ret
+                report.errors = n_seen - ret
             else:
                 report.loaded = n_seen
-            report.result = good
+            report.result = rows
         else:
-            good = good.cache()
-            report.loaded = good.count()
-            report.result = good
-    finally:
-        if rebuild_stmts:
-            # the data landed (or failed) inside this call: rebuild
-            # NOW, success or not — the statements are
-            # duplicate-tolerant (IF NOT EXISTS / run_post_load skips
-            # already-existing objects), so a partial load never
-            # leaves the target without its indexes
-            from pgloader_spark.plans.orchestrate import run_post_load
-
-            run_post_load(tgt_dsn, rebuild_stmts, transactional=False)
-            if rebuild_file:
-                try:
-                    os.unlink(rebuild_file)
-                except OSError:
-                    pass
+            report.result = projected.cache()
+            report.loaded = report.result.count()
     report.read = report.loaded + report.errors
 
     for stmt in cmd.after_load:

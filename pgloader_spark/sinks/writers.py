@@ -1,118 +1,13 @@
-"""Writer paths: PostgreSQL COPY (fast path), JDBC, and file sinks.
+"""File sinks: COPY-format text files (``psql \\copy`` bulk loads
+and reject files), parquet, and JSONL corpus exports.
 
-The reference writes through the COPY wire protocol in explicit
-per-batch transactions (``src/pg-copy/copy-rows-in-batch.lisp:31-117``,
-``copy-db-write.lisp:24-35``), batching 25k rows / 20 MB
-(``src/params.lisp:133-136``). Spark equivalents:
-
-- ``write_jdbc``: the baseline ``df.write.jdbc`` — one executor task
-  per partition, ``batchsize`` plays the 25k-row role.
-- ``write_copy``: the COPY entry point — a psycopg/psycopg2 COPY per
-  partition when a driver is installed, else it delegates to the
-  Arrow-batched ``sources.pg_live.write_pg_copy`` (the measured fast
-  path on the stdlib wire client; see its docstring and PERF.md).
-- ``write_copy_files``: COPY-format text files (for air-gapped bulk
-  load via ``psql \\copy``), fully distributed.
-
-psycopg (or psycopg2) is not in this container: the driver path is
-import-gated; the partition callback is factored so its logic is
-testable without a server.
+The PostgreSQL COPY sink is ``sources.pg_live.write_pg_copy``; a file
+``LOAD`` lands through ``sources.pg_live.file_load_sink``.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 from pyspark.sql import DataFrame
-
-DEFAULT_BATCH_ROWS = 25_000  # *copy-batch-rows*, src/params.lisp:133
-
-
-def write_jdbc(
-    df: DataFrame,
-    url: str,
-    table: str,
-    mode: str = "append",
-    batch_rows: int = DEFAULT_BATCH_ROWS,
-    num_partitions: int | None = None,
-    **options: str,
-) -> None:
-    """Baseline JDBC writer. ``numPartitions`` caps concurrent
-    connections (the reference's `workers` knob)."""
-    writer = df.write.format("jdbc").option("url", url).option("dbtable", table)
-    writer = writer.option("batchsize", str(batch_rows))
-    if num_partitions:
-        writer = writer.option("numPartitions", str(num_partitions))
-    for k, v in options.items():
-        writer = writer.option(k, v)
-    writer.mode(mode).save()
-
-
-def _copy_partition(rows: Iterator, dsn: str, table: str, columns: list[str]) -> None:
-    """Executor-side: stream one partition through COPY.  Driver
-    preference: psycopg (binary pipeline) > psycopg2 > the stdlib wire
-    client (``sources/pgwire.py`` — always available).  All imports are
-    deferred so the module loads with none of them installed."""
-    quoted = ", ".join('"' + c + '"' for c in columns)
-    copy_stmt = f'COPY {table} ({quoted}) FROM STDIN'
-    try:
-        import psycopg  # noqa: PLC0415
-
-        conn = psycopg.connect(dsn)
-        with conn, conn.cursor() as cur, cur.copy(copy_stmt) as copy:
-            for row in rows:
-                copy.write_row(tuple(row))
-        return
-    except ImportError:
-        pass
-
-    from pgloader_spark.sinks.copy_encode import encode_rows_to_copy  # noqa: PLC0415
-
-    try:
-        import psycopg2  # noqa: PLC0415
-    except ImportError:
-        from pgloader_spark.sources.pgwire import PGConn  # noqa: PLC0415
-
-        buf = encode_rows_to_copy(rows).getvalue().encode("utf-8")
-        if buf:
-            with PGConn(dsn) as conn:
-                conn.copy_in(copy_stmt, [buf])
-        return
-
-    conn = psycopg2.connect(dsn)
-    try:
-        cur = conn.cursor()
-        buf = encode_rows_to_copy(rows)
-        cur.copy_expert(copy_stmt, buf)
-        conn.commit()
-    finally:
-        conn.close()
-
-
-def write_copy(df: DataFrame, dsn: str, table: str) -> None:
-    """COPY into PostgreSQL, one stream per partition.
-
-    Routing: with a real driver installed (psycopg's binary pipeline,
-    or psycopg2's copy_expert) each partition streams through it; with
-    neither — this container, and any stock Spark image — the write
-    delegates to ``sources.pg_live.write_pg_copy``, whose JVM-side
-    text encode + Arrow batching runs ~40x faster than iterating
-    Python rows over the same stdlib wire client (measured 18k vs
-    780k rows/s per stream, PERF.md).  One public COPY entry point,
-    always the fast path for the environment.
-    """
-    try:
-        import psycopg  # noqa: F401, PLC0415
-    except ImportError:
-        try:
-            import psycopg2  # noqa: F401, PLC0415
-        except ImportError:
-            from pgloader_spark.sources.pg_live import write_pg_copy  # noqa: PLC0415
-
-            write_pg_copy(df, dsn, table)
-            return
-    columns = list(df.columns)
-    df.foreachPartition(lambda it: _copy_partition(it, dsn, table, columns))
 
 
 def write_copy_files(df: DataFrame, path: str, num_files: int | None = None) -> None:

@@ -27,6 +27,7 @@ escape tables as the file-based COPY source, so a PG read and a
 from __future__ import annotations
 
 import math
+import os
 from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
@@ -34,7 +35,7 @@ from pyspark.sql import types as T
 
 from pgloader_spark.casting import CastEngine, SourceField
 from pgloader_spark.sources.jdbc import pg_columns_sql, range_frame
-from pgloader_spark.sources.pgwire import PGConn, PGError
+from pgloader_spark.sources.pgwire import PGConn, PGError, _parse_dsn
 
 PAGES_PER_RANGE = 1000  # matches plan_ctid_partitions
 
@@ -608,9 +609,14 @@ def write_pg_copy(
     n_writers: int | None = None,
     settings: dict | None = None,
     reject_dir: str | None = None,
-    on_error_stop: bool = False,
 ) -> int:
     """COPY FROM STDIN, one stream per partition; returns rows loaded.
+
+    Without ``reject_dir`` each partition is one streaming COPY and the
+    first row the server rejects fails the write.  With it, COPY runs
+    per Arrow batch and a failed batch retries around its bad rows
+    (``_copy_batch_isolating``), which are appended to
+    ``<reject_dir>/<table>.dat`` with their errors in ``.log``.
 
     Three design rules make this the fast path:
     - The COPY text encode happens JVM-SIDE (``to_copy_lines`` — the
@@ -655,7 +661,7 @@ def write_pg_copy(
     )
     lines = _cap_copy_streams(to_copy_lines(df), n_writers)
 
-    isolate = reject_dir is not None or on_error_stop
+    isolate = reject_dir is not None
 
     def sink(batches: Iterator) -> Iterator:
         import pandas as pd  # noqa: PLC0415
@@ -695,10 +701,6 @@ def write_pg_copy(
                             conn, stmt, list(b["line"])
                         )
                         total += n
-                        if r and on_error_stop:
-                            raise RuntimeError(
-                                f"on error stop: {r[0][1]}"
-                            )
                         for line, e in r:
                             rej.append(line)
                             errs.append(e)
@@ -732,24 +734,55 @@ def write_pg_copy(
         return loaded
     all_rej = [x for r in rows for x in (r["rejects"] or [])]
     all_errs = [x for r in rows for x in (r["errs"] or [])]
-    if reject_dir is not None and all_rej:
-        import os as _os
-
-        _os.makedirs(reject_dir, exist_ok=True)
+    if all_rej:
+        os.makedirs(reject_dir, exist_ok=True)
         base = table.replace(".", "_")
-        with open(_os.path.join(reject_dir, f"{base}.dat"), "a") as fh:
+        with open(os.path.join(reject_dir, f"{base}.dat"), "a") as fh:
             fh.write("\n".join(all_rej) + "\n")
-        with open(_os.path.join(reject_dir, f"{base}.log"), "a") as fh:
+        with open(os.path.join(reject_dir, f"{base}.log"), "a") as fh:
             fh.write("\n".join(all_errs) + "\n")
     return loaded
+
+
+def file_load_sink(dsn: str, root_dir: str, on_error_stop: bool = False):
+    """The COPY sink of a file ``LOAD`` into PostgreSQL: returns
+    ``sink(df, table, cmd) -> rows loaded`` for
+    ``ExecutionContext.sink``.  Per command it
+    - creates the target from the frame's schema for sources that carry
+      their own (DBF, IXF; ``ensure_pg_table``),
+    - runs ``TRUNCATE`` under ``WITH truncate``,
+    - aligns the frame to the live target (``align_to_target``, with
+      the command's ``WITH date format``),
+    - COPYs it with the command's ``SET`` clause on every session.
+
+    Error policy, the reference's two (copy-from-queue.lisp:41-69):
+    ``on_error_stop`` or ``WITH on error stop`` streams fail-fast; the
+    default retries per batch around rejected rows and writes them to
+    ``<root_dir>/<target db>/<table>.dat`` and ``.log``."""
+    reject_dir = os.path.join(root_dir, _parse_dsn(dsn)["database"])
+
+    def sink(df: DataFrame, table: str, cmd) -> int:
+        if cmd.source_kind in ("dbf", "ixf"):
+            ensure_pg_table(dsn, table, df.schema)
+        if cmd.options.get("truncate"):
+            with PGConn(dsn) as conn:
+                conn.query(f"TRUNCATE {quote_qualified(table)}")
+        df = align_to_target(
+            df, dsn, table, date_format=cmd.options.get("date_format")
+        )
+        stop = on_error_stop or bool(cmd.options.get("on_error_stop"))
+        return write_pg_copy(
+            df, dsn, table, settings=cmd.gucs,
+            reject_dir=None if stop else reject_dir,
+        )
+
+    return sink
 
 
 def migrate_pg_to_parquet(
     spark: SparkSession, dsn: str, out_dir: str, engine: CastEngine | None = None
 ) -> dict[str, int]:
     """Whole-database migration: introspect, cast, read, write parquet."""
-    import os
-
     counts: dict[str, int] = {}
     eng = engine or CastEngine(source_kind="pgsql")
     for table in introspect_pg(dsn):

@@ -288,9 +288,9 @@ def migrate_sqlite_to_parquet(
     """Whole-database migration: introspect, cast, read, write parquet.
 
     The parquet lake stands in for the PG COPY target (same plan
-    shape; swap the sink for ``sinks.writers.write_copy`` against a
-    live server). Returns per-table row counts — the reference's
-    summary-table numbers.
+    shape; ``LOAD DATABASE`` into a live server swaps the sink for
+    ``sources.pg_live.write_pg_copy``). Returns per-table row counts —
+    the reference's summary-table numbers.
     """
     import os
 

@@ -175,3 +175,35 @@ def test_summary_filename_with_extension(spark, tmp_path):
                  "--root-dir", str(root), "--summary", "sum.copy"]) == 0
     line = (root / "sum.copy").read_text().strip().split("\n")[0]
     assert line.split("\t")[0] == "people" and line.split("\t")[2] == "2"
+
+
+def test_cli_load_archive_to_parquet_dir(spark, tmp_path):
+    """LOAD ARCHIVE into a directory target: each nested table lands in
+    its own parquet directory under it."""
+    import zipfile
+
+    from pgloader_spark.cli import main
+
+    z = tmp_path / "geo.zip"
+    with zipfile.ZipFile(z, "w") as zf:
+        zf.writestr("locations.csv", "1,paris\n2,berlin\n")
+        zf.writestr("blocks.csv", "16909060,16909070,1\n")
+    load = tmp_path / "geo.load"
+    load.write_text(
+        f"""
+LOAD ARCHIVE
+   FROM {z}
+   INTO postgresql:///db
+   LOAD CSV FROM FILENAME MATCHING ~/locations\\.csv/ (locid, city)
+        INTO postgresql:///db?location (locid int, city)
+        WITH fields terminated by ','
+    AND LOAD CSV FROM FILENAME MATCHING ~/blocks\\.csv/ (lo, hi, locid)
+        INTO postgresql:///db?blocks (lo, hi, locid int)
+        WITH fields terminated by ',';
+"""
+    )
+    out = tmp_path / "lake"
+    assert main([str(load), str(out), "--master", "local[2]",
+                 "--root-dir", str(tmp_path / "root")]) == 0
+    assert spark.read.parquet(str(out / "location")).count() == 2
+    assert spark.read.parquet(str(out / "blocks")).count() == 1

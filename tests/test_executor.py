@@ -137,7 +137,7 @@ LOAD CSV
     ctx = ExecutionContext(
         spark=spark,
         root_dir=str(tmp_path),
-        sink=lambda df, _t: df.write.mode("overwrite").parquet(str(out)),
+        sink=lambda df, _t, _cmd: df.write.mode("overwrite").parquet(str(out)),
     )
     report = execute(ctx, cmd)
     assert report.loaded == 1000

@@ -135,20 +135,6 @@ def test_migrate_pg_to_parquet(seeded, spark, tmp_path):
 # --------------------------------------------------- distributed COPY sink
 
 
-def test_write_copy_sink_via_wire(seeded, spark):
-    from pgloader_spark.sinks.writers import write_copy
-    from pgloader_spark.sources.pgwire import PGConn
-
-    with PGConn(seeded) as c:
-        c.query("DROP TABLE IF EXISTS loaded")
-        c.query("CREATE TABLE loaded (id bigint, tag text)")
-    df = spark.range(500).selectExpr("id", "concat('tag_', id) AS tag").repartition(4)
-    write_copy(df, seeded, "loaded")  # psycopg absent -> stdlib wire path
-    with PGConn(seeded) as c:
-        _, rows = c.query("SELECT COUNT(*), MIN(tag), MAX(id) FROM loaded")
-        assert rows == [("500", "tag_0", "499")]
-
-
 def test_load_database_end_to_end(seeded, spark):
     """The pgloader flagship shape: LOAD DATABASE FROM postgresql://
     -> introspect -> cast -> partitioned read -> COPY sink into a new
@@ -280,7 +266,7 @@ def test_reference_csv_load_file_runs_verbatim(seeded, spark, tmp_path):
             spark=spark,
             root_dir=str(tmp_path),
             sql_runner=lambda sql: runner_conn.query(sql),
-            sink=lambda df, t: write_pg_copy(df, seeded, t),
+            sink=lambda df, t, _cmd: write_pg_copy(df, seeded, t),
         )
         report = execute(ctx, cmd)
     finally:
@@ -295,6 +281,16 @@ def test_reference_csv_load_file_runs_verbatim(seeded, spark, tmp_path):
     assert {r[2] for r in rows} == {"GB", "US", "CA"}
 
 
+def _delete_if_exists(dsn, table):
+    """Empty TABLE when it exists (a DBF/IXF target is created by the
+    sink itself on first load)."""
+    q = ".".join('"' + p + '"' for p in table.split("."))
+    with PGConn(dsn) as c:
+        _, rows = c.query(f"SELECT to_regclass('{q}')")
+        if rows[0][0] is not None:
+            c.query(f"DELETE FROM {q}")
+
+
 def _run_ref_scenario(name, seeded, spark, tmp_path):
     """Execute the reference's own test/<name>.load against a live
     PostgreSQL, verbatim except (a) the connection string points at
@@ -305,11 +301,7 @@ def _run_ref_scenario(name, seeded, spark, tmp_path):
 
     from pgloader_spark.parsers.loadcmd import parse_load
     from pgloader_spark.plans.executor import ExecutionContext, execute
-    from pgloader_spark.sources.pg_live import (
-        align_to_target,
-        ensure_pg_table,
-        write_pg_copy,
-    )
+    from pgloader_spark.sources.pg_live import file_load_sink
     from pgloader_spark.sources.pgwire import PGConn
 
     ref = f"/root/reference/test/{name}.load"
@@ -330,23 +322,11 @@ def _run_ref_scenario(name, seeded, spark, tmp_path):
     cmd = parse_load(text)
 
     loaded_tables: list[str] = []
+    copy_sink = file_load_sink(seeded, str(tmp_path))
 
-    def sink(df, table):
-        ensure_pg_table(seeded, table, df.schema)
-        df = align_to_target(
-            df, seeded, table, date_format=cmd.options.get("date_format")
-        )
-        with PGConn(seeded) as c:
-            c.query(
-                "DELETE FROM "
-                + ".".join('"' + p + '"' for p in table.split("."))
-            )
-        # the command's SET clause (datestyle etc.) applies on every
-        # COPY connection, like the reference's per-connection GUCs;
-        # reject_dir turns on the per-batch retry-with-isolation path
-        n = write_pg_copy(
-            df, seeded, table, settings=cmd.gucs, reject_dir=str(tmp_path)
-        )
+    def sink(df, table, cmd):
+        _delete_if_exists(seeded, table)  # scenarios re-run in one module
+        n = copy_sink(df, table, cmd)
         loaded_tables.append(table)
         return n
 
@@ -608,8 +588,7 @@ def test_reference_bossa_archive_live_http(seeded, spark, tmp_path):
         pytest.skip("reference corpus not available")
     from pgloader_spark.parsers.loadcmd import parse_load
     from pgloader_spark.plans.executor import ExecutionContext, execute_archive
-    from pgloader_spark.sources.pg_live import align_to_target, ensure_pg_table
-    from pgloader_spark.sources.pg_live import write_pg_copy
+    from pgloader_spark.sources.pg_live import file_load_sink
 
     # the reference's Makefile preloads bossa.sql into the target
     with PGConn(seeded) as c:
@@ -667,18 +646,13 @@ def test_reference_bossa_archive_live_http(seeded, spark, tmp_path):
         text = text.replace("postgresql:///stocks", seeded)
         cmd = parse_load(text)
 
-        def sink(df, table):
-            ensure_pg_table(seeded, table, df.schema)
-            df = align_to_target(df, seeded, table)
-            return write_pg_copy(df, seeded, table, reject_dir=str(tmp_path))
-
         runner = PGConn(seeded)
         try:
             ctx = ExecutionContext(
                 spark=spark,
                 root_dir=str(tmp_path),
                 sql_runner=lambda sql: runner.query(sql),
-                sink=sink,
+                sink=file_load_sink(seeded, str(tmp_path)),
             )
             reports = execute_archive(ctx, cmd)
         finally:
@@ -732,8 +706,7 @@ def test_reference_census_places_archive_fixed(seeded, spark, tmp_path):
         pytest.skip("reference corpus not available")
     from pgloader_spark.parsers.loadcmd import parse_load
     from pgloader_spark.plans.executor import ExecutionContext, execute_archive
-    from pgloader_spark.sources.pg_live import align_to_target, ensure_pg_table
-    from pgloader_spark.sources.pg_live import write_pg_copy
+    from pgloader_spark.sources.pg_live import file_load_sink
 
     def fixed_line(usps, fips, code, name, lat, lon):
         # layout per the command: name at 9 width 64, numerics after
@@ -762,18 +735,13 @@ def test_reference_census_places_archive_fixed(seeded, spark, tmp_path):
         text = text.replace("postgresql:///pgloader", seeded)
         cmd = parse_load(text)
 
-        def sink(df, table):
-            ensure_pg_table(seeded, table, df.schema)
-            df = align_to_target(df, seeded, table)
-            return write_pg_copy(df, seeded, table, reject_dir=str(tmp_path))
-
         runner = PGConn(seeded)
         try:
             ctx = ExecutionContext(
                 spark=spark,
                 root_dir=str(tmp_path),
                 sql_runner=lambda sql: runner.query(sql),
-                sink=sink,
+                sink=file_load_sink(seeded, str(tmp_path)),
             )
             reports = execute_archive(ctx, cmd)
         finally:
@@ -799,8 +767,7 @@ def test_reference_bossa_all_single_table(seeded, spark, tmp_path):
         pytest.skip("reference corpus not available")
     from pgloader_spark.parsers.loadcmd import parse_load
     from pgloader_spark.plans.executor import ExecutionContext, execute_archive
-    from pgloader_spark.sources.pg_live import align_to_target, ensure_pg_table
-    from pgloader_spark.sources.pg_live import write_pg_copy
+    from pgloader_spark.sources.pg_live import file_load_sink
 
     with PGConn(seeded) as c:
         c.query("DROP TABLE IF EXISTS intf_derivatives")
@@ -828,18 +795,13 @@ def test_reference_bossa_all_single_table(seeded, spark, tmp_path):
         text = text.replace("postgresql:///stocks", seeded)
         cmd = parse_load(text)
 
-        def sink(df, table):
-            ensure_pg_table(seeded, table, df.schema)
-            df = align_to_target(df, seeded, table)
-            return write_pg_copy(df, seeded, table, reject_dir=str(tmp_path))
-
         runner = PGConn(seeded)
         try:
             ctx = ExecutionContext(
                 spark=spark,
                 root_dir=str(tmp_path),
                 sql_runner=lambda sql: runner.query(sql),
-                sink=sink,
+                sink=file_load_sink(seeded, str(tmp_path)),
             )
             reports = execute_archive(ctx, cmd)
         finally:
@@ -869,11 +831,7 @@ def test_reference_dbf_zip_over_http(seeded, spark, tmp_path):
     try:
         from pgloader_spark.parsers.loadcmd import parse_load
         from pgloader_spark.plans.executor import ExecutionContext, execute
-        from pgloader_spark.sources.pg_live import (
-            align_to_target,
-            ensure_pg_table,
-            write_pg_copy,
-        )
+        from pgloader_spark.sources.pg_live import file_load_sink
 
         text = open(ref, encoding="utf-8").read()
         text = text.replace(
@@ -884,18 +842,13 @@ def test_reference_dbf_zip_over_http(seeded, spark, tmp_path):
         text = text.replace("postgresql:///pgloader", seeded)
         cmd = parse_load(text)
 
-        def sink(df, table):
-            ensure_pg_table(seeded, table, df.schema)
-            df = align_to_target(df, seeded, table)
-            return write_pg_copy(df, seeded, table, reject_dir=str(tmp_path))
-
         runner = PGConn(seeded)
         try:
             ctx = ExecutionContext(
                 spark=spark,
                 root_dir=str(tmp_path),
                 sql_runner=lambda sql: runner.query(sql),
-                sink=sink,
+                sink=file_load_sink(seeded, str(tmp_path)),
             )
             report = execute(ctx, cmd)
         finally:
@@ -926,11 +879,7 @@ def test_reference_archive_geolite_ip4r(seeded, spark, tmp_path):
     from pgloader_spark.parsers.loadcmd import parse_load
     from pgloader_spark.plans.executor import ExecutionContext, execute_archive
     from pgloader_spark.plans.ip4r_shim import wrap_sql_runner
-    from pgloader_spark.sources.pg_live import (
-        align_to_target,
-        ensure_pg_table,
-        write_pg_copy,
-    )
+    from pgloader_spark.sources.pg_live import file_load_sink
 
     loc_hdr = (
         "Copyright (c) 2012 MaxMind Inc.  All Rights Reserved.\n"
@@ -969,18 +918,13 @@ def test_reference_archive_geolite_ip4r(seeded, spark, tmp_path):
         )
         cmd = parse_load(text)
 
-        def sink(df, table):
-            ensure_pg_table(seeded, table, df.schema)
-            df = align_to_target(df, seeded, table)
-            return write_pg_copy(df, seeded, table, reject_dir=str(tmp_path))
-
         runner = PGConn(seeded)
         try:
             ctx = ExecutionContext(
                 spark=spark,
                 root_dir=str(tmp_path),
                 sql_runner=wrap_sql_runner(lambda sql: runner.query(sql)),
-                sink=sink,
+                sink=file_load_sink(seeded, str(tmp_path)),
             )
             reports = execute_archive(ctx, cmd)
         finally:
@@ -1421,7 +1365,7 @@ def test_reference_negative_scenario_fails_like_reference(seeded, spark, tmp_pat
             spark=spark,
             root_dir=str(tmp_path),
             sql_runner=lambda sql: runner.query(sql),
-            sink=lambda df, t: write_pg_copy(df, seeded, t),
+            sink=lambda df, t, _cmd: write_pg_copy(df, seeded, t),
         )
         with pytest.raises(Exception) as exc:
             execute(ctx, cmd)
@@ -2079,7 +2023,8 @@ def test_load_csv_with_drop_indexes_rebuilds_after_failed_copy(
     load.write_text(
         f"LOAD CSV FROM '{csv}' (id, name)\n"
         f"  INTO {seeded}?dif_people (id, name)\n"
-        "  WITH truncate, drop indexes, fields terminated by ',';\n"
+        "  WITH truncate, drop indexes, on error stop,\n"
+        "       fields terminated by ',';\n"
     )
     root = tmp_path / "rej"
     with pytest.raises(Exception, match="22P02"):
@@ -2135,6 +2080,178 @@ def test_cli_load_csv_runs_at_most_two_spark_jobs(
             "SELECT count(*), count(id), sum(score)::int FROM jc_people"
         )
         assert rows == [("101", "100", "5101")]
+
+
+def test_cli_load_isolates_rejected_row_into_reject_files(
+    seeded, spark, tmp_path, capsys
+):
+    """Without on error stop the COPY retries around the row the server
+    rejects: the load succeeds, the summary counts the reject, and the
+    row and its error land in <root-dir>/<db>/<table>.dat and .log."""
+    import json
+
+    from pgloader_spark.cli import main
+
+    with PGConn(seeded) as c:
+        c.query("DROP TABLE IF EXISTS rj_people")
+        c.query("CREATE TABLE rj_people (id bigint, name text)")
+    csv = tmp_path / "rj.csv"
+    csv.write_text("1,ada\nnot-a-number,grace\n")
+    load = tmp_path / "rj.load"
+    load.write_text(
+        f"LOAD CSV FROM '{csv}' (id, name)\n"
+        f"  INTO {seeded}?rj_people (id, name)\n"
+        "  WITH fields terminated by ',';\n"
+    )
+    root = tmp_path / "root"
+    capsys.readouterr()
+    assert main([str(load), "--master", "local[4]", "--summary", "json",
+                 "--root-dir", str(root)]) == 0
+    (table,) = json.loads(capsys.readouterr().out)["tables"]
+    assert (table["read"], table["loaded"], table["errors"]) == (2, 1, 1)
+    assert _pg_table_rows(seeded, "rj_people") == [("1", "ada")]
+    assert (root / "postgres" / "rj_people.dat").read_text() == (
+        "not-a-number\tgrace\n"
+    )
+    assert "22P02" in (root / "postgres" / "rj_people.log").read_text()
+
+
+def test_cli_load_applies_set_clause_to_copy_session(seeded, spark, tmp_path):
+    """The command's SET clause is in effect on the COPY session: a
+    column defaulting to current_setting('application_name') records
+    the value the command set."""
+    from pgloader_spark.cli import main
+
+    with PGConn(seeded) as c:
+        c.query("DROP TABLE IF EXISTS set_people")
+        c.query(
+            "CREATE TABLE set_people (id int, name text,"
+            " app text DEFAULT current_setting('application_name'))"
+        )
+    csv = tmp_path / "set.csv"
+    csv.write_text("1,ada\n2,grace\n")
+    load = tmp_path / "set.load"
+    load.write_text(
+        f"LOAD CSV FROM '{csv}' (id, name)\n"
+        f"  INTO {seeded}?set_people (id, name)\n"
+        "  WITH fields terminated by ','\n"
+        "  SET application_name to 'pgl_set_test';\n"
+    )
+    assert main([str(load), "--master", "local[4]",
+                 "--root-dir", str(tmp_path / "rej")]) == 0
+    assert _pg_table_rows(seeded, "set_people", order_by="id") == [
+        ("1", "ada", "pgl_set_test"), ("2", "grace", "pgl_set_test"),
+    ]
+
+
+def test_cli_load_date_format_and_positional_columns(seeded, spark, tmp_path):
+    """The COPY sink aligns the frame to the live target: WITH date
+    format parses values PostgreSQL cannot, and a load with no field
+    list (positional _c0.._cN columns) takes the target's names."""
+    from pgloader_spark.cli import main
+
+    with PGConn(seeded) as c:
+        c.query("DROP TABLE IF EXISTS df_events")
+        c.query("CREATE TABLE df_events (id int, ts timestamp)")
+        c.query("DROP TABLE IF EXISTS pos_people")
+        c.query("CREATE TABLE pos_people (id int, name text)")
+    dates = tmp_path / "dates.csv"
+    dates.write_text("1,31/01/2024 10:30:00\n2,15/02/2024 08:00:00\n")
+    (tmp_path / "dates.load").write_text(
+        f"LOAD CSV FROM '{dates}' (id, ts)\n"
+        f"  INTO {seeded}?df_events (id, ts)\n"
+        "  WITH fields terminated by ',',\n"
+        "       date format 'DD/MM/YYYY HH24:MI:SS';\n"
+    )
+    people = tmp_path / "pos.csv"
+    people.write_text("1,ada\n2,grace\n")
+    (tmp_path / "pos.load").write_text(
+        f"LOAD CSV FROM '{people}'\n"
+        f"  INTO {seeded}?pos_people\n"
+        "  WITH fields terminated by ',';\n"
+    )
+    for name in ("dates", "pos"):
+        assert main([str(tmp_path / f"{name}.load"), "--master", "local[4]",
+                     "--root-dir", str(tmp_path / "rej")]) == 0
+    assert _pg_table_rows(seeded, "df_events", order_by="id") == [
+        ("1", "2024-01-31 10:30:00"), ("2", "2024-02-15 08:00:00"),
+    ]
+    assert _pg_table_rows(seeded, "pos_people", order_by="id") == [
+        ("1", "ada"), ("2", "grace"),
+    ]
+
+
+def test_cli_load_archive_runs_nested_commands(seeded, spark, tmp_path):
+    """The CLI runs LOAD ARCHIVE: the zip expands, and each nested
+    command lands through the COPY sink with its own WITH options
+    (truncate replaces the stale row)."""
+    import zipfile
+
+    from pgloader_spark.cli import main
+
+    with PGConn(seeded) as c:
+        c.query("DROP TABLE IF EXISTS arc_people")
+        c.query("CREATE TABLE arc_people (id int, name text)")
+        c.query("INSERT INTO arc_people VALUES (99, 'stale')")
+    zpath = tmp_path / "people.zip"
+    with zipfile.ZipFile(zpath, "w") as z:
+        z.writestr("arc_people.csv", "1,ada\n2,grace\n")
+    load = tmp_path / "arc.load"
+    load.write_text(
+        f"LOAD ARCHIVE\n"
+        f"  FROM {zpath}\n"
+        f"  INTO {seeded}\n"
+        "  LOAD CSV FROM FILENAME MATCHING ~/arc_people\\.csv/ (id, name)\n"
+        f"       INTO {seeded}?arc_people (id, name)\n"
+        "       WITH truncate, fields terminated by ',';\n"
+    )
+    assert main([str(load), "--master", "local[4]",
+                 "--root-dir", str(tmp_path / "rej")]) == 0
+    assert _pg_table_rows(seeded, "arc_people", order_by="id") == [
+        ("1", "ada"), ("2", "grace"),
+    ]
+
+
+def test_load_database_drop_indexes_rebuilds_after_failed_copy(
+    seeded, spark, tmp_path
+):
+    """LOAD DATABASE WITH data only, drop indexes: a COPY the server
+    rejects fails the migration, and the target still gets its index
+    and PK back, with no recovery script left behind."""
+    import sqlite3
+
+    from pgloader_spark.parsers.loadcmd import parse_load
+    from pgloader_spark.plans.executor import ExecutionContext, execute_database
+
+    src = tmp_path / "src.db"
+    con = sqlite3.connect(src)
+    con.execute("CREATE TABLE dbi_people (id integer PRIMARY KEY, name text)")
+    con.execute("INSERT INTO dbi_people VALUES (1, 'ada')")
+    con.commit()
+    con.close()
+    with PGConn(seeded) as c:
+        c.query("DROP TABLE IF EXISTS dbi_people")
+        # name is int on the target: 'ada' fails the COPY
+        c.query("CREATE TABLE dbi_people (id bigint PRIMARY KEY, name int)")
+        c.query("CREATE INDEX dbi_people_name_idx ON dbi_people (name)")
+    cmd = parse_load(
+        f"LOAD DATABASE FROM sqlite://{src} INTO {seeded}\n"
+        "  WITH data only, drop indexes\n"
+        "  INCLUDING ONLY TABLE NAMES MATCHING 'dbi_people';\n"
+    )
+    root = tmp_path / "root"
+    with pytest.raises(Exception, match="22P02"):
+        execute_database(ExecutionContext(spark=spark, root_dir=str(root)), cmd)
+    assert list(root.rglob("*.rebuild.sql")) == []
+    with PGConn(seeded) as c:
+        _, rows = c.query(
+            "SELECT indexname FROM pg_indexes WHERE tablename = 'dbi_people'"
+            " ORDER BY indexname"
+        )
+        assert [r[0] for r in rows] == ["dbi_people_name_idx", "dbi_people_pkey"]
+        c.query("INSERT INTO dbi_people VALUES (1, 2)")
+        with pytest.raises(PGError, match="23505"):
+            c.query("INSERT INTO dbi_people VALUES (1, 3)")
 
 
 def test_run_parallel_indexes_builds_concurrently(seeded):

@@ -1,6 +1,7 @@
-"""Sink tests: validation-first reject isolation + COPY encoding
-(reference: src/pg-copy/copy-retry-batch.lisp semantics,
-src/utils/reject.lisp, src/pg-copy/copy-format.lisp)."""
+"""Sink tests: validation-first reject isolation + the COPY text
+encoder the live wire and reject files use (reference:
+src/pg-copy/copy-retry-batch.lisp semantics, src/utils/reject.lisp,
+src/pg-copy/copy-format.lisp)."""
 
 from __future__ import annotations
 
@@ -9,13 +10,13 @@ import os
 
 import pytest
 
-from pgloader_spark.sinks.copy_encode import encode_rows_to_copy, encode_value
 from pgloader_spark.sinks.validate import (
     ColumnRule,
     load_with_isolation,
     split_valid,
     write_rejects,
 )
+from pgloader_spark.sources.copytext import to_copy_lines
 
 
 @pytest.fixture()
@@ -89,17 +90,18 @@ def test_all_valid_no_reject_files(spark, tmp_path):
     assert not os.path.exists(tmp_path / "db" / "t.dat")
 
 
-def test_encode_value():
-    assert encode_value(None) == "\\N"
-    assert encode_value(True) == "t"
-    assert encode_value("a\tb\nc") == "a\\tb\\nc"
-    assert encode_value(b"\xde\xad") == "\\\\xdead"
-    assert encode_value(42) == "42"
+def test_encode_value(spark):
+    df = spark.createDataFrame(
+        [(None, True, "a\tb\nc", bytearray(b"\xde\xad"), 42)],
+        "n string, b boolean, s string, raw binary, i int",
+    )
+    (line,) = [r.line for r in to_copy_lines(df).collect()]
+    assert line.split("\t") == ["\\N", "true", "a\\tb\\nc", "\\\\xdead", "42"]
 
 
-def test_encode_rows():
-    buf = encode_rows_to_copy([(1, None, "x\ty")])
-    assert buf.read() == "1\t\\N\tx\\ty\n"
+def test_encode_rows(spark):
+    df = spark.createDataFrame([(1, None, "x\ty")], "a int, b string, c string")
+    assert [r.line for r in to_copy_lines(df).collect()] == ["1\t\\N\tx\\ty"]
 
 
 def test_copy_stream_cap(spark):

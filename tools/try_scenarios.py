@@ -56,11 +56,7 @@ def start_pg():
 def run_scenario(name, dsn, spark, tmp_path):
     from pgloader_spark.parsers.loadcmd import parse_load
     from pgloader_spark.plans.executor import ExecutionContext, execute
-    from pgloader_spark.sources.pg_live import (
-        align_to_target,
-        ensure_pg_table,
-        write_pg_copy,
-    )
+    from pgloader_spark.sources.pg_live import file_load_sink
 
     ref = f"/root/reference/test/{name}.load"
     text = open(ref, encoding="utf-8", errors="replace").read()
@@ -84,20 +80,15 @@ def run_scenario(name, dsn, spark, tmp_path):
     cmd = parse_load(text)
 
     loaded_tables = []
+    copy_sink = file_load_sink(dsn, str(tmp_path))
 
-    def sink(df, table):
-        ensure_pg_table(dsn, table, df.schema)
-        df = align_to_target(
-            df, dsn, table, date_format=cmd.options.get("date_format")
-        )
+    def sink(df, table, cmd):
+        q = ".".join('"' + p + '"' for p in table.split("."))
         with PGConn(dsn) as c:
-            c.query(
-                "DELETE FROM "
-                + ".".join('"' + p + '"' for p in table.split("."))
-            )
-        n = write_pg_copy(
-            df, dsn, table, settings=cmd.gucs, reject_dir=str(tmp_path)
-        )
+            # a DBF/IXF target is created by the sink on first load
+            if c.query(f"SELECT to_regclass('{q}')")[1][0][0] is not None:
+                c.query(f"DELETE FROM {q}")
+        n = copy_sink(df, table, cmd)
         loaded_tables.append(table)
         return n
 
