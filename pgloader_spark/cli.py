@@ -500,7 +500,6 @@ def main(argv: list[str] | None = None) -> int:
             ctx = ExecutionContext(
                 spark=spark,
                 root_dir=args.root_dir,
-                on_error_stop=args.on_error_stop,
                 sql_runner=sql_runner,
             )
             if dest and dest.startswith(
@@ -508,7 +507,7 @@ def main(argv: list[str] | None = None) -> int:
             ):
                 from pgloader_spark.sources.pg_live import file_load_sink
 
-                ctx.sink = file_load_sink(dest, ctx.root_dir, ctx.on_error_stop)
+                ctx.sink = file_load_sink(dest, ctx.root_dir, args.on_error_stop)
             elif dest:
                 # an archive's nested tables each get their own directory
                 per_table = one_cmd.source_kind == "archive"

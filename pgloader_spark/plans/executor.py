@@ -61,7 +61,6 @@ class LoadReport:
 class ExecutionContext:
     spark: SparkSession
     root_dir: str = "/tmp/pgloader_spark"
-    on_error_stop: bool = False
     sql_runner: object | None = None  # callable(sql) for BEFORE/AFTER LOAD DO
     # callable(df, table, cmd) that runs the terminal action (the CLI's
     # file_load_sink COPY, a parquet write, ...); cmd is the command

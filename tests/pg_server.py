@@ -112,3 +112,29 @@ def start_pg(prefix: str, server_opts: str = "") -> tuple[str, str, int, str]:
 def stop_pg(base: str, data: str) -> None:
     su_pg(f"pg_ctl -D {data} -m immediate stop")
     shutil.rmtree(base, ignore_errors=True)
+
+
+def scenario_sink(dsn: str, root_dir: str, clear: bool = False):
+    """The package's file LOAD sink as the reference-corpus runners use
+    it.  Every target is created from the frame's schema when missing,
+    whatever the source kind: the package sink creates only DBF/IXF
+    targets, and which corpus scenarios rely on a created table is not
+    checked until the corpus is at hand.  ``clear`` empties the target
+    first, for scenarios that re-run against one server."""
+    from pgloader_spark.sources.pg_live import (
+        ensure_pg_table,
+        file_load_sink,
+        quote_qualified,
+    )
+    from pgloader_spark.sources.pgwire import PGConn
+
+    copy_sink = file_load_sink(dsn, root_dir)
+
+    def sink(df, table, cmd):
+        ensure_pg_table(dsn, table, df.schema)
+        if clear:
+            with PGConn(dsn) as c:
+                c.query(f"DELETE FROM {quote_qualified(table)}")
+        return copy_sink(df, table, cmd)
+
+    return sink

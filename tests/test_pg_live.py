@@ -18,7 +18,7 @@ import time
 import pytest
 
 from pgloader_spark.sources.pgwire import PGConn, PGError, _parse_dsn
-from tests.pg_server import start_pg, stop_pg, su_pg as _su_pg
+from tests.pg_server import scenario_sink, start_pg, stop_pg, su_pg as _su_pg
 
 
 @pytest.fixture(scope="module")
@@ -281,16 +281,6 @@ def test_reference_csv_load_file_runs_verbatim(seeded, spark, tmp_path):
     assert {r[2] for r in rows} == {"GB", "US", "CA"}
 
 
-def _delete_if_exists(dsn, table):
-    """Empty TABLE when it exists (a DBF/IXF target is created by the
-    sink itself on first load)."""
-    q = ".".join('"' + p + '"' for p in table.split("."))
-    with PGConn(dsn) as c:
-        _, rows = c.query(f"SELECT to_regclass('{q}')")
-        if rows[0][0] is not None:
-            c.query(f"DELETE FROM {q}")
-
-
 def _run_ref_scenario(name, seeded, spark, tmp_path):
     """Execute the reference's own test/<name>.load against a live
     PostgreSQL, verbatim except (a) the connection string points at
@@ -301,7 +291,6 @@ def _run_ref_scenario(name, seeded, spark, tmp_path):
 
     from pgloader_spark.parsers.loadcmd import parse_load
     from pgloader_spark.plans.executor import ExecutionContext, execute
-    from pgloader_spark.sources.pg_live import file_load_sink
     from pgloader_spark.sources.pgwire import PGConn
 
     ref = f"/root/reference/test/{name}.load"
@@ -322,10 +311,9 @@ def _run_ref_scenario(name, seeded, spark, tmp_path):
     cmd = parse_load(text)
 
     loaded_tables: list[str] = []
-    copy_sink = file_load_sink(seeded, str(tmp_path))
+    copy_sink = scenario_sink(seeded, str(tmp_path), clear=True)
 
     def sink(df, table, cmd):
-        _delete_if_exists(seeded, table)  # scenarios re-run in one module
         n = copy_sink(df, table, cmd)
         loaded_tables.append(table)
         return n
@@ -588,7 +576,6 @@ def test_reference_bossa_archive_live_http(seeded, spark, tmp_path):
         pytest.skip("reference corpus not available")
     from pgloader_spark.parsers.loadcmd import parse_load
     from pgloader_spark.plans.executor import ExecutionContext, execute_archive
-    from pgloader_spark.sources.pg_live import file_load_sink
 
     # the reference's Makefile preloads bossa.sql into the target
     with PGConn(seeded) as c:
@@ -652,7 +639,7 @@ def test_reference_bossa_archive_live_http(seeded, spark, tmp_path):
                 spark=spark,
                 root_dir=str(tmp_path),
                 sql_runner=lambda sql: runner.query(sql),
-                sink=file_load_sink(seeded, str(tmp_path)),
+                sink=scenario_sink(seeded, str(tmp_path)),
             )
             reports = execute_archive(ctx, cmd)
         finally:
@@ -706,7 +693,6 @@ def test_reference_census_places_archive_fixed(seeded, spark, tmp_path):
         pytest.skip("reference corpus not available")
     from pgloader_spark.parsers.loadcmd import parse_load
     from pgloader_spark.plans.executor import ExecutionContext, execute_archive
-    from pgloader_spark.sources.pg_live import file_load_sink
 
     def fixed_line(usps, fips, code, name, lat, lon):
         # layout per the command: name at 9 width 64, numerics after
@@ -741,7 +727,7 @@ def test_reference_census_places_archive_fixed(seeded, spark, tmp_path):
                 spark=spark,
                 root_dir=str(tmp_path),
                 sql_runner=lambda sql: runner.query(sql),
-                sink=file_load_sink(seeded, str(tmp_path)),
+                sink=scenario_sink(seeded, str(tmp_path)),
             )
             reports = execute_archive(ctx, cmd)
         finally:
@@ -767,7 +753,6 @@ def test_reference_bossa_all_single_table(seeded, spark, tmp_path):
         pytest.skip("reference corpus not available")
     from pgloader_spark.parsers.loadcmd import parse_load
     from pgloader_spark.plans.executor import ExecutionContext, execute_archive
-    from pgloader_spark.sources.pg_live import file_load_sink
 
     with PGConn(seeded) as c:
         c.query("DROP TABLE IF EXISTS intf_derivatives")
@@ -801,7 +786,7 @@ def test_reference_bossa_all_single_table(seeded, spark, tmp_path):
                 spark=spark,
                 root_dir=str(tmp_path),
                 sql_runner=lambda sql: runner.query(sql),
-                sink=file_load_sink(seeded, str(tmp_path)),
+                sink=scenario_sink(seeded, str(tmp_path)),
             )
             reports = execute_archive(ctx, cmd)
         finally:
@@ -831,7 +816,6 @@ def test_reference_dbf_zip_over_http(seeded, spark, tmp_path):
     try:
         from pgloader_spark.parsers.loadcmd import parse_load
         from pgloader_spark.plans.executor import ExecutionContext, execute
-        from pgloader_spark.sources.pg_live import file_load_sink
 
         text = open(ref, encoding="utf-8").read()
         text = text.replace(
@@ -848,7 +832,7 @@ def test_reference_dbf_zip_over_http(seeded, spark, tmp_path):
                 spark=spark,
                 root_dir=str(tmp_path),
                 sql_runner=lambda sql: runner.query(sql),
-                sink=file_load_sink(seeded, str(tmp_path)),
+                sink=scenario_sink(seeded, str(tmp_path)),
             )
             report = execute(ctx, cmd)
         finally:
@@ -879,7 +863,6 @@ def test_reference_archive_geolite_ip4r(seeded, spark, tmp_path):
     from pgloader_spark.parsers.loadcmd import parse_load
     from pgloader_spark.plans.executor import ExecutionContext, execute_archive
     from pgloader_spark.plans.ip4r_shim import wrap_sql_runner
-    from pgloader_spark.sources.pg_live import file_load_sink
 
     loc_hdr = (
         "Copyright (c) 2012 MaxMind Inc.  All Rights Reserved.\n"
@@ -924,7 +907,7 @@ def test_reference_archive_geolite_ip4r(seeded, spark, tmp_path):
                 spark=spark,
                 root_dir=str(tmp_path),
                 sql_runner=wrap_sql_runner(lambda sql: runner.query(sql)),
-                sink=file_load_sink(seeded, str(tmp_path)),
+                sink=scenario_sink(seeded, str(tmp_path)),
             )
             reports = execute_archive(ctx, cmd)
         finally:
@@ -1205,9 +1188,10 @@ def test_reference_fk_reject_isolates_bad_rows(seeded, spark, tmp_path):
     assert report.errors == 1
     rows = _pg_table_rows(seeded, table, order_by="id")
     assert [(int(a), int(b)) for a, b in rows] == [(1, 1), (3, 2)]
-    rejects = (tmp_path / "fk_reject.dat").read_text().strip().splitlines()
+    reject_dir = tmp_path / "postgres"  # <root-dir>/<target db>/
+    rejects = (reject_dir / "fk_reject.dat").read_text().strip().splitlines()
     assert rejects == ["2\t99"]
-    log = (tmp_path / "fk_reject.log").read_text()
+    log = (reject_dir / "fk_reject.log").read_text()
     assert "23503" in log  # foreign_key_violation sqlstate
 
 

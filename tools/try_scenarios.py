@@ -56,7 +56,7 @@ def start_pg():
 def run_scenario(name, dsn, spark, tmp_path):
     from pgloader_spark.parsers.loadcmd import parse_load
     from pgloader_spark.plans.executor import ExecutionContext, execute
-    from pgloader_spark.sources.pg_live import file_load_sink
+    from tests.pg_server import scenario_sink
 
     ref = f"/root/reference/test/{name}.load"
     text = open(ref, encoding="utf-8", errors="replace").read()
@@ -80,14 +80,9 @@ def run_scenario(name, dsn, spark, tmp_path):
     cmd = parse_load(text)
 
     loaded_tables = []
-    copy_sink = file_load_sink(dsn, str(tmp_path))
+    copy_sink = scenario_sink(dsn, str(tmp_path), clear=True)
 
     def sink(df, table, cmd):
-        q = ".".join('"' + p + '"' for p in table.split("."))
-        with PGConn(dsn) as c:
-            # a DBF/IXF target is created by the sink on first load
-            if c.query(f"SELECT to_regclass('{q}')")[1][0][0] is not None:
-                c.query(f"DELETE FROM {q}")
         n = copy_sink(df, table, cmd)
         loaded_tables.append(table)
         return n
