@@ -555,6 +555,7 @@ def main(argv: list[str] | None = None) -> int:
                     read=r.read,
                     loaded=r.loaded,
                     errors=r.errors,
+                    seconds=r.seconds,
                 )
                 for r in reports
             ]

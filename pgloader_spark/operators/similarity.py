@@ -118,19 +118,6 @@ def dot(a: Column, b: Column) -> Column:
     )
 
 
-def dot_fixed(a: Column, b: Column, dim: int) -> Column:
-    """Unrolled dot product for a known dimension.
-
-    Measured SLOWER than the fold (per-element getItem bounds checks
-    + a giant expression tree defeat codegen) — kept for reference;
-    prefer ``dot``.  Identical left-to-right addition order either way.
-    """
-    acc = a[0] * b[0]
-    for i in range(1, dim):
-        acc = acc + a[i] * b[i]
-    return acc
-
-
 def norm2(a: Column) -> Column:
     return dot(a, a)
 

@@ -38,19 +38,6 @@ def token_count(col: Column | str) -> Column:
     return F.size(tokens(col))
 
 
-def bpe_ish_token_count(col: Column | str) -> Column:
-    """A BPE-like proxy: ceil(chars/4) per word, summed.
-
-    Approximates subword-tokenizer counts without a vocab file; stays
-    in codegen (no UDF).
-    """
-    return F.aggregate(
-        tokens(col),
-        F.lit(0).cast("long"),
-        lambda acc, t: acc + F.ceil(F.length(t) / F.lit(4.0)).cast("long"),
-    )
-
-
 def quality_metrics(
     text_col: Column | str, toks: Column | None = None
 ) -> dict[str, Column]:
@@ -227,45 +214,6 @@ def fingerprint(text_col: Column | str) -> Column:
     O(tokens log tokens) per row, no shuffle.
     """
     return F.md5(F.array_join(F.array_sort(F.array_distinct(tokens(text_col))), " "))
-
-
-def rolling_hash(text_col: Column | str, mod: int = (1 << 61) - 1, base: int = 257) -> Column:
-    """Polynomial rolling hash over tokens: h = sum(tok_hash * base^i) mod p.
-
-    Folded left-to-right with F.aggregate (deterministic order).
-    """
-    toks = tokens(text_col)
-    return F.aggregate(
-        toks,
-        F.lit(0).cast("decimal(38,0)"),
-        lambda acc, t: (
-            acc * F.lit(base)
-            + F.conv(F.substring(F.md5(t), 1, 15), 16, 10).cast("decimal(38,0)")
-        )
-        % F.lit(mod),
-    ).cast("long")
-
-
-def document_stats(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """One-pass per-document stat projection (narrow, no shuffle).
-
-    Tokens are materialized in a first projection so each metric reuses
-    them (CollapseProject keeps non-cheap expressions un-inlined).
-    """
-    staged = df.select(
-        F.col(id_col), F.col(text_col), tokens(text_col).alias("__tk")
-    ).withColumn("__dtk", F.array_distinct(F.col("__tk")))
-    q = quality_metrics(text_col, toks=F.col("__tk"))
-    return staged.select(
-        F.col(id_col),
-        q["n_chars"].alias("n_chars"),
-        q["n_tokens"].alias("n_tokens"),
-        q["punct_ratio"].alias("punct_ratio"),
-        q["stopword_ratio"].alias("stopword_ratio"),
-        q["mean_word_len"].alias("mean_word_len"),
-        lang_id(text_col, dtk=F.col("__dtk")).alias("lang_pred"),
-        F.md5(F.array_join(F.array_sort(F.col("__dtk")), " ")).alias("fingerprint"),
-    )
 
 
 # --------------------------------------------------------------------------

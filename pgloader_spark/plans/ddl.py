@@ -109,12 +109,6 @@ def explode_mysql_enum(ctype: str) -> list[str]:
     return values
 
 
-def enum_or_set_name(table_name: str, column_name: str) -> str:
-    """``{table}_{column}_t`` downcased — the reference's
-    ``enum-or-set-name`` (mysql-cast-rules.lisp:7-10)."""
-    return apply_identifier_case(f"{table_name}_{column_name}_t")
-
-
 def resolve_enum_type_name(base_name: str, taken: set[str]) -> str:
     """First non-conflicting candidate among ``base``, ``{stem}_enum``,
     ``enum_{stem}`` (pgsql-create-schema.lisp:48-66).  ``taken`` models

@@ -18,6 +18,7 @@ from __future__ import annotations
 import contextlib
 import logging
 import os
+import time
 from dataclasses import dataclass
 
 log = logging.getLogger(__name__)
@@ -55,6 +56,9 @@ class LoadReport:
     # Programmatic callers need this — without on error stop a
     # mismatch is only logged, and logs aren't an API
     verified: bool | None = None
+    # wall time of the load: the whole command for a single-table
+    # LOAD, the table's read + COPY for a LOAD DATABASE table
+    seconds: float = 0.0
 
 
 @dataclass
@@ -1028,6 +1032,7 @@ def execute_database(ctx: ExecutionContext, cmd: LoadCommand) -> list[LoadReport
             if schema_only:
                 reports.append(LoadReport(table=tbl.name, read=0, loaded=0))
                 continue
+            t0 = time.perf_counter()
             df = _read(ctx.spark, src_loc, t, engine=engine)
             df = _apply_cast_transforms(df, catalog_fields[t], engine)
             df = df.toDF(*[c.name for c in tbl.columns])
@@ -1044,7 +1049,7 @@ def execute_database(ctx: ExecutionContext, cmd: LoadCommand) -> list[LoadReport
             reports.append(
                 LoadReport(
                     table=tbl.name, read=n, loaded=n, result=df,
-                    target_path=tgt_path,
+                    target_path=tgt_path, seconds=time.perf_counter() - t0,
                 )
             )
 
@@ -1208,6 +1213,7 @@ def execute(ctx: ExecutionContext, cmd: LoadCommand) -> LoadReport:
     """parse result -> report. BEFORE/AFTER LOAD DO statements run
     through ctx.sql_runner when provided (JDBC in production; DuckDB
     or a recorder in tests)."""
+    t0 = time.perf_counter()
     spark = ctx.spark
     table = _target_table_name(cmd)
     report = LoadReport(table=table)
@@ -1270,6 +1276,7 @@ def execute(ctx: ExecutionContext, cmd: LoadCommand) -> LoadReport:
         for path in cmd.after_execute_files:  # AFTER LOAD EXECUTE
             for stmt in read_sql_statements(_resolve_script(path, cmd)):
                 ctx.sql_runner(stmt)
+    report.seconds = time.perf_counter() - t0
     return report
 
 

@@ -182,15 +182,3 @@ def ensure_parallelism(df: DataFrame) -> DataFrame:
     if df.rdd.getNumPartitions() < n:
         return df.repartition(n)
     return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Read every testdata table under ``sf_dir`` and register temp views."""
-    out: dict[str, DataFrame] = {}
-    for name in TABLES:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if os.path.exists(path):
-            df = read_table(spark, sf_dir, name)
-            df.createOrReplaceTempView(name)
-            out[name] = df
-    return out

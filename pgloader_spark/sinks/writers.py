@@ -1,5 +1,4 @@
-"""File sinks: COPY-format text files (``psql \\copy`` bulk loads
-and reject files), parquet, and JSONL corpus exports.
+"""File sinks: JSONL corpus exports, plain and epoch-shuffled.
 
 The PostgreSQL COPY sink is ``sources.pg_live.write_pg_copy``; a file
 ``LOAD`` lands through ``sources.pg_live.file_load_sink``.
@@ -8,31 +7,6 @@ The PostgreSQL COPY sink is ``sources.pg_live.write_pg_copy``; a file
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-
-
-def write_copy_files(df: DataFrame, path: str, num_files: int | None = None) -> None:
-    """COPY-format text files: `psql \\copy table from 'part-*'` loads
-    them; also the reject-file format (reject.lisp)."""
-    from pgloader_spark.sources.copytext import to_copy_lines
-
-    lines = to_copy_lines(df)
-    if num_files:
-        lines = lines.repartition(num_files)
-    lines.write.mode("overwrite").text(path)
-
-
-def write_parquet(
-    df: DataFrame,
-    path: str,
-    partition_by: list[str] | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """The lake-native sink (not in the reference; the 100 TB path).
-    Partition columns turn downstream filters into partition pruning."""
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
 
 
 def export_shuffled(

@@ -239,13 +239,3 @@ def read_dbf(
 
     rdd = spark.sparkContext.parallelize(bounds, len(bounds)).flatMap(decode_range)
     return spark.createDataFrame(rdd, schema)
-
-
-def dbf_source_fields(header: DbfHeader):
-    """DbfField -> SourceField list for the db3 cast table."""
-    from pgloader_spark.casting import SourceField
-
-    return [
-        SourceField(f.name, f.type_code, type_mod=f"({f.length},{f.decimals})")
-        for f in header.fields
-    ]

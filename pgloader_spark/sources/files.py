@@ -100,10 +100,3 @@ def expand_archive(path: str, dest_dir: str | None = None) -> list[str]:
     else:
         out.append(path)
     return sorted(out)
-
-
-def filter_archive_members(paths: list[str], regex: str | None) -> list[str]:
-    if not regex:
-        return paths
-    pat = re.compile(regex)
-    return [p for p in paths if pat.search(os.path.basename(p))]

@@ -268,17 +268,6 @@ def read_ixf(
     return spark.createDataFrame(rows, schema)
 
 
-def ixf_source_fields(path: str):
-    from pgloader_spark.casting import SourceField
-
-    with open(path, "rb") as fh:
-        data = fh.read()
-    return [
-        SourceField(c.name, TYPE_NAMES.get(c.type_code, "varchar"), nullable=c.nullable)
-        for c in parse_columns(data)
-    ]
-
-
 # ---------------------------------------------------------------------------
 # Writer (used by tests to produce fixture files — the reference reads
 # IXF produced by DB2; we emit the same spec layout the DB2 fixtures

@@ -525,14 +525,6 @@ def catalog_from_mssql(column_rows, engine=None):
     return cat
 
 
-def sqlite_tables_sql() -> str:
-    return "SELECT name FROM sqlite_master WHERE type = 'table' AND name NOT LIKE 'sqlite_%'"
-
-
-def sqlite_columns_pragma(table: str) -> str:
-    return f"PRAGMA table_info({table})"
-
-
 def fields_from_mysql_columns(rows) -> list:
     """information_schema rows -> SourceField list feeding the cast
     engine (mysql-cast-rules path)."""

@@ -11,21 +11,22 @@ Reference parity (dimitri/pgloader):
   (``clojure/.../pgsql.sql:97-112`` and ``sources/jdbc.py:
   plan_ctid_partitions`` — one ``COPY (SELECT ... WHERE ctid
   range) TO STDOUT`` per task);
-- the COPY-FROM-STDIN write path in per-partition streams
+- the COPY-FROM-STDIN write path per partition
   (``src/pg-copy/copy-db-write.lisp:24-35``) — each Spark partition
-  is its own COPY transaction, so a 1000-partition write is 1000
-  concurrent COPY streams (the reference caps at a worker pool;
-  same mechanism, cluster-sized).
+  attempt is one transaction holding one COPY per Arrow batch, so a
+  1000-partition write is 1000 concurrent COPY sessions (the
+  reference caps at a worker pool; same mechanism, cluster-sized).
 
-Scale notes: the driver does exactly two tiny queries (catalog +
-relpages); all data movement happens executor-side, one connection
-per task, streaming in chunks.  COPY text parsing reuses the same
-escape tables as the file-based COPY source, so a PG read and a
-``.dat`` read are byte-for-byte the same transform.
+Scale notes: the driver only runs small catalog queries (the column
+catalog, and ``pg_relation_size`` to size the ctid ranges); all data
+movement happens executor-side, one connection per task.  COPY text
+parsing reuses the same escape tables as the file-based COPY source,
+so a PG read and a ``.dat`` read are byte-for-byte the same transform.
 """
 
 from __future__ import annotations
 
+import itertools
 import math
 import os
 from collections.abc import Iterator
@@ -534,45 +535,51 @@ def align_to_target(
     return df
 
 
-def _copy_batch_isolating(
-    conn: PGConn, stmt: str, lines: list[str]
+def _copy_batch(
+    conn: PGConn, stmt: str, lines: list[str], isolate: bool
 ) -> tuple[int, list[tuple[str, str]]]:
-    """COPY a batch; on failure isolate the bad rows and load the rest.
+    """COPY one batch inside the partition's transaction; returns
+    (rows loaded, [(rejected line, error)]).
 
-    The reference's retry-batch logic (src/pg-copy/retry-batch.lisp):
-    when the server annotates the error with ``line N`` (COPY parse
-    errors do), drop exactly that row and retry; when it does not
-    (FK violations — GitHub issue #1333, test/fk-reject.load), bisect
-    the batch until single rows isolate.  Each COPY here is one
-    statement = one transaction, so a failed attempt loads nothing and
-    a retry re-sends the survivors.
+    Each COPY attempt runs under a savepoint.  Fail-fast (``isolate``
+    false) re-raises the first error, so the partition commits nothing.
+    Isolating rolls back to the savepoint and runs the reference's
+    retry-batch logic (src/pg-copy/retry-batch.lisp): when the server
+    annotates the error with ``line N`` (COPY parse errors do), drop
+    exactly that row and retry; when it does not (FK violations —
+    GitHub issue #1333, test/fk-reject.load), bisect the batch until
+    single rows isolate.
     """
     import re as _re
 
     loaded = 0
     rejects: list[tuple[str, str]] = []
-    todo = lines
+    todo = [lines]  # a stack of slices still to send, next on top
     while todo:
+        part = todo.pop()
+        conn.query("SAVEPOINT batch")
         try:
-            conn.copy_in(stmt, [("\n".join(todo) + "\n").encode("utf-8")])
-            loaded += len(todo)
-            break
+            conn.copy_in(stmt, [("\n".join(part) + "\n").encode("utf-8")])
         except PGError as e:
+            if not isolate:
+                raise
+            # released after the rollback, so retries never nest
+            conn.query("ROLLBACK TO SAVEPOINT batch; RELEASE SAVEPOINT batch")
             m = _re.search(r"line (\d+)", getattr(e, "context", "") or "")
-            if m and 1 <= int(m.group(1)) <= len(todo):
+            if m and 1 <= int(m.group(1)) <= len(part):
                 k = int(m.group(1)) - 1
-                rejects.append((todo[k], str(e)))
-                todo = todo[:k] + todo[k + 1 :]
-            elif len(todo) == 1:
-                rejects.append((todo[0], str(e)))
-                break
+                rejects.append((part[k], str(e)))
+                rest = part[:k] + part[k + 1 :]
+                if rest:
+                    todo.append(rest)
+            elif len(part) == 1:
+                rejects.append((part[0], str(e)))
             else:
-                mid = len(todo) // 2
-                n1, r1 = _copy_batch_isolating(conn, stmt, todo[:mid])
-                n2, r2 = _copy_batch_isolating(conn, stmt, todo[mid:])
-                loaded += n1 + n2
-                rejects.extend(r1 + r2)
-                break
+                mid = len(part) // 2
+                todo += [part[mid:], part[:mid]]
+            continue
+        conn.query("RELEASE SAVEPOINT batch")
+        loaded += len(part)
     return loaded, rejects
 
 
@@ -610,12 +617,14 @@ def write_pg_copy(
     settings: dict | None = None,
     reject_dir: str | None = None,
 ) -> int:
-    """COPY FROM STDIN, one stream per partition; returns rows loaded.
+    """COPY FROM STDIN, one connection per partition; returns rows loaded.
 
-    Without ``reject_dir`` each partition is one streaming COPY and the
-    first row the server rejects fails the write.  With it, COPY runs
-    per Arrow batch and a failed batch retries around its bad rows
-    (``_copy_batch_isolating``), which are appended to
+    Each partition attempt is one transaction of per-Arrow-batch COPYs
+    (``_copy_batch``), so a failed or retried task attempt commits
+    nothing and the load stays exactly-once under Spark's task retry.
+    Without ``reject_dir`` the first row the server rejects fails the
+    write.  With it, a rejected batch rolls back to its savepoint and
+    retries around its bad rows, which are appended to
     ``<reject_dir>/<table>.dat`` with their errors in ``.log``.
 
     Three design rules make this the fast path:
@@ -662,66 +671,45 @@ def write_pg_copy(
     lines = _cap_copy_streams(to_copy_lines(df), n_writers)
 
     isolate = reject_dir is not None
+    # the command's SET clause applies per COPY session like the
+    # reference's per-connection GUCs — EXCEPT client_encoding: that
+    # GUC describes the bytes on the wire, and ours are always UTF-8
+    # (the reference re-encodes its stream to the declared encoding;
+    # we normalize to UTF-8 at read time)
+    gucs = {
+        k: v for k, v in (settings or {}).items() if k.lower() != "client_encoding"
+    }
+    gucs["client_encoding"] = "UTF8"
 
     def sink(batches: Iterator) -> Iterator:
         import pandas as pd  # noqa: PLC0415
 
         it = iter(batches)
         first = next(it, None)
-        if first is None or len(first) == 0:
-            yield pd.DataFrame({"n": [0], "rejects": [[]], "errs": [[]]})
-            return
         total = 0
-
-        # the command's SET clause applies per COPY session like the
-        # reference's per-connection GUCs — EXCEPT client_encoding:
-        # that GUC describes the bytes on the wire, and ours are
-        # always UTF-8 (the reference re-encodes its stream to the
-        # declared encoding; we normalize to UTF-8 at read time)
-        gucs = {
-            k: v
-            for k, v in (settings or {}).items()
-            if k.lower() != "client_encoding"
-        }
-        gucs["client_encoding"] = "UTF8"
-
-        if isolate:
-            # per-batch COPY (the reference's own batching: one COPY
-            # per ~25k-row batch, src/pg-copy/copy-rows-in-batch.lisp)
-            # so a failed batch can retry with row isolation
-            rej: list[str] = []
-            errs: list[str] = []
+        rejects: list[tuple[str, str]] = []
+        if first is not None and len(first):
+            # one COPY per Arrow batch (the reference's own batching,
+            # src/pg-copy/copy-rows-in-batch.lisp), all in one
+            # transaction: an attempt that fails anywhere — a rejected
+            # batch under fail-fast, a dropped connection, a killed
+            # task — commits nothing, so Spark's retry re-sends the
+            # whole partition without duplicates
             with PGConn(dsn) as conn:
                 for k, v in gucs.items():
                     conn.query(f"SET {k} TO '{v}'")
-                b = first
-                while b is not None:
+                conn.query("BEGIN")
+                for b in itertools.chain([first], it):
                     if len(b):
-                        n, r = _copy_batch_isolating(
-                            conn, stmt, list(b["line"])
-                        )
+                        n, r = _copy_batch(conn, stmt, list(b["line"]), isolate)
                         total += n
-                        for line, e in r:
-                            rej.append(line)
-                            errs.append(e)
-                    b = next(it, None)
-            yield pd.DataFrame({"n": [total], "rejects": [rej], "errs": [errs]})
-            return
-
-        def chunks():
-            nonlocal total
-            b = first
-            while b is not None:
-                if len(b):
-                    total += len(b)
-                    yield ("\n".join(b["line"]) + "\n").encode("utf-8")
-                b = next(it, None)
-
-        with PGConn(dsn) as conn:
-            for k, v in gucs.items():
-                conn.query(f"SET {k} TO '{v}'")
-            conn.copy_in(stmt, chunks())
-        yield pd.DataFrame({"n": [total], "rejects": [[]], "errs": [[]]})
+                        rejects += r
+                conn.query("COMMIT")
+        yield pd.DataFrame({
+            "n": [total],
+            "rejects": [[line for line, _ in rejects]],
+            "errs": [[e for _, e in rejects]],
+        })
 
     out = lines.mapInPandas(
         sink, "n long, rejects array<string>, errs array<string>"
@@ -730,8 +718,6 @@ def write_pg_copy(
     # here would add an exchange stage to every COPY
     rows = out.collect()
     loaded = sum(r["n"] for r in rows)
-    if not isolate:
-        return loaded
     all_rej = [x for r in rows for x in (r["rejects"] or [])]
     all_errs = [x for r in rows for x in (r["errs"] or [])]
     if all_rej:

@@ -343,17 +343,27 @@ class PGConn:
 
     # -------------------------------------------------------------- COPY
 
+    def _await_copy(self, response: bytes) -> None:
+        """Read up to the server's Copy{In,Out}Response.  A COPY the
+        server rejects before it starts (no such table or column) is
+        raised only after ReadyForQuery, so the connection stays in
+        sync for the caller's next statement."""
+        err: bytes | None = None
+        while True:
+            mtype, payload = self._read_message()
+            if mtype == response:
+                return
+            if mtype == b"E":
+                err = payload
+            elif mtype == b"Z" and err is not None:
+                self._raise_error(err)
+
     def copy_out(self, sql: str) -> Iterator[bytes]:
         """``COPY ... TO STDOUT`` — yields raw CopyData chunks
         (text format; concatenation is \\n-separated rows)."""
         self._send(self._msg(b"Q", sql.encode() + b"\x00"))
+        self._await_copy(b"H")  # CopyOutResponse
         err: bytes | None = None
-        while True:
-            mtype, payload = self._read_message()
-            if mtype == b"H":  # CopyOutResponse
-                break
-            if mtype == b"E":
-                self._raise_error(payload)
         while True:
             mtype, payload = self._read_message()
             if mtype == b"d":
@@ -373,12 +383,7 @@ class PGConn:
         Returns the loaded row count (from CommandComplete).
         """
         self._send(self._msg(b"Q", sql.encode() + b"\x00"))
-        while True:
-            mtype, payload = self._read_message()
-            if mtype == b"G":  # CopyInResponse
-                break
-            if mtype == b"E":
-                self._raise_error(payload)
+        self._await_copy(b"G")  # CopyInResponse
         for chunk in chunks:
             if chunk:
                 self._send(self._msg(b"d", chunk))

@@ -172,28 +172,6 @@ def serve_udp_messages(
     return counts
 
 
-def start_scanner_sinks(
-    routed: dict[str, DataFrame],
-    out_dir: str,
-    checkpoint_dir: str,
-    format: str = "parquet",
-):
-    """Start one writeStream per scanner (its own checkpoint =
-    independent progress, like the reference's independent queues).
-    Returns the StreamingQuery handles."""
-    queries = []
-    for name, df in routed.items():
-        q = (
-            df.writeStream.format(format)
-            .option("path", f"{out_dir}/{name}")
-            .option("checkpointLocation", f"{checkpoint_dir}/{name}")
-            .outputMode("append")
-            .start()
-        )
-        queries.append(q)
-    return queries
-
-
 def windowed_counts(
     events: DataFrame,
     ts_col: str,

@@ -207,3 +207,58 @@ LOAD ARCHIVE
                  "--root-dir", str(tmp_path / "root")]) == 0
     assert spark.read.parquet(str(out / "location")).count() == 2
     assert spark.read.parquet(str(out / "blocks")).count() == 1
+
+
+def test_cli_summary_reports_per_table_seconds(spark, tmp_path, capsys):
+    """The summary's per-table total time is the table's own wall: a
+    LOAD ARCHIVE runs each nested table through execute(), a LOAD
+    DATABASE times each table's read + write; each is > 0 and they
+    sum to no more than the command's wall."""
+    import sqlite3
+    import time
+    import zipfile
+
+    from pgloader_spark.cli import main
+
+    z = tmp_path / "geo.zip"
+    with zipfile.ZipFile(z, "w") as zf:
+        zf.writestr("locations.csv", "1,paris\n2,berlin\n")
+        zf.writestr("blocks.csv", "16909060,16909070,1\n")
+    archive = tmp_path / "geo.load"
+    archive.write_text(
+        f"""
+LOAD ARCHIVE
+   FROM {z}
+   INTO postgresql:///db
+   LOAD CSV FROM FILENAME MATCHING ~/locations\\.csv/ (locid, city)
+        INTO postgresql:///db?location (locid int, city)
+        WITH fields terminated by ','
+    AND LOAD CSV FROM FILENAME MATCHING ~/blocks\\.csv/ (lo, hi, locid)
+        INTO postgresql:///db?blocks (lo, hi, locid int)
+        WITH fields terminated by ',';
+"""
+    )
+    db = tmp_path / "src.db"
+    con = sqlite3.connect(db)
+    con.execute("CREATE TABLE a (id INTEGER PRIMARY KEY, v TEXT)")
+    con.execute("CREATE TABLE b (id INTEGER PRIMARY KEY)")
+    con.executemany("INSERT INTO a VALUES (?, ?)", [(1, "x"), (2, "y")])
+    con.execute("INSERT INTO b VALUES (7)")
+    con.commit()
+    con.close()
+    database = tmp_path / "db.load"
+    database.write_text(f"LOAD DATABASE FROM sqlite://{db} INTO {tmp_path}/lake;\n")
+
+    for load, target in ((archive, [str(tmp_path / "out")]), (database, [])):
+        capsys.readouterr()
+        t0 = time.perf_counter()
+        assert main([str(load), *target, "--master", "local[2]",
+                     "--root-dir", str(tmp_path / "root"),
+                     "--summary", "json"]) == 0
+        wall = time.perf_counter() - t0
+        line = [ln for ln in capsys.readouterr().out.splitlines()
+                if ln.startswith("{")][-1]
+        tables = json.loads(line)["tables"]
+        assert len(tables) == 2
+        assert all(t["seconds"] > 0 for t in tables), tables
+        assert sum(t["seconds"] for t in tables) <= wall

@@ -44,6 +44,14 @@ def test_wire_error_surfaces_sqlstate(pg_dsn):
             c.query("SELECT * FROM no_such_table_xyz")
         # connection stays usable after an error (ReadyForQuery resync)
         assert c.query("SELECT 2")[1] == [("2",)]
+        # also after a COPY the server rejects before it starts: the
+        # COPY sink keeps using its connection after a failed batch
+        with pytest.raises(PGError, match="42P01"):
+            c.copy_in("COPY no_such_table_xyz FROM STDIN", [b"1\n"])
+        assert c.query("SELECT 3")[1] == [("3",)]
+        with pytest.raises(PGError, match="42P01"):
+            list(c.copy_out("COPY no_such_table_xyz TO STDOUT"))
+        assert c.query("SELECT 4")[1] == [("4",)]
 
 
 def test_wire_copy_roundtrip_escapes(pg_dsn):
@@ -2373,6 +2381,76 @@ def test_write_pg_copy_exactly_once_under_task_retry(seeded, tmp_path):
             "SELECT COUNT(*), COUNT(DISTINCT id) FROM retry_t"
         )
         assert rows == [("5000", "5000")]  # no duplicates, no gaps
+
+
+@pytest.mark.parametrize("policy", ["stop", "isolate"])
+def test_write_pg_copy_connection_drop_mid_partition_is_exactly_once(
+    seeded, tmp_path, policy
+):
+    """A connection dropped after some batches of a partition went
+    through must not leave those batches behind: the task retry
+    re-sends the whole partition, so anything the failed attempt
+    committed would be loaded twice.  The fault lives in the server —
+    a row trigger terminates its own backend at the 250th row it ever
+    sees, i.e. in the third 100-row batch of the first attempt only
+    (sequences are non-transactional, so the retry counts on from
+    there) — and needs no hook in the package.  Runs in a subprocess
+    for local[4,2]'s second task attempt."""
+    import subprocess
+    import sys
+    import textwrap
+
+    with PGConn(seeded) as c:
+        c.query("DROP TABLE IF EXISTS drop_t")
+        c.query("DROP SEQUENCE IF EXISTS drop_seq")
+        c.query("CREATE TABLE drop_t (id bigint, v text)")
+        c.query("CREATE SEQUENCE drop_seq")
+        c.query(
+            "CREATE OR REPLACE FUNCTION drop_once() RETURNS trigger "
+            "LANGUAGE plpgsql AS $$ BEGIN "
+            "IF nextval('drop_seq') = 250 THEN "
+            "PERFORM pg_terminate_backend(pg_backend_pid()); END IF; "
+            "RETURN NEW; END $$"
+        )
+        c.query(
+            "CREATE TRIGGER drop_once BEFORE INSERT ON drop_t "
+            "FOR EACH ROW EXECUTE FUNCTION drop_once()"
+        )
+    reject_dir = str(tmp_path / "rej") if policy == "isolate" else None
+    script = textwrap.dedent(
+        f"""
+        import sys
+        sys.path.insert(0, {os.getcwd()!r})
+        from pyspark.sql import SparkSession
+
+        spark = (SparkSession.builder.master("local[4,2]")
+                 .config("spark.sql.execution.arrow.maxRecordsPerBatch", "100")
+                 .config("spark.ui.enabled", "false").getOrCreate())
+        df = spark.range(0, 1000, 1, 1).selectExpr("id", "concat('v_', id) AS v")
+        from pgloader_spark.sources.pg_live import write_pg_copy
+        n = write_pg_copy(df, {seeded!r}, "drop_t", reject_dir={reject_dir!r})
+        print("LOADED", n)
+        spark.stop()
+        """
+    )
+    proc = subprocess.run(
+        [sys.executable, "-c", script],
+        capture_output=True,
+        text=True,
+        timeout=300,
+        cwd=os.getcwd(),
+    )
+    assert "LOADED 1000" in proc.stdout, proc.stderr[-2000:]
+    with PGConn(seeded) as c:
+        _, seq = c.query("SELECT last_value FROM drop_seq")
+        # 250 rows seen by the dropped attempt, then 1000 by the retry
+        assert int(seq[0][0]) >= 1250, "the fault never fired — test proved nothing"
+        _, rows = c.query("SELECT COUNT(*), COUNT(DISTINCT id) FROM drop_t")
+        assert rows == [("1000", "1000")]
+        c.query("DROP TABLE drop_t")
+        c.query("DROP SEQUENCE drop_seq")
+        c.query("DROP FUNCTION drop_once()")
+    assert not os.path.exists(tmp_path / "rej")  # nothing was rejected
 
 
 def test_tls_sslmode_require_and_verify(pg_dsn, tmp_path, monkeypatch):
