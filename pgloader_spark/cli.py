@@ -20,6 +20,7 @@ import os
 import sys
 
 from pgloader_spark.parsers.loadcmd import LoadCommand, parse_load
+from pgloader_spark.sources.jdbc import is_pg_uri, live_scheme, open_live_source
 
 _EXT_KINDS = {
     ".csv": "csv",
@@ -41,14 +42,11 @@ _EXT_KINDS = {
     ".orc": "orc",
 }
 
-_URI_KINDS = ("mysql", "sqlite", "mssql", "postgresql", "pgsql")
-
 
 def sniff_source_kind(source: str) -> str:
     """URI scheme or file extension -> source kind (cli-type)."""
-    for kind in _URI_KINDS:
-        if source.startswith(f"{kind}://"):
-            return "database"
+    if live_scheme(source):
+        return "database"
     ext = os.path.splitext(source.split("?", 1)[0])[1].lower()
     if ext in _EXT_KINDS:
         return _EXT_KINDS[ext]
@@ -165,24 +163,9 @@ def _dry_run_check(cmd: LoadCommand) -> list[tuple[str, bool, str]]:
             checks.append((label, False, f"{type(exc).__name__}: {exc}"))
 
     src = cmd.source
-    if src.startswith(("postgresql://", "pgsql://", "postgres://")):
-        from pgloader_spark.sources.pgwire import PGConn
-
-        probe(f"source {src}", lambda: PGConn(src).close())
-    elif src.startswith("mysql://"):
-        from pgloader_spark.sources.mywire import MyConn
-
-        probe(f"source {src}", lambda: MyConn(src).close())
-    elif src.startswith(("sqlite://", "db3://")) or src.endswith(
-        (".db", ".sqlite", ".sqlite3")
-    ):
-        loc = src.split("://", 1)[1] if "://" in src else src
-
-        def _sqlite():
-            if not os.path.exists(loc):
-                raise FileNotFoundError(loc)
-
-        probe(f"source {src}", _sqlite)
+    if live_scheme(src):
+        # connect and disconnect: run no statement
+        probe(f"source {src}", lambda: open_live_source(src, cmd.options).run([]))
     elif src not in ("inline", "stdin"):
 
         def _file():
@@ -193,7 +176,7 @@ def _dry_run_check(cmd: LoadCommand) -> list[tuple[str, bool, str]]:
 
         probe(f"source {src}", _file)
     tgt = cmd.target or ""
-    if tgt.startswith(("postgresql://", "pgsql://", "postgres://")):
+    if is_pg_uri(tgt):
         from pgloader_spark.sources.pgwire import PGConn
 
         probe(f"target {tgt}", lambda: PGConn(tgt).close())
@@ -488,7 +471,7 @@ def main(argv: list[str] | None = None) -> int:
         for one_cmd in (cmd, *extra_cmds):
             sql_runner = None
             tgt = one_cmd.target or args.target or ""
-            if tgt.startswith(("postgresql://", "pgsql://", "postgres://")):
+            if is_pg_uri(tgt):
                 def sql_runner(stmt: str, tgt: str = tgt) -> None:
                     with PGConn(tgt) as conn:
                         conn.query(stmt)
@@ -502,9 +485,7 @@ def main(argv: list[str] | None = None) -> int:
                 root_dir=args.root_dir,
                 sql_runner=sql_runner,
             )
-            if dest and dest.startswith(
-                ("postgresql://", "pgsql://", "postgres://")
-            ):
+            if dest and is_pg_uri(dest):
                 from pgloader_spark.sources.pg_live import file_load_sink
 
                 ctx.sink = file_load_sink(dest, ctx.root_dir, args.on_error_stop)

@@ -36,6 +36,7 @@ from pgloader_spark.sources.db3 import read_dbf
 from pgloader_spark.sources.files import PathSpec, expand_spec
 from pgloader_spark.sources.fixed import FixedOptions, read_fixed
 from pgloader_spark.sources.ixf import read_ixf
+from pgloader_spark.sources.jdbc import is_pg_uri, open_live_source
 
 
 @dataclass
@@ -103,22 +104,6 @@ def _csv_options(cmd: LoadCommand) -> CsvOptions:
             "following" if o.get("csv_escape_mode_following") else "quote"
         ),
     )
-
-
-def _size_bytes(value) -> int | None:
-    """Parse a WITH size value ('10 MB', '1024 kB', '8192') to bytes."""
-    if value is None:
-        return None
-    s = str(value).strip().lower()
-    mult = 1
-    for unit, m in (("kb", 1 << 10), ("mb", 1 << 20), ("gb", 1 << 30)):
-        if s.endswith(unit):
-            s, mult = s[: -len(unit)].strip(), m
-            break
-    try:
-        return int(float(s) * mult)
-    except ValueError:
-        return None
 
 
 def _source_paths(cmd: LoadCommand) -> list[str]:
@@ -560,181 +545,25 @@ def execute_database(ctx: ExecutionContext, cmd: LoadCommand) -> list[LoadReport
     then stream every table through a partitioned read into the COPY
     sink (or a parquet lake when the target is a directory).
 
-    Live paths available in-container: ``sqlite://`` (stdlib sqlite3),
+    The source is a ``sources.jdbc.LiveSource`` record picked by the
+    URI scheme (``LIVE_SCHEMES``): ``sqlite://`` (stdlib sqlite3),
     ``postgresql://`` (stdlib wire client, sources/pgwire.py),
-    ``mysql://`` (stdlib wire client, sources/mywire.py — verified
-    against the protocol-faithful fixture in sources/mysql_stub.py
-    since the sandbox ships no mysqld) and ``mssql://`` (stdlib TDS
-    7.1 client, sources/tdswire.py — verified against the
-    protocol-faithful fixture in sources/mssql_stub.py).
+    ``mysql://`` (sources/mywire.py) and ``mssql://`` (TDS 7.1,
+    sources/tdswire.py).  Everything dialect-specific — reads, source
+    DDL, view listing, quoting, the target schema, catalog extras —
+    lives in the record; this function only orders the lifecycle.
     """
     from pgloader_spark.casting import CastEngine
-    from pgloader_spark.catalog import Catalog, Schema
+    from pgloader_spark.catalog import Catalog, Schema, copy_ordering
     from pgloader_spark.plans.ddl import prepare_statements, table_from_fields
 
     src = cmd.source
-    if src.startswith(("sqlite://", "db3://")) or src.endswith(
-        (".db", ".sqlite", ".sqlite3")
-    ):
-        from pgloader_spark.sources.sqlite_live import (
-            introspect_sqlite as _introspect,
-        )
-        from pgloader_spark.sources.sqlite_live import (
-            read_sqlite_table as _read,
-        )
-
-        from pgloader_spark.sources.sqlite_live import (
-            introspect_sqlite_keys as _keys,
-        )
-
-        src_loc = src.split("://", 1)[1] if "://" in src else src
-        engine = CastEngine("sqlite", user_rules=_user_rules(cmd))
-    elif src.startswith(("postgresql://", "pgsql://", "postgres://")):
-        from pgloader_spark.sources.pg_live import introspect_pg as _introspect
-        from pgloader_spark.sources.pg_live import (
-            introspect_pg_keys as _keys,
-        )
-        from pgloader_spark.sources.pg_live import read_pg_table
-
-        # WITH chunk size = 10 MB (docs/ref/pgsql.rst): relpages are
-        # 8 kB; ranges = relpages / (chunk_size / 8kB) per reader
-        chunk = _size_bytes(cmd.options.get("chunk_size"))
-        if chunk:
-            from functools import partial
-
-            _read = partial(
-                read_pg_table, pages_per_range=max(chunk // 8192, 1)
-            )
-        else:
-            _read = read_pg_table
-
-        src_loc = src
-        engine = CastEngine("pgsql", user_rules=_user_rules(cmd))
-    elif src.startswith("mysql://"):
-        from pgloader_spark.sources.mysql_live import (
-            introspect_mysql as _introspect,
-        )
-        from pgloader_spark.sources.mysql_live import (
-            introspect_mysql_keys as _keys,
-        )
-        from pgloader_spark.sources.mysql_live import (
-            read_mysql_table as _read,
-        )
-
-        src_loc = src
-        engine = CastEngine("mysql", user_rules=_user_rules(cmd))
-    elif src.startswith("mssql://"):
-        from pgloader_spark.sources.mssql_live import (
-            introspect_mssql as _introspect,
-        )
-        from pgloader_spark.sources.mssql_live import (
-            introspect_mssql_keys as _keys,
-        )
-        from pgloader_spark.sources.mssql_live import (
-            read_mssql_table as _read,
-        )
-
-        src_loc = src
-        engine = CastEngine("mssql", user_rules=_user_rules(cmd))
-    else:
-        raise ValueError(
-            f"no live driver for {src!r} in this environment "
-            "(sqlite://, postgresql://, mysql:// and mssql:// are "
-            "self-contained)"
-        )
-
-    src_is_pg = src.startswith(("postgresql://", "pgsql://", "postgres://"))
-    src_is_my = src.startswith("mysql://")
-    src_is_ms = src.startswith("mssql://")
-
-    def _source_admin(statements: list[str]) -> None:
-        """Run DDL on the SOURCE database (matview staging/cleanup)."""
-        if src_is_pg:
-            from pgloader_spark.sources.pgwire import PGConn as _C
-
-            with _C(src_loc) as c:
-                for s in statements:
-                    c.query(s)
-        elif src_is_my:
-            from pgloader_spark.sources.mywire import MyConn as _C
-
-            with _C(src_loc) as c:
-                for s in statements:
-                    c.query(s)
-        elif src_is_ms:
-            from pgloader_spark.sources.tdswire import MsConn as _C
-
-            with _C(src_loc) as c:
-                for s in statements:
-                    c.query(s)
-        else:
-            import sqlite3 as _sq3
-
-            with _sq3.connect(src_loc) as db:
-                for s in statements:
-                    db.execute(s)
-
-    def _qident(name: str) -> str:
-        if src_is_my:
-            return f"`{name}`"
-        if src_is_ms:
-            return f"[{name}]"
-        return f'"{name}"'
-
-    def _list_source_views() -> list[str]:
-        """MATERIALIZE ALL VIEWS discovery (matviews.lisp:62-85)."""
-        if src_is_my:
-            from pgloader_spark.sources.mywire import MyConn as _C
-            from pgloader_spark.sources.mywire import parse_my_dsn as _p
-
-            db = _p(src_loc)["database"]
-            with _C(src_loc) as c:
-                return [
-                    r[0]
-                    for r in c.query(
-                        "SELECT table_name FROM information_schema.tables "
-                        f"WHERE table_schema = '{db}' "
-                        "AND table_type = 'VIEW'"
-                    )[1]
-                ]
-        if src_is_pg:
-            from pgloader_spark.sources.pgwire import PGConn as _C
-
-            with _C(src_loc) as c:
-                return [
-                    r[0]
-                    for r in c.query(
-                        "SELECT table_name FROM information_schema.views "
-                        "WHERE table_schema = 'public'"
-                    )[1]
-                ]
-        if src_is_ms:
-            from pgloader_spark.sources.tdswire import MsConn as _C
-
-            with _C(src_loc) as c:
-                return [
-                    r[0]
-                    for r in c.query(
-                        "SELECT table_name FROM information_schema.tables "
-                        "WHERE table_type = 'VIEW'"
-                    )[1]
-                ]
-        import sqlite3 as _sq3
-
-        con = _sq3.connect(src_loc)
-        try:
-            return [
-                r[0]
-                for r in con.execute(
-                    "SELECT name FROM sqlite_master WHERE type = 'view'"
-                )
-            ]
-        finally:
-            con.close()
+    live = open_live_source(src, cmd.options)
+    engine = CastEngine(live.kind, user_rules=_user_rules(cmd))
 
     catalog_fields = {
         t: f
-        for t, f in _introspect(src_loc).items()
+        for t, f in live.introspect().items()
         if _match_filters(t, cmd.including, cmd.excluding)
     }
 
@@ -748,8 +577,8 @@ def execute_database(ctx: ExecutionContext, cmd: LoadCommand) -> list[LoadReport
     # (the user named them).
     mv_opt = cmd.options.get("materialize_views")
     mv_pairs: list[tuple[str, str | None]] = []
-    if mv_opt is True:  # MATERIALIZE ALL VIEWS
-        mv_pairs = [(v, None) for v in _list_source_views()]
+    if mv_opt is True:  # MATERIALIZE ALL VIEWS (matviews.lisp:62-85)
+        mv_pairs = [(r[0], None) for r in live.run([live.views_sql])]
     elif isinstance(mv_opt, list):
         mv_pairs = mv_opt
     mv_staging: dict[str, str] = {}  # staging name on source -> target name
@@ -760,28 +589,21 @@ def execute_database(ctx: ExecutionContext, cmd: LoadCommand) -> list[LoadReport
             body = (
                 vsql.rstrip().rstrip(";")
                 if vsql
-                else f"SELECT * FROM {_qident(vname)}"
+                else f"SELECT * FROM {live.quote(vname)}"
             )
-            stmts.append(f"DROP TABLE IF EXISTS {_qident(staging)}")
-            stmts.append(f"CREATE TABLE {_qident(staging)} AS {body}")
+            stmts.append(f"DROP TABLE IF EXISTS {live.quote(staging)}")
+            stmts.append(f"CREATE TABLE {live.quote(staging)} AS {body}")
             mv_staging[staging] = vname
-        _source_admin(stmts)
-        fresh = _introspect(src_loc)
+        live.run(stmts)
+        fresh = live.introspect()
         for staging in mv_staging:
             catalog_fields[staging] = fresh[staging]
 
-    # The catalog: a MySQL source database maps to a target schema of
-    # the same name (mysql.lisp:149 add-schema with the catalog name —
-    # sakila.load then renames it with ALTER SCHEMA); sqlite sources
-    # land in public.
-    schema_name = "public"
-    if src_is_my:
-        from pgloader_spark.sources.mywire import parse_my_dsn as _p
-
-        schema_name = _p(src_loc)["database"] or "public"
-
+    # The catalog lands in the source's target schema: a MySQL
+    # database maps to a schema of the same name (sakila.load then
+    # renames it with ALTER SCHEMA), other sources to public.
     cat = Catalog(src.split(":", 1)[0])
-    sch = Schema(schema_name)
+    sch = Schema(live.schema)
     cat.schemas.append(sch)
     # the catalog applies identifier folding (downcase by default; WITH
     # quote identifiers / snake_case identifiers switch the mode); the
@@ -834,7 +656,7 @@ def execute_database(ctx: ExecutionContext, cmd: LoadCommand) -> list[LoadReport
         return apply_identifier_case(name, case_mode)
 
     try:
-        src_keys = _keys(src_loc)
+        src_keys = live.keys()
     except Exception:  # noqa: BLE001 — keys are best-effort extras
         src_keys = {}
     for t, tbl in tables.items():
@@ -905,7 +727,7 @@ def execute_database(ctx: ExecutionContext, cmd: LoadCommand) -> list[LoadReport
         return f"{s}.{tbl.name}" if s else tbl.name
 
     target = cmd.target or ""
-    pg_target = target.startswith(("postgresql://", "pgsql://", "postgres://"))
+    pg_target = is_pg_uri(target)
     if pg_target:
         from pgloader_spark.sources.pg_live import quote_qualified, write_pg_copy
         from pgloader_spark.sources.pgwire import PGConn
@@ -947,68 +769,13 @@ def execute_database(ctx: ExecutionContext, cmd: LoadCommand) -> list[LoadReport
                 for tbl in tables.values():
                     conn.query(f"TRUNCATE {quote_qualified(_qualified(tbl))}")
 
-    # MySQL catalog extras (list-all-checks / table & column comments /
-    # row-count estimates, mysql-schema.lisp): CHECKs and comments ride
-    # the complete phase; row counts drive largest-first COPY ordering
-    # (optimize-table-copy-ordering, migrate-database.lisp:304-320)
-    if src_is_my:
-        from pgloader_spark.sources.jdbc import (
-            attach_mysql_checks,
-            attach_mysql_comments,
-        )
-        from pgloader_spark.sources.mysql_live import introspect_mysql_extras
-
+    # catalog extras (MySQL: CHECKs, comments, row-count estimates;
+    # PostgreSQL: comments, CHECKs) ride the complete phase
+    if live.extras is not None:
         try:
-            extras = introspect_mysql_extras(src_loc)
+            live.extras(cat)
         except Exception as exc:  # noqa: BLE001 — extras are best-effort
-            log.warning("mysql extras introspection failed: %s", exc)
-            extras = None
-        if extras:
-            attach_mysql_checks(cat, extras["checks"])
-            attach_mysql_comments(
-                cat, extras["table_comments"], extras["column_comments"]
-            )
-            est = {
-                r["table_name"]: int(r["table_rows"] or 0)
-                for r in extras["row_counts"]
-                if r.get("table_name") and r.get("table_rows") is not None
-            }
-            for t, tbl in tables.items():
-                tbl.row_count_estimate = est.get(t)
-            if est:
-                catalog_fields = dict(
-                    sorted(
-                        catalog_fields.items(),
-                        key=lambda kv: -(est.get(kv[0]) or 0),
-                    )
-                )
-
-    # PostgreSQL-source extras: comments + CHECKs (already PG syntax,
-    # attached verbatim) — the pgsql-source counterpart of the block
-    # above
-    if src_is_pg:
-        from pgloader_spark.sources.jdbc import attach_mysql_comments
-        from pgloader_spark.sources.pg_live import introspect_pg_extras
-
-        try:
-            pg_extras = introspect_pg_extras(src_loc)
-        except Exception as exc:  # noqa: BLE001 — extras are best-effort
-            log.warning("pg extras introspection failed: %s", exc)
-            pg_extras = None
-        if pg_extras:
-            attach_mysql_comments(
-                cat,
-                pg_extras["table_comments"],
-                pg_extras["column_comments"],
-            )
-            for r in pg_extras["checks"]:
-                for s in cat.schemas:
-                    t = s.find_table(r["table_name"])
-                    if t is not None:
-                        t.check_constraints.append(
-                            (r["constraint_name"], r["check_clause"])
-                        )
-                        break
+            log.warning("%s extras introspection failed: %s", live.kind, exc)
 
     # WITH drop indexes (or its spelling WITH reindex): for loads into
     # pre-existing tables (data only / create no tables), drop every
@@ -1027,13 +794,16 @@ def execute_database(ctx: ExecutionContext, cmd: LoadCommand) -> list[LoadReport
         [_qualified(tbl) for tbl in tables.values()] if drop_indexes else [],
         ctx.root_dir,
     ):
-        for t in catalog_fields:
-            tbl = tables[t]
+        # largest first when the source estimates row counts
+        # (optimize-table-copy-ordering, migrate-database.lisp:304-320);
+        # the sort is stable, so other sources keep catalog order
+        for tbl in copy_ordering(list(tables.values())):
+            t = tbl.source_name
             if schema_only:
                 reports.append(LoadReport(table=tbl.name, read=0, loaded=0))
                 continue
             t0 = time.perf_counter()
-            df = _read(ctx.spark, src_loc, t, engine=engine)
+            df = live.read(ctx.spark, t, engine)
             df = _apply_cast_transforms(df, catalog_fields[t], engine)
             df = df.toDF(*[c.name for c in tbl.columns])
             if pg_target:
@@ -1174,9 +944,9 @@ def execute_database(ctx: ExecutionContext, cmd: LoadCommand) -> list[LoadReport
     # verification raise, or a failed verify would leak staging
     # objects onto the source
     if mv_staging:
-        _source_admin(
+        live.run(
             [
-                f"DROP TABLE IF EXISTS {_qident(staging)}"
+                f"DROP TABLE IF EXISTS {live.quote(staging)}"
                 for staging in mv_staging
             ]
         )
@@ -1245,7 +1015,7 @@ def execute(ctx: ExecutionContext, cmd: LoadCommand) -> LoadReport:
     drop_indexes = (
         ctx.sink is not None
         and (cmd.options.get("drop_indexes") or cmd.options.get("reindex"))
-        and tgt_dsn.startswith(("postgresql://", "pgsql://", "postgres://"))
+        and is_pg_uri(tgt_dsn)
     )
     with _indexes_dropped(tgt_dsn, [table] if drop_indexes else [], ctx.root_dir):
         if ctx.sink is not None:

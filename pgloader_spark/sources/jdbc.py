@@ -1,167 +1,146 @@
-"""JDBC database sources: partitioned reads + schema introspection.
+"""Database sources: the one range-read kernel, the scheme table, and
+the catalog SQL every live reader shares.
 
-Re-expresses the reference's database readers as ``spark.read.jdbc``
-plans:
+The reference runs every database source through one engine
+(``copy-database``, ``src/load/migrate-database.lisp:326-594``) that
+calls per-source generics (``fetch-metadata`` / ``fetch-columns`` /
+``-indexes`` / ``-fkeys``, ``src/sources/common/api.lisp:119-163``).
+Here the engine is ``plans.executor.execute_database`` and the
+generics are a ``LiveSource`` record that each ``*_live.py`` module
+builds with ``live_source(loc, options)``; ``LIVE_SCHEMES`` maps a
+source URI's scheme to that module.
 
-- **Pkey-range parallel reads** (``src/sources/mysql/mysql.lisp:10-62``:
-  probe ``min(pk), max(pk)+1``, split into ranges of ``rows per
-  range`` = 10k, one reader per range) -> JDBC
-  ``partitionColumn/lowerBound/upperBound/numPartitions``. On a
-  cluster every range is its own task; Spark's scheduler replaces the
-  reference's reader kernel.
-- **ctid block-range reads** (v4,
-  ``clojure/src/pgloader/source/pgsql.sql:97-112``: PG 14+ partitions
-  by ``relpages``) -> JDBC ``predicates`` array, one ctid range per
-  partition.
+- **Range reads** (``src/sources/mysql/mysql.lisp:10-62``: probe
+  ``min(pk), max(pk)+1``, split into ranges of ``rows per range`` =
+  10k, one reader per range; v4 ``clojure/src/pgloader/source/
+  pgsql.sql:97-112``: ctid block ranges) -> ``key_ranges`` splits a
+  key span, ``read_ranges`` runs one Spark task per range with one
+  source connection per task.  Each reader keeps only its probe, its
+  SELECT and its per-cell converter.
 - **Pushdown** (``src/sources/mysql/mysql-schema.lisp:268-286``
   geometry ``ST_AsText``; ``src/sources/mssql/mssql-schema.lisp:
-  200-218`` date/decimal CONVERT) -> per-type SELECT-expression
-  rewriting carried in the JDBC ``query`` option, so the source
-  database does the formatting exactly as the reference asks it to.
-- **Introspection** (``fetch-columns/-indexes/-fkeys/-table-row-count``
-  generics ``src/sources/common/api.lisp:149-163``) -> SQL against
-  information_schema / PRAGMA / sys-catalogs, themselves read through
-  JDBC as DataFrames.
-
-Everything here *plans* reads (options dicts / SQL strings) so it is
-unit-testable without a live server; ``read()`` applies the plan to a
-SparkSession.
+  200-218`` date/decimal CONVERT) -> per-type SELECT expressions, so
+  the source database formats values exactly as the reference asks.
+- **Introspection** (``fetch-columns/-indexes/-fkeys/-table-row-count``)
+  -> SQL against information_schema / sys-catalogs, run by the wire
+  clients (``mywire``, ``tdswire``, ``pgwire``).
 """
 
 from __future__ import annotations
 
-import math
+import importlib
 import re
-from dataclasses import dataclass, field
+from collections.abc import Callable
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
-DEFAULT_ROWS_PER_RANGE = 10_000  # *rows-per-range*, src/params.lisp:142
+ROWS_PER_RANGE = 10_000  # *rows-per-range*, src/params.lisp:142
 
 
 # --------------------------------------------------------------------------
-# URI parsing (pgloader connection strings -> JDBC)
+# One record per live source, one table of schemes
 # --------------------------------------------------------------------------
-
-_URI_RE = re.compile(
-    r"(?P<kind>mysql|postgresql|pgsql|mssql|sqlite)://"
-    r"(?:(?P<user>[^:@/]+)(?::(?P<password>[^@/]*))?@)?"
-    r"(?P<host>[^:/?]*)(?::(?P<port>\d+))?"
-    r"/(?P<db>[^?]*)(?:\?(?P<query>.*))?"
-)
-
-_DEFAULT_PORTS = {"mysql": 3306, "postgresql": 5432, "pgsql": 5432, "mssql": 1433}
 
 
 @dataclass
-class DbUri:
-    kind: str
-    host: str
-    port: int
-    database: str
-    user: str | None = None
-    password: str | None = None
-    params: dict = field(default_factory=dict)
+class LiveSource:
+    """What ``execute_database`` needs from a source database."""
 
-    def jdbc_url(self) -> str:
-        if self.kind == "sqlite":
-            return f"jdbc:sqlite:{self.database}"
-        kind = "postgresql" if self.kind == "pgsql" else self.kind
-        if kind == "mssql":
-            return f"jdbc:sqlserver://{self.host}:{self.port};databaseName={self.database}"
-        return f"jdbc:{kind}://{self.host}:{self.port}/{self.database}"
+    kind: str  # cast-rule source kind (CastEngine)
+    introspect: Callable[[], dict]  # table -> [SourceField]
+    keys: Callable[[], dict]  # table -> {"pk", "indexes", "fkeys"}
+    read: Callable[..., DataFrame]  # (spark, table, engine) -> DataFrame
+    run: Callable[[list[str]], list]  # statements -> last result's rows
+    views_sql: str  # one view name per row (MATERIALIZE ALL VIEWS)
+    quote: Callable[[str], str]  # identifier quoting in source SQL
+    schema: str = "public"  # target schema of the migrated tables
+    # attach catalog extras (checks, comments, row_count_estimate)
+    extras: Callable[[object], None] | None = None
 
 
-def parse_db_uri(uri: str) -> DbUri:
-    m = _URI_RE.match(uri)
-    if not m:
-        raise ValueError(f"unparseable database URI: {uri!r}")
-    kind = m.group("kind")
-    params = {}
-    if m.group("query"):
-        for kv in m.group("query").split("&"):
-            k, _, v = kv.partition("=")
-            params[k] = v
-    password = m.group("password")
-    if password is None and kind in ("postgresql", "pgsql") and m.group("user"):
-        # no inline password: consult ~/.pgpass / $PGPASSFILE, like the
-        # reference (src/parsers/parse-pgpass.lisp wired into its
-        # pgsql connection strings)
-        from pgloader_spark.parsers.pgpass import lookup_password
+# scheme -> the module under pgloader_spark.sources that reads it
+LIVE_SCHEMES = {
+    "sqlite": "sqlite_live",
+    "db3": "sqlite_live",
+    "postgresql": "pg_live",
+    "postgres": "pg_live",
+    "pgsql": "pg_live",
+    "mysql": "mysql_live",
+    "mssql": "mssql_live",
+}
 
-        password = lookup_password(
-            m.group("host") or "localhost",
-            int(m.group("port") or _DEFAULT_PORTS.get(kind, 0)),
-            m.group("db"),
-            m.group("user"),
+
+def live_scheme(src: str) -> str | None:
+    """The ``LIVE_SCHEMES`` key SRC names (a bare SQLite file counts
+    as ``sqlite``), or None for a file source."""
+    scheme, sep, _ = src.partition("://")
+    if sep:
+        return scheme if scheme in LIVE_SCHEMES else None
+    return "sqlite" if src.endswith((".db", ".sqlite", ".sqlite3")) else None
+
+
+def is_pg_uri(uri: str) -> bool:
+    """A PostgreSQL URI (``postgresql://``, ``postgres://``,
+    ``pgsql://``) — the one live target."""
+    return LIVE_SCHEMES.get(live_scheme(uri) or "") == "pg_live"
+
+
+def open_live_source(src: str, options: dict) -> LiveSource:
+    """The ``LiveSource`` record of database SRC."""
+    scheme = live_scheme(src)
+    if scheme is None:
+        raise ValueError(
+            f"not a database source: {src!r} (schemes: "
+            f"{', '.join(s + '://' for s in LIVE_SCHEMES)})"
         )
-    return DbUri(
-        kind=kind,
-        host=m.group("host") or "localhost",
-        port=int(m.group("port") or _DEFAULT_PORTS.get(kind, 0)),
-        database=m.group("db"),
-        user=m.group("user"),
-        password=password,
-        params=params,
+    mod = importlib.import_module(
+        f"pgloader_spark.sources.{LIVE_SCHEMES[scheme]}"
     )
+    return mod.live_source(src, options)
+
+
+def wire_runner(connect: Callable) -> Callable[[list[str]], list]:
+    """``LiveSource.run`` over a wire client (``PGConn``, ``MyConn``,
+    ``MsConn``): one connection, the statements in order, the rows of
+    the last one."""
+
+    def run(statements: list[str]) -> list:
+        rows: list = []
+        with connect() as conn:
+            for s in statements:
+                rows = conn.query(s)[1]
+        return rows
+
+    return run
 
 
 # --------------------------------------------------------------------------
-# Partitioned read planning
+# The range-read kernel
 # --------------------------------------------------------------------------
 
 
-@dataclass
-class JdbcReadPlan:
-    url: str
-    table: str | None = None
-    query: str | None = None
-    options: dict = field(default_factory=dict)
-    predicates: list[str] | None = None
+def read_schema(fields: list, engine) -> T.StructType:
+    """The read-side Spark schema of FIELDS under ENGINE's cast rules.
 
-    def read(self, spark: SparkSession, **extra: str) -> DataFrame:
-        reader = spark.read.format("jdbc").option("url", self.url)
-        if self.query:
-            reader = reader.option("query", self.query)
-        elif self.table:
-            reader = reader.option("dbtable", self.table)
-        for k, v in {**self.options, **extra}.items():
-            reader = reader.option(k, str(v))
-        if self.predicates is not None:
-            # predicates path needs the RDD-style API
-            props = {k: str(v) for k, v in {**self.options, **extra}.items()}
-            return spark.read.jdbc(
-                self.url, self.table, predicates=self.predicates, properties=props
-            )
-        return reader.load()
-
-
-def plan_range_partitions(
-    url: str,
-    table: str,
-    pk: str,
-    min_pk: int,
-    max_pk: int,
-    rows_per_range: int = DEFAULT_ROWS_PER_RANGE,
-    max_partitions: int = 256,
-) -> JdbcReadPlan:
-    """The reference's integer-pkey range split (mysql.lisp:10-62):
-    [min, max+1) divided into ceil(n/rows_per_range) ranges. Spark's
-    JDBC source generates the same WHERE clauses from
-    lower/upper/numPartitions."""
-    span = max(max_pk + 1 - min_pk, 1)
-    n = min(max(math.ceil(span / rows_per_range), 1), max_partitions)
-    return JdbcReadPlan(
-        url=url,
-        table=table,
-        options={
-            "partitionColumn": pk,
-            "lowerBound": str(min_pk),
-            "upperBound": str(max_pk + 1),
-            "numPartitions": str(n),
-            "fetchsize": "10000",
-        },
+    Every field is nullable regardless of the source's NOT NULL: per-
+    cell error recovery may null any cell (a non-nullable Spark field
+    would NPE in the unsafe-row writer).  The constraint is enforced
+    on the TARGET (catalog DDL), where a violated row lands in the
+    reject file instead of crashing the scan — the reference's
+    semantics."""
+    return T.StructType(
+        [
+            T.StructField(f.name, engine.read_spark_type(f, res), True)
+            for f, res in engine.cast_fields(fields)
+        ]
     )
+
+
+def key_ranges(lo: int, hi: int, step: int) -> list[tuple[int, int]]:
+    """``[lo, hi)`` split into ``(start, start + step)`` ranges."""
+    return [(s, s + step) for s in range(lo, hi, step)]
 
 
 def range_frame(spark: SparkSession, ranges: list[tuple[int, int]]) -> DataFrame:
@@ -184,29 +163,33 @@ def range_frame(spark: SparkSession, ranges: list[tuple[int, int]]) -> DataFrame
     )
 
 
-def minmax_probe_sql(table: str, pk: str) -> str:
-    """`SELECT min(pk), max(pk)+1 FROM t` (mysql.lisp:35-44) — run
-    through a 1-row JDBC read before planning ranges."""
-    return f"SELECT MIN({pk}) AS min_pk, MAX({pk}) + 1 AS max_pk FROM {table}"
+def read_ranges(
+    spark: SparkSession,
+    ranges: list[tuple[int, int]],
+    schema: T.StructType,
+    connect: Callable,
+    fetch: Callable,
+) -> DataFrame:
+    """One Spark task per range group: each task opens ONE source
+    connection (``with connect() as conn``) and yields, per range,
+    ``fetch(conn, lo, hi)`` — one list of cells per schema field — as
+    one object-typed pandas batch.  No ranges: an empty frame."""
+    if not ranges:
+        return spark.createDataFrame([], schema)
+    names = schema.names
 
+    def run(batches):
+        import pandas as pd
 
-def plan_ctid_partitions(
-    url: str, table: str, relpages: int, pages_per_range: int = 1000
-) -> JdbcReadPlan:
-    """PG ctid block-range partitions (v4 pgsql.sql:97-112): WHERE
-    ctid >= '(b,0)' AND ctid < '(b2,0)' per range; the last range is
-    open-ended to catch concurrent growth."""
-    n = max(math.ceil(relpages / pages_per_range), 1)
-    preds = []
-    for i in range(n):
-        lo = i * pages_per_range
-        hi = (i + 1) * pages_per_range
-        if i == n - 1:
-            preds.append(f"ctid >= '({lo},0)'::tid")
-        else:
-            preds.append(f"ctid >= '({lo},0)'::tid AND ctid < '({hi},0)'::tid")
-    return JdbcReadPlan(url=url, table=table, predicates=preds,
-                        options={"fetchsize": "10000"})
+        with connect() as conn:
+            for b in batches:
+                for lo, hi in zip(b["lo"], b["hi"]):
+                    cols = fetch(conn, int(lo), int(hi))
+                    yield pd.DataFrame(
+                        dict(zip(names, cols)), columns=names, dtype=object
+                    )
+
+    return range_frame(spark, ranges).mapInPandas(run, schema)
 
 
 # --------------------------------------------------------------------------
@@ -233,16 +216,8 @@ def mssql_select_expr(column: str, type_name: str) -> str:
     return f"[{column}]"
 
 
-def pushdown_query(
-    table: str, columns: list[tuple[str, str]], dialect: str = "mysql"
-) -> str:
-    expr = {"mysql": mysql_select_expr, "mssql": mssql_select_expr}[dialect]
-    cols = ", ".join(expr(c, t) for c, t in columns)
-    return f"SELECT {cols} FROM {table}"
-
-
 # --------------------------------------------------------------------------
-# Introspection SQL (catalog reads, themselves JDBC DataFrames)
+# Introspection SQL (catalog reads the wire clients run)
 # --------------------------------------------------------------------------
 
 
@@ -502,7 +477,7 @@ def fields_from_mssql_columns(rows) -> dict[tuple[str, str], list]:
 
 
 def catalog_from_mssql(column_rows, engine=None):
-    """Canned (or live-JDBC) column resultsets -> a full target
+    """Canned (or live) column resultsets -> a full target
     Catalog: one Schema per source schema, cast rules applied per
     column — the resolution step of ``LOAD DATABASE FROM mssql://``."""
     from pgloader_spark.casting import CastEngine

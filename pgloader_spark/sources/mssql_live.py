@@ -1,13 +1,14 @@
 """Live MS SQL source: introspection + distributed pkey-range reads.
 
 The TDS counterpart of ``mysql_live.py``: the stdlib wire client
-(``tdswire.MsConn``) runs the planner's catalog scans
-(``jdbc.py:mssql_*_sql`` — the re-derivation of
-src/sources/mssql/sql/*.sql) and then streams each table through
-integer-pkey ranged SELECTs inside Arrow-batched ``mapInPandas``
-tasks, with the CONVERT-to-text pushdown for datetimes/decimals
+(``tdswire.MsConn``) runs the catalog scans (``jdbc.py:mssql_*_sql``
+— the re-derivation of src/sources/mssql/sql/*.sql) and then streams
+each table through integer-pkey ranged SELECTs inside the shared
+range-read kernel (``sources.jdbc.read_ranges``), with the
+CONVERT-to-text pushdown for datetimes/decimals
 (mssql-schema.lisp:200-218) and client-side typed conversion per the
-introspected catalog type.
+introspected catalog type.  ``live_source`` builds the
+``LiveSource`` record the executor runs.
 
 Scale: one connection and ONE pkey range per task, exactly the
 reference's reader-pool sharding (``rows per range``) — a
@@ -17,21 +18,23 @@ MIN/MAX probe per table.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
 
 from pgloader_spark.casting import CastEngine, SourceField
 from pgloader_spark.sources.jdbc import (
+    ROWS_PER_RANGE,
+    LiveSource,
     fields_from_mssql_columns,
+    key_ranges,
     mssql_columns_sql,
     mssql_fkeys_sql,
     mssql_indexes_sql,
     mssql_select_expr,
-    range_frame,
+    read_ranges,
+    read_schema,
+    wire_runner,
 )
-from pgloader_spark.sources.mysql_live import ROWS_PER_RANGE, _convert_cell
+from pgloader_spark.sources.mysql_live import _convert_cell
 from pgloader_spark.sources.tdswire import MsConn, parse_ms_dsn
 
 _INT_TYPES = {"tinyint", "smallint", "int", "bigint"}
@@ -138,17 +141,6 @@ def introspect_mssql_keys(dsn: str) -> dict[str, dict]:
     return out
 
 
-def _schema_for(fields: list[SourceField], engine: CastEngine) -> T.StructType:
-    # read-side fields always nullable: per-cell recovery may null any
-    # cell; NOT NULL is enforced at the target (see sqlite_live.py)
-    return T.StructType(
-        [
-            T.StructField(f.name, engine.read_spark_type(f, res), True)
-            for f, res in engine.cast_fields(fields)
-        ]
-    )
-
-
 def _int_pkey(dsn: str, table: str, fields: list[SourceField]) -> str | None:
     """Single-column integer PRIMARY KEY -> range-read partition
     column (the reference's parallel-read precondition)."""
@@ -180,12 +172,9 @@ def read_mssql_table(
     fields: list[SourceField] | None = None,
 ) -> DataFrame:
     """Distributed typed read of one MS SQL table via pkey ranges."""
-    import pandas as pd
-
     eng = engine or CastEngine(source_kind="mssql")
     flds = fields if fields is not None else introspect_mssql(dsn)[table]
-    schema = _schema_for(flds, eng)
-    names = [f.name for f in flds]
+    schema = read_schema(flds, eng)
     spark_types = [sf.dataType for sf in schema.fields]
     col_list = ", ".join(mssql_select_expr(f.name, f.type_name) for f in flds)
     qtable = _bracket(table)
@@ -200,32 +189,36 @@ def read_mssql_table(
                 f"SELECT MIN([{pk}]), MAX([{pk}]) + 1 FROM {qtable}"
             )
         lo, hi = rows[0]
-        if lo is None:
-            return spark.createDataFrame([], schema)
-        lo, hi = int(lo), int(float(hi))
-        ranges = [
-            (start, start + rows_per_range)
-            for start in range(lo, hi, rows_per_range)
-        ]
+        ranges = [] if lo is None else key_ranges(
+            int(lo), int(float(hi)), rows_per_range
+        )
         where = f" WHERE [{pk}] >= {{lo}} AND [{pk}] < {{hi}}"
-    if not ranges:
-        return spark.createDataFrame([], schema)
-    ranges_df = range_frame(spark, ranges)
 
-    def fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        with MsConn(dsn) as conn:
-            for b in batches:
-                for lo, hi in zip(b["lo"], b["hi"]):
-                    sql = f"SELECT {col_list} FROM {qtable}" + where.format(
-                        lo=int(lo), hi=int(hi)
-                    )
-                    _, rows = conn.query(sql)
-                    data = [
-                        [_convert_cell(r[i], spark_types[i]) for r in rows]
-                        for i in range(len(names))
-                    ]
-                    yield pd.DataFrame(
-                        dict(zip(names, data)), columns=names, dtype=object
-                    )
+    def fetch(conn, lo: int, hi: int) -> list[list]:
+        _, rows = conn.query(
+            f"SELECT {col_list} FROM {qtable}" + where.format(lo=lo, hi=hi)
+        )
+        return [
+            [_convert_cell(r[i], typ) for r in rows]
+            for i, typ in enumerate(spark_types)
+        ]
 
-    return ranges_df.mapInPandas(fetch, schema)
+    return read_ranges(spark, ranges, schema, lambda: MsConn(dsn), fetch)
+
+
+def live_source(dsn: str, options: dict) -> LiveSource:
+    """``mssql://``, over the TDS client."""
+    return LiveSource(
+        kind="mssql",
+        introspect=lambda: introspect_mssql(dsn),
+        keys=lambda: introspect_mssql_keys(dsn),
+        read=lambda spark, table, engine: read_mssql_table(
+            spark, dsn, table, engine=engine
+        ),
+        run=wire_runner(lambda: MsConn(dsn)),
+        views_sql=(
+            "SELECT table_name FROM information_schema.tables "
+            "WHERE table_type = 'VIEW'"
+        ),
+        quote=lambda name: f"[{name}]",
+    )

@@ -1,16 +1,15 @@
 """Live MySQL source: introspection + distributed pkey-range reads.
 
-The JDBC planner (``sources/jdbc.py``) emits the URLs/SQL a cluster
-with a Connector/J jar would use; this module is the self-contained
-execution path using the stdlib wire client (``sources/mywire.py``)
-inside Arrow-batched ``mapInPandas`` tasks — the reference's flagship
+The execution path using the stdlib wire client
+(``sources/mywire.py``) inside the shared range-read kernel
+(``sources.jdbc.read_ranges``) — the reference's flagship
 ``LOAD DATABASE FROM mysql://`` lifecycle
-(``src/sources/mysql/mysql.lisp:100-131``).
+(``src/sources/mysql/mysql.lisp:100-131``).  ``live_source`` builds
+the ``LiveSource`` record the executor runs.
 
 Reference parity (dimitri/pgloader):
 - catalog via information_schema (``src/sources/mysql/sql/*.sql``;
-  the SQL lives in ``sources/jdbc.py:216-290`` and is shared with the
-  JDBC plans);
+  the SQL lives in ``sources/jdbc.py``);
 - integer-pkey parallel ranges, ``rows per range`` = 10k
   (``mysql.lisp:10-62``) — probe ``MIN(pk), MAX(pk)+1``, one reader
   per range; tables without a single-column integer pkey fall back to
@@ -20,7 +19,9 @@ Reference parity (dimitri/pgloader):
 - MySQL-isms handled the way the reference's cast functions do: zero
   dates ``0000-00-00 [00:00:00]`` -> NULL
   (``mysql-cast-rules.lisp:107-140``), ``tinyint(1)`` -> boolean,
-  text protocol values funneled through typed conversion per cell.
+  text protocol values funneled through typed conversion per cell;
+- row-count estimates order the COPYs largest first
+  (``migrate-database.lisp:304-320``).
 
 Scale notes: each task opens its own connection and scans ONE pkey
 range, so a big table parallelizes across executors exactly like the
@@ -30,14 +31,17 @@ ranges.  Driver-side work is one MIN/MAX probe per table (indexed).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from pgloader_spark.casting import CastEngine, SourceField
 from pgloader_spark.sources.jdbc import (
+    ROWS_PER_RANGE,
+    LiveSource,
+    attach_mysql_checks,
+    attach_mysql_comments,
     fields_from_mysql_columns,
+    key_ranges,
     mysql_checks_sql,
     mysql_column_comments_sql,
     mysql_columns_sql,
@@ -46,11 +50,11 @@ from pgloader_spark.sources.jdbc import (
     mysql_row_counts_sql,
     mysql_select_expr,
     mysql_table_comments_sql,
-    range_frame,
+    read_ranges,
+    read_schema,
+    wire_runner,
 )
 from pgloader_spark.sources.mywire import MyConn, parse_my_dsn
-
-ROWS_PER_RANGE = 10_000  # *rows-per-range*, src/params.lisp:142
 
 _INT_TYPES = {"tinyint", "smallint", "mediumint", "int", "integer", "bigint"}
 
@@ -133,17 +137,6 @@ def introspect_mysql_extras(dsn: str) -> dict:
         }
 
 
-def _schema_for(fields: list[SourceField], engine: CastEngine) -> T.StructType:
-    # read-side fields always nullable: per-cell recovery may null any
-    # cell; NOT NULL is enforced at the target (see sqlite_live.py)
-    return T.StructType(
-        [
-            T.StructField(f.name, engine.read_spark_type(f, res), True)
-            for f, res in engine.cast_fields(fields)
-        ]
-    )
-
-
 def _int_pkey(dsn: str, table: str, fields: list[SourceField]) -> str | None:
     """The range-read partition column: a single-column PRIMARY KEY of
     integer type (mysql.lisp:35-44's precondition), else None."""
@@ -161,25 +154,6 @@ def _int_pkey(dsn: str, table: str, fields: list[SourceField]) -> str | None:
         if f.name == pk and f.type_name.lower() in _INT_TYPES:
             return pk
     return None
-
-
-def _pk_ranges(
-    dsn: str, table: str, pk: str, rows_per_range: int
-) -> list[tuple[int, int]]:
-    with MyConn(dsn) as conn:
-        _, rows = conn.query(
-            f"SELECT MIN(`{pk}`), MAX(`{pk}`) + 1 FROM `{table}`"
-        )
-    lo, hi = rows[0]
-    if lo is None:
-        return []
-    lo, hi = int(lo), int(float(hi))
-    out = []
-    start = lo
-    while start < hi:
-        out.append((start, start + rows_per_range))
-        start += rows_per_range
-    return out
 
 
 def _convert_cell(v: str | None, typ: T.DataType):
@@ -232,12 +206,9 @@ def read_mysql_table(
     fields: list[SourceField] | None = None,
 ) -> DataFrame:
     """Distributed typed read of one MySQL table via pkey ranges."""
-    import pandas as pd
-
     eng = engine or CastEngine(source_kind="mysql")
     flds = fields if fields is not None else introspect_mysql(dsn)[table]
-    schema = _schema_for(flds, eng)
-    names = [f.name for f in flds]
+    schema = read_schema(flds, eng)
     spark_types = [sf.dataType for sf in schema.fields]
     col_list = ", ".join(mysql_select_expr(f.name, f.type_name) for f in flds)
 
@@ -247,26 +218,62 @@ def read_mysql_table(
         ranges = [(0, -1)]
         where = ""
     else:
-        ranges = _pk_ranges(dsn, table, pk, rows_per_range)
-        where = f" WHERE `{pk}` >= {{lo}} AND `{pk}` < {{hi}}"
-    if not ranges:
-        return spark.createDataFrame([], schema)
-    ranges_df = range_frame(spark, ranges)
-
-    def fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         with MyConn(dsn) as conn:
-            for b in batches:
-                for lo, hi in zip(b["lo"], b["hi"]):
-                    sql = f"SELECT {col_list} FROM `{table}`" + where.format(
-                        lo=int(lo), hi=int(hi)
-                    )
-                    _, rows = conn.query(sql)
-                    data = [
-                        [_convert_cell(r[i], spark_types[i]) for r in rows]
-                        for i in range(len(names))
-                    ]
-                    yield pd.DataFrame(
-                        dict(zip(names, data)), columns=names, dtype=object
-                    )
+            _, rows = conn.query(
+                f"SELECT MIN(`{pk}`), MAX(`{pk}`) + 1 FROM `{table}`"
+            )
+        lo, hi = rows[0]
+        ranges = [] if lo is None else key_ranges(
+            int(lo), int(float(hi)), rows_per_range
+        )
+        where = f" WHERE `{pk}` >= {{lo}} AND `{pk}` < {{hi}}"
 
-    return ranges_df.mapInPandas(fetch, schema)
+    def fetch(conn, lo: int, hi: int) -> list[list]:
+        _, rows = conn.query(
+            f"SELECT {col_list} FROM `{table}`" + where.format(lo=lo, hi=hi)
+        )
+        return [
+            [_convert_cell(r[i], typ) for r in rows]
+            for i, typ in enumerate(spark_types)
+        ]
+
+    return read_ranges(spark, ranges, schema, lambda: MyConn(dsn), fetch)
+
+
+def live_source(dsn: str, options: dict) -> LiveSource:
+    """``mysql://``: the source database maps to a target schema of
+    the same name (mysql.lisp:149 add-schema with the catalog name)."""
+    db = parse_my_dsn(dsn)["database"]
+
+    def extras(catalog) -> None:
+        """CHECKs and comments ride the complete phase; row-count
+        estimates order the COPYs largest first."""
+        ex = introspect_mysql_extras(dsn)
+        attach_mysql_checks(catalog, ex["checks"])
+        attach_mysql_comments(
+            catalog, ex["table_comments"], ex["column_comments"]
+        )
+        est = {
+            r["table_name"]: int(r["table_rows"] or 0)
+            for r in ex["row_counts"]
+            if r.get("table_name") and r.get("table_rows") is not None
+        }
+        for tbl in catalog.all_tables():
+            tbl.row_count_estimate = est.get(tbl.source_name)
+
+    return LiveSource(
+        kind="mysql",
+        introspect=lambda: introspect_mysql(dsn),
+        keys=lambda: introspect_mysql_keys(dsn),
+        read=lambda spark, table, engine: read_mysql_table(
+            spark, dsn, table, engine=engine
+        ),
+        run=wire_runner(lambda: MyConn(dsn)),
+        views_sql=(
+            "SELECT table_name FROM information_schema.tables "
+            f"WHERE table_schema = '{db}' AND table_type = 'VIEW'"
+        ),
+        quote=lambda name: f"`{name}`",
+        schema=db or "public",
+        extras=extras,
+    )

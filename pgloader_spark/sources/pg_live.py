@@ -8,9 +8,12 @@ Reference parity (dimitri/pgloader):
 - catalog introspection via information_schema
   (``pg_columns_sql`` re-derives src/pgsql/pgsql-schema SQL);
 - ctid block-range parallel reads, the v4 strategy
-  (``clojure/.../pgsql.sql:97-112`` and ``sources/jdbc.py:
-  plan_ctid_partitions`` — one ``COPY (SELECT ... WHERE ctid
-  range) TO STDOUT`` per task);
+  (``clojure/.../pgsql.sql:97-112``): ``ctid_ranges`` splits the
+  table's pages, and the shared range-read kernel
+  (``sources.jdbc.read_ranges``) runs one ``COPY (SELECT ... WHERE
+  ctid range) TO STDOUT`` per range;
+- ``live_source`` builds the ``LiveSource`` record ``LOAD DATABASE
+  FROM postgresql://`` runs through, ``WITH chunk size`` included;
 - the COPY-FROM-STDIN write path per partition
   (``src/pg-copy/copy-db-write.lisp:24-35``) — each Spark partition
   attempt is one transaction holding one COPY per Arrow batch, so a
@@ -27,7 +30,6 @@ so a PG read and a ``.dat`` read are byte-for-byte the same transform.
 from __future__ import annotations
 
 import itertools
-import math
 import os
 from collections.abc import Iterator
 
@@ -35,10 +37,18 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from pgloader_spark.casting import CastEngine, SourceField
-from pgloader_spark.sources.jdbc import pg_columns_sql, range_frame
+from pgloader_spark.sources.jdbc import (
+    LiveSource,
+    attach_mysql_comments,
+    key_ranges,
+    pg_columns_sql,
+    read_ranges,
+    read_schema,
+    wire_runner,
+)
 from pgloader_spark.sources.pgwire import PGConn, PGError, _parse_dsn
 
-PAGES_PER_RANGE = 1000  # matches plan_ctid_partitions
+PAGES_PER_RANGE = 1000  # ctid pages per read range
 
 _UNESCAPE = {
     b"\\\\": b"\\",
@@ -270,18 +280,15 @@ ORDER BY c.conname, k.ord
     return out
 
 
-def _schema_for(fields: list[SourceField], engine: CastEngine) -> T.StructType:
-    # read-side fields always nullable: per-cell recovery may null any
-    # cell; NOT NULL is enforced at the target (see sqlite_live.py)
-    return T.StructType(
-        [
-            T.StructField(f.name, engine.read_spark_type(f, res), True)
-            for f, res in engine.cast_fields(fields)
-        ]
-    )
+def ctid_ranges(relpages: int, pages_per_range: int) -> list[tuple[int, int]]:
+    """Page ranges covering RELPAGES (>= 1); the last is open-ended
+    (hi -1), so rows that land in new pages during the read are read."""
+    ranges = key_ranges(0, relpages, pages_per_range)
+    ranges[-1] = (ranges[-1][0], -1)
+    return ranges
 
 
-def _ctid_ranges(dsn: str, table: str, pages_per_range: int) -> list[tuple[int, int]]:
+def _relpages(dsn: str, table: str) -> int:
     if "." in table:
         # schema-qualified: resolve through regclass (bare relname is
         # ambiguous across schemas)
@@ -296,13 +303,7 @@ def _ctid_ranges(dsn: str, table: str, pages_per_range: int) -> list[tuple[int, 
             "SELECT GREATEST(pg_relation_size(oid) / "
             f"current_setting('block_size')::int, 1) FROM pg_class WHERE {where}"
         )
-    relpages = int(rows[0][0]) if rows else 1
-    n = max(math.ceil(relpages / pages_per_range), 1)
-    # last range open-ended (concurrent growth), as in plan_ctid_partitions
-    return [
-        (i * pages_per_range, -1 if i == n - 1 else (i + 1) * pages_per_range)
-        for i in range(n)
-    ]
+    return int(rows[0][0]) if rows else 1
 
 
 def _convert_cell(v: str | None, typ: T.DataType):
@@ -345,8 +346,6 @@ def read_pg_table(
     from Catalyst, so wide tables aren't streamed whole when the
     caller (e.g. checksum verification) needs two key columns.
     """
-    import pandas as pd
-
     eng = engine or CastEngine(source_kind="pgsql")
     if "." in table:
         pg_schema, bare = table.rsplit(".", 1)
@@ -359,38 +358,85 @@ def read_pg_table(
         if missing:
             raise KeyError(f"{table}: no such column(s): {', '.join(missing)}")
         fields = [by_name[c] for c in columns]
-    schema = _schema_for(fields, eng)
-    names = [f.name for f in fields]
+    schema = read_schema(fields, eng)
     spark_types = [sf.dataType for sf in schema.fields]
-    ranges = _ctid_ranges(dsn, table, pages_per_range)
-    ranges_df = range_frame(spark, ranges)
-    col_list = ", ".join(f'"{n}"' for n in names)
+    ranges = ctid_ranges(_relpages(dsn, table), pages_per_range)
+    col_list = ", ".join(f'"{f.name}"' for f in fields)
     from_ref = quote_qualified(table)
 
-    def fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            for lo, hi in zip(b["lo"], b["hi"]):
-                where = f"ctid >= '({int(lo)},0)'::tid"
-                if int(hi) >= 0:
-                    where += f" AND ctid < '({int(hi)},0)'::tid"
-                with PGConn(dsn) as conn:
-                    data = b"".join(
-                        conn.copy_out(
-                            f"COPY (SELECT {col_list} FROM {from_ref} "
-                            f"WHERE {where}) TO STDOUT"
-                        )
-                    )
-                rows = [
-                    [_convert_cell(v, t) for v, t in zip(r, spark_types)]
-                    for r in parse_copy_text(data)
-                ]
-                yield pd.DataFrame(
-                    {n: [r[i] for r in rows] for i, n in enumerate(names)},
-                    columns=names,
-                    dtype=object,
-                )
+    def fetch(conn, lo: int, hi: int) -> list[list]:
+        where = f"ctid >= '({lo},0)'::tid"
+        if hi >= 0:
+            where += f" AND ctid < '({hi},0)'::tid"
+        data = b"".join(
+            conn.copy_out(
+                f"COPY (SELECT {col_list} FROM {from_ref} "
+                f"WHERE {where}) TO STDOUT"
+            )
+        )
+        rows = [
+            [_convert_cell(v, t) for v, t in zip(r, spark_types)]
+            for r in parse_copy_text(data)
+        ]
+        return [[r[i] for r in rows] for i in range(len(spark_types))]
 
-    return ranges_df.mapInPandas(fetch, schema)
+    return read_ranges(spark, ranges, schema, lambda: PGConn(dsn), fetch)
+
+
+def _size_bytes(value) -> int | None:
+    """Parse a WITH size value ('10 MB', '1024 kB', '8192') to bytes."""
+    if value is None:
+        return None
+    s = str(value).strip().lower()
+    mult = 1
+    for unit, m in (("kb", 1 << 10), ("mb", 1 << 20), ("gb", 1 << 30)):
+        if s.endswith(unit):
+            s, mult = s[: -len(unit)].strip(), m
+            break
+    try:
+        return int(float(s) * mult)
+    except ValueError:
+        return None
+
+
+def live_source(dsn: str, options: dict) -> LiveSource:
+    """``postgresql://`` (also ``postgres://``, ``pgsql://``)."""
+    # WITH chunk size = 10 MB (docs/ref/pgsql.rst): pages are 8 kB, so
+    # one read range covers chunk_size / 8 kB pages
+    chunk = _size_bytes(options.get("chunk_size"))
+    pages = max(chunk // 8192, 1) if chunk else PAGES_PER_RANGE
+
+    def extras(catalog) -> None:
+        """Comments and CHECKs, the latter already PG syntax and
+        attached verbatim."""
+        ex = introspect_pg_extras(dsn)
+        attach_mysql_comments(
+            catalog, ex["table_comments"], ex["column_comments"]
+        )
+        for r in ex["checks"]:
+            for s in catalog.schemas:
+                t = s.find_table(r["table_name"])
+                if t is not None:
+                    t.check_constraints.append(
+                        (r["constraint_name"], r["check_clause"])
+                    )
+                    break
+
+    return LiveSource(
+        kind="pgsql",
+        introspect=lambda: introspect_pg(dsn),
+        keys=lambda: introspect_pg_keys(dsn),
+        read=lambda spark, table, engine: read_pg_table(
+            spark, dsn, table, engine=engine, pages_per_range=pages
+        ),
+        run=wire_runner(lambda: PGConn(dsn)),
+        views_sql=(
+            "SELECT table_name FROM information_schema.views "
+            "WHERE table_schema = 'public'"
+        ),
+        quote=lambda name: f'"{name}"',
+        extras=extras,
+    )
 
 
 def quote_qualified(table: str) -> str:
@@ -763,21 +809,6 @@ def file_load_sink(dsn: str, root_dir: str, on_error_stop: bool = False):
         )
 
     return sink
-
-
-def migrate_pg_to_parquet(
-    spark: SparkSession, dsn: str, out_dir: str, engine: CastEngine | None = None
-) -> dict[str, int]:
-    """Whole-database migration: introspect, cast, read, write parquet."""
-    counts: dict[str, int] = {}
-    eng = engine or CastEngine(source_kind="pgsql")
-    for table in introspect_pg(dsn):
-        df = read_pg_table(spark, dsn, table, engine=eng)
-        df.write.mode("overwrite").parquet(os.path.join(out_dir, f"{table}.parquet"))
-        counts[table] = spark.read.parquet(
-            os.path.join(out_dir, f"{table}.parquet")
-        ).count()
-    return counts
 
 
 def write_pg_upsert(

@@ -1,10 +1,10 @@
 """Live SQLite source: introspection + distributed rowid-range reads.
 
-The JDBC planner (``sources/jdbc.py``) emits the URLs/SQL a cluster
-with a sqlite-jdbc jar would use; this module is the self-contained
-execution path for the common deployment — a SQLite FILE on shared
-storage — using Python's stdlib ``sqlite3`` inside Arrow-batched
-``mapInPandas`` tasks.
+The execution path for the common deployment — a SQLite FILE on
+shared storage — using Python's stdlib ``sqlite3`` inside the shared
+range-read kernel (``sources.jdbc.read_ranges``).  ``live_source``
+builds the ``LiveSource`` record ``LOAD DATABASE FROM sqlite://``
+runs through.
 
 Reference parity (dimitri/pgloader):
 - typed per-cell reads with decode-error -> NULL + logged row id,
@@ -25,17 +25,21 @@ more ranges. The only driver-side work is the min/max rowid probe
 
 from __future__ import annotations
 
+import contextlib
 import re
 import sqlite3
-from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from pgloader_spark.casting import CastEngine, SourceField
-from pgloader_spark.sources.jdbc import range_frame
-
-ROWS_PER_RANGE = 10_000  # reference *rows-per-range*, src/params.lisp:142
+from pgloader_spark.sources.jdbc import (
+    ROWS_PER_RANGE,
+    LiveSource,
+    key_ranges,
+    read_ranges,
+    read_schema,
+)
 
 
 def introspect_sqlite(db_path: str) -> dict[str, list[SourceField]]:
@@ -140,40 +144,6 @@ def introspect_sqlite_keys(db_path: str) -> dict[str, dict]:
         con.close()
 
 
-def _schema_for(fields: list[SourceField], engine: CastEngine) -> T.StructType:
-    # Every read-side field is nullable regardless of the source's NOT
-    # NULL: per-cell error recovery may null any cell (a non-nullable
-    # Spark field would NPE in the unsafe-row writer). The constraint
-    # is enforced on the TARGET (catalog DDL / sink validation), where
-    # a violated row lands in the reject file instead of crashing the
-    # scan — the reference's semantics.
-    return T.StructType(
-        [
-            T.StructField(f.name, engine.read_spark_type(f, res), True)
-            for f, res in engine.cast_fields(fields)
-        ]
-    )
-
-
-def _rowid_ranges(db_path: str, table: str, rows_per_range: int) -> list[tuple[int, int]]:
-    con = sqlite3.connect(f"file:{db_path}?mode=ro", uri=True)
-    try:
-        row = con.execute(
-            f'SELECT MIN(rowid), MAX(rowid) FROM "{table}"'
-        ).fetchone()
-    finally:
-        con.close()
-    lo, hi = row
-    if lo is None:
-        return []
-    ranges = []
-    start = lo
-    while start <= hi:
-        ranges.append((start, start + rows_per_range))
-        start += rows_per_range
-    return ranges
-
-
 def read_sqlite_table(
     spark: SparkSession,
     db_path: str,
@@ -191,19 +161,19 @@ def read_sqlite_table(
     import datetime as _dt
     import logging
 
-    import pandas as pd
-
     eng = engine or CastEngine(source_kind="sqlite")
     fields = introspect_sqlite(db_path)[table]
-    schema = _schema_for(fields, eng)
-    names = [f.name for f in fields]
+    schema = read_schema(fields, eng)
     spark_types = [sf.dataType for sf in schema.fields]
-    ranges = _rowid_ranges(db_path, table, rows_per_range)
-    if not ranges:
-        return spark.createDataFrame([], schema)
-    ranges_df = range_frame(spark, ranges)
-
-    col_list = ", ".join(f'"{n}"' for n in names)
+    con = sqlite3.connect(f"file:{db_path}?mode=ro", uri=True)
+    try:
+        lo, hi = con.execute(
+            f'SELECT MIN(rowid), MAX(rowid) FROM "{table}"'
+        ).fetchone()
+    finally:
+        con.close()
+    ranges = [] if lo is None else key_ranges(lo, hi + 1, rows_per_range)
+    col_list = ", ".join(f'"{f.name}"' for f in fields)
 
     def _cell(v, typ, rowid):
         if v is None:
@@ -255,51 +225,51 @@ def read_sqlite_table(
             return str(v)
         return v
 
-    def fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def connect():
         con = sqlite3.connect(f"file:{db_path}?mode=ro", uri=True)
         con.text_factory = bytes  # defer decoding to per-cell recovery
+        return contextlib.closing(con)
+
+    def fetch(con, lo: int, hi: int) -> list[list]:
+        rows = con.execute(
+            f'SELECT rowid, {col_list} FROM "{table}" '
+            "WHERE rowid >= ? AND rowid < ?",
+            (lo, hi),
+        ).fetchall()
+        return [
+            [_cell(r[i + 1], typ, r[0]) for r in rows]
+            for i, typ in enumerate(spark_types)
+        ]
+
+    return read_ranges(spark, ranges, schema, connect, fetch)
+
+
+def live_source(src: str, options: dict) -> LiveSource:
+    """``sqlite://PATH``, ``db3://PATH`` or a bare ``PATH.db``.  The
+    record's calls name this module's functions at call time, so a
+    wrapper set on the module attribute sees every call."""
+    path = src.split("://", 1)[1] if "://" in src else src
+
+    def run(statements: list[str]) -> list:
+        # mode=rw: a missing file is an error, never a new empty database
+        con = sqlite3.connect(f"file:{path}?mode=rw", uri=True)
         try:
-            for b in batches:
-                for lo, hi in zip(b["lo"], b["hi"]):
-                    rows = con.execute(
-                        f'SELECT rowid, {col_list} FROM "{table}" '
-                        "WHERE rowid >= ? AND rowid < ?",
-                        (int(lo), int(hi)),
-                    ).fetchall()
-                    data = {
-                        name: [
-                            _cell(r[i + 1], spark_types[i], r[0]) for r in rows
-                        ]
-                        for i, name in enumerate(names)
-                    }
-                    yield pd.DataFrame(data, columns=names, dtype=object)
+            rows: list = []
+            with con:
+                for s in statements:
+                    rows = con.execute(s).fetchall()
+            return rows
         finally:
             con.close()
 
-    return ranges_df.mapInPandas(fetch, schema)
-
-
-def migrate_sqlite_to_parquet(
-    spark: SparkSession,
-    db_path: str,
-    out_dir: str,
-    engine: CastEngine | None = None,
-) -> dict[str, int]:
-    """Whole-database migration: introspect, cast, read, write parquet.
-
-    The parquet lake stands in for the PG COPY target (same plan
-    shape; ``LOAD DATABASE`` into a live server swaps the sink for
-    ``sources.pg_live.write_pg_copy``). Returns per-table row counts —
-    the reference's summary-table numbers.
-    """
-    import os
-
-    counts: dict[str, int] = {}
-    eng = engine or CastEngine(source_kind="sqlite")
-    for table in introspect_sqlite(db_path):
-        df = read_sqlite_table(spark, db_path, table, engine=eng)
-        df.write.mode("overwrite").parquet(os.path.join(out_dir, f"{table}.parquet"))
-        counts[table] = spark.read.parquet(
-            os.path.join(out_dir, f"{table}.parquet")
-        ).count()
-    return counts
+    return LiveSource(
+        kind="sqlite",
+        introspect=lambda: introspect_sqlite(path),
+        keys=lambda: introspect_sqlite_keys(path),
+        read=lambda spark, table, engine: read_sqlite_table(
+            spark, path, table, engine=engine
+        ),
+        run=run,
+        views_sql="SELECT name FROM sqlite_master WHERE type = 'view'",
+        quote=lambda name: f'"{name}"',
+    )

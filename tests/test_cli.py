@@ -19,6 +19,7 @@ def test_sniff_source_kind():
     assert sniff_source_kind("table.parquet") == "parquet"
     assert sniff_source_kind("mysql://u@h/db") == "database"
     assert sniff_source_kind("postgresql:///db") == "database"
+    assert sniff_source_kind("postgres://u@h/db") == "database"
     assert sniff_source_kind("archive.zip") == "archive"
 
 
@@ -113,6 +114,24 @@ def test_dry_run_checks_connections(tmp_path, capsys):
     assert main(["--dry-run", str(tmp_path / "nope.csv"),
                  str(tmp_path / "out")]) == 1
     assert "FAIL" in capsys.readouterr().out
+
+
+def test_dry_run_probes_mssql_source(capsys):
+    """--dry-run connects to an mssql:// source instead of looking
+    for a file of that name."""
+    from pgloader_spark.cli import main
+    from pgloader_spark.sources.mssql_stub import (
+        MsSQLStubServer,
+        MsStubColumn,
+        MsStubTable,
+    )
+
+    t = MsStubTable(name="t", columns=[MsStubColumn("id", "int")], rows=[(1,)])
+    with MsSQLStubServer("db", [t]) as srv:
+        src = f"mssql://sa@127.0.0.1:{srv.port}/db"
+        assert main(["--dry-run", src, "/nonexistent/out"]) == 0
+    out = capsys.readouterr().out
+    assert f"OK   source {src}: OK" in out
 
 
 def test_context_vars_expand(tmp_path):

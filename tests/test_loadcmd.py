@@ -248,7 +248,7 @@ LOAD IXF FROM /tmp/f.ixf INTO postgresql:///db?t WITH timezone UTC;
 
 
 def test_size_bytes_parse():
-    from pgloader_spark.plans.executor import _size_bytes
+    from pgloader_spark.sources.pg_live import _size_bytes
 
     assert _size_bytes("10 MB") == 10 << 20
     assert _size_bytes("1024 kB") == 1 << 20

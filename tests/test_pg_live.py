@@ -132,9 +132,15 @@ def test_read_pg_table_distributed(seeded, spark):
 
 
 def test_migrate_pg_to_parquet(seeded, spark, tmp_path):
-    from pgloader_spark.sources.pg_live import migrate_pg_to_parquet
+    from pgloader_spark.parsers.loadcmd import parse_load
+    from pgloader_spark.plans.executor import ExecutionContext, execute_database
 
-    counts = migrate_pg_to_parquet(spark, seeded, str(tmp_path))
+    cmd = parse_load(
+        f"LOAD DATABASE FROM {seeded} INTO {tmp_path} "
+        "INCLUDING ONLY TABLE NAMES MATCHING 'people';"
+    )
+    ctx = ExecutionContext(spark=spark, root_dir=str(tmp_path))
+    counts = {r.table: r.loaded for r in execute_database(ctx, cmd)}
     assert counts["people"] == 2000
     back = spark.read.parquet(str(tmp_path / "people.parquet"))
     assert back.filter("active").count() == 1000

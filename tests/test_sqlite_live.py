@@ -15,7 +15,6 @@ from pyspark.sql import types as T
 
 from pgloader_spark.sources.sqlite_live import (
     introspect_sqlite,
-    migrate_sqlite_to_parquet,
     read_sqlite_table,
 )
 
@@ -105,7 +104,12 @@ def test_read_empty_table(spark, db):
 
 
 def test_migrate_whole_db(spark, db, tmp_path):
-    counts = migrate_sqlite_to_parquet(spark, db, str(tmp_path / "lake"))
+    from pgloader_spark.parsers.loadcmd import parse_load
+    from pgloader_spark.plans.executor import ExecutionContext, execute_database
+
+    cmd = parse_load(f"LOAD DATABASE FROM sqlite://{db} INTO {tmp_path}/lake;")
+    ctx = ExecutionContext(spark=spark, root_dir=str(tmp_path))
+    counts = {r.table: r.loaded for r in execute_database(ctx, cmd)}
     assert counts == {"people": 4, "empty_t": 0}
     back = spark.read.parquet(str(tmp_path / "lake" / "people.parquet"))
     assert back.count() == 4
