@@ -384,6 +384,7 @@ def main(argv: list[str] | None = None) -> int:
         execute,
         execute_archive,
         execute_database,
+        sink_for,
     )
     from pgloader_spark.session import get_spark
 
@@ -469,36 +470,28 @@ def main(argv: list[str] | None = None) -> int:
         # file order like the reference's section loop.
         reports = []
         for one_cmd in (cmd, *extra_cmds):
+            # one destination per command, TARGET over the command's
+            # INTO: the hooks and the sink use it, and so do a LOAD
+            # DATABASE's DDL and verify load, which read it from the
+            # command (its INTO names no table)
+            dest = args.target or one_cmd.target or ""
+            if one_cmd.source_kind == "database":
+                one_cmd.target = dest
             sql_runner = None
-            tgt = one_cmd.target or args.target or ""
-            if is_pg_uri(tgt):
-                def sql_runner(stmt: str, tgt: str = tgt) -> None:
-                    with PGConn(tgt) as conn:
+            if is_pg_uri(dest):
+                def sql_runner(stmt: str, dest: str = dest) -> None:
+                    with PGConn(dest) as conn:
                         conn.query(stmt)
 
-            # execute() lands rows through the sink: the COPY sink for a
-            # postgresql:// target (TARGET or the command's INTO), a
-            # parquet write for a directory
-            dest = args.target or one_cmd.target
             ctx = ExecutionContext(
                 spark=spark,
                 root_dir=args.root_dir,
                 sql_runner=sql_runner,
+                sink=sink_for(
+                    dest, one_cmd.source_kind, args.root_dir,
+                    args.on_error_stop,
+                ) if dest else None,
             )
-            if dest and is_pg_uri(dest):
-                from pgloader_spark.sources.pg_live import file_load_sink
-
-                ctx.sink = file_load_sink(dest, ctx.root_dir, args.on_error_stop)
-            elif dest:
-                # an archive's nested tables each get their own directory
-                per_table = one_cmd.source_kind == "archive"
-
-                def parquet_sink(df, table, _cmd, dest: str = dest,
-                                 per_table: bool = per_table) -> None:
-                    path = os.path.join(dest, table) if per_table else dest
-                    df.write.mode("overwrite").parquet(path)
-
-                ctx.sink = parquet_sink
             if one_cmd.source_kind == "database":
                 reports.extend(execute_database(ctx, one_cmd))
             elif one_cmd.source_kind == "archive":
@@ -527,20 +520,9 @@ def main(argv: list[str] | None = None) -> int:
                 return 1
             print("regress: pass")
 
-        from pgloader_spark.plans.orchestrate import MigrationSummary, TableResult
+        from pgloader_spark.plans.orchestrate import MigrationSummary
 
-        summary = MigrationSummary(
-            results=[
-                TableResult(
-                    table=r.table,
-                    read=r.read,
-                    loaded=r.loaded,
-                    errors=r.errors,
-                    seconds=r.seconds,
-                )
-                for r in reports
-            ]
-        )
+        summary = MigrationSummary(results=reports)
         fmts = {
             "text": summary.to_text,
             "csv": summary.to_csv,

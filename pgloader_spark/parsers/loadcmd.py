@@ -36,11 +36,14 @@ CAST rules::
 
 from __future__ import annotations
 
+import logging
 import re
 from dataclasses import dataclass, field as dfield
 
 from pgloader_spark.operators.projection import ColumnSpec, FieldSpec
 from pgloader_spark.sources.fixed import FixedField
+
+log = logging.getLogger(__name__)
 
 # --------------------------------------------------------------------------
 # IR
@@ -926,9 +929,15 @@ def _set_option(cmd: LoadCommand, key: str, value) -> None:
 
 
 def _parse_set(p: _P, cmd: LoadCommand) -> None:
-    """SET [PostgreSQL|MySQL PARAMETERS] name TO|= 'value', ..."""
+    """SET [PostgreSQL|MySQL PARAMETERS] name TO|= 'value', ...
+
+    ``cmd.gucs`` holds the PostgreSQL settings, SET on every target
+    session.  MySQL parameters are source-session settings, not
+    applied to the MySQL sessions: they are logged and dropped."""
+    gucs = cmd.gucs
     if p.at_word("postgresql", "mysql"):
-        p.next()
+        if p.next().value.lower() == "mysql":
+            gucs = {}
         p.eat_word("parameters")
     while True:
         name = p.next().value
@@ -939,11 +948,13 @@ def _parse_set(p: _P, cmd: LoadCommand) -> None:
             p.next()
         elif name.endswith("="):
             name = name[:-1]
-        cmd.gucs[name] = p.next().value
+        gucs[name] = p.next().value
         if p.peek() and p.peek().kind == "comma":
             p.next()
             continue
         break
+    if gucs is not cmd.gucs:
+        log.warning("SET MySQL PARAMETERS not applied: %s", gucs)
 
 
 _DROP_KEEP_WORDS = {"typemod", "default", "extra"}

@@ -5,12 +5,14 @@ The Spark re-expression of pgloader's lifecycle (SURVEY §3.4): parsed
 (one ``select`` of Column expressions) -> sink. The reference's
 reader/writer thread kernels (``src/load/copy-data.lisp:61-156``) map
 onto Spark's own task scheduling; its per-batch retry with reject
-files lives in the COPY sink (``sources.pg_live.file_load_sink``).
+files lives in the COPY sink (``sources.pg_live.load_sink``).
 
-The sink is pluggable (``ExecutionContext.sink``): a file load into a
-``postgresql://`` target lands through ``file_load_sink``, one Spark
-pass that counts rows as it writes; tests and lake pipelines pass a
-parquet sink or take the returned DataFrame.
+Every ``LOAD`` — a file, each nested file of an archive, each table of
+a database — lands through one sink (``ExecutionContext.sink``) in one
+Spark pass that counts rows as it writes (``_land``).  ``sink_for``
+picks it from the target: the COPY sink for ``postgresql://``, a
+parquet lake for a directory.  Without a sink, ``execute`` returns the
+cached DataFrame and ``execute_database`` picks one from its target.
 """
 
 from __future__ import annotations
@@ -67,13 +69,54 @@ class ExecutionContext:
     spark: SparkSession
     root_dir: str = "/tmp/pgloader_spark"
     sql_runner: object | None = None  # callable(sql) for BEFORE/AFTER LOAD DO
-    # callable(df, table, cmd) that runs the terminal action (the CLI's
-    # file_load_sink COPY, a parquet write, ...); cmd is the command
-    # being landed, so a LOAD ARCHIVE's nested WITH/SET options apply.
-    # execute() counts rows DURING that action via an Observation — one
-    # distributed pass, the way the reference counts while it COPYs
+    # callable(df, table, cmd) that lands one table (sink_for: the COPY
+    # sink, a parquet lake write); cmd is the command being landed, so
+    # a LOAD ARCHIVE's nested WITH/SET options apply.  _land counts
+    # rows DURING that action via an Observation — one distributed
+    # pass, the way the reference counts while it COPYs
     # (src/pg-copy/copy-rows-in-batch.lisp) — instead of cache + count.
     sink: object | None = None
+
+
+def _lake_path(dest: str, table: str, kind: str) -> str:
+    """Where a parquet lake keeps TABLE: ``<dest>/<table>.parquet`` for
+    a LOAD of many tables (DATABASE, ARCHIVE), ``<dest>`` itself for a
+    one-table LOAD."""
+    if kind in ("database", "archive"):
+        return os.path.join(dest, f"{table}.parquet")
+    return dest
+
+
+def sink_for(target: str, kind: str, root_dir: str, on_error_stop: bool = False):
+    """The sink a LOAD of KIND lands through, picked by its TARGET: the
+    COPY sink (``pg_live.load_sink``) for a ``postgresql://`` URI, else
+    a parquet lake in the TARGET directory."""
+    if is_pg_uri(target):
+        from pgloader_spark.sources.pg_live import load_sink
+
+        return load_sink(target, root_dir, on_error_stop)
+
+    def lake_sink(df: DataFrame, table: str, _cmd) -> None:
+        df.write.mode("overwrite").parquet(_lake_path(target, table, kind))
+
+    return lake_sink
+
+
+def _land(sink, df: DataFrame, table: str, cmd, report: LoadReport) -> None:
+    """Run SINK over DF, counting rows in the same Spark pass, and set
+    REPORT's read/loaded/errors.  A counting sink (the COPY sink)
+    returns what the server accepted; the rest of the rows seen are
+    server-side rejects (fk-reject.load, overflow.load)."""
+    from pyspark.sql import Observation
+
+    obs = Observation()
+    rows = df.observe(obs, F.count(F.lit(1)).alias("n"))
+    ret = sink(rows, table, cmd)
+    n_seen = int(obs.get["n"])
+    report.loaded = ret if isinstance(ret, int) else n_seen
+    report.errors = n_seen - report.loaded
+    report.read = n_seen
+    report.result = rows
 
 
 def _csv_options(cmd: LoadCommand) -> CsvOptions:
@@ -212,9 +255,6 @@ def read_source(spark: SparkSession, cmd: LoadCommand) -> DataFrame:
                 (ln,) for ln in cmd.inline_data.split("\n") if ln.strip("\r")
             ]
             text = spark.createDataFrame(lines, "value string")
-            # reuse the substring projection by writing through a view
-            from pgloader_spark.sources.fixed import FixedField  # noqa: F401
-
             exprs = []
             for f_ in fopts.fields:
                 c = F.substring(F.col("value"), f_.start + 1, f_.length)
@@ -369,24 +409,14 @@ def execute_archive(ctx: ExecutionContext, cmd: LoadCommand) -> list[LoadReport]
         src = fetch_http(src)
     files = expand_archive(src)
     extract_dir = os.path.dirname(files[0]) if files else "."
+    cmd.source_dir = cmd.source_dir or extract_dir
 
-    for path in cmd.execute_files:  # BEFORE LOAD EXECUTE 'f.sql'
-        if ctx.sql_runner:
-            cmd.source_dir = cmd.source_dir or extract_dir
-            for stmt in read_sql_statements(_resolve_script(path, cmd)):
-                ctx.sql_runner(stmt)
-    for stmt in cmd.before_load:
-        if ctx.sql_runner:
-            ctx.sql_runner(stmt)
-
+    _run_sql(ctx.sql_runner, cmd, "before")
     reports = []
     for nested in cmd.nested:
         nested.source_dir = nested.source_dir or extract_dir
         reports.append(execute(ctx, nested))
-
-    for stmt in cmd.finally_do:
-        if ctx.sql_runner:
-            ctx.sql_runner(stmt)
+    _run_sql(ctx.sql_runner, cmd, "after")
     return reports
 
 
@@ -467,6 +497,31 @@ def _resolve_script(path: str, cmd: LoadCommand) -> str:
     return cand if os.path.exists(cand) else path
 
 
+def _run_sql(run, cmd: LoadCommand, phase: str) -> None:
+    """The command's BEFORE (PHASE "before") or AFTER LOAD statements
+    through RUN, a callable(sql); nothing without one.  Before the
+    load: EXECUTE files, then DO; after it: DO (an archive's FINALLY
+    DO), then EXECUTE files."""
+    if run is None:
+        return
+
+    def scripts(paths: list[str]) -> list[str]:
+        return [
+            stmt
+            for path in paths
+            for stmt in read_sql_statements(_resolve_script(path, cmd))
+        ]
+
+    if phase == "before":
+        stmts = [*scripts(cmd.execute_files), *cmd.before_load]
+    else:
+        stmts = [
+            *cmd.after_load, *cmd.finally_do, *scripts(cmd.after_execute_files)
+        ]
+    for stmt in stmts:
+        run(stmt)
+
+
 @contextlib.contextmanager
 def _indexes_dropped(dsn: str, tables: list[str], root_dir: str):
     """WITH drop indexes / reindex, the reference's kernel for fast
@@ -542,8 +597,9 @@ def execute_database(ctx: ExecutionContext, cmd: LoadCommand) -> list[LoadReport
     """Live ``LOAD DATABASE`` — the reference's flagship lifecycle
     (migrate-database.lisp:116-150 / mysql.lisp:100-131): introspect
     the source catalog, apply cast rules, CREATE the target tables,
-    then stream every table through a partitioned read into the COPY
-    sink (or a parquet lake when the target is a directory).
+    then stream every table, largest first, through a partitioned read
+    into the same sink a file LOAD lands through (``ctx.sink``, else
+    ``sink_for`` the target: COPY, or a parquet lake for a directory).
 
     The source is a ``sources.jdbc.LiveSource`` record picked by the
     URI scheme (``LIVE_SCHEMES``): ``sqlite://`` (stdlib sqlite3),
@@ -726,23 +782,21 @@ def execute_database(ctx: ExecutionContext, cmd: LoadCommand) -> list[LoadReport
         s = _schema_of(tbl)
         return f"{s}.{tbl.name}" if s else tbl.name
 
-    target = cmd.target or ""
+    # a LOAD DATABASE without a target lands in a lake under root_dir
+    target = cmd.target or ctx.root_dir
     pg_target = is_pg_uri(target)
+    sink = ctx.sink or sink_for(target, cmd.source_kind, ctx.root_dir)
     if pg_target:
-        from pgloader_spark.sources.pg_live import quote_qualified, write_pg_copy
-        from pgloader_spark.sources.pgwire import PGConn
+        from pgloader_spark.sources.pg_live import pg_session
 
-        with PGConn(target) as conn:
+        # the SET clause on the DDL and hook session as on the COPY
+        # sessions, so both resolve unqualified names alike
+        with pg_session(target, cmd.gucs) as conn:
             # BEFORE LOAD runs before schema creation (command-*.lisp:
             # the sql-code-block precedes copy-database) — db789.load
             # creates its target tables there under `create no tables`
-            for path in cmd.execute_files:  # BEFORE LOAD EXECUTE 'f.sql'
-                for stmt in read_sql_statements(_resolve_script(path, cmd)):
-                    conn.query(stmt)
-            for stmt in cmd.before_load:
-                conn.query(stmt)
-            # WITH data only / create no tables skip DDL; WITH
-            # truncate empties the (pre-existing) targets
+            _run_sql(conn.query, cmd, "before")
+            # WITH data only / create no tables skip DDL
             # (prepare-pgsql-database, migrate-database.lisp:30-120)
             if not (
                 cmd.options.get("data_only")
@@ -765,9 +819,6 @@ def execute_database(ctx: ExecutionContext, cmd: LoadCommand) -> list[LoadReport
                     include_drop=not cmd.options.get("include_no_drop"),
                 ):
                     conn.query(stmt)
-            if cmd.options.get("truncate"):
-                for tbl in tables.values():
-                    conn.query(f"TRUNCATE {quote_qualified(_qualified(tbl))}")
 
     # catalog extras (MySQL: CHECKs, comments, row-count estimates;
     # PostgreSQL: comments, CHECKs) ride the complete phase
@@ -785,9 +836,6 @@ def execute_database(ctx: ExecutionContext, cmd: LoadCommand) -> list[LoadReport
         cmd.options.get("drop_indexes") or cmd.options.get("reindex")
     )
     reports: list[LoadReport] = []
-    # WITH workers = N (copy-data.lisp:64-66 / migrate-database.lisp
-    # worker-pool knob) -> concurrent COPY streams per table
-    n_writers = int(cmd.options.get("workers", 0)) or None
     schema_only = bool(cmd.options.get("schema_only"))
     with _indexes_dropped(
         target,
@@ -798,30 +846,23 @@ def execute_database(ctx: ExecutionContext, cmd: LoadCommand) -> list[LoadReport
         # (optimize-table-copy-ordering, migrate-database.lisp:304-320);
         # the sort is stable, so other sources keep catalog order
         for tbl in copy_ordering(list(tables.values())):
-            t = tbl.source_name
+            rep = LoadReport(table=tbl.name)
+            reports.append(rep)
             if schema_only:
-                reports.append(LoadReport(table=tbl.name, read=0, loaded=0))
                 continue
             t0 = time.perf_counter()
-            df = live.read(ctx.spark, t, engine)
+            t = tbl.source_name
+            df = live.read(ctx.spark, t, engine, catalog_fields[t])
             df = _apply_cast_transforms(df, catalog_fields[t], engine)
             df = df.toDF(*[c.name for c in tbl.columns])
-            if pg_target:
-                # one distributed pass: the COPY sink reports rows loaded
-                tgt_path = _qualified(tbl)
-                n = write_pg_copy(df, target, tgt_path, n_writers=n_writers)
-            else:
-                tgt_path = os.path.join(
-                    target or ctx.root_dir, f"{tbl.name}.parquet"
-                )
-                df.write.mode("overwrite").parquet(tgt_path)
-                n = ctx.spark.read.parquet(tgt_path).count()
-            reports.append(
-                LoadReport(
-                    table=tbl.name, read=n, loaded=n, result=df,
-                    target_path=tgt_path, seconds=time.perf_counter() - t0,
-                )
+            # the sink's table: schema-qualified in PostgreSQL, the
+            # bare name in a lake
+            name = _qualified(tbl) if pg_target else tbl.name
+            _land(sink, df, name, cmd, rep)
+            rep.target_path = (
+                name if pg_target else _lake_path(target, name, cmd.source_kind)
             )
+            rep.seconds = time.perf_counter() - t0
 
     # complete phase (complete-pgsql-database): PK promotion ->
     # indexes -> FKs -> sequence resets -> CHECKs -> triggers ->
@@ -875,14 +916,8 @@ def execute_database(ctx: ExecutionContext, cmd: LoadCommand) -> list[LoadReport
             log.warning("post-load: %s", err)
 
     if pg_target and (cmd.after_load or cmd.after_execute_files):
-        from pgloader_spark.sources.pgwire import PGConn
-
-        with PGConn(target) as conn:
-            for stmt in cmd.after_load:
-                conn.query(stmt)
-            for path in cmd.after_execute_files:  # AFTER LOAD EXECUTE
-                for stmt in read_sql_statements(_resolve_script(path, cmd)):
-                    conn.query(stmt)
+        with pg_session(target, cmd.gucs) as conn:
+            _run_sql(conn.query, cmd, "after")
 
     # WITH verify load (extension beyond the reference): re-read every
     # loaded table from the target through the distributed ctid-range
@@ -996,14 +1031,7 @@ def execute(ctx: ExecutionContext, cmd: LoadCommand) -> LoadReport:
             "for single-table loads (no introspected primary key)"
         )
 
-    if ctx.sql_runner:
-        for path in cmd.execute_files:  # BEFORE LOAD EXECUTE 'f.sql'
-            for stmt in read_sql_statements(_resolve_script(path, cmd)):
-                ctx.sql_runner(stmt)
-    for stmt in cmd.before_load:
-        if ctx.sql_runner:
-            ctx.sql_runner(stmt)
-
+    _run_sql(ctx.sql_runner, cmd, "before")
     df = read_source(spark, cmd)
     projected = project(df, cmd)
     if cmd.cast_rules:
@@ -1019,33 +1047,12 @@ def execute(ctx: ExecutionContext, cmd: LoadCommand) -> LoadReport:
     )
     with _indexes_dropped(tgt_dsn, [table] if drop_indexes else [], ctx.root_dir):
         if ctx.sink is not None:
-            from pyspark.sql import Observation
-
-            obs = Observation()
-            rows = projected.observe(obs, F.count(F.lit(1)).alias("n"))
-            ret = ctx.sink(rows, table, cmd)
-            n_seen = int(obs.get["n"])
-            if isinstance(ret, int):
-                # a counting sink (the COPY sink) reports what the
-                # server actually accepted; the delta is server-side
-                # rejects (fk-reject.load, overflow.load)
-                report.loaded = ret
-                report.errors = n_seen - ret
-            else:
-                report.loaded = n_seen
-            report.result = rows
+            _land(ctx.sink, projected, table, cmd, report)
         else:
             report.result = projected.cache()
-            report.loaded = report.result.count()
-    report.read = report.loaded + report.errors
+            report.read = report.loaded = report.result.count()
 
-    for stmt in cmd.after_load:
-        if ctx.sql_runner:
-            ctx.sql_runner(stmt)
-    if ctx.sql_runner:
-        for path in cmd.after_execute_files:  # AFTER LOAD EXECUTE
-            for stmt in read_sql_statements(_resolve_script(path, cmd)):
-                ctx.sql_runner(stmt)
+    _run_sql(ctx.sql_runner, cmd, "after")
     report.seconds = time.perf_counter() - t0
     return report
 

@@ -1,18 +1,14 @@
-"""Migration orchestration: table scheduling, concurrency, summary.
+"""Migration orchestration: the complete phase and the summary.
 
-Re-expresses ``copy-database`` (``src/load/migrate-database.lisp:
-326-594``) on Spark's execution model:
+Re-expresses the parts of ``copy-database`` (``src/load/migrate-
+database.lisp:326-594``) that follow the data phase; the table loop
+itself is ``plans.executor.execute_database``, which loads the tables
+one at a time, largest first (``catalog.copy_ordering``):
 
-- **Largest-first scheduling** (``optimize-table-copy-ordering``,
-  ``migrate-database.lisp:304-320``): big tables submit first so the
-  pool drains evenly.
-- **Concurrent table loads**: the reference runs ``worker-count`` (4)
-  lparallel workers; here a thread pool submits Spark jobs — Spark
-  schedules their tasks concurrently across executors (FAIR pools so
-  a huge table cannot starve small ones).
-- **Phases**: prepare (DDL) -> data (per-table pipeline §3.3c) ->
-  complete (indexes, PKs, FKs, sequences) — DDL phases run through a
-  pluggable ``sql_runner`` (JDBC in production).
+- **Complete phase** (``complete-pgsql-database``): PK promotion,
+  secondary indexes on concurrent connections, FKs, sequence resets,
+  CHECKs, triggers, comments — with reconnect-and-resume on
+  connection loss.
 - **Summary report** (``src/utils/report.lisp:28-38``, state structs
   ``src/utils/state.lisp:11-40``): per-table read/loaded/errors/secs
   rendered as text table, csv, or json.
@@ -22,36 +18,23 @@ from __future__ import annotations
 
 import json
 import time
-from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor, as_completed
 from dataclasses import dataclass, field
+from typing import TYPE_CHECKING
 
-from pgloader_spark.catalog import Catalog, Table, copy_ordering
+from pgloader_spark.catalog import Catalog
 
-DEFAULT_WORKERS = 4  # migrate-database.lisp:329-330
-
-
-@dataclass
-class TableResult:
-    table: str
-    read: int = 0
-    loaded: int = 0
-    errors: int = 0
-    seconds: float = 0.0
-    failed: str | None = None
+if TYPE_CHECKING:
+    from pgloader_spark.plans.executor import LoadReport
 
 
 @dataclass
 class MigrationSummary:
-    results: list[TableResult] = field(default_factory=list)
-    prepare_seconds: float = 0.0
-    complete_seconds: float = 0.0
+    results: list[LoadReport] = field(default_factory=list)
 
     @property
     def total_seconds(self) -> float:
-        return self.prepare_seconds + self.complete_seconds + sum(
-            r.seconds for r in self.results
-        )
+        return sum(r.seconds for r in self.results)
 
     def to_text(self) -> str:
         """The reference's summary table shape (report.lisp:28-38)."""
@@ -94,64 +77,14 @@ class MigrationSummary:
     def to_json(self) -> str:
         return json.dumps(
             {
-                "tables": [vars(r) for r in self.results],
-                "prepare_seconds": round(self.prepare_seconds, 3),
-                "complete_seconds": round(self.complete_seconds, 3),
+                "tables": [
+                    {k: getattr(r, k)
+                     for k in ("table", "read", "loaded", "errors", "seconds")}
+                    for r in self.results
+                ],
                 "total_seconds": round(self.total_seconds, 3),
             }
         )
-
-
-def migrate(
-    tables: list[Table],
-    load_fn: Callable[[Table], tuple[int, int, int]],
-    workers: int = DEFAULT_WORKERS,
-    prepare: Callable[[], None] | None = None,
-    complete: Callable[[], None] | None = None,
-    on_error_stop: bool = False,
-) -> MigrationSummary:
-    """Run ``prepare`` -> concurrent per-table ``load_fn`` (largest
-    first) -> ``complete``. ``load_fn`` returns (read, loaded, errors);
-    exceptions mark the table failed and — matching the reference's
-    default — do not abort the rest unless ``on_error_stop``."""
-    summary = MigrationSummary()
-
-    if prepare is not None:
-        t0 = time.perf_counter()
-        prepare()
-        summary.prepare_seconds = time.perf_counter() - t0
-
-    ordered = copy_ordering(tables)
-
-    def job(t: Table) -> TableResult:
-        r = TableResult(table=t.name)
-        t0 = time.perf_counter()
-        try:
-            r.read, r.loaded, r.errors = load_fn(t)
-        except Exception as exc:  # noqa: BLE001 — reported per table
-            r.failed = str(exc)
-        r.seconds = time.perf_counter() - t0
-        return r
-
-    with ThreadPoolExecutor(max_workers=max(workers, 1)) as pool:
-        futures = {pool.submit(job, t): t for t in ordered}
-        for fut in as_completed(futures):
-            res = fut.result()
-            summary.results.append(res)
-            if res.failed and on_error_stop:
-                for f in futures:
-                    f.cancel()
-                raise RuntimeError(f"table {res.table} failed: {res.failed}")
-
-    # keep the report in scheduling order
-    order = {t.name: i for i, t in enumerate(ordered)}
-    summary.results.sort(key=lambda r: order.get(r.table, 1 << 30))
-
-    if complete is not None:
-        t0 = time.perf_counter()
-        complete()
-        summary.complete_seconds = time.perf_counter() - t0
-    return summary
 
 
 def _is_connection_loss(exc: Exception) -> bool:

@@ -1,7 +1,7 @@
 """File sinks: JSONL corpus exports, plain and epoch-shuffled.
 
-The PostgreSQL COPY sink is ``sources.pg_live.write_pg_copy``; a file
-``LOAD`` lands through ``sources.pg_live.file_load_sink``.
+The PostgreSQL COPY sink is ``sources.pg_live.write_pg_copy``; every
+``LOAD`` into PostgreSQL lands through ``sources.pg_live.load_sink``.
 """
 
 from __future__ import annotations

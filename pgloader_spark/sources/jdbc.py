@@ -51,7 +51,7 @@ class LiveSource:
     kind: str  # cast-rule source kind (CastEngine)
     introspect: Callable[[], dict]  # table -> [SourceField]
     keys: Callable[[], dict]  # table -> {"pk", "indexes", "fkeys"}
-    read: Callable[..., DataFrame]  # (spark, table, engine) -> DataFrame
+    read: Callable[..., DataFrame]  # (spark, table, engine, fields) -> DataFrame
     run: Callable[[list[str]], list]  # statements -> last result's rows
     views_sql: str  # one view name per row (MATERIALIZE ALL VIEWS)
     quote: Callable[[str], str]  # identifier quoting in source SQL

@@ -212,8 +212,8 @@ def live_source(dsn: str, options: dict) -> LiveSource:
         kind="mssql",
         introspect=lambda: introspect_mssql(dsn),
         keys=lambda: introspect_mssql_keys(dsn),
-        read=lambda spark, table, engine: read_mssql_table(
-            spark, dsn, table, engine=engine
+        read=lambda spark, table, engine, fields: read_mssql_table(
+            spark, dsn, table, engine=engine, fields=fields
         ),
         run=wire_runner(lambda: MsConn(dsn)),
         views_sql=(

@@ -265,8 +265,8 @@ def live_source(dsn: str, options: dict) -> LiveSource:
         kind="mysql",
         introspect=lambda: introspect_mysql(dsn),
         keys=lambda: introspect_mysql_keys(dsn),
-        read=lambda spark, table, engine: read_mysql_table(
-            spark, dsn, table, engine=engine
+        read=lambda spark, table, engine, fields: read_mysql_table(
+            spark, dsn, table, engine=engine, fields=fields
         ),
         run=wire_runner(lambda: MyConn(dsn)),
         views_sql=(

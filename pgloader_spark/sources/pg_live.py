@@ -29,6 +29,7 @@ so a PG read and a ``.dat`` read are byte-for-byte the same transform.
 
 from __future__ import annotations
 
+import contextlib
 import itertools
 import os
 from collections.abc import Iterator
@@ -336,22 +337,23 @@ def read_pg_table(
     engine: CastEngine | None = None,
     pages_per_range: int = PAGES_PER_RANGE,
     columns: list[str] | None = None,
+    fields: list[SourceField] | None = None,
 ) -> DataFrame:
     """Distributed typed read of one PostgreSQL table via per-range
     ``COPY (SELECT ...) TO STDOUT`` streams.
 
     ``table`` may be schema-qualified (``myschema.items``); bare names
-    read from ``public``.  ``columns`` limits both the COPY SELECT and
-    the output schema — the pruning a mapInPandas source cannot get
-    from Catalyst, so wide tables aren't streamed whole when the
-    caller (e.g. checksum verification) needs two key columns.
+    read from ``public``.  ``fields`` are the table's introspected
+    fields when the caller already holds them.  ``columns`` limits
+    both the COPY SELECT and the output schema — the pruning a
+    mapInPandas source cannot get from Catalyst, so wide tables aren't
+    streamed whole when the caller (e.g. checksum verification) needs
+    two key columns.
     """
     eng = engine or CastEngine(source_kind="pgsql")
-    if "." in table:
-        pg_schema, bare = table.rsplit(".", 1)
-    else:
-        pg_schema, bare = "public", table
-    fields = introspect_pg(dsn, schema=pg_schema)[bare]
+    if fields is None:
+        pg_schema, _, bare = table.rpartition(".")
+        fields = introspect_pg(dsn, schema=pg_schema or "public")[bare]
     if columns is not None:
         by_name = {f.name: f for f in fields}
         missing = [c for c in columns if c not in by_name]
@@ -426,8 +428,9 @@ def live_source(dsn: str, options: dict) -> LiveSource:
         kind="pgsql",
         introspect=lambda: introspect_pg(dsn),
         keys=lambda: introspect_pg_keys(dsn),
-        read=lambda spark, table, engine: read_pg_table(
-            spark, dsn, table, engine=engine, pages_per_range=pages
+        read=lambda spark, table, engine, fields: read_pg_table(
+            spark, dsn, table, engine=engine, pages_per_range=pages,
+            fields=fields,
         ),
         run=wire_runner(lambda: PGConn(dsn)),
         views_sql=(
@@ -655,6 +658,21 @@ def _cap_copy_streams(lines: "DataFrame", n_writers: int | None) -> "DataFrame":
     return lines
 
 
+@contextlib.contextmanager
+def pg_session(dsn: str, settings: dict | None):
+    """A connection to DSN with the command's SET clause applied, the
+    reference's per-connection GUCs — EXCEPT client_encoding, pinned to
+    UTF8: that GUC describes the bytes on the wire, and ours are always
+    UTF-8 (the reference re-encodes its stream to the declared
+    encoding; we normalize to UTF-8 at read time)."""
+    with PGConn(dsn) as conn:
+        for k, v in (settings or {}).items():
+            if k.lower() != "client_encoding":
+                conn.query(f"SET {k} TO '{v}'")
+        conn.query("SET client_encoding TO 'UTF8'")
+        yield conn
+
+
 def write_pg_copy(
     df: DataFrame,
     dsn: str,
@@ -717,15 +735,6 @@ def write_pg_copy(
     lines = _cap_copy_streams(to_copy_lines(df), n_writers)
 
     isolate = reject_dir is not None
-    # the command's SET clause applies per COPY session like the
-    # reference's per-connection GUCs — EXCEPT client_encoding: that
-    # GUC describes the bytes on the wire, and ours are always UTF-8
-    # (the reference re-encodes its stream to the declared encoding;
-    # we normalize to UTF-8 at read time)
-    gucs = {
-        k: v for k, v in (settings or {}).items() if k.lower() != "client_encoding"
-    }
-    gucs["client_encoding"] = "UTF8"
 
     def sink(batches: Iterator) -> Iterator:
         import pandas as pd  # noqa: PLC0415
@@ -741,9 +750,7 @@ def write_pg_copy(
             # batch under fail-fast, a dropped connection, a killed
             # task — commits nothing, so Spark's retry re-sends the
             # whole partition without duplicates
-            with PGConn(dsn) as conn:
-                for k, v in gucs.items():
-                    conn.query(f"SET {k} TO '{v}'")
+            with pg_session(dsn, settings) as conn:
                 conn.query("BEGIN")
                 for b in itertools.chain([first], it):
                     if len(b):
@@ -776,16 +783,17 @@ def write_pg_copy(
     return loaded
 
 
-def file_load_sink(dsn: str, root_dir: str, on_error_stop: bool = False):
-    """The COPY sink of a file ``LOAD`` into PostgreSQL: returns
-    ``sink(df, table, cmd) -> rows loaded`` for
-    ``ExecutionContext.sink``.  Per command it
+def load_sink(dsn: str, root_dir: str, on_error_stop: bool = False):
+    """The COPY sink every ``LOAD`` into PostgreSQL lands through:
+    returns ``sink(df, table, cmd) -> rows loaded`` for
+    ``ExecutionContext.sink``.  Per table it
     - creates the target from the frame's schema for sources that carry
       their own (DBF, IXF; ``ensure_pg_table``),
     - runs ``TRUNCATE`` under ``WITH truncate``,
     - aligns the frame to the live target (``align_to_target``, with
       the command's ``WITH date format``),
-    - COPYs it with the command's ``SET`` clause on every session.
+    - COPYs it with the command's ``SET`` clause on every session, on
+      ``WITH workers`` streams when set.
 
     Error policy, the reference's two (copy-from-queue.lisp:41-69):
     ``on_error_stop`` or ``WITH on error stop`` streams fail-fast; the
@@ -804,7 +812,9 @@ def file_load_sink(dsn: str, root_dir: str, on_error_stop: bool = False):
         )
         stop = on_error_stop or bool(cmd.options.get("on_error_stop"))
         return write_pg_copy(
-            df, dsn, table, settings=cmd.gucs,
+            df, dsn, table,
+            n_writers=int(cmd.options.get("workers", 0)) or None,
+            settings=cmd.gucs,
             reject_dir=None if stop else reject_dir,
         )
 

@@ -150,6 +150,7 @@ def read_sqlite_table(
     table: str,
     engine: CastEngine | None = None,
     rows_per_range: int = ROWS_PER_RANGE,
+    fields: list[SourceField] | None = None,
 ) -> DataFrame:
     """Distributed typed read of one SQLite table.
 
@@ -162,7 +163,8 @@ def read_sqlite_table(
     import logging
 
     eng = engine or CastEngine(source_kind="sqlite")
-    fields = introspect_sqlite(db_path)[table]
+    if fields is None:
+        fields = introspect_sqlite(db_path)[table]
     schema = read_schema(fields, eng)
     spark_types = [sf.dataType for sf in schema.fields]
     con = sqlite3.connect(f"file:{db_path}?mode=ro", uri=True)
@@ -266,8 +268,8 @@ def live_source(src: str, options: dict) -> LiveSource:
         kind="sqlite",
         introspect=lambda: introspect_sqlite(path),
         keys=lambda: introspect_sqlite_keys(path),
-        read=lambda spark, table, engine: read_sqlite_table(
-            spark, path, table, engine=engine
+        read=lambda spark, table, engine, fields: read_sqlite_table(
+            spark, path, table, engine=engine, fields=fields
         ),
         run=run,
         views_sql="SELECT name FROM sqlite_master WHERE type = 'view'",

@@ -115,7 +115,7 @@ def stop_pg(base: str, data: str) -> None:
 
 
 def scenario_sink(dsn: str, root_dir: str, clear: bool = False):
-    """The package's file LOAD sink as the reference-corpus runners use
+    """The package's LOAD sink as the reference-corpus runners use
     it.  Every target is created from the frame's schema when missing,
     whatever the source kind: the package sink creates only DBF/IXF
     targets, and which corpus scenarios rely on a created table is not
@@ -123,12 +123,12 @@ def scenario_sink(dsn: str, root_dir: str, clear: bool = False):
     first, for scenarios that re-run against one server."""
     from pgloader_spark.sources.pg_live import (
         ensure_pg_table,
-        file_load_sink,
+        load_sink,
         quote_qualified,
     )
     from pgloader_spark.sources.pgwire import PGConn
 
-    copy_sink = file_load_sink(dsn, root_dir)
+    copy_sink = load_sink(dsn, root_dir)
 
     def sink(df, table, cmd):
         ensure_pg_table(dsn, table, df.schema)

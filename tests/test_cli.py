@@ -198,7 +198,7 @@ def test_summary_filename_with_extension(spark, tmp_path):
 
 def test_cli_load_archive_to_parquet_dir(spark, tmp_path):
     """LOAD ARCHIVE into a directory target: each nested table lands in
-    its own parquet directory under it."""
+    its own ``<table>.parquet`` directory under it."""
     import zipfile
 
     from pgloader_spark.cli import main
@@ -224,8 +224,35 @@ LOAD ARCHIVE
     out = tmp_path / "lake"
     assert main([str(load), str(out), "--master", "local[2]",
                  "--root-dir", str(tmp_path / "root")]) == 0
-    assert spark.read.parquet(str(out / "location")).count() == 2
-    assert spark.read.parquet(str(out / "blocks")).count() == 1
+    assert spark.read.parquet(str(out / "location.parquet")).count() == 2
+    assert spark.read.parquet(str(out / "blocks.parquet")).count() == 1
+
+
+def test_cli_load_database_directory_target_overrides_into(spark, tmp_path):
+    """A .load LOAD DATABASE run with a directory TARGET lands each
+    table in <dir>/<table>.parquet, and its DDL and hooks follow the
+    TARGET too: the INTO's PostgreSQL (a port nothing listens on) is
+    never contacted."""
+    import sqlite3
+
+    from pgloader_spark.cli import main
+
+    src = tmp_path / "src.db"
+    con = sqlite3.connect(src)
+    con.execute("CREATE TABLE people (id integer PRIMARY KEY, name text)")
+    con.executemany("INSERT INTO people VALUES (?, ?)", [(1, "ada"), (2, "alan")])
+    con.commit()
+    con.close()
+    load = tmp_path / "db.load"
+    load.write_text(
+        f"LOAD DATABASE FROM sqlite://{src}\n"
+        "  INTO postgresql://postgres@127.0.0.1:1/nodb\n"
+        "  BEFORE LOAD DO $$ CREATE TABLE hook_ran (); $$;\n"
+    )
+    out = tmp_path / "lake"
+    assert main([str(load), str(out), "--master", "local[2]",
+                 "--root-dir", str(tmp_path / "root")]) == 0
+    assert spark.read.parquet(str(out / "people.parquet")).count() == 2
 
 
 def test_cli_summary_reports_per_table_seconds(spark, tmp_path, capsys):

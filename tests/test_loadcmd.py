@@ -255,3 +255,15 @@ def test_size_bytes_parse():
     assert _size_bytes("8192") == 8192
     assert _size_bytes(None) is None
     assert _size_bytes("nonsense") is None
+
+
+def test_mysql_parameters_stay_out_of_gucs():
+    """SET MySQL PARAMETERS are source-session settings: they must not
+    reach cmd.gucs, which every PostgreSQL COPY session SETs."""
+    cmd = parse_load(
+        "LOAD DATABASE FROM mysql://root@localhost/sakila\n"
+        "  INTO postgresql:///sakila\n"
+        "  SET PostgreSQL PARAMETERS maintenance_work_mem to '128MB'\n"
+        "  SET MySQL PARAMETERS net_read_timeout = '120';\n"
+    )
+    assert cmd.gucs == {"maintenance_work_mem": "128MB"}

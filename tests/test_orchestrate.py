@@ -4,78 +4,20 @@ src/utils/report.lisp)."""
 from __future__ import annotations
 
 import json
-import threading
-
-import pytest
 
 from pgloader_spark.catalog import Catalog, Column, Index, FKey, Schema, Table
+from pgloader_spark.plans.executor import LoadReport
 from pgloader_spark.plans.orchestrate import (
     MigrationSummary,
-    TableResult,
-    migrate,
     post_load_statements,
 )
-
-
-def _tables():
-    return [
-        Table("small", row_count_estimate=10),
-        Table("huge", row_count_estimate=10_000),
-        Table("mid", row_count_estimate=500),
-    ]
-
-
-def test_migrate_runs_all_largest_first():
-    seen = []
-    lock = threading.Lock()
-
-    def load(t):
-        with lock:
-            seen.append(t.name)
-        return (t.row_count_estimate, t.row_count_estimate, 0)
-
-    hooks = []
-    s = migrate(
-        _tables(),
-        load,
-        workers=1,  # serial so submission order is observable
-        prepare=lambda: hooks.append("prepare"),
-        complete=lambda: hooks.append("complete"),
-    )
-    assert seen == ["huge", "mid", "small"]
-    assert hooks == ["prepare", "complete"]
-    assert [r.table for r in s.results] == ["huge", "mid", "small"]
-    assert sum(r.loaded for r in s.results) == 10_510
-
-
-def test_migrate_isolates_failures():
-    def load(t):
-        if t.name == "mid":
-            raise ValueError("boom")
-        return (1, 1, 0)
-
-    s = migrate(_tables(), load, workers=2)
-    by_name = {r.table: r for r in s.results}
-    assert by_name["mid"].failed == "boom"
-    assert by_name["huge"].loaded == 1
-    assert by_name["small"].loaded == 1
-
-
-def test_migrate_on_error_stop():
-    def load(t):
-        if t.name == "huge":
-            raise ValueError("boom")
-        return (1, 1, 0)
-
-    with pytest.raises(RuntimeError, match="huge failed"):
-        migrate(_tables(), load, workers=1, on_error_stop=True)
 
 
 def test_summary_formats():
     s = MigrationSummary(
         results=[
-            TableResult("a", read=100, loaded=99, errors=1, seconds=1.5),
-            TableResult("b", read=5, loaded=5, errors=0, seconds=0.25),
+            LoadReport("a", read=100, loaded=99, errors=1, seconds=1.5),
+            LoadReport("b", read=5, loaded=5, errors=0, seconds=0.25),
         ]
     )
     text = s.to_text()

@@ -2142,6 +2142,93 @@ def test_cli_load_applies_set_clause_to_copy_session(seeded, spark, tmp_path):
     ]
 
 
+def _sqlite_people_load(seeded, tmp_path, age2: str) -> str:
+    """A .load file: LOAD DATABASE of a 3-row SQLite table into an
+    existing target whose int ``age`` rejects a non-numeric AGE2 and
+    whose ``app`` records the COPY session's application_name."""
+    import sqlite3
+
+    src = tmp_path / "dbp.db"
+    con = sqlite3.connect(src)
+    con.execute("CREATE TABLE db_people (id integer PRIMARY KEY, name text, age text)")
+    con.executemany(
+        "INSERT INTO db_people VALUES (?, ?, ?)",
+        [(1, "ada", "36"), (2, "grace", age2), (3, "alan", "41")],
+    )
+    con.commit()
+    con.close()
+    with PGConn(seeded) as c:
+        c.query("DROP TABLE IF EXISTS db_people")
+        c.query(
+            "CREATE TABLE db_people (id bigint, name text, age int,"
+            " app text DEFAULT current_setting('application_name'))"
+        )
+    load = tmp_path / "dbp.load"
+    load.write_text(
+        f"LOAD DATABASE FROM sqlite://{src} INTO {seeded}\n"
+        "  WITH data only\n"
+        "  SET application_name to 'graft8'\n"
+        "  INCLUDING ONLY TABLE NAMES MATCHING 'db_people';\n"
+    )
+    return str(load)
+
+
+def test_cli_load_database_isolates_rejected_row(seeded, spark, tmp_path, capsys):
+    """A LOAD DATABASE lands through the same sink as a file LOAD: the
+    row the server rejects is retried around, counted in the summary,
+    and written with its error to <root-dir>/<db>/<table>.dat and .log."""
+    import json
+
+    from pgloader_spark.cli import main
+
+    load = _sqlite_people_load(seeded, tmp_path, "oops")
+    root = tmp_path / "root"
+    capsys.readouterr()
+    assert main([load, "--master", "local[4]", "--summary", "json",
+                 "--root-dir", str(root)]) == 0
+    (table,) = json.loads(capsys.readouterr().out)["tables"]
+    assert (table["read"], table["loaded"], table["errors"]) == (3, 2, 1)
+    assert [r[:3] for r in _pg_table_rows(seeded, "db_people", order_by="id")] == [
+        ("1", "ada", "36"), ("3", "alan", "41"),
+    ]
+    assert (root / "postgres" / "db_people.dat").read_text() == "2\tgrace\toops\n"
+    assert "22P02" in (root / "postgres" / "db_people.log").read_text()
+
+
+def test_cli_load_database_applies_set_clause_to_copy_session(
+    seeded, spark, tmp_path
+):
+    """The SET clause of a LOAD DATABASE is in effect on its COPY
+    sessions, as for a file LOAD."""
+    from pgloader_spark.cli import main
+
+    load = _sqlite_people_load(seeded, tmp_path, "45")
+    assert main([load, "--master", "local[4]",
+                 "--root-dir", str(tmp_path / "root")]) == 0
+    assert _pg_table_rows(seeded, "db_people", order_by="id") == [
+        ("1", "ada", "36", "graft8"),
+        ("2", "grace", "45", "graft8"),
+        ("3", "alan", "41", "graft8"),
+    ]
+
+
+def test_cli_load_database_on_error_stop_fails_fast(seeded, spark, tmp_path):
+    """--on-error-stop decides a LOAD DATABASE's error policy: with it
+    the rejected row fails the load and nothing commits; without it the
+    same load isolates the row."""
+    from pgloader_spark.cli import main
+
+    load = _sqlite_people_load(seeded, tmp_path, "oops")
+    root = tmp_path / "root"
+    with pytest.raises(Exception, match="22P02"):
+        main([load, "--master", "local[4]", "--on-error-stop",
+              "--root-dir", str(root)])
+    assert _pg_table_rows(seeded, "db_people") == []
+    assert not (root / "postgres").exists()
+    assert main([load, "--master", "local[4]", "--root-dir", str(root)]) == 0
+    assert len(_pg_table_rows(seeded, "db_people")) == 2
+
+
 def test_cli_load_date_format_and_positional_columns(seeded, spark, tmp_path):
     """The COPY sink aligns the frame to the live target: WITH date
     format parses values PostgreSQL cannot, and a load with no field
@@ -2234,7 +2321,7 @@ def test_load_database_drop_indexes_rebuilds_after_failed_copy(
         c.query("CREATE INDEX dbi_people_name_idx ON dbi_people (name)")
     cmd = parse_load(
         f"LOAD DATABASE FROM sqlite://{src} INTO {seeded}\n"
-        "  WITH data only, drop indexes\n"
+        "  WITH data only, drop indexes, on error stop\n"
         "  INCLUDING ONLY TABLE NAMES MATCHING 'dbi_people';\n"
     )
     root = tmp_path / "root"

@@ -115,6 +115,28 @@ def test_migrate_whole_db(spark, db, tmp_path):
     assert back.count() == 4
 
 
+def test_load_database_introspects_source_once(spark, db, tmp_path, monkeypatch):
+    """LOAD DATABASE reads every table with the fields of its one
+    catalog scan: the source is introspected once, not once more per
+    table."""
+    from pgloader_spark.parsers.loadcmd import parse_load
+    from pgloader_spark.plans.executor import ExecutionContext, execute_database
+    from pgloader_spark.sources import sqlite_live
+
+    calls = []
+    real = sqlite_live.introspect_sqlite
+
+    def counting(path):
+        calls.append(path)
+        return real(path)
+
+    monkeypatch.setattr(sqlite_live, "introspect_sqlite", counting)
+    cmd = parse_load(f"LOAD DATABASE FROM sqlite://{db} INTO {tmp_path}/lake;")
+    reports = execute_database(ExecutionContext(spark=spark, root_dir=str(tmp_path)), cmd)
+    assert {r.table: r.loaded for r in reports} == {"people": 4, "empty_t": 0}
+    assert calls == [db]
+
+
 def test_load_database_dsl_sqlite_to_parquet(spark, db, tmp_path):
     """`LOAD DATABASE FROM sqlite://...` through the parsed-DSL
     executor path: introspect -> cast -> distributed read -> parquet
