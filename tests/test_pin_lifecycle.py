@@ -14,10 +14,17 @@ materialized once and unpersisted on every exit path).
 from __future__ import annotations
 
 
-def _cached_plans(spark):
+def _storage_ids(spark):
     # the Java CacheManager has no public size(); materialized cache
     # entries are visible as persisted RDDs in the storage registry
-    return [r for r in spark.sparkContext._jsc.sc().getRDDStorageInfo()]
+    return {r.id() for r in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+
+def _cached_plans(spark, baseline):
+    # ids already there after clearCache() are not this test's: eager
+    # localCheckpoint blocks left by other operators on the shared
+    # session survive clearCache() until JVM GC
+    return _storage_ids(spark) - baseline
 
 
 def test_repeated_token_jaccard_calls_reuse_cache_entries(spark):
@@ -26,39 +33,41 @@ def test_repeated_token_jaccard_calls_reuse_cache_entries(spark):
     docs = [(i, f"alpha beta gamma d{i} e{i % 7}") for i in range(60)]
     df = spark.createDataFrame(docs, "doc_id long, text string")
     spark.catalog.clearCache()
+    baseline = _storage_ids(spark)
 
     token_jaccard_clusters(df, threshold=0.8).count()
-    n_first = len(_cached_plans(spark))
+    n_first = len(_cached_plans(spark, baseline))
     assert n_first > 0  # the operator really does pin intermediates
 
     # same logical inputs again: CacheManager dedupes by canonical plan
     token_jaccard_clusters(df, threshold=0.8).count()
-    n_second = len(_cached_plans(spark))
+    n_second = len(_cached_plans(spark, baseline))
     assert n_second == n_first, (
         f"repeated call grew the persisted-table count "
         f"{n_first} -> {n_second}"
     )
     spark.catalog.clearCache()
-    assert len(_cached_plans(spark)) == 0
+    assert len(_cached_plans(spark, baseline)) == 0
 
 
 def test_query_chunks_unpersists_on_every_path(spark):
     from pgloader_spark.operators.similarity import _query_chunks
 
     spark.catalog.clearCache()
+    baseline = _storage_ids(spark)
     vecs = [(i, [float(i), 1.0]) for i in range(50)]
     qdf = spark.createDataFrame(vecs, "vec_id long, embedding array<double>")
 
     # under-cap fast path
     chunks = list(_query_chunks(qdf, "vec_id", "embedding", cap=100))
     assert len(chunks) == 1 and len(chunks[0]) == 50
-    assert len(_cached_plans(spark)) == 0
+    assert len(_cached_plans(spark, baseline)) == 0
 
     # over-cap streaming path: one persisted pass, then unpersisted
     chunks = list(_query_chunks(qdf, "vec_id", "embedding", cap=8))
     assert sum(len(c) for c in chunks) == 50
     assert all(len(c) <= 8 for c in chunks)
-    assert len(_cached_plans(spark)) == 0
+    assert len(_cached_plans(spark, baseline)) == 0
 
     # over-cap rows are each seen exactly once (the probe's partitions
     # are served from cache, not recomputed into duplicates)
