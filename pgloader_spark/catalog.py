@@ -259,25 +259,3 @@ def copy_ordering(tables: list[Table]) -> list[Table]:
     """Largest-first scheduling so big tables start early and the
     worker pool drains evenly (migrate-database.lisp:304-320)."""
     return sorted(tables, key=lambda t: -(t.row_count_estimate or 0))
-
-
-def merge_catalogs(source: Catalog, target: Catalog) -> Catalog:
-    """Match source tables/columns into a pre-existing target catalog
-    by (case-folded) name; keep target types where both define one
-    (merge-catalogs.lisp:14-154)."""
-    for s_schema in source.schemas:
-        t_schema = target.find_schema(s_schema.name)
-        if t_schema is None:
-            continue
-        for s_table in s_schema.tables:
-            t_table = t_schema.find_table(s_table.name)
-            if t_table is None:
-                continue
-            t_cols = {c.name.lower(): c for c in t_table.columns}
-            for s_col in s_table.columns:
-                t_col = t_cols.get(s_col.name.lower())
-                if t_col is not None:
-                    s_col.type_name = t_col.type_name
-                    s_col.type_mod = t_col.type_mod
-                    s_col.nullable = t_col.nullable
-    return source

@@ -321,7 +321,8 @@ def ip_range(start: Column | str, end: Column | str) -> Column:
     golden test/regress/expected/csv-before-after.out stores).  We
     canonicalize engine-side so the value is already in ip4r's output
     form: real ip4r accepts every canonical form unchanged, and the
-    domain-based emulation (plans/ip4r_shim.py) stores text verbatim.
+    domain-based emulation the tests install (tests/fixtures/ip4r_shim.py)
+    stores text verbatim.
     """
     s = _c(start).cast("long")
     e = _c(end).cast("long")

@@ -6,12 +6,14 @@ NULL`` / ``IS NOT NULL``, ``IN (...)``, ``BETWEEN``, ``AND`` / ``OR``,
 bracketed identifiers ``[col]``, parenthesized groups, numeric and
 ``N'...'``/``'...'`` string literals — translated token-wise to the PG
 spelling (identifiers double-quoted only when needed, N-strings
-unprefixed). Used when carrying a filtered index to the target DDL.
+unprefixed). ``execute_database`` runs it on each filtered index an
+MSSQL source reports, so the target index keeps its ``WHERE``.
 """
 
 from __future__ import annotations
 
 import re
+from collections.abc import Callable
 
 from pgloader_spark.catalog import quote_ident
 
@@ -35,9 +37,12 @@ class IndexFilterError(ValueError):
     pass
 
 
-def translate_index_filter(filter_text: str) -> str:
+def translate_index_filter(
+    filter_text: str, fold: Callable[[str], str] = lambda name: name
+) -> str:
     """'([status]=(1) AND [type] IN (N'a', N'b'))' ->
-    '(status = 1 AND type IN ('a', 'b'))'"""
+    '(status = 1 AND type IN ('a', 'b'))'.  FOLD maps each column name
+    to its target spelling (the migration's identifier case)."""
     out: list[str] = []
     pos = 0
     n = len(filter_text)
@@ -57,14 +62,14 @@ def translate_index_filter(filter_text: str) -> str:
         elif kind == "string" or kind == "number":
             out.append(tok)
         elif kind == "bracket":
-            out.append(quote_ident(tok[1:-1]))
+            out.append(quote_ident(fold(tok[1:-1])))
         elif kind == "op":
             out.append("<>" if tok == "!=" else tok)
         elif kind == "word":
             if tok.lower() in _KEYWORDS:
                 out.append(tok.upper())
             else:
-                out.append(quote_ident(tok))
+                out.append(quote_ident(fold(tok)))
     # re-join with spacing rules: no space after '(' or before ')' ','
     text = ""
     for tok in out:

@@ -707,6 +707,10 @@ def execute_database(ctx: ExecutionContext, cmd: LoadCommand) -> list[LoadReport
     # (reference list-all-indexes / list-all-fkeys per source) attach
     # to the target tables so the complete phase can emit them.
     from pgloader_spark.catalog import FKey, Index, apply_identifier_case
+    from pgloader_spark.parsers.index_filters import (
+        IndexFilterError,
+        translate_index_filter,
+    )
 
     def _fold(name: str) -> str:
         return apply_identifier_case(name, case_mode)
@@ -728,6 +732,16 @@ def execute_database(ctx: ExecutionContext, cmd: LoadCommand) -> list[LoadReport
                 )
             )
         for iname, icols, uniq in k.get("indexes", []):
+            # a filtered index keeps its WHERE, in PG syntax
+            # (mssql-index-filters.lisp:9-185)
+            where = k.get("filters", {}).get(iname)
+            try:
+                condition = (
+                    translate_index_filter(where, _fold) if where else None
+                )
+            except IndexFilterError as exc:
+                log.warning("index %s.%s skipped: %s", t, iname, exc)
+                continue
             # uniquify index names, the reference's default (WITH
             # preserve index names keeps the source spelling)
             target_name = (
@@ -741,6 +755,7 @@ def execute_database(ctx: ExecutionContext, cmd: LoadCommand) -> list[LoadReport
                     table_name=tbl.name,
                     columns=[_fold(c) for c in icols],
                     unique=uniq,
+                    condition=condition,
                 )
             )
         for fcols, ftable, ffcols, on_update, on_delete in k.get("fkeys", []):

@@ -50,7 +50,9 @@ class LiveSource:
 
     kind: str  # cast-rule source kind (CastEngine)
     introspect: Callable[[], dict]  # table -> [SourceField]
-    keys: Callable[[], dict]  # table -> {"pk", "indexes", "fkeys"}
+    # table -> {"pk", "indexes", "fkeys"}; MSSQL adds "filters", index
+    # name -> filtered-index WHERE in source syntax
+    keys: Callable[[], dict]
     read: Callable[..., DataFrame]  # (spark, table, engine, fields) -> DataFrame
     run: Callable[[list[str]], list]  # statements -> last result's rows
     views_sql: str  # one view name per row (MATERIALIZE ALL VIEWS)

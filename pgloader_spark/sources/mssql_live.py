@@ -90,7 +90,9 @@ def introspect_mssql_keys(dsn: str) -> dict[str, dict]:
     """Per-table PK / secondary indexes / foreign keys from the sys
     catalogs (reference list-all-indexes.sql / list-all-fkeys.sql).
     Same shape as ``introspect_sqlite_keys``; tables keyed like
-    ``introspect_mssql`` (dbo bare, others ``schema.table``)."""
+    ``introspect_mssql`` (dbo bare, others ``schema.table``).  A
+    filtered index's ``filter_definition`` lands, untranslated, in the
+    table's ``filters`` map under the index name."""
     extras = introspect_mssql_extras(dsn)
     out: dict[str, dict] = {}
 
@@ -109,6 +111,7 @@ def introspect_mssql_keys(dsn: str) -> dict[str, dict]:
                 "cols": [],
                 "unique": str(r["is_unique"]) in ("1", "True", "true"),
                 "primary": str(r["is_primary_key"]) in ("1", "True", "true"),
+                "filter": r.get("filter_definition"),
             },
         )
         g["cols"].append(r["column_name"])
@@ -117,6 +120,8 @@ def introspect_mssql_keys(dsn: str) -> dict[str, dict]:
             entry(t)["pk"] = g["cols"]
         else:
             entry(t)["indexes"].append((iname, g["cols"], g["unique"]))
+            if g["filter"]:
+                entry(t).setdefault("filters", {})[iname] = g["filter"]
     fk_grouped: dict[tuple[str, str], dict] = {}
     for r in extras["fkeys"]:
         t = key_of(r["table_schema"], r["table_name"])

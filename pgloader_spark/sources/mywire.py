@@ -109,16 +109,6 @@ def lenenc_int(data: bytes, off: int) -> tuple[int | None, int]:
     raise MyError(2027, "HY000", f"malformed lenenc int 0x{first:02x}")
 
 
-def encode_lenenc_int(n: int) -> bytes:
-    if n < 0xFB:
-        return bytes([n])
-    if n < 1 << 16:
-        return b"\xfc" + struct.pack("<H", n)
-    if n < 1 << 24:
-        return b"\xfd" + n.to_bytes(3, "little")
-    return b"\xfe" + struct.pack("<Q", n)
-
-
 def lenenc_str(data: bytes, off: int) -> tuple[bytes | None, int]:
     n, off = lenenc_int(data, off)
     if n is None:

@@ -821,79 +821,6 @@ def load_sink(dsn: str, root_dir: str, on_error_stop: bool = False):
     return sink
 
 
-def write_pg_upsert(
-    df: DataFrame,
-    dsn: str,
-    table: str,
-    key_cols: list[str],
-    n_writers: int | None = None,
-    update_cols: list[str] | None = None,
-) -> tuple[int, int]:
-    """Idempotent merge load: COPY into a staging table at full COPY
-    speed, then one server-side ``INSERT ... ON CONFLICT DO UPDATE``.
-
-    The reference can only truncate-and-reload or append; re-running a
-    load against a live target either duplicates rows or requires a
-    full reload.  Upsert gives the third mode every recurring
-    migration needs: re-runs converge (same input -> same target
-    state).  The target must carry a unique constraint/index on
-    ``key_cols`` (ON CONFLICT's arbiter).
-
-    Scale shape: the distributed phase is exactly ``write_pg_copy``
-    (Arrow-batched COPY streams into staging — no per-row Python, no
-    extra shuffle); the merge is ONE set-based SQL statement executed
-    by the server, where it belongs.  Returns (rows_staged,
-    rows_merged).
-    """
-    staging = sibling_table(table, "__upsert_stage")
-    q_target = quote_qualified(table)
-    q_stage = quote_qualified(staging)
-    with PGConn(dsn) as conn:
-        conn.query(f"DROP TABLE IF EXISTS {q_stage}")
-        conn.query(
-            f"CREATE UNLOGGED TABLE {q_stage} "
-            f"(LIKE {q_target} INCLUDING DEFAULTS)"
-        )
-    try:
-        staged = write_pg_copy(df, dsn, staging, n_writers=n_writers)
-        cols = list(df.columns)
-        upd = update_cols if update_cols is not None else [
-            c for c in cols if c not in key_cols
-        ]
-        collist = ", ".join(f'"{c}"' for c in cols)
-        keylist = ", ".join(f'"{c}"' for c in key_cols)
-        if upd:
-            action = "DO UPDATE SET " + ", ".join(
-                f'"{c}" = EXCLUDED."{c}"' for c in upd
-            )
-        else:
-            action = "DO NOTHING"
-        # Dedupe the staged batch on key_cols first: ON CONFLICT DO
-        # UPDATE errors with "cannot affect row a second time" if the
-        # same key appears twice in one INSERT.  Last physical row wins
-        # (ctid order — matches the reference's replay-last semantics
-        # closely enough for idempotent re-runs, and any batch that
-        # cares about a specific winner should pre-aggregate anyway).
-        dedup_src = (
-            f"(SELECT {collist} FROM "
-            f"(SELECT {collist}, ROW_NUMBER() OVER "
-            f"(PARTITION BY {keylist} ORDER BY ctid DESC) AS __rn "
-            f"FROM {q_stage}) d WHERE __rn = 1) s"
-        )
-        with PGConn(dsn) as conn:
-            _, rows = conn.query(
-                f"WITH m AS (INSERT INTO {q_target} ({collist}) "
-                f"SELECT {collist} FROM {dedup_src} "
-                f"ON CONFLICT ({keylist}) {action} RETURNING 1) "
-                "SELECT COUNT(*) FROM m"
-            )
-            merged = int(rows[0][0])
-        return staged, merged
-    finally:
-        with PGConn(dsn) as conn:
-            conn.query(f"DROP TABLE IF EXISTS {q_stage}")
-
-
 def apply_pg_cdc(
     df: DataFrame,
     dsn: str,
@@ -912,10 +839,10 @@ def apply_pg_cdc(
     are superseded by its last (ordered by ``seq_col`` — the LSN/event
     sequence — or stage order when absent).
 
-    Completes the sink family: append (write_pg_copy) -> merge
-    (write_pg_upsert) -> full change-stream application.  The
-    distributed phase is exactly the Arrow COPY into staging; the
-    apply is one DELETE + one INSERT..ON CONFLICT inside a single
+    Completes the sink family: append (write_pg_copy) -> full
+    change-stream application.  The distributed phase is exactly the
+    Arrow COPY into staging; the apply is one DELETE + one
+    INSERT..ON CONFLICT inside a single
     transaction, so a re-run of the same batch converges and a crash
     mid-apply leaves the target untouched.  Returns
     (rows_staged, rows_upserted, rows_deleted).

@@ -37,7 +37,16 @@ import struct
 import threading
 from dataclasses import dataclass, field
 
-from pgloader_spark.sources.mywire import encode_lenenc_int
+
+def encode_lenenc_int(n: int) -> bytes:
+    if n < 0xFB:
+        return bytes([n])
+    if n < 1 << 16:
+        return b"\xfc" + struct.pack("<H", n)
+    if n < 1 << 24:
+        return b"\xfd" + n.to_bytes(3, "little")
+    return b"\xfe" + struct.pack("<Q", n)
+
 
 CAPS = 0x00000001 | 0x00000200 | 0x00000008 | 0x00008000 | 0x00080000
 # LONG_PASSWORD | PROTOCOL_41 | CONNECT_WITH_DB | SECURE_CONN | PLUGIN_AUTH

@@ -7,17 +7,14 @@ import pytest
 from pyspark.sql import types as T
 
 from pgloader_spark.catalog import (
-    Catalog,
     Column,
     FKey,
     IdentifierCollision,
     Index,
-    Schema,
     Table,
     apply_identifier_case,
     check_collisions,
     copy_ordering,
-    merge_catalogs,
     quote_ident,
     truncate_identifier,
 )
@@ -75,16 +72,3 @@ def test_table_ddl_and_spark_schema():
 def test_copy_ordering_largest_first():
     ts = [Table("a", row_count_estimate=5), Table("b", row_count_estimate=500), Table("c")]
     assert [t.name for t in copy_ordering(ts)] == ["b", "a", "c"]
-
-
-def test_merge_catalogs_takes_target_types():
-    src = Catalog("s", [Schema("public", [Table("t", columns=[Column("c", "text")])])])
-    tgt = Catalog(
-        "t",
-        [Schema("public", [Table("t", columns=[Column("c", "numeric", "(10,2)", nullable=False)])])],
-    )
-    merged = merge_catalogs(src, tgt)
-    col = merged.schemas[0].tables[0].columns[0]
-    assert col.type_name == "numeric"
-    assert col.type_mod == "(10,2)"
-    assert col.nullable is False

@@ -120,7 +120,7 @@ def test_dry_run_probes_mssql_source(capsys):
     """--dry-run connects to an mssql:// source instead of looking
     for a file of that name."""
     from pgloader_spark.cli import main
-    from pgloader_spark.sources.mssql_stub import (
+    from tests.fixtures.mssql_stub import (
         MsSQLStubServer,
         MsStubColumn,
         MsStubTable,

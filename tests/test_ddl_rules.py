@@ -33,6 +33,11 @@ def test_translate_and_or_between():
     assert got == "(qty BETWEEN 10 AND 20 OR name IS NOT NULL)"
 
 
+def test_translate_folds_identifiers():
+    got = translate_index_filter("([Status]=(1) AND Kind IS NULL)", str.lower)
+    assert got == "(status = 1 AND kind IS NULL)"
+
+
 def test_translate_neq_and_reserved_ident():
     got = translate_index_filter("[user]<>(0) AND [order] IS NULL")
     assert got == '"user" <> 0 AND "order" IS NULL'

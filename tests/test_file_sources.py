@@ -31,8 +31,8 @@ from pgloader_spark.sources.ixf import (
     IXF_VARCHAR,
     IxfColumn,
     read_ixf,
-    write_ixf,
 )
+from tests.fixtures.ixf_writer import write_ixf
 
 # --------------------------------------------------------------------------
 # fixed-width

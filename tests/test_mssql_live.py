@@ -11,12 +11,12 @@ from __future__ import annotations
 
 import pytest
 
-from pgloader_spark.sources.mssql_stub import (
+from pgloader_spark.sources.tdswire import MsConn, MsError
+from tests.fixtures.mssql_stub import (
     MsSQLStubServer,
     MsStubColumn,
     MsStubTable,
 )
-from pgloader_spark.sources.tdswire import MsConn, MsError
 
 
 def bank_tables() -> list[MsStubTable]:
@@ -284,6 +284,67 @@ def test_load_database_mssql_to_live_pg(spark, tmp_path):
                 "WHERE pc.contype = 'p' AND t.relname = 'globalaccount'"
             )
             assert rows == [("1",)]
+    finally:
+        su_pg(f"pg_ctl -D {data} -m immediate stop")
+        import shutil as _sh
+
+        _sh.rmtree(base, ignore_errors=True)
+
+
+def test_load_database_mssql_filtered_index_keeps_where(spark, tmp_path):
+    """A filtered unique index migrates with its WHERE translated to
+    PG syntax (mssql-index-filters.lisp:9-185): the target index is
+    partial, so keys duplicated outside the filter still land.  A
+    filter the translator cannot read skips its index, not the load."""
+    from pgloader_spark.parsers.loadcmd import parse_load
+    from pgloader_spark.plans.executor import ExecutionContext, execute_database
+    from pgloader_spark.sources.pgwire import PGConn
+
+    orders = MsStubTable(
+        name="Orders",
+        columns=[
+            MsStubColumn("id", "int", nullable=False),
+            MsStubColumn("code", "nvarchar", char_max_len=10),
+            MsStubColumn("status", "int", nullable=False),
+        ],
+        # code repeats only among the status=0 rows
+        rows=[(1, "a", 1), (2, "b", 1), (3, "x", 0), (4, "x", 0),
+              (5, "a", 0)],
+        pkey=["id"],
+        indexes=[
+            ("ux_orders_code_open", 1, ["code"], "([status]=(1))"),
+            ("ix_orders_bad", 0, ["code"], "([status]>@limit)"),
+        ],
+    )
+    base, data, dsn, su_pg = _pg_fixture()
+    try:
+        with MsSQLStubServer("shop", [orders]) as srv:
+            cmd = parse_load(
+                f"""
+                load database
+                     from mssql://sa@127.0.0.1:{srv.port}/shop
+                     into {dsn}
+                with include drop, create tables, create indexes;
+                """
+            )
+            ctx = ExecutionContext(spark=spark, root_dir=str(tmp_path))
+            reports = execute_database(ctx, cmd)
+        assert {r.table: r.loaded for r in reports} == {"orders": 5}
+        with PGConn(dsn) as c:
+            _, rows = c.query(
+                "SELECT indexdef FROM pg_indexes WHERE tablename = 'orders'"
+                " AND indexname LIKE '%ux_orders_code_open'"
+            )
+            assert len(rows) == 1
+            assert rows[0][0].startswith("CREATE UNIQUE INDEX")
+            assert rows[0][0].endswith("WHERE (status = 1)")
+            _, rows = c.query(
+                "SELECT indexname FROM pg_indexes WHERE tablename = 'orders'"
+                " AND indexname LIKE '%ix_orders_bad'"
+            )
+            assert rows == []
+            _, rows = c.query("SELECT COUNT(*) FROM orders")
+            assert rows == [("5",)]
     finally:
         su_pg(f"pg_ctl -D {data} -m immediate stop")
         import shutil as _sh

@@ -15,9 +15,9 @@ from pgloader_spark.operators.multimodal import (
     fake_embedding,
     frame_sample_plan,
     image_metadata,
-    make_png,
     sniff_mime,
 )
+from tests.fixtures.media import encode_gif_gray8, make_jpeg, make_png
 
 
 def test_sniff_and_decode_png_gif():
@@ -76,10 +76,7 @@ def test_frame_sample_plan(spark):
 
 
 def test_jpeg_sof_marker_scan_decodes_dims():
-    from pgloader_spark.operators.multimodal import (
-        decode_image_meta,
-        make_jpeg,
-    )
+    from pgloader_spark.operators.multimodal import decode_image_meta
 
     mime, w, h = decode_image_meta(make_jpeg(640, 480))
     assert (mime, w, h) == ("image/jpeg", 640, 480)
@@ -621,7 +618,6 @@ def test_avi_mjpeg_demux_and_frame_pipeline(spark):
         encode_avi_mjpeg,
         encode_png_gray8,
         image_metadata,
-        make_jpeg,
         video_frames,
     )
 
@@ -668,7 +664,6 @@ def test_gif_decode_and_cross_format_ahash():
         _lzw_decode,
         ahash64,
         decode_gif_gray,
-        encode_gif_gray8,
         encode_png_gray8,
     )
 

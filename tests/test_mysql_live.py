@@ -17,7 +17,7 @@ from decimal import Decimal
 import pytest
 
 from pgloader_spark.casting import CastEngine
-from pgloader_spark.sources.mysql_stub import (
+from tests.fixtures.mysql_stub import (
     MySQLStubServer,
     StubColumn,
     StubTable,
@@ -334,7 +334,7 @@ def test_stub_recv_never_overreads():
     wrap_socket) would discard it, deadlocking the handshake."""
     import socket
 
-    from pgloader_spark.sources.mysql_stub import _Session
+    from tests.fixtures.mysql_stub import _Session
 
     a, b = socket.socketpair()
     try:

@@ -23,7 +23,7 @@ import uuid
 
 import pytest
 
-from pgloader_spark.sources.mysql_stub import (
+from tests.fixtures.mysql_stub import (
     MySQLStubServer,
     StubColumn,
     StubTable,

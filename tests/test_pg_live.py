@@ -334,7 +334,7 @@ def _run_ref_scenario(name, seeded, spark, tmp_path):
 
     runner = PGConn(seeded)
     try:
-        from pgloader_spark.plans.ip4r_shim import wrap_sql_runner
+        from tests.fixtures.ip4r_shim import wrap_sql_runner
 
         ctx = ExecutionContext(
             spark=spark,
@@ -372,7 +372,7 @@ REF_RUNNABLE = [
     "csv-trim-extra-blanks", "csv-using-sexp",
     "fixed", "fixed-guess", "dbf", "dbf-memo", "ixf",
     # needs the ip4r extension: runs through the behavior-faithful
-    # built-ins emulation (plans/ip4r_shim.py), value-pinned to the
+    # built-ins emulation (tests/fixtures/ip4r_shim.py), value-pinned to the
     # reference's regress golden like every other scenario
     "csv-before-after",
 ]
@@ -866,7 +866,7 @@ def test_reference_archive_geolite_ip4r(seeded, spark, tmp_path):
 
     The GeoLite download URL is dead, so a local server serves a zip in
     the exact GeoLiteCity layout; the sandbox PostgreSQL has no ip4r
-    package, so the engine's built-ins emulation (plans/ip4r_shim.py)
+    package, so the built-ins emulation (tests/fixtures/ip4r_shim.py)
     kicks in — including the ``>>=`` containment operator that
     geolite.sql's locate() function needs."""
     import zipfile
@@ -876,7 +876,7 @@ def test_reference_archive_geolite_ip4r(seeded, spark, tmp_path):
         pytest.skip("reference corpus not available")
     from pgloader_spark.parsers.loadcmd import parse_load
     from pgloader_spark.plans.executor import ExecutionContext, execute_archive
-    from pgloader_spark.plans.ip4r_shim import wrap_sql_runner
+    from tests.fixtures.ip4r_shim import wrap_sql_runner
 
     loc_hdr = (
         "Copyright (c) 2012 MaxMind Inc.  All Rights Reserved.\n"
@@ -1630,93 +1630,6 @@ def test_cli_flags_end_to_end_with_regress(seeded, spark, tmp_path):
     (expdir / "cli_people.out").write_text("10\tada\n20\tgrace\n30\tWRONG\n")
     assert main([str(load), "--master", "local[4]",
                  "--root-dir", str(tmp_path / "rej3"), "--regress"]) == 1
-
-
-def test_write_pg_upsert_converges_on_rerun(seeded, spark):
-    """Merge load: COPY into staging + one ON CONFLICT statement.
-    Re-running the same load leaves the target unchanged (idempotent);
-    changed rows update in place; new rows insert."""
-    from pgloader_spark.sources.pg_live import write_pg_upsert
-
-    with PGConn(seeded) as c:
-        c.query("DROP TABLE IF EXISTS upsert_t")
-        c.query(
-            "CREATE TABLE upsert_t (id bigint PRIMARY KEY, name text,"
-            " score double precision)"
-        )
-    df1 = spark.createDataFrame(
-        [(1, "a", 1.0), (2, "b", 2.0), (3, "c", 3.0)],
-        "id long, name string, score double",
-    )
-    staged, merged = write_pg_upsert(df1, seeded, "upsert_t", ["id"])
-    assert (staged, merged) == (3, 3)
-    # re-run: same input, target unchanged, still 3 rows
-    write_pg_upsert(df1, seeded, "upsert_t", ["id"])
-    # changed + new rows
-    df2 = spark.createDataFrame(
-        [(2, "b2", 20.0), (4, "d", 4.0)], "id long, name string, score double"
-    )
-    staged2, merged2 = write_pg_upsert(df2, seeded, "upsert_t", ["id"])
-    assert (staged2, merged2) == (2, 2)
-    with PGConn(seeded) as c:
-        _, rows = c.query("SELECT id, name, score FROM upsert_t ORDER BY id")
-    assert [(int(i), n, float(s)) for i, n, s in rows] == [
-        (1, "a", 1.0),
-        (2, "b2", 20.0),
-        (3, "c", 3.0),
-        (4, "d", 4.0),
-    ]
-    # staging table cleaned up
-    with PGConn(seeded) as c:
-        _, r = c.query(
-            "SELECT COUNT(*) FROM information_schema.tables"
-            " WHERE table_name LIKE '%__upsert_stage'"
-        )
-    assert int(r[0][0]) == 0
-
-
-def test_write_pg_upsert_do_nothing_mode(seeded, spark):
-    from pgloader_spark.sources.pg_live import write_pg_upsert
-
-    with PGConn(seeded) as c:
-        c.query("DROP TABLE IF EXISTS upsert_n")
-        c.query("CREATE TABLE upsert_n (k text PRIMARY KEY)")
-    df = spark.createDataFrame([("x",), ("y",)], "k string")
-    write_pg_upsert(df, seeded, "upsert_n", ["k"], update_cols=[])
-    s, m = write_pg_upsert(df, seeded, "upsert_n", ["k"], update_cols=[])
-    assert (s, m) == (2, 0)  # DO NOTHING: conflicts merge zero rows
-    with PGConn(seeded) as c:
-        _, r = c.query("SELECT COUNT(*) FROM upsert_n")
-    assert int(r[0][0]) == 2
-
-
-def test_write_pg_upsert_duplicate_keys_in_batch(seeded, spark):
-    """A batch carrying the same key twice must not error with
-    "ON CONFLICT DO UPDATE command cannot affect row a second time"
-    (round-3 advice); the staging select dedupes per key first."""
-    from pgloader_spark.sources.pg_live import write_pg_upsert
-
-    with PGConn(seeded) as c:
-        c.query("DROP TABLE IF EXISTS upsert_dup")
-        c.query(
-            "CREATE TABLE upsert_dup (id bigint PRIMARY KEY, name text)"
-        )
-    df = spark.createDataFrame(
-        [(1, "first"), (1, "second"), (2, "only")],
-        "id long, name string",
-    ).coalesce(1)
-    staged, merged = write_pg_upsert(df, seeded, "upsert_dup", ["id"])
-    assert staged == 3
-    assert merged == 2  # one row per distinct key reaches the target
-    with PGConn(seeded) as c:
-        _, rows = c.query("SELECT id, name FROM upsert_dup ORDER BY id")
-    got = {int(i): n for i, n in rows}
-    assert set(got) == {1, 2}
-    assert got[1] in ("first", "second")  # one of the dups, no error
-    assert got[2] == "only"
-    # converges on re-run, too
-    s2, m2 = write_pg_upsert(df, seeded, "upsert_dup", ["id"])
-    assert (s2, m2) == (3, 2)
 
 
 def test_password_auth_scram_md5_and_pgpass(pg_dsn, monkeypatch, tmp_path):

@@ -308,7 +308,7 @@ def test_live_db_reads_are_shuffle_free(spark):
     range) must be a pure scan: range table -> mapInPandas, no
     Exchange anywhere — a 1000-executor cluster reads a source
     database as parallel range SELECTs with zero shuffle."""
-    from pgloader_spark.sources.mssql_stub import (
+    from tests.fixtures.mssql_stub import (
         MsSQLStubServer,
         MsStubColumn,
         MsStubTable,

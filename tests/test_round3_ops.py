@@ -15,12 +15,12 @@ from pgloader_spark.operators.multimodal import (
     audio_metadata,
     decode_audio_meta,
     image_metadata,
-    make_wav,
     png_payload,
 )
 from pgloader_spark.operators.packing import bin_fill_stats, pack_greedy
 from pgloader_spark.operators.sampling import mix_to_target
 from pgloader_spark.operators.text import unigram_logprob
+from tests.fixtures.media import make_wav
 
 
 # ---------------------------------------------------------------- decontam

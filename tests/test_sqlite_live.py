@@ -160,6 +160,46 @@ LOAD DATABASE FROM sqlite://{db}
     assert dict(back.dtypes)["id"] == "bigint"
 
 
+def test_load_database_sqlite_materialize_views_to_parquet(spark, tmp_path):
+    """MATERIALIZE ALL VIEWS (matviews.lisp:14-85): each source view is
+    staged as a source table, migrates under the view's name, and its
+    staging table is dropped from the source afterwards."""
+    import sqlite3
+
+    from pgloader_spark.parsers.loadcmd import parse_load
+    from pgloader_spark.plans.executor import ExecutionContext, execute_database
+
+    db = str(tmp_path / "mv.db")
+    con = sqlite3.connect(db)
+    con.executescript(
+        """
+        CREATE TABLE base (id INTEGER PRIMARY KEY, grp TEXT, v INTEGER);
+        INSERT INTO base VALUES (1, 'a', 10), (2, 'a', 20), (3, 'b', 5);
+        CREATE VIEW sums AS SELECT grp, SUM(v) AS total FROM base GROUP BY grp;
+        """
+    )
+    con.close()
+    cmd = parse_load(
+        f"""
+LOAD DATABASE FROM sqlite://{db}
+  INTO {tmp_path}/lake
+  INCLUDING ONLY TABLE NAMES MATCHING 'base'
+  MATERIALIZE ALL VIEWS;
+"""
+    )
+    ctx = ExecutionContext(spark=spark, root_dir=str(tmp_path))
+    reports = execute_database(ctx, cmd)
+    assert {r.table: r.loaded for r in reports} == {"base": 3, "sums": 2}
+    back = spark.read.parquet(f"{tmp_path}/lake/sums.parquet")
+    # a CREATE TABLE AS column has no declared type in SQLite
+    totals = {r["grp"]: int(r["total"]) for r in back.collect()}
+    assert totals == {"a": 30, "b": 5}
+    con = sqlite3.connect(db)
+    left = {r[0] for r in con.execute("SELECT name FROM sqlite_master")}
+    con.close()
+    assert left == {"base", "sums"}
+
+
 def test_introspect_sqlite_keys(tmp_path):
     """PRAGMA-based key extraction: rowid-alias PK (no index_list
     entry), composite PK autoindex folding, secondary + unique
