@@ -256,52 +256,6 @@ def bucket_checksums(
     )
 
 
-def streaming_bucket_checksums(
-    df: DataFrame,
-    key_cols: list[str],
-    n_buckets: int = 256,
-    seed: int = CHECKSUM_SEED,
-) -> DataFrame:
-    """CONTINUOUS load verification: the per-bucket (count, checksum)
-    frame as a streaming aggregation over arriving rows.
-
-    Because the checksum is a SUM of per-key hashes (commutative,
-    associative), it streams as a plain bounded-state groupBy agg —
-    n_buckets rows of two accumulators, regardless of volume — and
-    after any prefix of the stream equals ``bucket_checksums`` over
-    the same accumulated rows (modular fold applied at read time;
-    pinned by test).  Pair with the exactly-once PG sink
-    (streaming/pg_sink.py): the running frame vs the target's
-    ``bucket_checksums`` is a continuously-checkable replication
-    invariant — the streaming twin of ``plans/verify_load.py``.
-
-    The decimal(38,0) accumulator defers the 60-bit fold: streaming
-    aggs can't re-read history to re-mod, and 38 digits absorb ~10^18
-    rows of 60-bit terms before overflow.
-
-    Use ``outputMode("complete")`` (or "update") on the writer; keys
-    here are buckets, so complete mode's state is n_buckets rows.
-    """
-    key_str = key_string(key_cols)
-    h = md5_hash64(key_str, seed=seed)
-    return (
-        df.select(
-            F.pmod(h, F.lit(n_buckets)).cast("int").alias("bucket"),
-            h.cast("decimal(38,0)").alias("__h"),
-        )
-        .groupBy("bucket")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_rows"),
-            F.sum("__h").alias("__sum"),
-        )
-        .select(
-            "bucket",
-            "n_rows",
-            (F.col("__sum") % F.lit(CHECKSUM_MOD)).cast("long").alias("key_checksum"),
-        )
-    )
-
-
 def key_skew_profile(
     df: DataFrame,
     key_col: str,

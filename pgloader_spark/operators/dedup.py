@@ -127,49 +127,6 @@ def base_hash40(col: Column) -> Column:
     return F.conv(F.substring(F.md5(col), 1, 10), 16, 10).cast("long")
 
 
-def shingle_rows(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text", k: int = SHINGLE_K
-) -> DataFrame:
-    """(id, sh) — one row per k-word shingle.
-
-    Uses the array higher-order ``shingles()`` expression + explode:
-    zero shuffles, embarrassingly parallel — the per-row HOF cost is
-    interpreted, but it scales linearly with cores while the
-    window-lead alternative pays a shuffle + per-key sort that
-    dominates at any scale (measured 2x slower at sf0.1 with equal
-    parallelism). Callers must hand in a well-partitioned ``df``.
-
-    Documents with fewer than k tokens contribute their whole token
-    stream as a single shingle.
-    """
-    toks = tokens(text_col)
-    if k == 1:
-        return df.select(F.col(id_col), F.explode(toks).alias("sh"))
-    return df.select(F.col(id_col), F.explode(shingles(text_col, k)).alias("sh"))
-
-
-def minhash_signature_df(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_hashes: int = N_MINHASH,
-) -> DataFrame:
-    """(id, s0..s{n-1}) minhash signature via explode + partial agg.
-
-    One md5 per shingle (the N seeded variants are integer
-    arithmetic); map-side partial aggregation reduces everything
-    before the (tiny: n_hashes longs per doc) shuffle.
-    """
-    ex = shingle_rows(df, id_col, text_col).select(
-        F.col(id_col), base_hash40(F.col("sh")).alias("h")
-    )
-    aggs = [
-        F.min((F.col("h") * F.lit(a) + F.lit(b)) % F.lit(MERSENNE_P)).alias(f"s{i}")
-        for i, (a, b) in enumerate(hash_family(n_hashes))
-    ]
-    return ex.groupBy(id_col).agg(*aggs)
-
-
 def exact_duplicates(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
@@ -523,29 +480,6 @@ def shingle_jaccard_pairs(
     return _jaccard_pairs_ppjoin(
         _pin(df.select(F.col(id_col).alias("id"), items.alias("items"))),
         threshold,
-    )
-
-
-def token_jaccard_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    threshold: float = 0.8,
-) -> DataFrame:
-    """Exact token-set Jaccard via prefix filtering (PPJoin-style).
-
-    A naive token self-join is quadratic in document frequency: a
-    stopword shared by every document emits |corpus|^2/2 pairs.  The
-    shared prefix-filtered core keeps the join EXACT while pruning it
-    (see ``_prefix_candidates``).
-
-    Tokens are hashed to 60-bit integers (the DuckDB oracle hashes
-    identically): Jaccard is invariant under an injective item map,
-    and 8-byte longs shuffle/compare far cheaper than strings.
-    """
-    toks = F.array_distinct(F.transform(tokens(text_col), _seeded_hash(0)))
-    return _jaccard_pairs_ppjoin(
-        df.select(F.col(id_col).alias("id"), toks.alias("items")), threshold
     )
 
 
@@ -1225,7 +1159,7 @@ def _containment_core(
         )
     # r11 opt (guide §2.4): build the per-document sorted distinct item
     # array as ONE NARROW PROJECTION — hash/dedup/sort inside array HOFs,
-    # exactly the shape token_jaccard_pairs already uses — instead of
+    # exactly the shape token_jaccard_clusters already uses — instead of
     # explode → global (id, item) DISTINCT → groupBy(id) collect_list,
     # which paid two full exchanges of the exploded shingle table (the
     # one intermediate LARGER than the corpus) plus a pin of it.
@@ -1324,26 +1258,6 @@ def _containment_core(
         .distinct()
     )
     return cands, arrays, sizes, membership
-
-
-def containment_candidates(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    threshold: float = 0.6,
-    k: int = SHINGLE_K,
-    collapse_clones: bool | str = "auto",
-) -> DataFrame:
-    """Probe surface: the exact-algorithm candidate set BEFORE the
-    array-intersect verify — (id_in, id_out, n_in) over collapsed
-    representatives when ``collapse_clones``.  Candidate volume is the
-    containment kernel's scale-governing quantity (tools/scale_probe
-    graphs it across corpus growth), so it is exposed as a first-class
-    frame rather than re-derived by copying kernel internals."""
-    cands, _arrays, _sizes, _membership = _containment_core(
-        df, id_col, text_col, threshold, k, collapse_clones
-    )
-    return cands
 
 
 def containment_pairs(

@@ -8,9 +8,9 @@ min/max footer stats prune most of the scan (the Delta/Iceberg
 OPTIMIZE ZORDER strategy, public literature: Morton order).
 
 All expressions are integer Column arithmetic (shifts/masks — inside
-whole-stage codegen, DuckDB-reproducible for the oracles); the write
-path is ``repartitionByRange`` on the z-value + an in-partition sort,
-i.e. one range shuffle for the whole layout.
+whole-stage codegen, DuckDB-reproducible for the oracles); a writer
+lays the rows out with ``repartitionByRange`` on the z-value + an
+in-partition sort, i.e. one range shuffle for the whole layout.
 """
 
 from __future__ import annotations
@@ -67,26 +67,4 @@ def zorder_keys(
     )
     return withb.withColumn("z", z).drop(
         "__alo", "__ahi", "__blo", "__bhi"
-    )
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    col_a: str,
-    col_b: str,
-    n_files: int = 32,
-    bits: int = 10,
-) -> None:
-    """Write parquet clustered by z-order of (col_a, col_b): one range
-    shuffle on z, in-partition sort, one file per range — so footer
-    min/max stats on BOTH columns become selective and point/range
-    predicates on either dimension skip most files."""
-    zed = zorder_keys(df, col_a, col_b, bits)
-    (
-        zed.repartitionByRange(n_files, "z")
-        .sortWithinPartitions("z")
-        .drop("z")
-        .write.mode("overwrite")
-        .parquet(path)
     )

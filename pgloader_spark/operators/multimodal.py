@@ -21,21 +21,17 @@ headers (PNG/GIF/JPEG dimensions — pure byte math, public format
 layout); PNG additionally gets a REAL pixel decode
 (``decode_png_gray``: stdlib zlib + the spec's five row filters, 8-bit
 gray/RGB/RGBA), which powers the perceptual-hash image-dedup pipeline
-(``ahash64`` -> ``media_ahash`` -> ``ahash_near_pairs``).  Anything
-else raises ``UnsupportedMediaError`` inside the batch and lands in
-the ``error`` column rather than killing the job (the
-validation-first philosophy of the sink layer).  ``fake_embedding``
-derives a deterministic float vector from content bytes — the
-stand-in for a real encoder forward pass (see ``register_encoder``
-for plugging a real one).
+(``ahash64`` -> ``media_ahash``).  Anything else raises
+``UnsupportedMediaError`` inside the batch and lands in the ``error``
+column rather than killing the job (the validation-first philosophy
+of the sink layer).
 """
 
 from __future__ import annotations
 
-import hashlib
 import os
 import struct
-from collections.abc import Callable, Iterator, Sequence
+from collections.abc import Iterator
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -126,103 +122,6 @@ def image_metadata(df: DataFrame, id_col: str = "doc_id", bin_col: str = "payloa
     return df.select(id_col, bin_col).mapInPandas(decode, MEDIA_META_SCHEMA)
 
 
-EMBED_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("embedding", T.ArrayType(T.FloatType())),
-    ]
-)
-
-
-def fake_embedding(data: bytes, dim: int = 16) -> list[float]:
-    """Deterministic stand-in for an encoder forward pass: md5-seeded
-    floats in [-1, 1). Same bytes -> same vector on every executor."""
-    out: list[float] = []
-    counter = 0
-    while len(out) < dim:
-        h = hashlib.md5(data + counter.to_bytes(4, "big")).digest()
-        for i in range(0, 16, 4):
-            v = int.from_bytes(h[i : i + 4], "big")
-            out.append((v / 2**31) - 1.0)
-            if len(out) == dim:
-                break
-        counter += 1
-    return out
-
-
-# --- pluggable encoder registry -------------------------------------------
-#
-# Mirrors functions/transforms.py's register_transform: the engine owns
-# batching / Arrow transfer / schema / partitioning, the USER owns the
-# bytes -> vector forward pass.  An encoder is `fn(data: bytes, dim: int)
-# -> sequence[float]`; it runs executor-side inside mapInPandas, so it
-# must be picklable (a module-level function, not a lambda closing over
-# live objects) and import its model lazily inside the call or via a
-# module-level cache — the standard Spark pattern for model inference.
-
-Encoder = Callable[[bytes, int], Sequence[float]]
-
-ENCODERS: dict[str, Encoder] = {}
-
-
-def register_encoder(name: str, fn: Encoder) -> None:
-    """Public extension hook: add a named media-embedding encoder.
-
-    User plugin files (``--load-py-file``, cli.py) call this the same
-    way they call ``register_transform``; afterwards
-    ``embed_media(df, encoder="my-model")`` routes every Arrow batch
-    through ``fn``.  Both dash and underscore spellings register.
-    """
-    for n in (name, name.replace("-", "_")):
-        ENCODERS[n.strip().lower()] = fn
-
-
-def get_encoder(name: str) -> Encoder:
-    key = name.strip().lower()
-    if key not in ENCODERS:
-        raise KeyError(
-            f"unknown media encoder: {name!r} (registered: {sorted(ENCODERS)})"
-        )
-    return ENCODERS[key]
-
-
-register_encoder("fake", fake_embedding)  # deterministic default/test double
-
-
-def embed_media(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    bin_col: str = "payload",
-    dim: int = 16,
-    encoder: str | Encoder = "fake",
-) -> DataFrame:
-    """Feature-extraction stage: binary in, float vector out.
-
-    ``encoder`` is a registry name (see :func:`register_encoder`) or a
-    callable ``(bytes, dim) -> sequence[float]``; the default "fake"
-    is the deterministic test double.  Batching, Arrow transfer,
-    output schema, and partitioning (narrow — no shuffle) are fixed
-    by the engine regardless of the encoder plugged in.
-    """
-    enc: Encoder = get_encoder(encoder) if isinstance(encoder, str) else encoder
-
-    def embed(batches: Iterator) -> Iterator:
-        import pandas as pd  # noqa: PLC0415
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "embedding": [
-                        list(map(float, enc(bytes(p) if p is not None else b"", dim)))
-                        for p in pdf[bin_col]
-                    ],
-                }
-            )
-
-    return ensure_parallelism(df.select(id_col, bin_col)).mapInPandas(embed, EMBED_SCHEMA)
-
-
 def frame_sample_plan(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -244,60 +143,6 @@ def frame_sample_plan(
             )
         ).alias("frame_ix"),
     )
-
-
-AUDIO_META_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("mime", T.StringType()),
-        T.StructField("sample_rate", T.IntegerType()),
-        T.StructField("n_channels", T.IntegerType()),
-        T.StructField("duration_ms", T.LongType()),
-        T.StructField("error", T.StringType()),
-    ]
-)
-
-
-def decode_audio_meta(data: bytes) -> tuple[str, int, int, int]:
-    """(mime, sample_rate, n_channels, duration_ms) from a canonical
-    44-byte-header RIFF/WAVE file — pure struct math on the public
-    layout (fmt chunk at 12, data chunk at 36)."""
-    mime = sniff_mime(data)
-    if mime != "audio/wav":
-        raise UnsupportedMediaError(f"no stub decoder for {mime}")
-    n_channels, sample_rate = struct.unpack_from("<HI", data, 22)
-    byte_rate = struct.unpack_from("<I", data, 28)[0]
-    data_size = struct.unpack_from("<I", data, 40)[0]
-    if byte_rate <= 0:
-        raise UnsupportedMediaError("zero byte rate")
-    return mime, sample_rate, n_channels, data_size * 1000 // byte_rate
-
-
-def audio_metadata(
-    df: DataFrame, id_col: str = "doc_id", bin_col: str = "payload"
-) -> DataFrame:
-    """mapInPandas WAV-decode stage — same narrow Arrow-batched shape
-    as ``image_metadata``."""
-
-    def decode(batches: Iterator) -> Iterator:
-        import pandas as pd  # noqa: PLC0415 — executor-side import
-
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf[bin_col]):
-                data = bytes(payload) if payload is not None else b""
-                try:
-                    mime, sr, ch, dur = decode_audio_meta(data)
-                    rows.append((doc_id, mime, sr, ch, dur, None))
-                except (UnsupportedMediaError, struct.error) as exc:
-                    rows.append(
-                        (doc_id, sniff_mime(data), None, None, None, str(exc))
-                    )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in AUDIO_META_SCHEMA.fields]
-            )
-
-    return df.select(id_col, bin_col).mapInPandas(decode, AUDIO_META_SCHEMA)
 
 
 def png_payload(width_col, height_col):
@@ -569,56 +414,6 @@ def media_ahash(
     return ensure_parallelism(df.select(id_col, bin_col)).mapInPandas(stage, AHASH_SCHEMA)
 
 
-def ahash_near_pairs(
-    hashes: DataFrame, max_hamming: int = 3, id_col: str = "doc_id"
-) -> DataFrame:
-    """Image near-duplicate candidate pairs: split each 64-bit aHash
-    into 4 x 16-bit bands and bucket-join — by pigeonhole, any pair
-    within Hamming distance 3 shares at least one intact band, so the
-    banded join is EXACT for the <=3 regime (same LSH-band mechanics
-    as MinHash text dedup, no all-pairs scan); candidates then verify
-    with a popcount filter.  Returns (id_a, id_b, hamming)."""
-    h = hashes.filter(F.col("ahash").isNotNull()).select(
-        F.col(id_col).alias("id"), F.col("ahash")
-    )
-    bands = h.select(
-        "id",
-        "ahash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band_ix"),
-                        F.shiftright(F.col("ahash"), 16 * i)
-                        .bitwiseAND(F.lit(0xFFFF))
-                        .alias("bucket"),
-                    )
-                    for i in range(4)
-                ]
-            )
-        ).alias("b"),
-    ).select("id", "ahash", F.col("b.band_ix"), F.col("b.bucket"))
-    a, b = bands.alias("a"), bands.alias("b")
-    ham = F.bit_count(
-        F.col("a.ahash").bitwiseXOR(F.col("b.ahash"))
-    ).cast("int")
-    return (
-        a.join(
-            b,
-            (F.col("a.band_ix") == F.col("b.band_ix"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            ham.alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .distinct()
-    )
-
-
 # --- real WAV PCM decode + audio fingerprinting ---------------------------
 
 
@@ -827,7 +622,7 @@ def video_frames(
     2*every... (the standard keyframe-ish sampling).  Narrow
     mapInPandas; a corrupt container yields one error row, not a dead
     job.  Downstream, frames are ordinary image payloads for
-    image_metadata / media_ahash / embed_media."""
+    image_metadata / media_ahash."""
 
     def stage(batches: Iterator) -> Iterator:
         import pandas as pd  # noqa: PLC0415

@@ -98,12 +98,3 @@ def pack_greedy(
         return out[["doc_id", "shard", "bin_id", "bin_offset", "weight"]]
 
     return keyed.groupBy("shard").applyInPandas(pack, _OUT_SCHEMA)
-
-
-def bin_fill_stats(packed: DataFrame, budget: int) -> DataFrame:
-    """(shard, bin_id, n_docs, fill, utilization) — padding-waste audit."""
-    return packed.groupBy("shard", "bin_id").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("weight").alias("fill"),
-        F.round(F.sum("weight") / F.lit(float(budget)), 6).alias("utilization"),
-    )

@@ -120,7 +120,7 @@ def shuffle_shard_plan(
     corpus-wide sort and no driver state.
 
     ``shard_partitions``: when a writer will immediately repartition
-    the plan on the shard column anyway (export_shuffled), pass the
+    the plan on the shard column anyway (a sharded export), pass the
     target partition count here — the explicit repartition happens
     BEFORE the window, whose required clustering it already
     satisfies, so the corpus shuffles ONCE instead of window-then-

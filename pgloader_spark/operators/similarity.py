@@ -1,9 +1,9 @@
 """Similarity search over an embedding column (array<float>).
 
-- ``cosine_topk``: brute-force exact top-k — the correctness baseline.
-  The query set is broadcast (it is small by construction); the corpus
-  streams through one narrow stage, so it scales linearly with corpus
-  size and never shuffles the corpus.
+- ``cosine_topk_blas``: brute-force exact top-k — the correctness
+  baseline.  The query set is broadcast (it is small by construction);
+  the corpus streams through one narrow stage, so it scales linearly
+  with corpus size and never shuffles the corpus.
 - ``lsh_buckets`` / ``lsh_topk``: random-hyperplane LSH — the scale
   path.  Bucketing is a narrow projection; search touches only
   matching buckets, cutting the scanned corpus by ~2^n_planes.
@@ -28,8 +28,6 @@ from pyspark.sql.window import Window
 
 from pgloader_spark.session import ensure_parallelism as _floor_parallelism
 
-from pgloader_spark.operators.dedup import md5_hash64
-
 
 # ADC query paths (pq_topk / ivfpq_topk[_encoded]) collect the query
 # side to build distance lookup tables — LUTs depend on query VALUES,
@@ -38,9 +36,8 @@ from pgloader_spark.operators.dedup import md5_hash64
 # streamed chunk-by-chunk through toLocalIterator (driver holds one
 # chunk of LUTs at a time) and the per-chunk top-k frames union —
 # bit-identical to unchunked, because each query's ranking is
-# independent (the rank window partitions by q_id).  For UNBOUNDED
-# query streams use streaming_ivfpq_scorer, which feeds micro-batches
-# through this same path.  The reference's analogous rule: never
+# independent (the rank window partitions by q_id).  The reference's
+# analogous rule: never
 # materialize more than one batch (src/pg-copy/copy-batch.lisp:11-34).
 QUERY_BATCH_CAP = 10_000
 
@@ -115,60 +112,6 @@ def dot(a: Column, b: Column) -> Column:
         F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
         F.lit(0.0),
         lambda acc, v: acc + v,
-    )
-
-
-def norm2(a: Column) -> Column:
-    return dot(a, a)
-
-
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / F.sqrt(norm2(a) * norm2(b))
-
-
-def cosine_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int | None = None,
-) -> DataFrame:
-    """Exact top-k neighbors for each query vector (self-matches excluded).
-
-    queries is broadcast; ranking uses cosine rounded to 6 decimals
-    with the neighbor id as tiebreak, so results are stable across
-    engines and runs.
-    """
-    # Pre-cast to double and precompute norms once per vector — the
-    # per-pair work is then a single dot product instead of three.
-    _dot = dot
-    q = queries.select(
-        F.col(id_col).alias("q_id"),
-        F.col(vec_col).cast("array<double>").alias("q_vec"),
-    ).withColumn("q_n2", _dot(F.col("q_vec"), F.col("q_vec")))
-    c = corpus.select(
-        F.col(id_col).alias("n_id"),
-        F.col(vec_col).cast("array<double>").alias("n_vec"),
-    ).withColumn("n_n2", _dot(F.col("n_vec"), F.col("n_vec")))
-    scored = (
-        c.crossJoin(F.broadcast(q))
-        .filter(F.col("n_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            "n_id",
-            F.round(
-                _dot(F.col("q_vec"), F.col("n_vec"))
-                / F.sqrt(F.col("q_n2") * F.col("n_n2")),
-                6,
-            ).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos_sim"), F.asc("n_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "n_id", "cos_sim", "rank")
     )
 
 
@@ -462,11 +405,12 @@ def cosine_topk_blas(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Exact top-k neighbors, BLAS kernel — same results as
-    ``cosine_topk``, built for the corpus-at-scale side.
+    """Exact top-k neighbors for each query vector (self-matches
+    excluded), BLAS kernel, built for the corpus-at-scale side.
 
-    The fold-expression path pays ~60 us per (query, corpus) pair
-    (SQL higher-order functions are interpreted, never codegen'd);
+    A fold-expression path (``dot`` per pair) pays ~60 us per
+    (query, corpus) pair (SQL higher-order functions are interpreted,
+    never codegen'd);
     at Q queries x 1B corpus rows that is unrunnable.  Here the
     bounded query set (the operator's contract — it is collected and
     broadcast as one Q x dim float64 matrix) scores each Arrow batch
@@ -1134,8 +1078,7 @@ def ivfpq_topk_encoded(
     output: id, cell, codes) — the deployment split: the index is
     encoded once (and at 100 TB written out partitioned by ``cell``),
     then every query batch pays only LUT construction + the
-    cell-pruned broadcast join.  ``streaming_ivfpq_scorer`` feeds
-    arriving micro-batches through this same path.
+    cell-pruned broadcast join.
 
     Query frames larger than ``query_batch_cap`` stream through the
     same plan in chunks (results identical — per-query rankings are
@@ -1202,49 +1145,3 @@ def ivfpq_topk_encoded(
         for rows in _query_chunks(queries, id_col, vec_col, query_batch_cap)
     ]
     return _union_chunked(parts) if parts else run_chunk([])
-
-
-def streaming_ivfpq_scorer(
-    corpus: DataFrame,
-    coarse: list,
-    codebooks: list,
-    sink,
-    k: int = 10,
-    n_probe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_batch_cap: int = QUERY_BATCH_CAP,
-):
-    """Continuous ANN retrieval over a FROZEN IVF-PQ index: returns a
-    ``foreachBatch`` function that scores each arriving micro-batch of
-    query vectors against the static corpus and hands the ranked
-    (q_id, n_id, adist, rank) frame to ``sink(result_df, epoch_id)``.
-
-    The deployment split this encodes: the corpus is PQ-encoded ONCE
-    (cached here; at 100 TB, written out partitioned by ``cell`` so a
-    probe prunes to n_probe cells' files) and every batch pays only
-    its own LUT construction (driver-bounded numpy over batch-size x
-    n_probe rows) plus the cell-pruned broadcast join of
-    ``ivfpq_topk_encoded``.  foreachBatch is the honest Structured
-    Streaming shape for this operator — LUTs depend on each batch's
-    query VALUES, which no stream-static join expression can compute;
-    the per-batch plan is identical to the batch path, so everything
-    the batch tests prove (parity, pruning, tie-breaks) holds per
-    micro-batch.  Exactly-once delivery is the sink's contract via
-    ``epoch_id`` (e.g. ``streaming/pg_sink.py``'s epoch log).
-
-    Usage::
-
-        process = streaming_ivfpq_scorer(corpus, coarse, cbs, sink)
-        stream.writeStream.foreachBatch(process).start()
-    """
-    enc = ivfpq_encode(corpus, coarse, codebooks, id_col, vec_col).cache()
-
-    def process(batch_df: DataFrame, epoch_id: int) -> None:
-        out = ivfpq_topk_encoded(
-            enc, batch_df, coarse, codebooks, k, n_probe, id_col, vec_col,
-            query_batch_cap,
-        )
-        sink(out, epoch_id)
-
-    return process

@@ -3,11 +3,14 @@
 Re-expresses ``src/sources/mssql/mssql-index-filters.lisp:9-185``: a
 small predicate grammar — comparisons (``= < > <= >= <>``), ``IS
 NULL`` / ``IS NOT NULL``, ``IN (...)``, ``BETWEEN``, ``AND`` / ``OR``,
-bracketed identifiers ``[col]``, parenthesized groups, numeric and
+bracketed ``[col]`` and double-quoted ``"col"`` identifiers (SQLite
+writes the latter), parenthesized groups, numeric literals (a unary
+minus included) and
 ``N'...'``/``'...'`` string literals — translated token-wise to the PG
 spelling (identifiers double-quoted only when needed, N-strings
 unprefixed). ``execute_database`` runs it on each filtered index an
-MSSQL source reports, so the target index keeps its ``WHERE``.
+MSSQL source reports, and on each SQLite partial index's ``WHERE``,
+so the target index keeps its predicate.
 """
 
 from __future__ import annotations
@@ -23,7 +26,8 @@ _TOKEN = re.compile(
   | (?P<nstring>N'(?:[^']|'')*')
   | (?P<string>'(?:[^']|'')*')
   | (?P<bracket>\[[^\]]+\])
-  | (?P<number>\d+(?:\.\d+)?)
+  | (?P<quoted>"(?:[^"]|"")+")
+  | (?P<number>-?\d+(?:\.\d+)?)
   | (?P<op><=|>=|<>|!=|=|<|>|\(|\)|,)
   | (?P<word>[A-Za-z_][A-Za-z0-9_]*)
     """,
@@ -63,6 +67,8 @@ def translate_index_filter(
             out.append(tok)
         elif kind == "bracket":
             out.append(quote_ident(fold(tok[1:-1])))
+        elif kind == "quoted":
+            out.append(quote_ident(fold(tok[1:-1].replace('""', '"'))))
         elif kind == "op":
             out.append("<>" if tok == "!=" else tok)
         elif kind == "word":
@@ -82,6 +88,6 @@ def translate_index_filter(
         else:
             text += " " + tok
     # MSSQL wraps literals in parens: (1) — collapse single-literal groups
-    text = re.sub(r"\((\d+(?:\.\d+)?)\)", r"\1", text)
+    text = re.sub(r"\((-?\d+(?:\.\d+)?)\)", r"\1", text)
     text = re.sub(r"\(('(?:[^']|'')*')\)", r"\1", text)
     return text

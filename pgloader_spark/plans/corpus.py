@@ -1,37 +1,13 @@
-"""End-to-end corpus curation: the training-data pipeline as ONE
-orchestrated run, built from this repo's operators.
+"""Corpus snapshot audit: what moved between two curated snapshots.
 
-    raw shards (.jsonl[.gz] / parquet)
-      -> quality / language / sample gates        (narrow)
-      -> exact + near dedup WITHIN the batch       (digest window, LSH)
-      -> exact + near dedup AGAINST the previous   (semi-join probes of
-         snapshot's committed index                 the committed index)
-      -> curated parquet (+ optional .jsonl.gz export)
-      -> REFRESHED index (digests + band buckets) for the next run
-
-The index round-trip is the production contract: run N writes the
-digest/band tables that run N+1 probes, so each increment costs the
-new batch's signatures plus two semi joins — never a rescan of the
-accumulated corpus.  Every stage is an operator tested elsewhere
-(streaming/stateful.py gates, operators/dedup.py probes/bands); this
-module only sequences them and reports per-stage survivor counts.
+``snapshot_diff`` is the per-document delta report an incremental
+curation run publishes next to its output.
 """
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def _read_docs(spark: SparkSession, src: str) -> DataFrame:
-    if src.endswith(".parquet") or os.path.isdir(src):
-        try:
-            return spark.read.parquet(src)
-        except Exception:
-            pass
-    return spark.read.json(src)
 
 
 def snapshot_diff(
@@ -64,95 +40,3 @@ def snapshot_diff(
     return o.join(n, id_col, "full_outer").select(
         id_col, status.alias("status")
     )
-
-
-def curate_corpus(
-    spark: SparkSession,
-    src: str,
-    out_dir: str,
-    snapshot_dir: str | None = None,
-    lang: str = "en",
-    sample_frac: float = 1.0,
-    export_jsonl: bool = False,
-) -> dict:
-    """Run the curation pipeline; returns per-stage counts.
-
-    ``snapshot_dir``: a previous run's ``out_dir`` — its committed
-    ``index_digests``/``index_bands`` parquet tables are probed so
-    documents already kept by ANY earlier run are dropped (exact or
-    near duplicate).  ``out_dir`` receives ``curated`` parquet, the
-    refreshed index tables (this batch's survivors ONLY — append them
-    to the snapshot's on a rolling basis, or union at probe time), and
-    optionally a sharded ``.jsonl.gz`` export.
-    """
-    from pgloader_spark.operators.dedup import (
-        band_buckets_expr,
-        exact_duplicates,
-        minhash_bands,
-    )
-    from pgloader_spark.streaming.stateful import streaming_curation_funnel
-
-    docs = _read_docs(spark, src)
-    n_raw = docs.count()
-
-    had_ts = "ts" in docs.columns
-    if not had_ts:
-        docs = docs.withColumn("ts", F.current_timestamp())
-    gated = streaming_curation_funnel(docs, sample_frac=sample_frac, lang=lang)
-    keep_cols = [c for c in docs.columns if had_ts or c != "ts"]
-    gated = gated.select(*keep_cols)
-    n_gated = gated.count()
-
-    if snapshot_dir:
-        digests = spark.read.parquet(os.path.join(snapshot_dir, "index_digests"))
-        bands = spark.read.parquet(os.path.join(snapshot_dir, "index_bands"))
-        # probe the committed index directly (incremental_dedup's exact
-        # shape, but against the stored tables instead of recomputing
-        # the old side): exact via digest semi join, near via band join
-        ex_ids = (
-            gated.select("doc_id", F.md5("text").alias("content_md5"))
-            .join(digests.select("content_md5"), "content_md5", "left_semi")
-            .select("doc_id")
-        )
-        near_ids = (
-            gated.select(
-                "doc_id", F.explode(band_buckets_expr("text")).alias("b")
-            )
-            .select("doc_id", F.col("b.band_ix").alias("band_ix"),
-                    F.col("b.bucket").alias("bucket"))
-            .join(bands.select("band_ix", "bucket"), ["band_ix", "bucket"],
-                  "left_semi")
-            .select("doc_id")
-            .distinct()
-        )
-        dup_ids = ex_ids.unionByName(near_ids).distinct()
-        survivors = gated.join(dup_ids, "doc_id", "left_anti")
-    else:
-        survivors = gated
-    n_curated = survivors.count()
-
-    curated_path = os.path.join(out_dir, "curated")
-    survivors.write.mode("overwrite").parquet(curated_path)
-    curated = spark.read.parquet(curated_path)
-
-    # refreshed index: THIS batch's survivors (callers roll it up with
-    # prior snapshots; keeping per-run indexes append-only is what a
-    # petabyte pipeline wants anyway)
-    exact_duplicates(curated).select("content_md5").write.mode(
-        "overwrite"
-    ).parquet(os.path.join(out_dir, "index_digests"))
-    minhash_bands(curated).select("band_ix", "bucket").distinct().write.mode(
-        "overwrite"
-    ).parquet(os.path.join(out_dir, "index_bands"))
-
-    if export_jsonl:
-        from pgloader_spark.sinks.writers import write_jsonl
-
-        write_jsonl(curated, os.path.join(out_dir, "export"), n_shards=4)
-
-    return {
-        "raw": n_raw,
-        "gated": n_gated,
-        "curated": n_curated,
-        "out": curated_path,
-    }

@@ -1,5 +1,5 @@
-"""Target-side DDL completion: enum types, triggers, CHECK constraints,
-comments, and the DISABLE/ENABLE TRIGGER load wrapper.
+"""Target-side DDL completion: enum types, triggers, CHECK constraints
+and comments.
 
 Re-expresses the reference's remaining schema-emission paths:
 
@@ -16,8 +16,6 @@ Re-expresses the reference's remaining schema-emission paths:
 - CHECK constraints (``src/pgsql/pgsql-create-schema.lisp:396-414``).
 - COMMENT ON table/column with dollar-quoting
   (``src/pgsql/pgsql-create-schema.lisp:596-636``).
-- DISABLE/ENABLE TRIGGER ALL wrapper around a table load
-  (``src/pgsql/pgsql-create-schema.lisp:321-345``).
 
 Everything emits SQL text lists (the JDBC-runner contract used by
 ``plans/orchestrate.py``) so it is unit-testable without a live
@@ -303,33 +301,6 @@ def create_trigger_statements(catalog: Catalog) -> list[str]:
 # --------------------------------------------------------------------------
 # DISABLE / ENABLE TRIGGER load wrapper
 # --------------------------------------------------------------------------
-
-
-def disable_triggers_sql(table_name: str) -> str:
-    """pgsql-create-schema.lisp:321-326."""
-    return f"ALTER TABLE {quote_ident(table_name)} DISABLE TRIGGER ALL;"
-
-
-def enable_triggers_sql(table_name: str) -> str:
-    """pgsql-create-schema.lisp:328-333."""
-    return f"ALTER TABLE {quote_ident(table_name)} ENABLE TRIGGER ALL;"
-
-
-def with_disabled_triggers(
-    table_name: str, statements: list[str], disable: bool = True
-) -> list[str]:
-    """Bracket a table's load statements with DISABLE/ENABLE TRIGGER
-    when requested (``with-disabled-triggers``,
-    pgsql-create-schema.lisp:335-347).  The ENABLE is uncondition-
-    ally appended (the reference uses unwind-protect) so a failed
-    batch cannot leave triggers off."""
-    if not disable:
-        return list(statements)
-    return [
-        disable_triggers_sql(table_name),
-        *statements,
-        enable_triggers_sql(table_name),
-    ]
 
 
 # --------------------------------------------------------------------------

@@ -557,7 +557,7 @@ def _indexes_dropped(dsn: str, tables: list[str], root_dir: str):
             # duplicate-tolerant (run_post_load skips existing objects),
             # so a partial load never leaves the target without keys
             errors: list[str] = []
-            run_post_load(dsn, stmts, transactional=False, errors=errors)
+            run_post_load(dsn, stmts, errors=errors)
             for err in errors:
                 log.warning("index rebuild: %s", err)
             with contextlib.suppress(OSError):
@@ -916,7 +916,6 @@ def execute_database(ctx: ExecutionContext, cmd: LoadCommand) -> list[LoadReport
         post = post_load_statements(
             cat,
             create_indexes=create_indexes,
-            plain_indexes=False,  # built above, in parallel
             foreign_keys=not cmd.options.get("no_foreign_keys"),
             reset_sequences=not (
                 cmd.options.get("reset_no_sequences")
@@ -924,9 +923,7 @@ def execute_database(ctx: ExecutionContext, cmd: LoadCommand) -> list[LoadReport
             ),
         )
         if post:
-            run_post_load(
-                target, post, transactional=False, errors=post_errors
-            )
+            run_post_load(target, post, errors=post_errors)
         for err in post_errors:
             log.warning("post-load: %s", err)
 
@@ -1070,16 +1067,3 @@ def execute(ctx: ExecutionContext, cmd: LoadCommand) -> LoadReport:
     _run_sql(ctx.sql_runner, cmd, "after")
     report.seconds = time.perf_counter() - t0
     return report
-
-
-def run_command_text(
-    spark: SparkSession, text: str, root_dir: str | None = None, sql_runner=None
-) -> LoadReport:
-    from pgloader_spark.parsers.loadcmd import parse_load
-
-    ctx = ExecutionContext(
-        spark=spark,
-        root_dir=root_dir or os.path.join("/tmp", "pgloader_spark"),
-        sql_runner=sql_runner,
-    )
-    return execute(ctx, parse_load(text))

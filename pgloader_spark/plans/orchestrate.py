@@ -107,26 +107,19 @@ def run_post_load(
     statements: list[str],
     max_retries: int = 5,
     retry_sleep: float = 2.0,
-    transactional: bool = True,
-    errors: list[str] | None = None,
+    *,
+    errors: list[str],
 ) -> int:
-    """Run the complete-phase DDL with reconnect-and-retry on
+    """Run the complete-phase DDL with reconnect-and-resume on
     connection loss (``complete-pgsql-database``'s
     ``postgresql-unavailable`` handler,
     ``src/load/migrate-database.lisp:227-250``).
 
-    ``transactional=True`` (the reference's shape): the statements run
-    in ONE transaction, so a dropped connection — common during long
-    index builds on flaky links — implies nothing was committed; after
+    Each statement autocommits.  On connection loss the retry waits
     the reference's 2-second grace (ECONNREFUSED if we reconnect too
-    soon, its comment verbatim) the whole list re-runs on a fresh
-    connection.  Non-connection SQL errors propagate (the handler-case
-    catches only unavailability).
-
-    ``transactional=False`` (the migration executor's shape): each
-    statement autocommits; on connection loss the retry RESUMES from
-    the failed statement (committed DDL never re-runs, so no
-    idempotency demands), and ordinary SQL errors are collected into
+    soon, its comment verbatim) and RESUMES from the failed statement
+    on a fresh connection: committed DDL never re-runs, so no
+    idempotency demands.  Ordinary SQL errors are collected into
     ``errors`` and skipped — the reference's per-statement
     log-and-continue (``pgsql-execute-with-timing``), so one
     unbuildable index cannot abort a finished data load.
@@ -144,12 +137,6 @@ def run_post_load(
             time.sleep(retry_sleep)
         try:
             with PGConn(dsn) as conn:
-                if transactional:
-                    conn.query("BEGIN")
-                    for stmt in statements:
-                        conn.query(stmt)
-                    conn.query("COMMIT")
-                    return len(statements)
                 while pos < len(statements):
                     try:
                         conn.query(statements[pos])
@@ -165,7 +152,7 @@ def run_post_load(
                             # dropped — at-least-once + duplicate-
                             # tolerant = converged
                             n_ok += 1
-                        elif errors is not None:
+                        else:
                             errors.append(f"{statements[pos]} -- {exc}")
                     pos += 1
                 return n_ok
@@ -173,10 +160,9 @@ def run_post_load(
             if not _is_connection_loss(exc):
                 raise
             last = exc
-            # non-transactional: pos is NOT advanced — the in-flight
-            # statement re-runs on the fresh connection, and if it had
-            # actually committed the duplicate-object branch above
-            # counts it done
+            # pos is NOT advanced — the in-flight statement re-runs on
+            # the fresh connection, and if it had actually committed
+            # the duplicate-object branch above counts it done
     raise RuntimeError(
         f"post-load DDL failed after {max_retries} reconnect attempts: {last}"
     )
@@ -200,7 +186,8 @@ def run_parallel_indexes(
     dsn: str,
     statements: list[str],
     workers: int | None = None,
-    errors: list[str] | None = None,
+    *,
+    errors: list[str],
 ) -> int:
     """CREATE INDEX across WORKERS concurrent connections — the
     reference's idx-kernel (``migrate-database.lisp:414-423``: kernel
@@ -213,13 +200,10 @@ def run_parallel_indexes(
     if not statements:
         return 0
     workers = workers or min(len(statements), 8)
-    shared: list[str] = [] if errors is None else errors
     n_ok = 0
     with ThreadPoolExecutor(max_workers=max(1, workers)) as pool:
         futs = [
-            pool.submit(
-                run_post_load, dsn, [stmt], transactional=False, errors=shared
-            )
+            pool.submit(run_post_load, dsn, [stmt], errors=errors)
             for stmt in statements
         ]
         for f in as_completed(futs):
@@ -232,17 +216,17 @@ def post_load_statements(
     create_indexes: bool = True,
     foreign_keys: bool = True,
     reset_sequences: bool = True,
-    plain_indexes: bool = True,
 ) -> list[str]:
     """The complete-phase DDL in dependency order
     (``complete-pgsql-database``, ``migrate-database.lisp:153-226``):
-    indexes, unique-index -> PRIMARY KEY promotion, FKs (which need
-    the PKs/unique indexes on the referenced side), sequence resets
+    unique-index -> PRIMARY KEY promotion, FKs (which need the
+    PKs/unique indexes on the referenced side), sequence resets
     (max() benefits from the fresh indexes), CHECK constraints,
     triggers + procedures, comments last — emitted as SQL for the
-    JDBC runner.  The three booleans mirror the reference's WITH
-    flags (create no indexes / no foreign keys / reset no
-    sequences)."""
+    JDBC runner.  Plain indexes are not in the list: they build
+    first, in parallel, from :func:`plain_index_statements`.  The
+    three booleans mirror the reference's WITH flags (create no
+    indexes / no foreign keys / reset no sequences)."""
     from pgloader_spark.plans.ddl import (
         check_constraint_statements,
         comment_statements,
@@ -264,8 +248,6 @@ def post_load_statements(
                         stmts.append(
                             f"ALTER TABLE {qt} ADD PRIMARY KEY ({cols});"
                         )
-                    elif plain_indexes:
-                        stmts.append(idx.to_ddl(schema.name if schema.name != "public" else None))
     if foreign_keys:
         for schema in catalog.schemas:
             for t in schema.tables:

@@ -8,9 +8,7 @@ upgrades that to content-addressed, two-sided proof: the source
 DataFrame and the loaded PostgreSQL table each reduce to (row count,
 distinct keys, order-independent checksum) via ``operators/audit.py``,
 and equality of two tiny frames certifies the load moved every key
-exactly once.  When the table-level checksums disagree,
-``locate_mismatched_buckets`` narrows the diff to 1/n_buckets of the
-keys without sorting or collecting either side.
+exactly once.
 
 The target side reads back through the distributed ctid-range COPY
 reader (``sources/pg_live.read_pg_table``) — the verification itself
@@ -111,7 +109,7 @@ def verify_replication(
 ) -> DataFrame:
     """Cross-DATABASE verification: two live PostgreSQL tables compared
     on (rows, distinct keys, portable checksum) — the replication
-    invariant for the CDC path (``sources/pg_cdc.replicate_pg_table``):
+    invariant for the CDC path (``sources/pg_cdc.replicate_pg_tables``):
     after draining the slot, source and target must match.  Both sides
     read through the distributed ctid-range COPY reader, key columns
     only; quiescence is the caller's contract (verify between drain
@@ -145,47 +143,6 @@ def verify_parquet_lake(
         )
         parts.append(_compare(src, tgt))
     return reduce(DataFrame.unionByName, parts)
-
-
-def locate_mismatched_buckets(
-    spark: SparkSession,
-    source_df: DataFrame,
-    target_dsn: str,
-    target_table: str,
-    key_cols: list[str],
-    n_buckets: int = 256,
-) -> DataFrame:
-    """Bucket-level drill-down for a failed ``verify_table``: returns
-    only the buckets whose (count, checksum) disagree, with both
-    sides' numbers.  Buckets derive from the same portable hash on
-    both sides, so membership agrees by construction; a missing bucket
-    on one side reports with zeros."""
-    from pgloader_spark.sources.pg_live import read_pg_table
-
-    tgt_df = read_pg_table(spark, target_dsn, target_table, columns=key_cols)
-    src = audit.bucket_checksums(
-        source_df.select(*key_cols), target_table, key_cols, n_buckets
-    ).select(
-        "bucket",
-        F.col("n_rows").alias("src_rows"),
-        F.col("key_checksum").alias("src_checksum"),
-    )
-    tgt = audit.bucket_checksums(tgt_df, target_table, key_cols, n_buckets).select(
-        "bucket",
-        F.col("n_rows").alias("tgt_rows"),
-        F.col("key_checksum").alias("tgt_checksum"),
-    )
-    joined = src.join(tgt, "bucket", "full_outer").select(
-        "bucket",
-        F.coalesce("src_rows", F.lit(0)).alias("src_rows"),
-        F.coalesce("tgt_rows", F.lit(0)).alias("tgt_rows"),
-        F.coalesce("src_checksum", F.lit(0)).alias("src_checksum"),
-        F.coalesce("tgt_checksum", F.lit(0)).alias("tgt_checksum"),
-    )
-    return joined.filter(
-        (F.col("src_rows") != F.col("tgt_rows"))
-        | (F.col("src_checksum") != F.col("tgt_checksum"))
-    )
 
 
 def pk_columns(table) -> list[str]:

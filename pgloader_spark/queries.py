@@ -778,8 +778,8 @@ sh AS (
 
 
 def _duck_minhash_sig_cte() -> str:
-    """Shingle-explode + universal-hash signature CTEs (mirrors
-    dedup.minhash_signature_df)."""
+    """Shingle-explode + universal-hash signature CTEs (the minhash
+    signature ``dedup.band_buckets_expr`` computes per row)."""
     fam = dedup.hash_family(dedup.N_MINHASH)
     sig_exprs = ",\n       ".join(
         f"MIN((h * {a} + {b}) % {dedup.MERSENNE_P}) AS s{i}"
@@ -923,10 +923,9 @@ def dedup_token_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     same clusters/min-labels as the raw-document run (see
     ``dedup.token_jaccard_clusters``), with the pair stage quadratic
     in DISTINCT near-dup sets rather than duplicate-group size.  The
-    registered output is CLUSTER-sized, never pair-sized; the raw
-    pair list stays available as the tunable discovery API
-    ``dedup.token_jaccard_pairs``, unit- and oracle-pinned via
-    dedup_shingle_jaccard which shares the kernel."""
+    registered output is CLUSTER-sized, never pair-sized; the pair
+    kernel is oracle-pinned via dedup_shingle_jaccard, which shares
+    it."""
     docs = read_table(spark, sf_dir, "documents", widen=True)
     return dedup.token_jaccard_clusters(docs, threshold=0.8)
 
@@ -1092,8 +1091,7 @@ def similarity_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     set rides a broadcast as one Q x dim matrix; each Arrow batch of
     the corpus is scored with a single matmul and pre-pruned to its
     batch-local top-k, so the rank shuffle never carries the corpus
-    (similarity.cosine_topk_blas; the Column-fold variant
-    ``cosine_topk`` remains for un-collectable query sides)."""
+    (similarity.cosine_topk_blas)."""
     emb = read_table(spark, sf_dir, "embeddings", widen=True)
     queries_df = emb.filter(F.col("vec_id") % 50 == 0)
     return similarity.cosine_topk_blas(emb, queries_df, k=10)
@@ -1436,8 +1434,7 @@ def multimodal_image_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     group-by on the fingerprint — the canonical-election shape whose
     output is cluster-sized, never pair-sized (a corpus where every
     image has 10^3 copies emits 10^3-row clusters, not 10^6-row pair
-    lists; the banded-Hamming pair generator ``ahash_near_pairs``
-    stays for tunable near-dup discovery and is pinned by unit test).
+    lists).
     Oracle: the planted ground truth — one cluster per pattern
     (operators/multimodal.py:decode_png_gray/ahash64/media_ahash)."""
     import pandas as pd  # noqa: F401 — executor-side

@@ -182,8 +182,7 @@ def export_shuffle_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     independent permutation.  Pure hash functions of the id (no RNG
     state, no zipWithIndex): one shuffle on shard + a per-shard
     window, n_shards scales with corpus so each numbering task stays
-    file-sized (operators/sampling.py:shuffle_shard_plan;
-    sinks/writers.py:export_shuffled is the writer)."""
+    file-sized (operators/sampling.py:shuffle_shard_plan)."""
     from pgloader_spark.operators.sampling import shuffle_shard_plan
 
     docs = read_table(spark, sf_dir, "documents").select("doc_id")
@@ -1453,9 +1452,9 @@ def layout_zorder_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     multi-dimensional layout key behind Delta/Iceberg OPTIMIZE ZORDER:
     rows close in BOTH dimensions share a z prefix, so a range-
     partitioned write by z gives parquet footer stats that prune scans
-    on either column (operators/layout.py; write path
-    ``write_zordered``).  Bounds are a 1-row broadcast aggregate; the
-    interleave is a constant-folded shift/mask chain, fully narrow."""
+    on either column (operators/layout.py).  Bounds are a 1-row
+    broadcast aggregate; the interleave is a constant-folded
+    shift/mask chain, fully narrow."""
     from pgloader_spark.operators.layout import zorder_keys
 
     ev = read_table(spark, sf_dir, "events")
@@ -3199,7 +3198,7 @@ def similarity_pq_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Measurement tool: recall@10 of the PQ ADC ranking against the
     exact L2 top-10 truth, per query — the number an ANN deployment
     tunes (m, ks) against.  Runs BOTH paths by design; the exact arm
-    is the same broadcast-query brute force as cosine_topk, on L2."""
+    is the same broadcast-query brute force as cosine_topk_blas, on L2."""
     from pgloader_spark.operators.similarity import dot, pq_topk, pq_train
 
     emb = read_table(spark, sf_dir, "embeddings", widen=True)

@@ -1,26 +1,16 @@
-"""CSV source: options-complete reader + separator/quote guessing.
+"""CSV source: the options-complete reader.
 
 Re-expresses pgloader's CSV source (``src/sources/csv/csv.lisp:84-128``
 — separator / quote / escape / escape-mode / trim / skip-lines /
-header / empty-string->nil) as ``spark.read.csv`` options, and the
-parameter-guessing pass (``src/sources/csv/csv-guess.lisp:57-80``:
-sample lines, try separators × quotes, keep the first combination that
-parses consistently) as a driver-side sample over ``spark.read.text``.
+header / empty-string->nil) as ``spark.read.csv`` options.
 """
 
 from __future__ import annotations
 
-import csv as _csv
-import io
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-# the separators the reference tries, in order (csv-guess.lisp:57)
-GUESS_SEPARATORS = ["\t", ",", ";", "|", "%", "^", "!", "$"]
-GUESS_QUOTES = ['"', "'"]
-GUESS_SAMPLE_LINES = 1000
 
 
 @dataclass
@@ -122,45 +112,6 @@ def read_csv(spark: SparkSession, path: str, opts: CsvOptions) -> DataFrame:
     if opts.fields:
         df = df.toDF(*opts.fields)
     return df
-
-
-def guess_csv_params(spark: SparkSession, path: str) -> CsvOptions:
-    """Sample lines, try separator × quote combos, keep the first that
-    yields a consistent column count > 1 (csv-guess.lisp:57-80)."""
-    sample_rows = spark.read.text(path).limit(GUESS_SAMPLE_LINES).collect()
-    lines = [r[0] for r in sample_rows if r[0]]
-    best: CsvOptions | None = None
-    for sep in GUESS_SEPARATORS:
-        for quote in GUESS_QUOTES:
-            counts = set()
-            ok = True
-            for ln in lines:
-                try:
-                    parsed = next(
-                        _csv.reader(io.StringIO(ln), delimiter=sep, quotechar=quote)
-                    )
-                except (StopIteration, _csv.Error):
-                    ok = False
-                    break
-                counts.add(len(parsed))
-            if ok and len(counts) == 1 and counts.pop() > 1:
-                best = CsvOptions(separator=sep, quote=quote)
-                break
-        if best:
-            break
-    if best is None:
-        best = CsvOptions()  # reference falls back to defaults
-    return best
-
-
-def header_fields(spark: SparkSession, path: str, opts: CsvOptions) -> list[str]:
-    """Parse the first line as field names (csv.lisp:60-82)."""
-    first = spark.read.text(path).limit(1).collect()
-    if not first:
-        return []
-    return next(
-        _csv.reader(io.StringIO(first[0][0]), delimiter=opts.separator, quotechar=opts.quote)
-    )
 
 
 def _parse_csv_records(data: str, opts: CsvOptions) -> list[list[tuple[str, bool]]]:

@@ -396,25 +396,6 @@ ORDER BY schema_name, o.name, i.name, ic.is_included_column, ic.key_ordinal
 """.strip()
 
 
-def mssql_sequences_sql() -> str:
-    """User-defined SEQUENCE objects (IDENTITY columns never appear in
-    sys.sequences) — list-all-sequences.sql."""
-    return """
-SELECT sc.name AS schema_name, s.name AS sequence_name,
-       tp.name AS data_type,
-       CAST(s.start_value AS BIGINT) AS start_value,
-       CAST(s.increment AS BIGINT) AS increment_by,
-       CAST(s.minimum_value AS BIGINT) AS minimum_value,
-       CAST(s.maximum_value AS BIGINT) AS maximum_value,
-       CAST(s.current_value AS BIGINT) AS current_value,
-       s.is_cycling, s.cache_size
-FROM sys.sequences s
-JOIN sys.schemas sc ON sc.schema_id = s.schema_id
-JOIN sys.types tp ON tp.user_type_id = s.user_type_id
-ORDER BY sc.name, s.name
-""".strip()
-
-
 def mssql_normalize_default(default: str | None) -> str | None:
     """Unwrap MSSQL's ((value)) / (value) default wrapping and map the
     common function defaults, matching the CASE ladder the reference
@@ -476,30 +457,6 @@ def fields_from_mssql_columns(rows) -> dict[tuple[str, str], list]:
         )
         out.setdefault((r["table_schema"], r["table_name"]), []).append(f)
     return out
-
-
-def catalog_from_mssql(column_rows, engine=None):
-    """Canned (or live) column resultsets -> a full target
-    Catalog: one Schema per source schema, cast rules applied per
-    column — the resolution step of ``LOAD DATABASE FROM mssql://``."""
-    from pgloader_spark.casting import CastEngine
-    from pgloader_spark.catalog import Catalog, Schema
-    from pgloader_spark.plans.ddl import table_from_fields
-
-    engine = engine or CastEngine("mssql")
-    cat = Catalog("mssql")
-    schemas: dict[str, Schema] = {}
-    for (schema_name, table_name), fields in fields_from_mssql_columns(
-        column_rows
-    ).items():
-        sch = schemas.get(schema_name)
-        if sch is None:
-            pg_name = "public" if schema_name == "dbo" else schema_name
-            sch = Schema(pg_name)
-            schemas[schema_name] = sch
-            cat.schemas.append(sch)
-        table_from_fields(table_name, fields, engine, sch)
-    return cat
 
 
 def fields_from_mysql_columns(rows) -> list:

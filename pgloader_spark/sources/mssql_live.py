@@ -62,9 +62,9 @@ def _dict_rows(cols: list[str], rows: list[tuple]) -> list[dict]:
 
 
 def introspect_mssql(dsn: str) -> dict[str, list[SourceField]]:
-    """table -> SourceField list (dbo schema tables keyed bare; other
-    schemas keyed ``schema.table`` — catalog_from_mssql maps dbo ->
-    public on the target)."""
+    """table -> SourceField list (dbo schema tables keyed bare, so
+    they land in the target's default schema; other schemas keyed
+    ``schema.table``)."""
     db = parse_ms_dsn(dsn)["database"]
     with MsConn(dsn) as conn:
         cols, rows = conn.query(mssql_columns_sql(db))

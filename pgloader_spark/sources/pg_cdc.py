@@ -6,7 +6,7 @@ stream instead (``test_decoding`` output plugin — in-core since 9.4)
 and feeds the collapsed change batches to ``apply_pg_cdc``, closing
 the loop into continuous PG->PG replication:
 
-  create_cdc_slot -> (writes happen) -> replicate_pg_table
+  (slot created) -> (writes happen) -> replicate_pg_tables
     = peek slot -> parse -> apply_pg_cdc(epoch_id=commit lsn)
       -> advance slot
 
@@ -25,24 +25,9 @@ APPLY side is the distributed staged-COPY transaction.  Requires
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
 from pgloader_spark.sources.pgwire import PGConn
-
-
-def create_cdc_slot(dsn: str, slot: str) -> str:
-    """Create a logical replication slot; returns its consistent LSN."""
-    with PGConn(dsn) as c:
-        _, rows = c.query(
-            "SELECT lsn FROM pg_create_logical_replication_slot("
-            f"'{slot}', 'test_decoding')"
-        )
-    return rows[0][0]
-
-
-def drop_cdc_slot(dsn: str, slot: str) -> None:
-    with PGConn(dsn) as c:
-        c.query(f"SELECT pg_drop_replication_slot('{slot}')")
 
 
 def lsn_to_int(lsn: str) -> int:
@@ -355,16 +340,16 @@ def _changes_to_rows(
     slot is live — test_decoding simply starts emitting it) raises
     cleanly BEFORE anything applies rather than silently projecting
     the new column away: the slot has not advanced, so after ALTER
-    TABLE ... ADD COLUMN on the target (or a bootstrap_replication
-    re-snapshot) the retry replays the same window and the per-table
-    epoch logs keep it exactly-once.  Silent loss is the one
+    TABLE ... ADD COLUMN on the target (or a re-snapshot) the retry
+    replays the same window and the per-table epoch logs keep it
+    exactly-once.  Silent loss is the one
     unacceptable outcome."""
     known = set(col_names)
     rows: list[tuple] = []
     seq = 0
     for c in mine:
         if c.get("truncate"):
-            # replicate_pg_table(s) split the window on truncates
+            # replicate_pg_tables splits the window on truncates
             # BEFORE building rows (r9: truncates replay via
             # apply_pg_cdc(truncate_first=True) in their own
             # epoch-logged sub-transactions); reaching this raise
@@ -374,7 +359,7 @@ def _changes_to_rows(
                 f"TRUNCATE of {', '.join(c['all_tables'])} in the "
                 "change stream reached _changes_to_rows: split the "
                 "window first (_split_on_truncate, as "
-                "replicate_pg_table does) — truncates cannot be "
+                "replicate_pg_tables does) — truncates cannot be "
                 "collapsed into the upsert row set"
             )
         extra = set(c["cols"]) - known if c.get("cols") else set()
@@ -385,7 +370,7 @@ def _changes_to_rows(
                 "table lacks — a source ALTER TABLE happened mid-stream.  "
                 "Add the column(s) on the target and re-run (the slot "
                 "window has not advanced; epoch logs keep the retry "
-                "exactly-once), or re-snapshot via bootstrap_replication"
+                "exactly-once), or re-snapshot the target"
             )
         if c.get("no_tuple_data"):
             if skip_unapplyable:
@@ -458,8 +443,7 @@ def _split_on_truncate(
                 "reached set (replicate_pg_tables replays in-set "
                 "cascades), or TRUNCATE the target table(s) yourself "
                 "and advance the slot past this window "
-                "(advance_cdc_slot), or re-snapshot via "
-                "bootstrap_replication"
+                "(advance_cdc_slot), or re-snapshot the target"
             )
         # close the running segment at this truncate's LSN
         if ops or trunc_first:
@@ -532,53 +516,6 @@ def _apply_table_window(
     return total
 
 
-def replicate_pg_table(
-    spark: SparkSession,
-    src_dsn: str,
-    slot: str,
-    dst_dsn: str,
-    table: str,
-    key_cols: list[str],
-    n_writers: int | None = None,
-    src_table: str | None = None,
-    strict: bool = False,
-    skip_unapplyable: bool = False,
-) -> int:
-    """Drain one batch of the source's change stream into the target,
-    exactly once; returns changes applied (0 when the slot is quiet).
-    ``src_table`` names the SOURCE table whose events to pick up
-    (default: same name as the target); qualify it (``schema.table``)
-    when the source database has same-named tables in several
-    schemas.  Call in a loop (or a foreachBatch trigger) for
-    continuous replication.
-
-    A slot captures the WHOLE database: advancing past the window
-    DISCARDS events for every other table (including the apply's own
-    writes when source and target share a database).  Use one slot
-    per replication pipeline; pass ``strict=True`` to refuse the
-    advance when the window holds events for tables this call is not
-    replicating (route multi-table slots to ``replicate_pg_tables``).
-    """
-    from pgloader_spark.sources.pg_live import introspect_pg
-
-    want = src_table or table
-    changes, max_lsn = peek_cdc_changes(src_dsn, slot)
-    if strict:
-        _check_unmatched(changes, [want])
-    mine = _select_changes(changes, want)
-    if not mine:
-        if max_lsn is not None:
-            advance_cdc_slot(src_dsn, slot, max_lsn)
-        return 0
-    col_names = [f.name for f in introspect_pg(dst_dsn)[table.split(".")[-1]]]
-    applied = _apply_table_window(
-        spark, dst_dsn, table, key_cols, mine, lsn_to_int(max_lsn),
-        col_names, n_writers, skip_unapplyable, want,
-    )
-    advance_cdc_slot(src_dsn, slot, max_lsn)
-    return applied
-
-
 def _split_window_on_cascade(
     changes: list[dict],
 ) -> list[tuple[list[dict], dict | None]]:
@@ -627,8 +564,8 @@ def _cascade_targets(
             "Replaying it would require truncating tables this "
             "pipeline does not manage.  Replicate them too, or "
             "TRUNCATE the target tables yourself and advance the slot "
-            "past this window (advance_cdc_slot), or re-snapshot via "
-            "bootstrap_replication"
+            "past this window (advance_cdc_slot), or re-snapshot the "
+            "targets"
         )
     return out
 
@@ -747,27 +684,3 @@ def replicate_pg_tables(
             )
     advance_cdc_slot(src_dsn, slot, max_lsn)
     return applied
-
-
-def bootstrap_replication(
-    spark: SparkSession,
-    src_dsn: str,
-    slot: str,
-    dst_dsn: str,
-    table: str,
-    key_cols: list[str],
-    n_writers: int | None = None,
-    src_table: str | None = None,
-) -> int:
-    """Initial snapshot + catch-up, gap-free: the slot is created
-    BEFORE the snapshot read, so every write concurrent with the
-    snapshot lands in the change stream; replaying a change the
-    snapshot already saw is safe because the apply is an upsert
-    (same row -> same state).  Returns snapshot row count; run
-    ``replicate_pg_table`` afterwards for the stream."""
-    from pgloader_spark.sources.pg_live import read_pg_table, write_pg_copy
-
-    create_cdc_slot(src_dsn, slot)  # cursor first: no snapshot gap
-    src = (src_table or table).split(".")[-1]
-    df = read_pg_table(spark, src_dsn, src)
-    return write_pg_copy(df, dst_dsn, table, n_writers=n_writers)

@@ -849,8 +849,7 @@ def apply_pg_cdc(
 
     ``epoch_id`` turns idempotent-by-convergence into EXACTLY-ONCE:
     the epoch id is inserted into ``<schema.>table__epochs`` inside
-    the same transaction as the apply (streaming/pg_sink.py's
-    guarantee, for change streams); an already-logged epoch returns
+    the same transaction as the apply; an already-logged epoch returns
     (0, 0, 0) without touching the target.
 
     The stage and epoch log live in the TARGET's schema

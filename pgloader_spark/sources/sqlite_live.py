@@ -79,6 +79,11 @@ def introspect_sqlite(db_path: str) -> dict[str, list[SourceField]]:
         con.close()
 
 
+# the predicate of a partial index: the tail of its CREATE INDEX text
+# after the WHERE that follows the indexed column list
+_WHERE_TAIL = re.compile(r"\bWHERE\b(.*)$", re.IGNORECASE | re.DOTALL)
+
+
 def introspect_sqlite_keys(db_path: str) -> dict[str, dict]:
     """Per-table PK / secondary indexes / foreign keys, via the same
     pragmas the reference walks (``sqlite-schema.lisp``:
@@ -87,11 +92,14 @@ def introspect_sqlite_keys(db_path: str) -> dict[str, dict]:
 
     Returns ``{table: {"pk": [cols], "indexes": [(name, [cols],
     unique)], "fkeys": [(cols, ftable, fcols, on_update,
-    on_delete)]}}``.  An INTEGER PRIMARY KEY (rowid alias) has no
-    index_list entry — the PK comes from table_info's pk ordinals,
-    exactly the case the reference special-cases.  Auto-generated
-    ``sqlite_autoindex_*`` entries backing the PK are folded into the
-    pk, not emitted as separate indexes.
+    on_delete)], "filters": {name: where}}}``.  An INTEGER PRIMARY KEY
+    (rowid alias) has no index_list entry — the PK comes from
+    table_info's pk ordinals, exactly the case the reference
+    special-cases.  Auto-generated ``sqlite_autoindex_*`` entries
+    backing the PK are folded into the pk, not emitted as separate
+    indexes.  A partial index (index_list's ``partial`` flag) carries
+    the ``WHERE`` tail of its ``CREATE INDEX`` text in ``filters``, so
+    the target index keeps its predicate.
     """
     con = sqlite3.connect(f"file:{db_path}?mode=ro", uri=True)
     try:
@@ -113,7 +121,8 @@ def introspect_sqlite_keys(db_path: str) -> dict[str, dict]:
             ]
             pk = [name for _, name in sorted(pk_cols)]
             indexes = []
-            for _seq, iname, unique, origin, _partial in con.execute(
+            filters = {}
+            for _seq, iname, unique, origin, partial in con.execute(
                 f'PRAGMA index_list("{t}")'
             ):
                 if origin == "pk" or iname.startswith("sqlite_autoindex_"):
@@ -123,6 +132,12 @@ def introspect_sqlite_keys(db_path: str) -> dict[str, dict]:
                     for r in con.execute(f'PRAGMA index_info("{iname}")')
                 ]
                 indexes.append((iname, cols, bool(unique)))
+                if partial:
+                    (sql,) = con.execute(
+                        "SELECT sql FROM sqlite_master "
+                        "WHERE type = 'index' AND name = ?", (iname,)
+                    ).fetchone()
+                    filters[iname] = _WHERE_TAIL.search(sql).group(1).strip()
             fk_groups: dict[int, dict] = {}
             for (fid, _seq, ftable, col, fcol, on_update, on_delete,
                  _match) in con.execute(f'PRAGMA foreign_key_list("{t}")'):
@@ -138,7 +153,10 @@ def introspect_sqlite_keys(db_path: str) -> dict[str, dict]:
                  g["on_update"], g["on_delete"])
                 for g in fk_groups.values()
             ]
-            out[t] = {"pk": pk, "indexes": indexes, "fkeys": fkeys}
+            out[t] = {
+                "pk": pk, "indexes": indexes, "fkeys": fkeys,
+                "filters": filters,
+            }
         return out
     finally:
         con.close()

@@ -3,19 +3,13 @@
 The reference's only stream is stateless regex routing
 (``src/sources/syslog.lisp``). These are the stateful extensions the
 Spark substrate provides (SURVEY §2.11 "watermark/window support
-comes free"):
+comes free"), each with identical semantics on bounded input:
 
-- ``session_window_agg``: gap-based session windows — the idiomatic
-  path (event-time state managed by Spark's state store, late data
-  bounded by the watermark).
-- ``running_counts_with_state``: a custom stateful operator via
-  ``applyInPandasWithState`` — per-key running aggregates that
-  survive across micro-batches; the template for any
-  reference-lacking stateful semantics (dedup-within-stream,
-  rate-limiting, CDC collapse).
-
-Both run identically on bounded input (batch DataFrames) for the
-session_window case; the state template is streaming-only by nature.
+- ``windowed_event_stats``: tumbling-window per-key rollups with a
+  watermark bounding lateness.
+- ``streaming_budget_admission``: a custom stateful operator via
+  ``applyInPandasWithState`` — a per-shard running token budget that
+  survives across micro-batches.
 """
 
 from __future__ import annotations
@@ -23,102 +17,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-
-def session_window_agg(
-    events: DataFrame,
-    ts_col: str = "ts",
-    key_col: str = "user_id",
-    gap: str = "30 minutes",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Sessions close after ``gap`` of silence per key; a watermark
-    bounds state (events later than it are dropped, state older than
-    it is evicted — the unbounded-state hazard of naive streaming
-    sessionization does not exist here)."""
-    src = events
-    if events.isStreaming:
-        src = events.withWatermark(ts_col, watermark)
-    return (
-        src.groupBy(F.session_window(F.col(ts_col), gap).alias("session"), F.col(key_col))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.min(ts_col).alias("first_ts"),
-            F.max(ts_col).alias("last_ts"),
-        )
-        .select(
-            key_col,
-            F.col("session.start").alias("session_start"),
-            F.col("session.end").alias("session_end"),
-            "n_events",
-            "first_ts",
-            "last_ts",
-        )
-    )
-
-
-STATE_SCHEMA = T.StructType([T.StructField("total", T.LongType())])
-COUNT_OUT_SCHEMA = T.StructType(
-    [
-        T.StructField("user_id", T.LongType()),
-        T.StructField("batch_events", T.LongType()),
-        T.StructField("total_events", T.LongType()),
-    ]
-)
-
-
-def _count_update(key, pdf_iter, state):
-    """Executor-side: fold this micro-batch's rows for one key into
-    the persisted running total."""
-    import pandas as pd  # noqa: PLC0415
-
-    n = 0
-    for pdf in pdf_iter:
-        n += len(pdf)
-    (total,) = state.get if state.exists else (0,)
-    total += n
-    state.update((total,))
-    yield pd.DataFrame(
-        {"user_id": [key[0]], "batch_events": [n], "total_events": [total]}
-    )
-
-
-def running_counts_with_state(events: DataFrame, key_col: str = "user_id") -> DataFrame:
-    """Per-key event totals that persist across micro-batches —
-    the custom-stateful-operator template (applyInPandasWithState:
-    Arrow-batched per group, state in the checkpointed store)."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    return events.groupBy(key_col).applyInPandasWithState(
-        _count_update,
-        outputStructType=COUNT_OUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def streaming_dedup_exact(
-    events: DataFrame,
-    content_col: str = "text",
-    ts_col: str = "ts",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Exact-content dedup inside a stream, state bounded by watermark.
-
-    The batch ``exact_duplicates`` operator keyed on a content digest,
-    re-expressed for unbounded input: ``dropDuplicatesWithinWatermark``
-    keeps one row per digest and EVICTS digests older than the
-    watermark — state is O(rows per watermark window), not O(stream
-    history), which is what makes stream dedup viable at all.  On a
-    bounded DataFrame it degrades to plain digest dedup (same rows).
-    """
-    src = events.withColumn("content_md5", F.md5(F.col(content_col)))
-    if events.isStreaming:
-        return src.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
-            ["content_md5"]
-        )
-    return src.dropDuplicates(["content_md5"])
 
 
 def windowed_event_stats(
@@ -150,248 +48,6 @@ def windowed_event_stats(
             "n_events",
             "sum_value",
         )
-    )
-
-
-def streaming_dedup_incremental(
-    new_docs: DataFrame,
-    snapshot_digests: DataFrame,
-    snapshot_bands: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """STATELESS incremental dedup for a document stream: flag each
-    arriving document against a FROZEN corpus snapshot — the streaming
-    form of ``operators.dedup.incremental_dedup``.
-
-    ``snapshot_digests``: one ``content_md5`` column (distinct).
-    ``snapshot_bands``: distinct ``(band_ix, bucket)`` — e.g. the
-    output of ``dedup.minhash_bands`` over the snapshot, written once
-    per snapshot build and only read here.
-
-    Why this shape: a streaming DataFrame cannot run the batch
-    explode+groupBy signature (stateful aggregation in append mode),
-    and a stream-side ``.distinct()`` to collapse band hits is equally
-    illegal.  Instead (a) the band buckets are computed per row with
-    the narrow ``band_buckets_expr`` (no shuffle, legal in any plan),
-    and (b) each of the N_BANDS buckets left-joins the static index —
-    stream-static joins are STATELESS (the static side is re-resolved
-    per micro-batch), so state is zero, output is append-mode safe,
-    and no watermark is required.  The static sides must be distinct
-    on their join keys (they are, by construction of the index) so
-    joins cannot fan rows out.
-
-    Emits one row per arriving doc: (id, exact_dup, near_dup, dup_any)
-    — same schema and same flags as the batch operator (pinned by
-    test_stateful_streaming.py against incremental_dedup).
-    """
-    from pgloader_spark.operators.dedup import N_BANDS, band_buckets_expr
-
-    src = new_docs.select(
-        F.col(id_col),
-        F.md5(F.col(text_col)).alias("__h"),
-        band_buckets_expr(text_col).alias("__bands"),
-    )
-    out = src.join(
-        snapshot_digests.select(
-            F.col("content_md5").alias("__h"), F.lit(True).alias("__ex")
-        ),
-        "__h",
-        "left",
-    )
-    for b in range(N_BANDS):
-        idx_b = snapshot_bands.filter(F.col("band_ix") == b).select(
-            F.col("bucket").alias(f"__bk{b}"), F.lit(True).alias(f"__n{b}")
-        )
-        out = out.join(
-            idx_b,
-            out["__bands"][b]["bucket"] == idx_b[f"__bk{b}"],
-            "left",
-        )
-    near = None
-    for b in range(N_BANDS):
-        c = F.coalesce(F.col(f"__n{b}"), F.lit(False))
-        near = c if near is None else (near | c)
-    return out.select(
-        id_col,
-        F.coalesce(F.col("__ex"), F.lit(False)).alias("exact_dup"),
-        near.alias("near_dup"),
-        (F.coalesce(F.col("__ex"), F.lit(False)) | near).alias("dup_any"),
-    )
-
-
-def streaming_curation_funnel(
-    docs: DataFrame,
-    ts_col: str = "ts",
-    text_col: str = "text",
-    lang_col: str = "lang",
-    id_col: str = "doc_id",
-    watermark: str = "1 hour",
-    sample_frac: float = 0.5,
-    lang: str = "en",
-) -> DataFrame:
-    """The corpus-curation funnel as a STREAMING pipeline: every gate
-    of the batch ``pipeline_quality_funnel`` applied to an unbounded
-    document stream.
-
-    Gate mechanics under streaming constraints:
-    - quality (token count + bigram repetition), language, and the
-      deterministic hash sample are NARROW column expressions — legal
-      and identical in any plan;
-    - exact dedup cannot be a window over all history; it becomes
-      ``dropDuplicatesWithinWatermark`` on the content digest (state
-      bounded by the watermark window) — the standard streaming
-      trade: duplicates separated by more than the watermark pass,
-      which a periodic batch dedup over the accumulated corpus
-      reconciles.
-
-    Emits ONLY the surviving documents (append-safe), with the gate
-    flags attached for observability.  On bounded input it degrades to
-    plain digest-dedup + filters: same rows as the batch funnel's
-    survivors (pinned by test).
-    """
-    from pgloader_spark.operators import text as txt
-    from pgloader_spark.operators.sampling import hash_bucket
-
-    tk = txt.tokens(F.col(text_col))
-    staged = docs.withColumn("__h", F.md5(F.col(text_col))).withColumn(
-        "g_quality",
-        F.size(tk).between(10, 2000)
-        & (txt.dup_ngram_fraction(text_col, 2) < 0.5),
-    ).withColumn("g_lang", F.col(lang_col) == lang).withColumn(
-        "g_sample",
-        hash_bucket(F.col(id_col), seed=42) < int(sample_frac * 1_000_000),
-    )
-    if docs.isStreaming:
-        deduped = staged.withWatermark(
-            ts_col, watermark
-        ).dropDuplicatesWithinWatermark(["__h"])
-    else:
-        deduped = staged.dropDuplicates(["__h"])
-    return deduped.filter(
-        F.col("g_quality") & F.col("g_lang") & F.col("g_sample")
-    ).drop("__h")
-
-
-CORPUS_STATS_STATE = T.StructType(
-    [
-        T.StructField("n_docs", T.LongType()),
-        T.StructField("total_tokens", T.LongType()),
-        T.StructField("min_tokens", T.LongType()),
-        T.StructField("max_tokens", T.LongType()),
-        T.StructField("regs", T.BinaryType()),  # 4096 HLL registers
-    ]
-)
-CORPUS_STATS_OUT = T.StructType(
-    [
-        T.StructField("lang", T.StringType()),
-        T.StructField("n_docs", T.LongType()),
-        T.StructField("total_tokens", T.LongType()),
-        T.StructField("min_tokens", T.LongType()),
-        T.StructField("max_tokens", T.LongType()),
-        T.StructField("est_sources", T.LongType()),
-    ]
-)
-
-
-def _corpus_stats_update(key, pdf_iter, state):
-    """Fold one micro-batch of one language into the running card.
-
-    The distinct-source counter is the SAME HLL sketch as
-    operators/sketches.py (identical md5 hash, register layout, and
-    estimate constants), so the streaming estimate is bit-equal to the
-    batch ``hll_distinct`` over the union of all batches — register
-    max-merge is order-invariant.  State is constant-sized: four longs
-    plus 4096 register bytes per language.
-    """
-    import hashlib
-    import math
-    import re
-
-    import pandas as pd  # noqa: PLC0415
-
-    from pgloader_spark.operators.sketches import (
-        _HLL_M,
-        _HLL_NUM,
-        _HLL_RBITS,
-        HLL_P,
-        HLL_SEED,
-    )
-
-    if state.exists:
-        n_docs, total, mn, mx, regs = state.get
-        regs = bytearray(regs)
-    else:
-        n_docs, total, mn, mx = 0, 0, None, None
-        regs = bytearray(_HLL_M)
-    tok_re = re.compile(r"[^a-z0-9]+")
-    for pdf in pdf_iter:
-        for text, source in zip(pdf["text"], pdf["source"]):
-            n_tok = (
-                len([t for t in tok_re.split(str(text).lower()) if t])
-                if text is not None
-                else 0
-            )
-            n_docs += 1
-            total += n_tok
-            mn = n_tok if mn is None else min(mn, n_tok)
-            mx = n_tok if mx is None else max(mx, n_tok)
-            h = int(
-                hashlib.md5(f"{HLL_SEED}:{source}".encode()).hexdigest()[:15],
-                16,
-            )
-            j = h & (_HLL_M - 1)
-            rest = h >> HLL_P
-            rho = (
-                _HLL_RBITS + 1
-                if rest == 0
-                else (rest & -rest).bit_length()  # trailing zeros + 1
-            )
-            if rho > regs[j]:
-                regs[j] = rho
-    state.update((n_docs, total, mn, mx, bytes(regs)))
-    # estimate with the exact float pipeline of sketches.hll_estimate
-    v = sum(1 for b in regs if b == 0)
-    s50 = sum(1 << (50 - b) for b in regs if b > 0)
-    z50 = s50 + v * (1 << 50)
-    e_raw = _HLL_NUM / float(z50)
-    if v > 0 and e_raw <= 2.5 * _HLL_M:
-        est = float(_HLL_M) * math.log(float(_HLL_M) / float(v))
-    else:
-        est = e_raw
-    yield pd.DataFrame(
-        {
-            "lang": [key[0]],
-            "n_docs": [n_docs],
-            "total_tokens": [total],
-            "min_tokens": [mn],
-            "max_tokens": [mx],
-            "est_sources": [int(math.floor(est + 0.5))],  # HALF_UP = F.round
-        }
-    )
-
-
-def streaming_corpus_stats(docs: DataFrame, lang_col: str = "lang") -> DataFrame:
-    """The corpus card as a STREAMING operator: per-language running
-    document counts, token totals/extremes, and an HLL-sketched
-    distinct-source estimate that persists across micro-batches.
-
-    The batch card (queries_pipeline.corpus_stats_report) answers
-    "what is in the corpus"; this answers it CONTINUOUSLY as documents
-    arrive, with per-language state bounded at four longs + 4096
-    register bytes regardless of volume — the monitoring shape a
-    100 TB ingest actually runs.  Estimates are bit-equal to the batch
-    HLL over the accumulated stream (register merge is order-invariant;
-    pinned by test).
-    """
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    return docs.groupBy(lang_col).applyInPandasWithState(
-        _corpus_stats_update,
-        outputStructType=CORPUS_STATS_OUT,
-        stateStructType=CORPUS_STATS_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
 

@@ -291,55 +291,6 @@ def test_key_skew_profile_deterministic_tie_order(spark):
     assert [r.key for r in rows] == ["2", "30", "5"]
 
 
-# --------------------------------------------- streaming checksum twin
-
-
-def test_streaming_bucket_checksums_match_batch(spark, tmp_path):
-    """Continuous verification invariant: after any prefix of the
-    stream, the running bucket frame equals the batch operator over
-    the accumulated rows."""
-    src = tmp_path / "ckin"
-    src.mkdir()
-    (src / "b1.csv").write_text("".join(f"{i},u{i}\n" for i in range(0, 120)))
-    stream = (
-        spark.readStream.format("csv")
-        .schema("k long, v string")
-        .load(str(src))
-    )
-    out = audit.streaming_bucket_checksums(stream, ["k"], n_buckets=8)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("ck_mem")
-        .outputMode("complete")
-        .option("checkpointLocation", str(tmp_path / "ckck"))
-        .start()
-    )
-
-    def batch_frame(n):
-        df = spark.createDataFrame([(i, f"u{i}") for i in range(0, n)], "k long, v string")
-        return {
-            r.bucket: (r.n_rows, r.key_checksum)
-            for r in audit.bucket_checksums(df, "t", ["k"], n_buckets=8).collect()
-        }
-
-    try:
-        q.processAllAvailable()
-        got1 = {
-            r.bucket: (r.n_rows, r.key_checksum)
-            for r in spark.sql("SELECT * FROM ck_mem").collect()
-        }
-        assert got1 == batch_frame(120)
-        (src / "b2.csv").write_text("".join(f"{i},u{i}\n" for i in range(120, 300)))
-        q.processAllAvailable()
-        got2 = {
-            r.bucket: (r.n_rows, r.key_checksum)
-            for r in spark.sql("SELECT * FROM ck_mem").collect()
-        }
-        assert got2 == batch_frame(300)
-    finally:
-        q.stop()
-
-
 def test_fk_orphan_empty_child_reports_zeros(spark):
     child = spark.createDataFrame([], "row_id long, fk int")
     parent = spark.createDataFrame([(10,)], "pk int")

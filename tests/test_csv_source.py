@@ -1,5 +1,4 @@
-"""CSV source tests (reference: src/sources/csv/csv.lisp,
-csv-guess.lisp)."""
+"""CSV source tests (reference: src/sources/csv/csv.lisp)."""
 
 from __future__ import annotations
 
@@ -9,8 +8,6 @@ import pytest
 
 from pgloader_spark.sources.csv import (
     CsvOptions,
-    guess_csv_params,
-    header_fields,
     read_csv,
     read_inline,
 )
@@ -52,22 +49,6 @@ def test_skip_lines(spark, csv_dir):
     df = read_csv(spark, os.path.join(csv_dir, "skip.csv"), opts)
     got = sorted((r["n"], r["word"]) for r in df.collect())
     assert got == [("1", "one"), ("2", "two")]
-
-
-def test_guess_separator(spark, csv_dir):
-    opts = guess_csv_params(spark, os.path.join(csv_dir, "semi.csv"))
-    assert opts.separator == ";"
-    opts2 = guess_csv_params(spark, os.path.join(csv_dir, "plain.csv"))
-    assert opts2.separator == ","
-
-
-def test_header_fields(spark, csv_dir):
-    opts = CsvOptions()
-    assert header_fields(spark, os.path.join(csv_dir, "plain.csv"), opts) == [
-        "id",
-        "name",
-        "amount",
-    ]
 
 
 def test_read_inline(spark):

@@ -135,16 +135,6 @@ def test_mysql_on_update_extra_flags_trigger():
     assert t.columns[0].extra.get("trigger") == "on_update_current_timestamp"
 
 
-def test_disable_enable_trigger_wrapper():
-    stmts = ddl.with_disabled_triggers("t1", ["COPY t1 FROM stdin;"])
-    assert stmts == [
-        "ALTER TABLE t1 DISABLE TRIGGER ALL;",
-        "COPY t1 FROM stdin;",
-        "ALTER TABLE t1 ENABLE TRIGGER ALL;",
-    ]
-    assert ddl.with_disabled_triggers("t1", ["X"], disable=False) == ["X"]
-
-
 def test_check_constraint_statements():
     t = Table("orders", check_constraints=[("chk_qty", "qty > 0")])
     cat = Catalog("db", [Schema("public", [t])])

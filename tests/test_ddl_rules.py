@@ -43,6 +43,16 @@ def test_translate_neq_and_reserved_ident():
     assert got == '"user" <> 0 AND "order" IS NULL'
 
 
+def test_translate_unary_minus():
+    assert translate_index_filter("([status]>(-1))") == "(status > -1)"
+    assert translate_index_filter("[n] IN (-1, 2)") == "n IN (-1, 2)"
+
+
+def test_translate_double_quoted_identifier():
+    """SQLite's partial-index predicates quote identifiers the SQL way."""
+    assert translate_index_filter('"Status" = 1', str.lower) == "status = 1"
+
+
 def test_translate_rejects_garbage():
     with pytest.raises(IndexFilterError):
         translate_index_filter("[col] = ???")

@@ -304,84 +304,3 @@ def test_ivfpq_prunes_and_recalls(spark):
     for qid, lst in by_q.items():
         assert len(lst) == 5
         assert all(n % 4 == qid % 4 for _, n in lst)  # pruning held
-
-
-def test_streaming_ivfpq_scorer_matches_batch(spark, tmp_path):
-    """r9: continuous retrieval over a frozen index — the foreachBatch
-    scorer's per-micro-batch results must equal the batch path's for
-    the same queries (same LUTs, same cell-pruned join), and the PQ
-    encode stage must accept a STREAMING frame (ensure_parallelism
-    passes streams through untouched)."""
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    from pgloader_spark.operators.similarity import (
-        ivfpq_encode,
-        ivfpq_topk,
-        ivfpq_train,
-        streaming_ivfpq_scorer,
-    )
-
-    rng = np.random.default_rng(23)
-    centers = rng.normal(size=(4, 32)) * 10
-    rows = [
-        (i, [float(x) for x in centers[i % 4] + rng.normal(size=32) * 0.1])
-        for i in range(160)
-    ]
-    corpus = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    coarse, cbs = ivfpq_train(
-        corpus, n_cells=4, m=8, ks=16, sample_n=160, iters=4, dim=32
-    )
-    queries = corpus.filter("vec_id % 40 = 0")
-    expected = sorted(
-        map(tuple, ivfpq_topk(corpus, queries, coarse, cbs, k=5,
-                              n_probe=2).collect())
-    )
-
-    qdir = tmp_path / "qstream"
-    queries.write.parquet(str(qdir))
-    got: list[tuple] = []
-
-    def sink(df, epoch_id):
-        got.extend(map(tuple, df.collect()))
-
-    process = streaming_ivfpq_scorer(corpus, coarse, cbs, sink, k=5, n_probe=2)
-    stream = spark.readStream.schema(
-        "vec_id long, embedding array<double>"
-    ).parquet(str(qdir))
-    assert stream.isStreaming
-    q = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", str(tmp_path / "ckpt_ann"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    assert sorted(got) == expected
-
-    # the encode stage itself runs on a streaming frame: codes match
-    # the batch encode of the same vectors
-    enc_stream = ivfpq_encode(stream, coarse, cbs)
-    assert enc_stream.isStreaming
-    q2 = (
-        enc_stream.writeStream.format("memory")
-        .queryName("enc_mem")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_enc"))
-        .start()
-    )
-    try:
-        q2.processAllAvailable()
-        streamed = {
-            (r.vec_id, r.cell, tuple(r.codes))
-            for r in spark.sql("SELECT * FROM enc_mem").collect()
-        }
-    finally:
-        q2.stop()
-    batch = {
-        (r.vec_id, r.cell, tuple(r.codes))
-        for r in ivfpq_encode(queries, coarse, cbs).collect()
-    }
-    assert streamed == batch

@@ -6,7 +6,7 @@ from __future__ import annotations
 
 import pytest
 
-from pgloader_spark.plans.executor import run_command_text
+from tests.fixtures.commands import run_command_text
 
 
 def test_csv_inline_end_to_end(spark, tmp_path):

@@ -85,7 +85,6 @@ def test_mssql_introspection_sql_shape():
         mssql_columns_sql,
         mssql_fkeys_sql,
         mssql_indexes_sql,
-        mssql_sequences_sql,
     )
 
     cols = mssql_columns_sql("AdventureWorks")
@@ -97,8 +96,6 @@ def test_mssql_introspection_sql_shape():
     assert "NOT IN ('dto', 'sys')" in fk
     idx = mssql_indexes_sql()
     assert "sys.indexes" in idx and "filter_definition" in idx
-    seq = mssql_sequences_sql()
-    assert "sys.sequences" in seq
 
 
 def test_mssql_normalize_default():
@@ -111,38 +108,6 @@ def test_mssql_normalize_default():
     assert mssql_normalize_default("(('pending'))") == "pending"
     assert mssql_normalize_default("((0))") == "0"
     assert mssql_normalize_default(None) is None
-
-
-def test_catalog_from_mssql_canned_resultset():
-    """A LOAD DATABASE FROM mssql:// plan resolves a full catalog from
-    canned column rows: dbo -> public, identity -> serial/bigserial,
-    nvarchar -> text, datetime2 -> timestamptz."""
-    from pgloader_spark.sources.jdbc import catalog_from_mssql
-
-    rows = [
-        {"table_schema": "dbo", "table_name": "orders", "column_name": "id",
-         "data_type": "bigint", "column_default": None, "is_nullable": "NO",
-         "is_identity": 1, "character_maximum_length": None,
-         "numeric_precision": 19, "numeric_scale": 0},
-        {"table_schema": "dbo", "table_name": "orders", "column_name": "label",
-         "data_type": "nvarchar", "column_default": "(('x'))",
-         "is_nullable": "YES", "is_identity": 0,
-         "character_maximum_length": 48, "numeric_precision": None,
-         "numeric_scale": None},
-        {"table_schema": "sales", "table_name": "fx", "column_name": "rate",
-         "data_type": "decimal", "column_default": None, "is_nullable": "YES",
-         "is_identity": 0, "character_maximum_length": None,
-         "numeric_precision": 18, "numeric_scale": 6},
-    ]
-    cat = catalog_from_mssql(rows)
-    assert [s.name for s in cat.schemas] == ["public", "sales"]
-    orders = cat.schemas[0].find_table("orders")
-    assert orders.columns[0].type_name == "bigserial"
-    assert orders.columns[0].extra.get("serial") is True
-    assert orders.columns[1].type_name == "text"
-    fx = cat.schemas[1].find_table("fx")
-    assert fx.columns[0].type_name == "numeric"
-    assert fx.columns[0].type_mod == "(18,6)"
 
 
 def test_mysql_checks_and_comments_attach():

@@ -1,4 +1,4 @@
-"""Z-order layout tests: interleave math, clustered write, pruning."""
+"""Z-order layout tests: interleave math and sort keys."""
 
 from __future__ import annotations
 
@@ -7,7 +7,6 @@ from pyspark.sql import functions as F
 from pgloader_spark.operators.layout import (
     interleave_bits,
     quantize,
-    write_zordered,
     zorder_keys,
 )
 
@@ -39,39 +38,6 @@ def test_quantize_bounds_and_degenerate_span(spark):
         quantize(F.col("v"), F.lit(3.0), F.lit(3.0), 4).alias("q")
     ).collect()
     assert all(r["q"] == 0 for r in same)  # zero span -> cell 0, no div0
-
-
-def test_write_zordered_files_prune_on_both_dims(spark, tmp_path):
-    """The point of the layout: after a z-ordered write, each file's
-    min/max range on BOTH dimensions is narrow, so a point predicate
-    matches only a fraction of files (footer-stat pruning at scale)."""
-    import itertools
-
-    rows = [(i, float(j)) for i, j in itertools.product(range(64), range(64))]
-    df = spark.createDataFrame(rows, "x long, y double")
-    out = str(tmp_path / "zed")
-    write_zordered(df, out, "x", "y", n_files=16, bits=6)
-
-    back = spark.read.parquet(out).withColumn(
-        "f", F.input_file_name()
-    )
-    spans = (
-        back.groupBy("f")
-        .agg(
-            (F.max("x") - F.min("x")).alias("sx"),
-            (F.max("y") - F.min("y")).alias("sy"),
-        )
-        .collect()
-    )
-    assert len(spans) >= 8
-    # a row-major (insertion-order) split would give full-range spans
-    # (63) on one dimension in every file; z-order keeps BOTH spans
-    # well under the full range for most files
-    avg_sx = sum(r["sx"] for r in spans) / len(spans)
-    avg_sy = sum(float(r["sy"]) for r in spans) / len(spans)
-    assert avg_sx < 40 and avg_sy < 40, (avg_sx, avg_sy)
-    # and no rows were lost or duplicated
-    assert back.count() == 64 * 64
 
 
 def test_zorder_keys_deterministic(spark):

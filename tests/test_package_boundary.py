@@ -9,6 +9,13 @@ entry points: the CLI (``cli``, ``__main__``), the query contract
 Every ``pgloader_spark`` module must be reached from one of them; a
 module that only ``tests/`` imports is a fixture and lives under
 ``tests/fixtures/``, or it is dead and goes.
+
+The same holds one level down: every top-level function and class of
+a reached module must be named by product code — a reached def, the
+module-level code of a reached module, or an entry-point file.  The
+scan is by name (``foo`` and ``mod.foo`` both name ``foo``), and a
+decorated def counts as reached: the ``@query`` and transform
+registries call their members by registry key, not by name.
 """
 
 from __future__ import annotations
@@ -43,9 +50,12 @@ ALLOWED_UNREACHED = {
         "the scanner grammar streaming/syslog.py compiles; goes with "
         "it (ROADMAP item 7)"
     ),
-    "pgloader_spark.streaming.pg_sink": (
-        "the exactly-once epoch log ROADMAP item 1 reuses per COPY "
-        "partition"
+}
+
+# Top-level defs no product path names, kept on purpose.
+ALLOWED_UNCALLED = {
+    "pgloader_spark.functions.transforms.register_transform": (
+        "the --load-py-file plugin API: user plugin files call it"
     ),
 }
 
@@ -114,6 +124,72 @@ def test_every_package_module_is_reached_from_an_entry_point():
         f"{_test_importers(m) or 'nothing'}"
         for m in sorted(unreached)
     )
+
+
+_DEF = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+
+
+def _names(nodes) -> set[str]:
+    """Every name NODES mention: loads, attribute tails, imported
+    names."""
+    out: set[str] = set()
+    for node in nodes:
+        for n in ast.walk(node):
+            if isinstance(n, ast.Name):
+                out.add(n.id)
+            elif isinstance(n, ast.Attribute):
+                out.add(n.attr)
+            elif isinstance(n, ast.alias):
+                out.add(n.name.rsplit(".", 1)[-1])
+    return out
+
+
+def _uncalled() -> dict[str, int]:
+    """Top-level defs of reached modules that no product code names,
+    with their line counts."""
+    defs: dict[str, list[tuple[str, ast.AST]]] = {}
+    seeds: set[str] = set()
+    for path in ROOTS:
+        if not path.is_relative_to(PKG):
+            seeds |= _names([ast.parse(path.read_text(encoding="utf-8"))])
+    for mod in _reached():
+        tree = ast.parse(PACKAGE[mod].read_text(encoding="utf-8"))
+        for node in tree.body:
+            if isinstance(node, _DEF):
+                defs.setdefault(node.name, []).append((mod, node))
+                if node.decorator_list:
+                    seeds.add(node.name)
+            else:
+                seeds |= _names([node])
+    named: set[str] = set()
+    stack = list(seeds)
+    while stack:
+        name = stack.pop()
+        if name in named:
+            continue
+        named.add(name)
+        for _, node in defs.get(name, []):
+            stack.extend(_names([node]) - named)
+    return {
+        f"{mod}.{name}": node.end_lineno - node.lineno + 1
+        for name, hits in defs.items()
+        if name not in named
+        for mod, node in hits
+    }
+
+
+def test_every_package_def_has_a_product_caller():
+    uncalled = {
+        k: n for k, n in _uncalled().items() if k not in ALLOWED_UNCALLED
+    }
+    assert not uncalled, "\n".join(
+        f"{k} ({n} lines): no product path names it"
+        for k, n in sorted(uncalled.items())
+    )
+
+
+def test_uncalled_allow_list_is_still_uncalled():
+    assert set(ALLOWED_UNCALLED) <= set(_uncalled())
 
 
 def test_allow_list_is_still_unreached():

@@ -3,20 +3,42 @@ apply, end-to-end PG -> PG replication on a wal_level=logical server."""
 
 from __future__ import annotations
 
-
 import pytest
 
 from pgloader_spark.sources.pg_cdc import (
     advance_cdc_slot,
-    create_cdc_slot,
-    drop_cdc_slot,
     lsn_to_int,
     parse_test_decoding,
     peek_cdc_changes,
-    replicate_pg_table,
+    replicate_pg_tables,
 )
 from pgloader_spark.sources.pgwire import PGConn
 from tests.pg_server import start_pg, stop_pg
+
+
+def create_cdc_slot(dsn: str, slot: str) -> str:
+    """Create a logical replication slot; returns its consistent LSN."""
+    with PGConn(dsn) as c:
+        _, rows = c.query(
+            "SELECT lsn FROM pg_create_logical_replication_slot("
+            f"'{slot}', 'test_decoding')"
+        )
+    return rows[0][0]
+
+
+def drop_cdc_slot(dsn: str, slot: str) -> None:
+    with PGConn(dsn) as c:
+        c.query(f"SELECT pg_drop_replication_slot('{slot}')")
+
+
+def _drain(spark, dsn, slot, table, src_table, **kw) -> int:
+    """One drain of SLOT into TABLE (keyed on ``id``) from SRC_TABLE on
+    the same server; returns the changes applied to TABLE."""
+    got = replicate_pg_tables(
+        spark, dsn, slot, dsn, {table: ["id"]},
+        src_tables={table: src_table}, **kw,
+    )
+    return got.get(table, 0)
 
 
 @pytest.fixture(scope="module")
@@ -159,29 +181,20 @@ def test_cdc_capture_and_replicate_end_to_end(logical_dsn, spark):
         changes2, _ = peek_cdc_changes(dsn, "s_rep")
         assert len(changes2) == len(changes)
 
-        applied = replicate_pg_table(
-            spark, dsn, "s_rep", dsn, "cdc_dst", key_cols=["id"], n_writers=2,
-            src_table="cdc_src",
-        )
+        applied = _drain(spark, dsn, "s_rep", "cdc_dst", "cdc_src", n_writers=2)
         assert applied >= 2  # collapsed upserts + the delete
         with PGConn(dsn) as c:
             _, rows = c.query("SELECT id, v FROM cdc_dst ORDER BY id")
             assert rows == [("2", "TWO"), ("3", "three")]
 
         # quiet slot -> no-op
-        assert replicate_pg_table(
-            spark, dsn, "s_rep", dsn, "cdc_dst", key_cols=["id"],
-            src_table="cdc_src",
-        ) == 0
+        assert _drain(spark, dsn, "s_rep", "cdc_dst", "cdc_src") == 0
 
         # second wave, incl. a value with quotes and a null
         with PGConn(dsn) as c:
             c.query("INSERT INTO cdc_src VALUES (4, 'it''s')")
             c.query("UPDATE cdc_src SET v = NULL WHERE id = 3")
-        replicate_pg_table(
-            spark, dsn, "s_rep", dsn, "cdc_dst", key_cols=["id"],
-            src_table="cdc_src",
-        )
+        _drain(spark, dsn, "s_rep", "cdc_dst", "cdc_src")
         with PGConn(dsn) as c:
             _, rows = c.query("SELECT id, v FROM cdc_dst ORDER BY id")
             assert rows == [("2", "TWO"), ("3", None), ("4", "it's")]
@@ -229,10 +242,7 @@ def test_replicate_pk_changing_update_live(logical_dsn, spark):
         changes, _ = peek_cdc_changes(dsn, "s_pk")
         (u,) = [c for c in changes if c["table"] == "pk_src"]
         assert u["old_key"] == {"id": "1"} and u["cols"]["id"] == "2"
-        replicate_pg_table(
-            spark, dsn, "s_pk", dsn, "pk_dst", key_cols=["id"],
-            src_table="pk_src",
-        )
+        _drain(spark, dsn, "s_pk", "pk_dst", "pk_src")
         with PGConn(dsn) as c:
             _, rows = c.query("SELECT id, v FROM pk_dst ORDER BY id")
         assert rows == [("2", "a"), ("5", "e")]
@@ -276,10 +286,7 @@ def test_multi_table_and_bootstrap(logical_dsn, spark):
     """One slot drives two tables; bootstrap = slot-before-snapshot,
     so a write racing the snapshot is replayed (upsert-safe), never
     lost."""
-    from pgloader_spark.sources.pg_cdc import (
-        bootstrap_replication,
-        replicate_pg_tables,
-    )
+    from pgloader_spark.sources.pg_live import read_pg_table, write_pg_copy
 
     dsn = logical_dsn
     with PGConn(dsn) as c:
@@ -289,10 +296,8 @@ def test_multi_table_and_bootstrap(logical_dsn, spark):
         c.query("INSERT INTO ma_src VALUES (1, 'seed')")
 
     # bootstrap table ma: slot exists BEFORE the snapshot copy
-    n = bootstrap_replication(
-        spark, dsn, "s_multi", dsn, "ma_dst", ["id"], src_table="ma_src"
-    )
-    assert n == 1
+    create_cdc_slot(dsn, "s_multi")
+    assert write_pg_copy(read_pg_table(spark, dsn, "ma_src"), dsn, "ma_dst") == 1
     try:
         # concurrent-with-snapshot write (arrived after slot creation:
         # it is IN the stream even though the snapshot may also have
@@ -366,7 +371,6 @@ def test_cli_replicate_mode(logical_dsn, spark):
     """`pgloader_spark SRC DST --replicate --tables dst:id:src` drains
     the slot through the CLI surface, exactly once."""
     from pgloader_spark.cli import main
-    from pgloader_spark.sources.pg_cdc import create_cdc_slot, drop_cdc_slot
 
     dsn = logical_dsn
     with PGConn(dsn) as c:
@@ -465,10 +469,7 @@ def test_replication_verified_by_checksums(logical_dsn, spark):
                 "INSERT INTO vrep_src SELECT g, 'v' || g "
                 "FROM generate_series(1, 300) g"
             )
-        replicate_pg_table(
-            spark, dsn, "s_vrep", dsn, "vrep_dst", key_cols=["id"],
-            src_table="vrep_src",
-        )
+        _drain(spark, dsn, "s_vrep", "vrep_dst", "vrep_src")
         row = verify_replication(
             spark, dsn, dsn, "vrep_src", "vrep_dst", ["id"]
         ).collect()[0]
@@ -484,10 +485,7 @@ def test_replication_verified_by_checksums(logical_dsn, spark):
         assert not row.match
 
         # drain; invariant restored
-        replicate_pg_table(
-            spark, dsn, "s_vrep", dsn, "vrep_dst", key_cols=["id"],
-            src_table="vrep_src",
-        )
+        _drain(spark, dsn, "s_vrep", "vrep_dst", "vrep_src")
         row = verify_replication(
             spark, dsn, dsn, "vrep_src", "vrep_dst", ["id"]
         ).collect()[0]
@@ -500,7 +498,6 @@ def test_cli_replicate_verify_flag(logical_dsn, spark, capsys):
     """--replicate --verify checksum-checks each table after the final
     drain: exit 0 on convergence, 1 when the target diverges."""
     from pgloader_spark.cli import main
-    from pgloader_spark.sources.pg_cdc import create_cdc_slot, drop_cdc_slot
 
     dsn = logical_dsn
     with PGConn(dsn) as c:
@@ -555,10 +552,7 @@ def test_mid_stream_add_column_rejects_then_recovers(logical_dsn, spark):
     try:
         with PGConn(dsn) as c:
             c.query("INSERT INTO drift_src VALUES (1, 'one')")
-        assert replicate_pg_table(
-            spark, dsn, "s_drift", dsn, "drift_dst", key_cols=["id"],
-            src_table="drift_src",
-        ) >= 1
+        assert _drain(spark, dsn, "s_drift", "drift_dst", "drift_src") >= 1
 
         # DDL drift mid-stream: new column appears in the decoded feed
         with PGConn(dsn) as c:
@@ -567,10 +561,7 @@ def test_mid_stream_add_column_rejects_then_recovers(logical_dsn, spark):
             c.query("UPDATE drift_src SET extra = 'E1' WHERE id = 1")
 
         with pytest.raises(ValueError, match="schema drift.*extra"):
-            replicate_pg_table(
-                spark, dsn, "s_drift", dsn, "drift_dst", key_cols=["id"],
-                src_table="drift_src",
-            )
+            _drain(spark, dsn, "s_drift", "drift_dst", "drift_src")
         # nothing applied, slot not advanced: the window is intact
         # (src and dst share a database here, so the first apply's own
         # dst/epoch writes also sit in the slot — count src events only)
@@ -583,10 +574,7 @@ def test_mid_stream_add_column_rejects_then_recovers(logical_dsn, spark):
         # remediate: match the target's schema, replay the SAME window
         with PGConn(dsn) as c:
             c.query("ALTER TABLE drift_dst ADD COLUMN extra text")
-        assert replicate_pg_table(
-            spark, dsn, "s_drift", dsn, "drift_dst", key_cols=["id"],
-            src_table="drift_src",
-        ) >= 1
+        assert _drain(spark, dsn, "s_drift", "drift_dst", "drift_src") >= 1
         with PGConn(dsn) as c:
             _, rows = c.query(
                 "SELECT id, v, extra FROM drift_dst ORDER BY id"
@@ -654,10 +642,7 @@ def test_mid_stream_truncate_replays_and_converges(logical_dsn, spark):
             c.query("TRUNCATE trunc_src")  # consecutive windows split too
             c.query("INSERT INTO trunc_src VALUES (4, 'four'), (5, 'five')")
             c.query("DELETE FROM trunc_src WHERE id = 5")
-        applied = replicate_pg_table(
-            spark, dsn, "s_trunc", dsn, "trunc_dst", key_cols=["id"],
-            src_table="trunc_src",
-        )
+        applied = _drain(spark, dsn, "s_trunc", "trunc_dst", "trunc_src")
         # keys 1,2 upsert (seg 0) + 3 (seg 1) + 4 (seg 2); key 5's
         # insert+delete collapse to a no-row delete; truncates uncounted
         assert applied == 4
@@ -669,10 +654,7 @@ def test_mid_stream_truncate_replays_and_converges(logical_dsn, spark):
             _, rows = c.query("SELECT id, v FROM trunc_dst ORDER BY id")
             assert rows == [("4", "four")]
         # drained stream: second drain applies nothing, still converged
-        assert replicate_pg_table(
-            spark, dsn, "s_trunc", dsn, "trunc_dst", key_cols=["id"],
-            src_table="trunc_src",
-        ) == 0
+        assert _drain(spark, dsn, "s_trunc", "trunc_dst", "trunc_src") == 0
     finally:
         drop_cdc_slot(dsn, "s_trunc")
 

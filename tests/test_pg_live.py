@@ -1688,10 +1688,11 @@ def test_password_auth_scram_md5_and_pgpass(pg_dsn, monkeypatch, tmp_path):
 
 def test_post_load_retry_survives_connection_kill(pg_dsn):
     """complete-pgsql-database semantics (migrate-database.lisp:227-250):
-    the post-load phase runs in one transaction; a connection killed
+    each post-load statement autocommits; a connection killed
     mid-phase (here: pg_terminate_backend during a pg_sleep between the
-    index and FK statements) rolls everything back, and the automatic
-    reconnect re-runs the whole list to convergence."""
+    index and FK statements) reconnects and RESUMES from the failed
+    statement — the statements committed before the kill never re-run
+    (the log row lands once), and the whole list converges."""
     import threading
 
     from pgloader_spark.plans.orchestrate import run_post_load
@@ -1699,8 +1700,10 @@ def test_post_load_retry_survives_connection_kill(pg_dsn):
     with PGConn(pg_dsn) as c:
         c.query("DROP TABLE IF EXISTS plr_child")
         c.query("DROP TABLE IF EXISTS plr_parent")
+        c.query("DROP TABLE IF EXISTS plr_log")
         c.query("CREATE TABLE plr_parent (id bigint NOT NULL)")
         c.query("CREATE TABLE plr_child (id bigint, pid bigint)")
+        c.query("CREATE TABLE plr_log (n int)")
         c.query("INSERT INTO plr_parent VALUES (1), (2)")
         c.query("INSERT INTO plr_child VALUES (10, 1), (20, 2)")
 
@@ -1708,7 +1711,8 @@ def test_post_load_retry_survives_connection_kill(pg_dsn):
     statements = [
         "ALTER TABLE plr_parent ADD PRIMARY KEY (id)",
         "CREATE INDEX plr_child_pid_idx ON plr_child (pid)",
-        f"SELECT pg_sleep(5) {marker}",  # the long "index build"
+        "INSERT INTO plr_log VALUES (1)",  # not idempotent: must run once
+        f"SELECT pg_sleep(3) {marker}",  # the long "index build"
         "ALTER TABLE plr_child ADD CONSTRAINT plr_fk "
         "FOREIGN KEY (pid) REFERENCES plr_parent (id)",
     ]
@@ -1731,10 +1735,14 @@ def test_post_load_retry_survives_connection_kill(pg_dsn):
 
     t = threading.Thread(target=killer)
     t.start()
-    n = run_post_load(pg_dsn, statements, max_retries=3, retry_sleep=0.5)
+    errors: list[str] = []
+    n = run_post_load(
+        pg_dsn, statements, errors=errors, max_retries=3, retry_sleep=0.5
+    )
     t.join()
     assert killed.is_set(), "killer never fired — test proved nothing"
     assert n == len(statements)
+    assert errors == []
     with PGConn(pg_dsn) as c:
         # all DDL converged exactly once despite the mid-phase kill
         _, rows = c.query(
@@ -1745,17 +1753,37 @@ def test_post_load_retry_survives_connection_kill(pg_dsn):
             "SELECT COUNT(*) FROM pg_constraint WHERE conname = 'plr_fk'"
         )
         assert rows == [("1",)]
+        _, rows = c.query("SELECT COUNT(*) FROM plr_log")
+        assert rows == [("1",)]
         c.query("DROP TABLE plr_child")
         c.query("DROP TABLE plr_parent")
+        c.query("DROP TABLE plr_log")
 
 
 def test_post_load_retry_raises_on_sql_error(pg_dsn):
     """Ordinary SQL errors are NOT retried (the reference's
-    handler-case catches only postgresql-unavailable)."""
+    handler-case catches only postgresql-unavailable), and they do not
+    raise either: the error is collected, and the next statement still
+    runs."""
     from pgloader_spark.plans.orchestrate import run_post_load
 
-    with pytest.raises(PGError, match="42P01"):
-        run_post_load(pg_dsn, ["SELECT * FROM table_that_is_not_there"])
+    errors: list[str] = []
+    n = run_post_load(
+        pg_dsn,
+        [
+            "SELECT * FROM table_that_is_not_there",
+            "DROP TABLE IF EXISTS plr_after",
+            "CREATE TABLE plr_after (id int)",
+        ],
+        errors=errors,
+    )
+    assert n == 2
+    assert len(errors) == 1 and "42P01" in errors[0]
+    assert errors[0].startswith("SELECT * FROM table_that_is_not_there")
+    with PGConn(pg_dsn) as c:
+        _, rows = c.query("SELECT to_regclass('plr_after') IS NOT NULL")
+        assert rows == [("t",)]
+        c.query("DROP TABLE plr_after")
 
 
 def test_chinook_migration_carries_keys(seeded, spark, tmp_path):
@@ -1862,7 +1890,9 @@ def test_capture_and_drop_indexes_roundtrip(seeded):
         )
         assert rows == [("0",)]  # everything dropped
     assert len(stmts) == 3  # pkey + unique + plain index
-    run_post_load(seeded, stmts, transactional=False)
+    errors: list[str] = []
+    run_post_load(seeded, stmts, errors=errors)
+    assert errors == []
     with PGConn(seeded) as c:
         _, rows = c.query(
             "SELECT COUNT(*) FROM pg_indexes WHERE tablename = 'cdi_t'"
@@ -2252,6 +2282,54 @@ def test_load_database_drop_indexes_rebuilds_after_failed_copy(
             c.query("INSERT INTO dbi_people VALUES (1, 3)")
 
 
+def test_load_database_sqlite_partial_index_keeps_where(seeded, spark, tmp_path):
+    """A SQLite partial unique index migrates with its WHERE: codes
+    repeated outside the predicate still land, and the target index
+    stays unique inside it (sqlite-schema.lisp list-all-indexes; the
+    predicate comes from the index's CREATE text)."""
+    import sqlite3
+
+    from pgloader_spark.parsers.loadcmd import parse_load
+    from pgloader_spark.plans.executor import ExecutionContext, execute_database
+
+    src = tmp_path / "partial.db"
+    con = sqlite3.connect(src)
+    con.execute(
+        "CREATE TABLE pix_o (id integer PRIMARY KEY, code text, status int)"
+    )
+    con.execute("CREATE UNIQUE INDEX ux_open ON pix_o(code) WHERE status = 1")
+    # code repeats only among the status=0 rows
+    con.executemany(
+        "INSERT INTO pix_o VALUES (?, ?, ?)",
+        [(1, "a", 1), (2, "b", 1), (3, "x", 0), (4, "x", 0), (5, "a", 0)],
+    )
+    con.commit()
+    con.close()
+    with PGConn(seeded) as c:
+        c.query("DROP TABLE IF EXISTS pix_o")
+    cmd = parse_load(
+        f"LOAD DATABASE FROM sqlite://{src} INTO {seeded}\n"
+        "  WITH include drop, create tables, create indexes\n"
+        "  INCLUDING ONLY TABLE NAMES MATCHING 'pix_o';\n"
+    )
+    reports = execute_database(
+        ExecutionContext(spark=spark, root_dir=str(tmp_path / "root")), cmd
+    )
+    assert {r.table: r.loaded for r in reports} == {"pix_o": 5}
+    with PGConn(seeded) as c:
+        _, rows = c.query(
+            "SELECT indexdef FROM pg_indexes WHERE tablename = 'pix_o'"
+            " AND indexname LIKE '%ux_open'"
+        )
+        assert len(rows) == 1
+        assert rows[0][0].startswith("CREATE UNIQUE INDEX")
+        assert rows[0][0].endswith("WHERE (status = 1)")
+        c.query("INSERT INTO pix_o VALUES (6, 'x', 0)")
+        with pytest.raises(PGError, match="23505"):
+            c.query("INSERT INTO pix_o VALUES (7, 'a', 1)")
+        c.query("DROP TABLE pix_o")
+
+
 def test_run_parallel_indexes_builds_concurrently(seeded):
     """The idx-kernel shape: N CREATE INDEX statements across
     concurrent connections, duplicate-tolerant per statement."""
@@ -2578,35 +2656,48 @@ def test_load_csv_with_reindex_spelling(seeded, spark, tmp_path):
         assert [r[0] for r in rows] == ["ri_people_name_idx", "ri_people_pkey"]
 
 
-def test_streaming_sink_exactly_once(seeded, spark, tmp_path):
-    """Exactly-once streaming into PG: (a) a live 2-micro-batch stream
-    lands every row exactly once; (b) REPLAYING an epoch (the
-    crash-between-sink-and-checkpoint case) is a no-op; (c) a partial
-    stage left by a mid-epoch crash is discarded on the retry."""
-    from pgloader_spark.sources.pg_live import write_pg_copy
-    from pgloader_spark.streaming.pg_sink import (
-        apply_epoch_exactly_once,
-        write_stream_pg_exactly_once,
+def _cdc_stream(stream_df, dsn, table, key_cols, checkpoint, **kw):
+    """A foreachBatch CDC stream: each micro-batch applies through
+    ``apply_pg_cdc(epoch_id=batch id)``, the epoch log that
+    ``--replicate`` commits with every segment."""
+    from pgloader_spark.sources.pg_live import apply_pg_cdc
+
+    def _sink(batch_df, epoch_id):
+        apply_pg_cdc(batch_df, dsn, table, key_cols, epoch_id=int(epoch_id), **kw)
+
+    return (
+        stream_df.writeStream.foreachBatch(_sink)
+        .option("checkpointLocation", checkpoint)
+        .start()
     )
+
+
+def test_streaming_sink_exactly_once(seeded, spark, tmp_path):
+    """Exactly-once streaming into PG through the CDC epoch log: (a) a
+    live 2-micro-batch stream lands every row exactly once; (b)
+    REPLAYING an epoch (the crash-between-sink-and-checkpoint case) is
+    a no-op; (c) a partial stage left by a mid-epoch crash is
+    discarded on the retry."""
+    from pgloader_spark.sources.pg_live import apply_pg_cdc, write_pg_copy
 
     with PGConn(seeded) as c:
         c.query("DROP TABLE IF EXISTS eo_sink")
         c.query("DROP TABLE IF EXISTS eo_sink__epochs")
-        c.query("CREATE TABLE eo_sink (id bigint, v text)")
+        c.query("CREATE TABLE eo_sink (id bigint PRIMARY KEY, v text)")
     src = tmp_path / "eo_in"
     src.mkdir()
-    (src / "b1.csv").write_text("1,a\n2,b\n")
+    (src / "b1.csv").write_text("1,a,I\n2,b,I\n")
     stream = (
         spark.readStream.format("csv")
-        .schema("id bigint, v string")
+        .schema("id bigint, v string, op string")
         .load(str(src))
     )
-    q = write_stream_pg_exactly_once(
-        stream, seeded, "eo_sink", str(tmp_path / "eo_ck"), n_writers=2
+    q = _cdc_stream(
+        stream, seeded, "eo_sink", ["id"], str(tmp_path / "eo_ck"), n_writers=2
     )
     try:
         q.processAllAvailable()
-        (src / "b2.csv").write_text("3,c\n")
+        (src / "b2.csv").write_text("3,c,I\n")
         q.processAllAvailable()
     finally:
         q.stop()
@@ -2614,28 +2705,31 @@ def test_streaming_sink_exactly_once(seeded, spark, tmp_path):
         _, rows = c.query("SELECT id, v FROM eo_sink ORDER BY id")
         assert rows == [("1", "a"), ("2", "b"), ("3", "c")]
         _, eps = c.query("SELECT COUNT(*) FROM eo_sink__epochs")
-        n_epochs = int(eps[0][0])
-        assert n_epochs >= 2
+        assert int(eps[0][0]) >= 2
 
     # (b) replay an already-committed epoch -> skipped, no duplicates
-    replay = spark.createDataFrame([(1, "a"), (2, "b")], "id bigint, v string")
-    assert apply_epoch_exactly_once(replay, 0, seeded, "eo_sink") == 0
+    replay = spark.createDataFrame(
+        [(1, "a", "I"), (2, "b", "I")], "id bigint, v string, op string"
+    )
+    assert apply_pg_cdc(replay, seeded, "eo_sink", ["id"], epoch_id=0) == (0, 0, 0)
     with PGConn(seeded) as c:
         _, rows = c.query("SELECT COUNT(*) FROM eo_sink")
         assert rows == [("3",)]
 
-    # (c) a partial stage from a mid-epoch crash is truncated on retry
+    # (c) a partial stage from a mid-epoch crash is dropped on retry
     with PGConn(seeded) as c:
-        c.query("DROP TABLE IF EXISTS eo_sink__stage")
-        c.query("CREATE TABLE eo_sink__stage (LIKE eo_sink)")
+        c.query("DROP TABLE IF EXISTS eo_sink__cdc_stage")
+        c.query(
+            "CREATE TABLE eo_sink__cdc_stage (LIKE eo_sink, \"__op\" text)"
+        )
     write_pg_copy(
-        spark.createDataFrame([(97, "zombie")], "id bigint, v string"),
+        spark.createDataFrame([(97, "zombie", "I")], "id bigint, v string, __op string"),
         seeded,
-        "eo_sink__stage",
+        "eo_sink__cdc_stage",
         n_writers=1,
     )
-    fresh = spark.createDataFrame([(4, "d")], "id bigint, v string")
-    assert apply_epoch_exactly_once(fresh, 99, seeded, "eo_sink") == 1
+    fresh = spark.createDataFrame([(4, "d", "I")], "id bigint, v string, op string")
+    assert apply_pg_cdc(fresh, seeded, "eo_sink", ["id"], epoch_id=99) == (1, 1, 0)
     with PGConn(seeded) as c:
         _, rows = c.query("SELECT id, v FROM eo_sink ORDER BY id")
         assert rows == [("1", "a"), ("2", "b"), ("3", "c"), ("4", "d")]
@@ -2687,9 +2781,6 @@ def test_streaming_cdc_exactly_once(seeded, spark, tmp_path):
     change stream (insert/update/delete) lands collapsed, and
     replaying an applied epoch is a no-op."""
     from pgloader_spark.sources.pg_live import apply_pg_cdc
-    from pgloader_spark.streaming.pg_sink import (
-        write_stream_pg_cdc_exactly_once,
-    )
 
     with PGConn(seeded) as c:
         c.query("DROP TABLE IF EXISTS cdcs_t")
@@ -2703,7 +2794,7 @@ def test_streaming_cdc_exactly_once(seeded, spark, tmp_path):
         .schema("id bigint, v string, op string, seq long")
         .load(str(src))
     )
-    q = write_stream_pg_cdc_exactly_once(
+    q = _cdc_stream(
         stream, seeded, "cdcs_t", ["id"],
         str(tmp_path / "cdc_ck"), seq_col="seq", n_writers=2,
     )

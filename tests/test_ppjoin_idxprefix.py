@@ -19,7 +19,7 @@ from __future__ import annotations
 
 import itertools
 
-from pgloader_spark.operators.dedup import token_jaccard_pairs
+from tests.fixtures.dedup_reference import token_jaccard_pairs
 
 
 def _brute(docs, threshold):

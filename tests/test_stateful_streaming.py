@@ -1,140 +1,7 @@
-"""Stateful streaming tests: session windows (batch + stream) and
+"""Stateful streaming tests: windowed rollups (batch + stream) and
 cross-micro-batch state with applyInPandasWithState."""
 
 from __future__ import annotations
-
-import pytest
-
-from pgloader_spark.streaming.stateful import (
-    running_counts_with_state,
-    session_window_agg,
-)
-
-
-def test_session_window_batch(spark):
-    rows = [
-        (1, "2024-01-01 10:00:00"),
-        (1, "2024-01-01 10:10:00"),
-        (1, "2024-01-01 11:30:00"),  # > 30 min gap -> new session
-        (2, "2024-01-01 10:05:00"),
-    ]
-    df = spark.createDataFrame(rows, "user_id long, ts string").selectExpr(
-        "user_id", "CAST(ts AS TIMESTAMP) AS ts"
-    )
-    out = session_window_agg(df, gap="30 minutes")
-    per_user = {}
-    for r in out.collect():
-        per_user.setdefault(r["user_id"], []).append(r["n_events"])
-    assert sorted(per_user[1]) == [1, 2]
-    assert per_user[2] == [1]
-
-
-def test_session_window_streaming(spark, tmp_path):
-    src = tmp_path / "in"
-    src.mkdir()
-    (src / "b1.csv").write_text(
-        "1,2024-01-01 10:00:00\n1,2024-01-01 10:10:00\n1,2024-01-01 14:00:00\n"
-    )
-    stream = (
-        spark.readStream.format("csv")
-        .schema("user_id long, ts timestamp")
-        .load(str(src))
-    )
-    out = session_window_agg(stream, gap="30 minutes", watermark="10 minutes")
-    q = (
-        out.writeStream.format("memory")
-        .queryName("sess_mem")
-        .outputMode("complete")
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        rows = spark.sql("SELECT * FROM sess_mem ORDER BY session_start").collect()
-        assert [r["n_events"] for r in rows] == [2, 1]
-    finally:
-        q.stop()
-
-
-def test_running_counts_state_across_batches(spark, tmp_path):
-    src = tmp_path / "in2"
-    src.mkdir()
-    (src / "b1.csv").write_text("1\n1\n2\n")
-    stream = spark.readStream.format("csv").schema("user_id long").load(str(src))
-    out = running_counts_with_state(stream)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("state_mem")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ck2"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        # second micro-batch: totals must accumulate on top of batch 1
-        (src / "b2.csv").write_text("1\n2\n2\n")
-        q.processAllAvailable()
-        rows = spark.sql(
-            "SELECT * FROM state_mem ORDER BY total_events"
-        ).collect()
-        latest = {}
-        for r in rows:
-            latest[r["user_id"]] = max(
-                latest.get(r["user_id"], 0), r["total_events"]
-            )
-        assert latest == {1: 3, 2: 3}
-    finally:
-        q.stop()
-
-
-def test_streaming_dedup_exact_across_batches(spark, tmp_path):
-    from pgloader_spark.streaming.stateful import streaming_dedup_exact
-
-    src = tmp_path / "din"
-    src.mkdir()
-    (src / "b1.csv").write_text(
-        "2024-01-01 10:00:00,hello world\n2024-01-01 10:01:00,hello world\n"
-        "2024-01-01 10:02:00,other doc\n"
-    )
-    stream = (
-        spark.readStream.format("csv")
-        .schema("ts timestamp, text string")
-        .load(str(src))
-    )
-    out = streaming_dedup_exact(stream, watermark="1 hour")
-    q = (
-        out.writeStream.format("memory")
-        .queryName("dedup_mem")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "dck"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        # a second micro-batch re-sends a batch-1 document inside the
-        # watermark window: state must swallow it
-        (src / "b2.csv").write_text(
-            "2024-01-01 10:03:00,hello world\n2024-01-01 10:04:00,brand new\n"
-        )
-        q.processAllAvailable()
-        texts = sorted(
-            r["text"] for r in spark.sql("SELECT text FROM dedup_mem").collect()
-        )
-        assert texts == ["brand new", "hello world", "other doc"]
-    finally:
-        q.stop()
-
-
-def test_streaming_dedup_batch_mode(spark):
-    from pgloader_spark.streaming.stateful import streaming_dedup_exact
-
-    df = spark.createDataFrame(
-        [("2024-01-01 10:00:00", "a"), ("2024-01-01 11:00:00", "a"),
-         ("2024-01-01 12:00:00", "b")],
-        "ts string, text string",
-    ).selectExpr("CAST(ts AS TIMESTAMP) ts", "text")
-    got = sorted(r["text"] for r in streaming_dedup_exact(df).collect())
-    assert got == ["a", "b"]
 
 
 def test_windowed_event_stats_stream(spark, tmp_path):
@@ -170,156 +37,6 @@ def test_windowed_event_stats_stream(spark, tmp_path):
         ]
     finally:
         q.stop()
-
-
-def test_streaming_dedup_incremental_matches_batch(spark):
-    """Bounded-input equivalence: the stream-static operator computes
-    the SAME flags as operators.dedup.incremental_dedup."""
-    from pgloader_spark.operators.dedup import (
-        exact_duplicates,
-        incremental_dedup,
-        minhash_bands,
-    )
-    from pgloader_spark.streaming.stateful import streaming_dedup_incremental
-
-    base = " ".join(f"tok{i}" for i in range(100))
-    old = spark.createDataFrame(
-        [(0, base), (2, "unrelated snapshot content " * 10)],
-        "doc_id long, text string",
-    )
-    new = spark.createDataFrame(
-        [(1, base), (3, base + " small tail"), (5, "fresh words " * 20)],
-        "doc_id long, text string",
-    )
-    digests = exact_duplicates(old).select("content_md5")
-    bands = minhash_bands(old).select("band_ix", "bucket").distinct()
-    got = {
-        r["doc_id"]: (r["exact_dup"], r["near_dup"], r["dup_any"])
-        for r in streaming_dedup_incremental(new, digests, bands).collect()
-    }
-    want = {
-        r["doc_id"]: (r["exact_dup"], r["near_dup"], r["dup_any"])
-        for r in incremental_dedup(old, new).collect()
-    }
-    assert got == want
-    assert got[1] == (True, True, True)
-    assert got[5] == (False, False, False)
-
-
-def test_streaming_dedup_incremental_live_stream(spark, tmp_path):
-    """Append-mode file stream across two micro-batches, zero state:
-    every arriving doc gets its flags against the frozen index."""
-    from pgloader_spark.operators.dedup import exact_duplicates, minhash_bands
-    from pgloader_spark.streaming.stateful import streaming_dedup_incremental
-
-    base = " ".join(f"w{i}" for i in range(80))
-    old = spark.createDataFrame([(0, base)], "doc_id long, text string")
-    digests = exact_duplicates(old).select("content_md5")
-    bands = minhash_bands(old).select("band_ix", "bucket").distinct()
-
-    src = tmp_path / "docs_in"
-    src.mkdir()
-    # CSV-safe: no commas in text
-    (src / "b1.csv").write_text(f'1,{base}\n5,totally new words here\n')
-    stream = (
-        spark.readStream.format("csv")
-        .schema("doc_id long, text string")
-        .load(str(src))
-    )
-    out = streaming_dedup_incremental(stream, digests, bands)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("incr_mem")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        (src / "b2.csv").write_text(f'7,{base}\n')  # dup arrives later
-        q.processAllAvailable()
-        rows = {
-            r["doc_id"]: (r["exact_dup"], r["dup_any"])
-            for r in spark.sql("SELECT * FROM incr_mem").collect()
-        }
-        assert rows[1] == (True, True)
-        assert rows[5] == (False, False)
-        assert rows[7] == (True, True)  # second micro-batch, same frozen index
-    finally:
-        q.stop()
-
-
-def test_streaming_curation_funnel_live(spark, tmp_path):
-    """Two micro-batches through all four gates: dedup within the
-    watermark, quality, language, deterministic sample."""
-    from pgloader_spark.operators.sampling import hash_bucket as _hb
-    from pgloader_spark.streaming.stateful import streaming_curation_funnel
-
-    # pick ids that pass the 50% hash gate deterministically
-    from pyspark.sql import functions as F
-
-    probe = spark.range(0, 50).select(
-        F.col("id"), (_hb(F.col("id"), seed=42) < 500_000).alias("in_")
-    )
-    passing = [r["id"] for r in probe.collect() if r["in_"]]
-    good_id, dup_id, other_id = passing[0], passing[1], passing[2]
-
-    good = " ".join(f"w{i}" for i in range(40))       # 40 tokens, varied
-    junk = "spam spam spam spam spam spam spam spam spam spam spam spam"
-
-    src = tmp_path / "stream_in"
-    src.mkdir()
-    (src / "b1.csv").write_text(
-        f"2024-01-01 10:00:00,{good_id},{good},en\n"
-        f"2024-01-01 10:01:00,{dup_id},{good},en\n"    # dup of good (same text)
-        f"2024-01-01 10:02:00,{other_id},{junk},en\n"  # repetition-gated
-    )
-    stream = (
-        spark.readStream.format("csv")
-        .schema("ts timestamp, doc_id long, text string, lang string")
-        .load(str(src))
-    )
-    out = streaming_curation_funnel(stream)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("funnel_mem")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "fck"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        # second batch: re-send the same text (inside watermark -> dropped)
-        (src / "b2.csv").write_text(
-            f"2024-01-01 10:03:00,{other_id + 100},{good},en\n"
-        )
-        q.processAllAvailable()
-        rows = spark.sql("SELECT doc_id FROM funnel_mem").collect()
-        assert {r["doc_id"] for r in rows} == {good_id}
-    finally:
-        q.stop()
-
-
-def test_streaming_curation_funnel_batch_equivalence(spark):
-    """Bounded input: the streaming operator's survivors carry the
-    same gate semantics as the batch funnel's final stage."""
-    from pgloader_spark.streaming.stateful import streaming_curation_funnel
-
-    good = " ".join(f"tok{i}" for i in range(30))
-    df = spark.createDataFrame(
-        [
-            ("2024-01-01 10:00:00", 3, good, "en"),
-            ("2024-01-01 10:01:00", 7, good, "en"),       # exact dup
-            ("2024-01-01 10:02:00", 11, good, "fr"),      # lang-gated
-            ("2024-01-01 10:03:00", 13, "too short", "en"),  # quality-gated
-        ],
-        "ts string, doc_id long, text string, lang string",
-    ).selectExpr("CAST(ts AS TIMESTAMP) ts", "doc_id", "text", "lang")
-    rows = streaming_curation_funnel(df).collect()
-    ids = {r["doc_id"] for r in rows}
-    # 3 survives iff its hash-sample gate passes; 7 deduped; 11/13 gated
-    assert 7 not in ids and 11 not in ids and 13 not in ids
-    assert all(r["g_quality"] and r["g_lang"] for r in rows)
 
 
 def test_checkpoint_restart_exactly_once(spark, tmp_path):
@@ -373,152 +90,6 @@ def test_checkpoint_restart_exactly_once(spark, tmp_path):
     assert texts.count("gamma") == 1
     assert texts.count("alpha") == 1
     assert rows.count() == 3
-
-
-def test_streaming_corpus_stats_matches_batch_card(spark, tmp_path):
-    """Two micro-batches of documents -> the final per-language card
-    equals the batch aggregation over the union, and the HLL
-    distinct-source estimate is BIT-EQUAL to the batch hll_distinct
-    (register max-merge is order-invariant)."""
-    from pyspark.sql import functions as F
-
-    from pgloader_spark.operators.sketches import hll_distinct
-    from pgloader_spark.operators.text import token_count
-    from pgloader_spark.streaming.stateful import streaming_corpus_stats
-
-    src = tmp_path / "docs_in"
-    src.mkdir()
-    (src / "b1.csv").write_text(
-        "en,s0,alpha beta gamma\n"
-        "en,s1,one two\n"
-        "fr,s0,un deux trois quatre\n"
-    )
-    stream = (
-        spark.readStream.format("csv")
-        .schema("lang string, source string, text string")
-        .load(str(src))
-    )
-    out = streaming_corpus_stats(stream)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("card_mem")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "cck"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        (src / "b2.csv").write_text(
-            "en,s2,x y z w\n"
-            "en,s1,repeat source here\n"
-            "fr,s3,cinq\n"
-        )
-        q.processAllAvailable()
-        # last emitted row per language = the running card
-        rows = spark.sql(
-            "SELECT * FROM card_mem"
-        ).collect()
-        latest = {}
-        for r in rows:  # memory sink appends in batch order
-            latest[r["lang"]] = r
-    finally:
-        q.stop()
-
-    batch = spark.createDataFrame(
-        [
-            ("en", "s0", "alpha beta gamma"),
-            ("en", "s1", "one two"),
-            ("fr", "s0", "un deux trois quatre"),
-            ("en", "s2", "x y z w"),
-            ("en", "s1", "repeat source here"),
-            ("fr", "s3", "cinq"),
-        ],
-        "lang string, source string, text string",
-    )
-    expect = {
-        r["lang"]: r
-        for r in batch.groupBy("lang")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum(token_count("text")).alias("total_tokens"),
-            F.min(token_count("text")).alias("min_tokens"),
-            F.max(token_count("text")).alias("max_tokens"),
-        )
-        .collect()
-    }
-    est = {
-        r["lang"]: r["est_distinct"]
-        for r in hll_distinct(batch, "source", ["lang"]).collect()
-    }
-    for lang in ("en", "fr"):
-        got, want = latest[lang], expect[lang]
-        assert got["n_docs"] == want["n_docs"]
-        assert got["total_tokens"] == want["total_tokens"]
-        assert got["min_tokens"] == want["min_tokens"]
-        assert got["max_tokens"] == want["max_tokens"]
-        assert got["est_sources"] == est[lang]  # bit-equal sketch
-
-
-def test_streaming_corpus_stats_survives_restart(spark, tmp_path):
-    """Kill-and-restart recovery for the stateful corpus card: the
-    per-language state (running counts AND the 4096-byte HLL
-    registers) is restored from the checkpoint, so the post-restart
-    card equals the batch card over BOTH batches."""
-    from pyspark.sql import functions as F
-
-    from pgloader_spark.operators.sketches import hll_distinct
-    from pgloader_spark.streaming.stateful import streaming_corpus_stats
-
-    src = tmp_path / "card_ck_in"
-    out = tmp_path / "card_ck_out"
-    ck = tmp_path / "card_ck"
-    src.mkdir()
-    (src / "b1.csv").write_text("en,s0,alpha beta\nen,s1,gamma\n")
-
-    def start():
-        stream = (
-            spark.readStream.format("csv")
-            .schema("lang string, source string, text string")
-            .load(str(src))
-        )
-        return (
-            streaming_corpus_stats(stream)
-            .writeStream.format("parquet")
-            .option("path", str(out))
-            .option("checkpointLocation", str(ck))
-            .outputMode("append")
-            .start()
-        )
-
-    q = start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    # new docs arrive while the query is DOWN; restart from checkpoint
-    (src / "b2.csv").write_text("en,s2,delta epsilon zeta\n")
-    q2 = start()
-    try:
-        q2.processAllAvailable()
-    finally:
-        q2.stop()
-    rows = (
-        spark.read.parquet(str(out))
-        .filter(F.col("lang") == "en")
-        .orderBy(F.desc("n_docs"))
-        .collect()
-    )
-    assert rows, "restart produced no card row"
-    got = rows[0]  # the most-advanced card = the post-restart emission
-    assert got["n_docs"] == 3  # state carried batch 1's two docs
-    assert got["total_tokens"] == 2 + 1 + 3
-    assert got["min_tokens"] == 1 and got["max_tokens"] == 3
-    batch = spark.createDataFrame(
-        [("en", "s0"), ("en", "s1"), ("en", "s2")], "lang string, source string"
-    )
-    want = hll_distinct(batch, "source", ["lang"]).collect()[0]["est_distinct"]
-    assert got["est_sources"] == want  # registers survived the restart
 
 
 def test_streaming_budget_admission_across_batches(spark, tmp_path):

@@ -144,7 +144,7 @@ def test_register_transform_plugin_through_dsl(spark, tmp_path):
         TRANSFORMS,
         load_plugin_file,
     )
-    from pgloader_spark.plans.executor import run_command_text
+    from tests.fixtures.commands import run_command_text
 
     plugin = tmp_path / "my_transforms.py"
     plugin.write_text(

@@ -4,8 +4,7 @@ verdict asked for (next-round #4: "a scale point that can witness
 parallelism"; every 8c/32c ratio at sf0.1 is ~1 because the corpus is
 17 MB).
 
-Construction (organic-growth rules, extending the committed
-probe_second_decade recipe from documents to every table):
+Construction (organic-growth rules, applied to every table):
 
 - documents: 10 shards, shard k rotates every [a-zA-Z0-9] char by k
   (disjoint vocabularies — preserves per-shard token/shingle/df
@@ -41,10 +40,26 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F  # noqa: E402
 
 from pgloader_spark.session import get_spark, read_table  # noqa: E402
-from tools.probe_second_decade import SRC, shift_text  # noqa: E402
 
+SRC = "/root/testdata/sf0.1"
 OFF = 10_000_000
 N_SHARDS = 10
+_ALNUM = "abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ0123456789"
+
+
+def _rot(s: str, k: int) -> str:
+    k %= len(s)
+    return s[k:] + s[:k]
+
+
+def shift_text(col, k: int):
+    """Rotate every [a-z], [A-Z] and [0-9] char of COL by K within its
+    class: shard K's vocabulary is disjoint from the others."""
+    if k == 0:
+        return col
+    return F.translate(
+        col, _ALNUM, _rot(_ALNUM[:26], k) + _rot(_ALNUM[26:52], k) + _rot(_ALNUM[52:], k)
+    )
 
 
 def _shards(df, cols_offset, text_cols=(), roll_col=None):
