@@ -22,6 +22,8 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from pgloader_spark.session import skip_unchanged_zip_rereads
+
 TRANSFORMS: dict[str, Callable[..., Column]] = {}
 
 
@@ -256,6 +258,7 @@ def hex_to_bytea(col: Column | str) -> Column:
 @F.pandas_udf(T.StringType())
 def _uuid_mixed_endian(s):  # type: ignore[no-untyped-def]
     """MSSQL uniqueidentifier: first 3 groups little-endian."""
+    skip_unchanged_zip_rereads()
     import pandas as pd
 
     def conv(b):  # bytes | None -> str | None

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from pgloader_spark.functions.transforms import get_transform
 from pgloader_spark.parsers.dateformat import pg_to_spark_datetime_format
+from pgloader_spark.session import skip_unchanged_zip_rereads
 
 
 def col_ref(name: str) -> Column:
@@ -114,6 +115,7 @@ class Projection:
             cols = [f_.name for f_ in schema.fields]
 
             def run(batches):
+                skip_unchanged_zip_rereads()
                 for pdf in batches:
                     out = []
                     for rec in pdf.to_dict("records"):

@@ -1,16 +1,16 @@
 """MSSQL filtered-index WHERE-clause -> PostgreSQL syntax.
 
 Re-expresses ``src/sources/mssql/mssql-index-filters.lisp:9-185``: a
-small predicate grammar — comparisons (``= < > <= >= <>``), ``IS
-NULL`` / ``IS NOT NULL``, ``IN (...)``, ``BETWEEN``, ``AND`` / ``OR``,
-bracketed ``[col]`` and double-quoted ``"col"`` identifiers (SQLite
-writes the latter), parenthesized groups, numeric literals (a unary
-minus included) and
-``N'...'``/``'...'`` string literals — translated token-wise to the PG
-spelling (identifiers double-quoted only when needed, N-strings
-unprefixed). ``execute_database`` runs it on each filtered index an
-MSSQL source reports, and on each SQLite partial index's ``WHERE``,
-so the target index keeps its predicate.
+small predicate grammar — comparisons (``= < > <= >= <>``),
+arithmetic (``+ - * / %``), ``IS NULL`` / ``IS NOT NULL``, ``IN
+(...)``, ``BETWEEN``, ``AND`` / ``OR``, bracketed ``[col]`` and
+double-quoted ``"col"`` identifiers (SQLite writes the latter),
+parenthesized groups, numeric literals (a ``-`` directly before a
+digit is the literal's sign) and ``N'...'``/``'...'`` string literals
+— translated token-wise to the PG spelling (identifiers double-quoted
+only when needed, N-strings unprefixed). ``execute_database`` runs it
+on each filtered index an MSSQL source reports, and on each SQLite
+partial index's ``WHERE``, so the target index keeps its predicate.
 """
 
 from __future__ import annotations
@@ -28,7 +28,7 @@ _TOKEN = re.compile(
   | (?P<bracket>\[[^\]]+\])
   | (?P<quoted>"(?:[^"]|"")+")
   | (?P<number>-?\d+(?:\.\d+)?)
-  | (?P<op><=|>=|<>|!=|=|<|>|\(|\)|,)
+  | (?P<op><=|>=|<>|!=|=|<|>|\(|\)|,|[-+*/%])
   | (?P<word>[A-Za-z_][A-Za-z0-9_]*)
     """,
     re.VERBOSE,

@@ -20,6 +20,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pgloader_spark.session import skip_unchanged_zip_rereads
+
 COPY_NULL = r"\N"
 
 
@@ -79,12 +81,13 @@ def _decode_full_udf():
 
         return pat.sub(sub, s)
 
+    def decode(col):
+        skip_unchanged_zip_rereads()
+        return col.map(lambda v: one(v) if isinstance(v, str) else v)
+
     # no type hints: `from __future__ import annotations` stringifies
     # them and pyspark's hint introspection can't resolve the names
-    return pandas_udf(
-        lambda col: col.map(lambda v: one(v) if isinstance(v, str) else v),
-        "string",
-    )
+    return pandas_udf(decode, "string")
 
 
 def read_copy_text(spark: SparkSession, path: str, opts: CopyOptions) -> DataFrame:

@@ -36,6 +36,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from pgloader_spark.session import skip_unchanged_zip_rereads
+
 ROWS_PER_RANGE = 10_000  # *rows-per-range*, src/params.lisp:142
 
 
@@ -181,6 +183,7 @@ def read_ranges(
     names = schema.names
 
     def run(batches):
+        skip_unchanged_zip_rereads()
         import pandas as pd
 
         with connect() as conn:

@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from pgloader_spark.casting import CastEngine, SourceField
+from pgloader_spark.session import skip_unchanged_zip_rereads
 from pgloader_spark.sources.jdbc import (
     LiveSource,
     attach_mysql_comments,
@@ -590,15 +591,20 @@ def _copy_batch(
     """COPY one batch inside the partition's transaction; returns
     (rows loaded, [(rejected line, error)]).
 
-    Each COPY attempt runs under a savepoint.  Fail-fast (``isolate``
-    false) re-raises the first error, so the partition commits nothing.
-    Isolating rolls back to the savepoint and runs the reference's
-    retry-batch logic (src/pg-copy/retry-batch.lisp): when the server
-    annotates the error with ``line N`` (COPY parse errors do), drop
-    exactly that row and retry; when it does not (FK violations —
-    GitHub issue #1333, test/fk-reject.load), bisect the batch until
-    single rows isolate.
+    Fail-fast (``isolate`` false) sends the COPY alone: its first
+    error aborts the whole partition transaction, so the partition
+    commits nothing and a savepoint would buy nothing.  Isolating runs
+    each COPY attempt under a savepoint, rolls back to it on error and
+    runs the reference's retry-batch logic
+    (src/pg-copy/retry-batch.lisp): when the server annotates the
+    error with ``line N`` (COPY parse errors do), drop exactly that
+    row and retry; when it does not (FK violations — GitHub issue
+    #1333, test/fk-reject.load), bisect the batch until single rows
+    isolate.
     """
+    if not isolate:
+        conn.copy_in(stmt, [("\n".join(lines) + "\n").encode("utf-8")])
+        return len(lines), []
     import re as _re
 
     loaded = 0
@@ -610,8 +616,6 @@ def _copy_batch(
         try:
             conn.copy_in(stmt, [("\n".join(part) + "\n").encode("utf-8")])
         except PGError as e:
-            if not isolate:
-                raise
             # released after the rollback, so retries never nest
             conn.query("ROLLBACK TO SAVEPOINT batch; RELEASE SAVEPOINT batch")
             m = _re.search(r"line (\d+)", getattr(e, "context", "") or "")
@@ -737,6 +741,7 @@ def write_pg_copy(
     isolate = reject_dir is not None
 
     def sink(batches: Iterator) -> Iterator:
+        skip_unchanged_zip_rereads()
         import pandas as pd  # noqa: PLC0415
 
         it = iter(batches)

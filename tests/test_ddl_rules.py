@@ -48,6 +48,15 @@ def test_translate_unary_minus():
     assert translate_index_filter("[n] IN (-1, 2)") == "n IN (-1, 2)"
 
 
+def test_translate_arithmetic():
+    """An arithmetic predicate keeps its filtered index: before, the
+    tokenizer stopped at the operator and the index was skipped."""
+    assert translate_index_filter("([a]+[b])>(0)") == "(a + b) > 0"
+    assert translate_index_filter("([qty]*(2))>=(10)") == "(qty * 2) >= 10"
+    assert translate_index_filter("([a]-[b])<>(0)") == "(a - b) <> 0"
+    assert translate_index_filter("([a]/(2))>([b]%(3))") == "(a / 2) > (b % 3)"
+
+
 def test_translate_double_quoted_identifier():
     """SQLite's partial-index predicates quote identifiers the SQL way."""
     assert translate_index_filter('"Status" = 1', str.lower) == "status = 1"

@@ -2537,6 +2537,58 @@ def test_write_pg_copy_connection_drop_mid_partition_is_exactly_once(
     assert not os.path.exists(tmp_path / "rej")  # nothing was rejected
 
 
+class _RecordingConn:
+    """A connection stub that records every statement ``_copy_batch``
+    sends; a COPY payload holding BAD fails as the server would, with
+    the bad row's ``line N`` in the error context."""
+
+    def __init__(self):
+        self.sent: list[str] = []
+
+    def query(self, sql):
+        self.sent.append(sql)
+
+    def copy_in(self, stmt, chunks):
+        rows = b"".join(chunks).decode().splitlines()
+        self.sent.append(f"COPY {rows}")
+        if "BAD" in rows:
+            err = PGError("22P02 invalid input syntax")
+            err.context = f"COPY t, line {rows.index('BAD') + 1}"
+            raise err
+
+
+def test_copy_batch_fail_fast_sends_no_savepoints():
+    """Fail-fast rolls the whole partition transaction back on any
+    error, so its batch is the COPY alone; the isolating policy keeps
+    its savepoint per attempt and its rollback-and-retry."""
+    from pgloader_spark.sources.pg_live import _copy_batch
+
+    conn = _RecordingConn()
+    assert _copy_batch(conn, "COPY t FROM STDIN", ["1", "2"], False) == (2, [])
+    assert conn.sent == ["COPY ['1', '2']"]
+    conn = _RecordingConn()
+    with pytest.raises(PGError):
+        _copy_batch(conn, "COPY t FROM STDIN", ["1", "BAD"], False)
+    assert conn.sent == ["COPY ['1', 'BAD']"]
+
+    conn = _RecordingConn()
+    assert _copy_batch(conn, "COPY t FROM STDIN", ["1", "2"], True) == (2, [])
+    assert conn.sent == [
+        "SAVEPOINT batch", "COPY ['1', '2']", "RELEASE SAVEPOINT batch"
+    ]
+    conn = _RecordingConn()
+    loaded, rejects = _copy_batch(conn, "COPY t FROM STDIN", ["1", "BAD", "3"], True)
+    assert (loaded, [line for line, _ in rejects]) == (2, ["BAD"])
+    assert conn.sent == [
+        "SAVEPOINT batch",
+        "COPY ['1', 'BAD', '3']",
+        "ROLLBACK TO SAVEPOINT batch; RELEASE SAVEPOINT batch",
+        "SAVEPOINT batch",
+        "COPY ['1', '3']",
+        "RELEASE SAVEPOINT batch",
+    ]
+
+
 def test_tls_sslmode_require_and_verify(pg_dsn, tmp_path, monkeypatch):
     """Real TLS over the wire client: a self-signed server cert turns
     ssl=on via reload; sslmode=require completes the SSLRequest
