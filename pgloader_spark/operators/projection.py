@@ -17,7 +17,6 @@ from pyspark.sql import functions as F
 
 from pgloader_spark.functions.transforms import get_transform
 from pgloader_spark.parsers.dateformat import pg_to_spark_datetime_format
-from pgloader_spark.session import skip_unchanged_zip_rereads
 
 
 def col_ref(name: str) -> Column:
@@ -79,26 +78,10 @@ class ColumnSpec:
 
 @dataclass
 class Projection:
-    """Field->column projection with an optional preprocessor hook.
-
-    ``process_fn`` re-expresses the reference's per-source
-    pre-processor slot (``src/sources/common/api.lisp:26-27``,
-    default-nothing ``methods.lisp:11-13``) in two Spark-native
-    flavors:
-
-    - ``process_fn``: DataFrame -> DataFrame, runs BEFORE projection.
-      The declarative fast path — arbitrary Column logic, Catalyst
-      keeps optimizing through it.
-    - ``process_row_fn``: row-dict -> row-dict | None, applied via
-      Arrow-batched ``mapInPandas`` (None drops the row).  The
-      faithful per-row escape hatch for logic that genuinely cannot
-      be a Column expression; schema must be preserved.
-    """
+    """Field->column projection."""
 
     fields: list[FieldSpec] = field(default_factory=list)
     columns: list[ColumnSpec] = field(default_factory=list)
-    process_fn: object | None = None  # Callable[[DataFrame], DataFrame]
-    process_row_fn: object | None = None  # Callable[[dict], dict | None]
 
     def field_expr(self, name: str) -> Column:
         for f_ in self.fields:
@@ -106,31 +89,7 @@ class Projection:
                 return f_.expr()
         return F.col(name)
 
-    def preprocess(self, df: DataFrame) -> DataFrame:
-        if self.process_fn is not None:
-            df = self.process_fn(df)
-        if self.process_row_fn is not None:
-            fn = self.process_row_fn
-            schema = df.schema
-            cols = [f_.name for f_ in schema.fields]
-
-            def run(batches):
-                skip_unchanged_zip_rereads()
-                for pdf in batches:
-                    out = []
-                    for rec in pdf.to_dict("records"):
-                        r2 = fn(rec)
-                        if r2 is not None:
-                            out.append([r2.get(c) for c in cols])
-                    import pandas as pd
-
-                    yield pd.DataFrame(out, columns=cols)
-
-            df = df.mapInPandas(run, schema=schema)
-        return df
-
     def apply(self, df: DataFrame) -> DataFrame:
-        df = self.preprocess(df)
         if not self.columns:
             # identity fast path (project-fields.lisp:39-44)
             if not self.fields:

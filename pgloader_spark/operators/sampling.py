@@ -94,7 +94,6 @@ def shuffle_shard_plan(
     n_shards: int,
     seed: int = 0,
     id_col: str = "doc_id",
-    shard_partitions: int | None = None,
 ) -> DataFrame:
     """Seeded deterministic global shuffle for training export:
     adds (shard int, pos long) such that reading shard files in pos
@@ -117,21 +116,12 @@ def shuffle_shard_plan(
     scale with the corpus (pick corpus_bytes / ~256 MB, the shard
     file size downstream loaders want anyway; at 100 TB that is
     ~400k shards, each a bounded task).  There is deliberately NO
-    corpus-wide sort and no driver state.
-
-    ``shard_partitions``: when a writer will immediately repartition
-    the plan on the shard column anyway (a sharded export), pass the
-    target partition count here — the explicit repartition happens
-    BEFORE the window, whose required clustering it already
-    satisfies, so the corpus shuffles ONCE instead of window-then-
-    repartition shuffling it twice (r7 review)."""
+    corpus-wide sort and no driver state."""
     if n_shards <= 0:
         raise ValueError(f"n_shards must be > 0, got {n_shards}")
     out = df.withColumn(
         "shard", hash_bucket(id_col, seed=seed, buckets=n_shards).cast("int")
     )
-    if shard_partitions:
-        out = out.repartition(shard_partitions, F.col("shard"))
     w = W.partitionBy("shard").orderBy("__ord", id_col)
     return (
         out.withColumn("__ord", hash_u48(id_col, seed=seed + 1))

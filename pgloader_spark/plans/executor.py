@@ -36,7 +36,7 @@ from pgloader_spark.sources.copytext import CopyOptions, read_copy_text
 from pgloader_spark.sources.csv import CsvOptions, read_csv, read_inline
 from pgloader_spark.sources.db3 import read_dbf
 from pgloader_spark.sources.files import PathSpec, expand_spec
-from pgloader_spark.sources.fixed import FixedOptions, read_fixed
+from pgloader_spark.sources.fixed import FixedOptions, read_fixed, slice_fixed
 from pgloader_spark.sources.ixf import read_ixf
 from pgloader_spark.sources.jdbc import is_pg_uri, open_live_source
 
@@ -254,18 +254,9 @@ def read_source(spark: SparkSession, cmd: LoadCommand) -> DataFrame:
             lines = [
                 (ln,) for ln in cmd.inline_data.split("\n") if ln.strip("\r")
             ]
-            text = spark.createDataFrame(lines, "value string")
-            exprs = []
-            for f_ in fopts.fields:
-                c = F.substring(F.col("value"), f_.start + 1, f_.length)
-                if f_.trim in ("left", "both"):
-                    c = F.ltrim(c)
-                if f_.trim in ("right", "both"):
-                    c = F.rtrim(c)
-                if f_.null_if_blanks:
-                    c = F.when(c == "", F.lit(None)).otherwise(c)
-                exprs.append(c.alias(f_.name))
-            return text.select(*exprs)
+            return slice_fixed(
+                spark.createDataFrame(lines, "value string"), fopts
+            )
         return read_fixed(spark, _source_paths(cmd)[0], fopts)
     if kind == "copy":
         copts = CopyOptions(

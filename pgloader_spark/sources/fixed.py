@@ -48,7 +48,13 @@ def read_fixed(spark: SparkSession, path: str, opts: FixedOptions) -> DataFrame:
     Spark's ``substring`` already returns the in-bounds part, so no
     special casing is needed.
     """
-    text = spark.read.text(path)
+    return slice_fixed(spark.read.text(path), opts)
+
+
+def slice_fixed(text: DataFrame, opts: FixedOptions) -> DataFrame:
+    """Lines (one ``value`` string column) -> the fixed-width columns:
+    drop the first ``skip_lines`` lines, then one substring per field.
+    Shared by the file scan and inline ``FROM inline`` data."""
     value = F.col("value")
     if opts.skip_lines:
         text = (

@@ -14,7 +14,9 @@ Delivery is exactly-once end-to-end: the slot is PEEKED (not
 consumed), the apply transaction logs the batch's max commit LSN as
 its epoch, and only then is the slot advanced — a crash at any point
 replays the same LSN window, which the epoch log turns into a no-op
-before the cursor moves.
+before the cursor moves.  A source TRUNCATE splits the window: the
+ops before it apply, one epoch-logged ``TRUNCATE`` of the replicated
+targets it names runs, and the rest of the window applies after it.
 
 Scale shape: one replication slot is an inherently serial cursor
 (PostgreSQL's own constraint — parallelism comes from one slot per
@@ -100,10 +102,9 @@ def parse_test_decoding(data: str) -> dict | None:
     - TRUNCATE prints one line for the whole statement
       (``table s.t1, s.t2: TRUNCATE: ...``) — parsed as op ``T``
       with ``truncate: True``, display ``all_tables`` and lossless
-      ``tables`` (schema, table) pairs so table matching and the
-      apply path SEE it (pre-r8 it parsed to None, i.e. a source
-      truncate silently never reached the target; since r9 the
-      replicate loop REPLAYS it via window splitting).
+      ``tables`` (schema, table) pairs so the replicate loop SEES
+      it (pre-r8 it parsed to None, i.e. a source truncate silently
+      never reached the target) and replays it at a window split.
 
     Identifier lists honor PostgreSQL double-quoting: commas and
     dots inside quoted names don't split, and names come back
@@ -116,8 +117,8 @@ def parse_test_decoding(data: str) -> dict | None:
     if op == "TRUNCATE":
         # test_decoding emits one line for the whole statement:
         # ``table s.t1, s.t2: TRUNCATE: (no flags)`` — parse EVERY
-        # named table so the event can never slip past table matching
-        # (a silently dropped TRUNCATE is silent target divergence)
+        # named table so the event can never slip past the target
+        # mapping (a silently dropped TRUNCATE is silent divergence)
         parsed_tabs = [
             _split_qualified(t) for t in _split_table_list(head)
         ]
@@ -129,7 +130,7 @@ def parse_test_decoding(data: str) -> dict | None:
             "cols": {},
             "truncate": True,
             # display strings (unquoted); ``tables`` carries the
-            # lossless (schema, table) pairs matching operates on
+            # lossless (schema, table) pairs the target mapping reads
             "all_tables": [f"{s}.{t}" if s else t for s, t in parsed_tabs],
             "tables": [(s or "public", t) for s, t in parsed_tabs],
             "flags": payload.strip(),
@@ -249,68 +250,40 @@ def advance_cdc_slot(dsn: str, slot: str, upto_lsn: str) -> None:
         )
 
 
-def _table_matches(change: dict, want: str) -> bool:
-    """True when a parsed change belongs to ``want`` — matched on
-    schema AND table when ``want`` is qualified (``s.t``), on table
-    name alone otherwise (the unqualified form conflates same-named
-    tables across schemas; qualify when the source has more than
-    ``public``).  A TRUNCATE event lists every table of its statement
-    and matches if ANY of them does.  Table names CONTAINING dots
-    (quoted on the source) also match — either bare (``dot.ted``) or
-    schema-qualified (``other.dot.ted``), tried as exact strings
-    after the conventional last-dot split.  This predicate answers
-    "could ``want`` claim this change under EITHER interpretation"
-    — use :func:`_select_changes` to pick one table's stream: it
-    applies the conventional-first precedence and refuses ambiguous
-    windows (r9 advice) instead of interleaving two tables."""
-    if change.get("truncate"):
-        return any(_pair_claimed(s, t, want) for s, t in change["tables"])
-    return _pair_claimed(change["schema"], change["table"], want)
+def _claims(changes: list[dict], want: str):
+    """Resolve ONCE per window which source table ``want`` names, as a
+    predicate on (schema, table).  Matched on schema AND table when
+    ``want`` is qualified (``s.t``), on table name alone otherwise (the
+    unqualified form conflates same-named tables across schemas;
+    qualify when the source has more than ``public``).
 
-
-def _pair_claimed(s: str, t: str, want: str) -> bool:
-    """Does ``want`` claim source table (schema ``s``, name ``t``)
-    under either the conventional last-dot or dotted-literal reading?"""
-    ws, _, wt = want.rpartition(".")
-    if t == wt and (not ws or s == ws):
-        return True
-    return t == want or f"{s}.{t}" == want
-
-
-def _select_changes(changes: list[dict], want: str) -> list[dict]:
-    """The changes belonging to ``want``, with dotted-name precedence
-    (r9 advice): the conventional last-dot reading (schema ``a``,
-    table ``b`` for ``want='a.b'``) wins; the dotted-literal reading
-    (a table literally named ``a.b``, quoted on the source) applies
-    ONLY when the conventional reading matches nothing in the window.
-    A window containing BOTH raises — silently interleaving two
-    distinct source tables into one target stream is the one
-    unacceptable outcome; the caller must schema-qualify the dotted
-    table (``schema.a.b``) or rename."""
+    Dotted-name precedence (r9 advice): the conventional last-dot
+    reading (schema ``a``, table ``b`` for ``want='a.b'``) wins; the
+    dotted-literal reading (a table literally named ``a.b``, or
+    ``s.a.b`` schema-qualified, quoted on the source) applies ONLY when
+    the conventional reading matches nothing in the window.  Both DML
+    events and the tables every TRUNCATE names count, over the WHOLE
+    window: a window containing BOTH readings raises — silently
+    interleaving two distinct source tables into one target stream is
+    the one unacceptable outcome; the caller must schema-qualify the
+    dotted table (``schema.a.b``) or rename."""
     ws, _, wt = want.rpartition(".")
 
     def conventional(s: str, t: str) -> bool:
         return t == wt and (not ws or s == ws)
 
     def literal(s: str, t: str) -> bool:
-        return t == want or f"{s}.{t}" == want
+        return not conventional(s, t) and (t == want or f"{s}.{t}" == want)
 
-    def pairs(c: dict) -> list[tuple[str, str]]:
-        if c.get("truncate"):
-            return list(c["tables"])
-        return [(c["schema"], c["table"])]
-
-    conv = [
-        c for c in changes if any(conventional(s, t) for s, t in pairs(c))
-    ]
-    lit = [
-        c
+    pairs = [
+        pair
         for c in changes
-        if any(
-            literal(s, t) and not conventional(s, t) for s, t in pairs(c)
+        for pair in (
+            c["tables"] if c.get("truncate") else [(c["schema"], c["table"])]
         )
     ]
-    if conv and lit:
+    lit = any(literal(s, t) for s, t in pairs)
+    if lit and any(conventional(s, t) for s, t in pairs):
         raise ValueError(
             f"requested table {want!r} is ambiguous in this change "
             f"window: it contains events for schema {ws!r} table "
@@ -319,22 +292,17 @@ def _select_changes(changes: list[dict], want: str) -> list[dict]:
             "one of them; refusing to interleave two source tables "
             "into one target stream"
         )
-    return conv or lit
+    return literal if lit else conventional
 
 
-def _changes_to_rows(
-    mine: list[dict],
-    col_names: list[str],
-    skip_unapplyable: bool = False,
-) -> list[tuple]:
+def _changes_to_rows(mine: list[dict], col_names: list[str]) -> list[tuple]:
     """Parsed changes -> (col..., op, seq) apply rows, re-sequenced.
 
     A PK-changing UPDATE (``old_key`` present) expands to DELETE(old
     identity) + INSERT(new tuple) — the upsert-by-key apply cannot
     move a row between keys in one op.  A ``(no-tuple-data)`` DELETE
     carries no key at all (source table has no replica identity) and
-    is unapplyable: raise with the remediation unless the caller opts
-    into dropping it.
+    is unapplyable: raise with the remediation.
 
     Mid-stream SCHEMA DRIFT (a column added on the source while the
     slot is live — test_decoding simply starts emitting it) raises
@@ -349,16 +317,14 @@ def _changes_to_rows(
     seq = 0
     for c in mine:
         if c.get("truncate"):
-            # replicate_pg_tables splits the window on truncates
-            # BEFORE building rows (r9: truncates replay via
-            # apply_pg_cdc(truncate_first=True) in their own
-            # epoch-logged sub-transactions); reaching this raise
-            # means a caller bypassed _split_on_truncate — stay loud
-            # rather than silently dropping the event.
+            # replicate_pg_tables splits the window at every truncate
+            # BEFORE building rows; reaching this raise means a caller
+            # bypassed _split_window_on_truncate — stay loud rather
+            # than silently dropping the event.
             raise ValueError(
                 f"TRUNCATE of {', '.join(c['all_tables'])} in the "
                 "change stream reached _changes_to_rows: split the "
-                "window first (_split_on_truncate, as "
+                "window first (_split_window_on_truncate, as "
                 "replicate_pg_tables does) — truncates cannot be "
                 "collapsed into the upsert row set"
             )
@@ -373,15 +339,13 @@ def _changes_to_rows(
                 "exactly-once), or re-snapshot the target"
             )
         if c.get("no_tuple_data"):
-            if skip_unapplyable:
-                continue
             raise ValueError(
                 f"unapplyable {c['op']} on {c['schema']}.{c['table']}: "
                 "the stream has (no-tuple-data) — the source table has "
                 "no replica identity, so its DELETE keys never reach "
                 "the slot.  ALTER TABLE ... REPLICA IDENTITY "
-                "DEFAULT (with a PK) or FULL on the source, recreate "
-                "the slot, or pass skip_unapplyable=True to drop these"
+                "DEFAULT (with a PK) or FULL on the source, and "
+                "recreate the slot"
             )
         old = c.get("old_key")
         if old is not None:
@@ -396,141 +360,20 @@ def _changes_to_rows(
     return rows
 
 
-def _split_on_truncate(
-    mine: list[dict], window_epoch: int, want: str | None = None
-) -> list[tuple[bool, bool, list[dict], int]]:
-    """Split one table's window at TRUNCATE events into apply
-    segments: [(truncate_first, restart_identity, ops, epoch_id)].
-
-    Each segment becomes its own epoch-logged ``apply_pg_cdc``
-    transaction (the TRUNCATE runs inside it, before the ops), so the
-    sequence replays exactly-once: a crash between segments re-peeks
-    the same window, completed segments' epochs no-op, the rest apply.
-    Epoch ids are replay-stable — the boundary truncate's own LSN for
-    non-final segments, the window's commit LSN (``window_epoch``,
-    the same id the truncate-free path logs) for the final one.
-
-    CASCADE truncates (r10, r9 verdict ask #4): when ``want`` is
-    given and EVERY table the cascade reached is claimed by it (the
-    self-referencing-FK case — the decoded event lists the full
-    reached set), the cascade collapses to a plain truncate of this
-    one table and replays in-segment.  Any reach beyond ``want``
-    raises: the target's FK graph may differ from the source's, so
-    cascading there could truncate tables this pipeline does not
-    replicate — loud > lossy.  Multi-table in-set cascades are
-    replayed one level up by ``replicate_pg_tables``, which knows the
-    whole replicated set and hoists them out of per-table windows
-    before this splitter runs.
-    """
-    segs: list[tuple[bool, bool, list[dict], int]] = []
-    trunc_first, restart = False, False
-    ops: list[dict] = []
-    for c in mine:
-        if not c.get("truncate"):
-            ops.append(c)
-            continue
-        flags = c.get("flags", "")
-        if "cascade" in flags and not (
-            want is not None
-            and all(_pair_claimed(s, t, want) for s, t in c["tables"])
-        ):
-            raise ValueError(
-                f"CASCADE TRUNCATE of {', '.join(c['all_tables'])} in "
-                "the change stream reaches beyond the replicated "
-                "table set: replaying it on the target could cascade "
-                "into tables this pipeline does not replicate (the "
-                "target's FK graph may differ).  Replicate the whole "
-                "reached set (replicate_pg_tables replays in-set "
-                "cascades), or TRUNCATE the target table(s) yourself "
-                "and advance the slot past this window "
-                "(advance_cdc_slot), or re-snapshot the target"
-            )
-        # close the running segment at this truncate's LSN
-        if ops or trunc_first:
-            segs.append((trunc_first, restart, ops, lsn_to_int(c["lsn"])))
-        trunc_first, restart = True, "restart_seqs" in flags
-        ops = []
-    segs.append((trunc_first, restart, ops, window_epoch))
-    # an empty leading segment (window starts with a truncate) is a
-    # no-op: drop it rather than spend a transaction
-    return [s for s in segs if s[0] or s[2]]
-
-
-def _check_unmatched(changes: list[dict], wants: list[str]) -> None:
-    """Refuse to advance past events no requested table claims."""
-    stray = sorted(
-        {
-            f"{c['schema']}.{c['table']}"
-            for c in changes
-            if not any(_table_matches(c, w) for w in wants)
-        }
-    )
-    if stray:
-        raise ValueError(
-            "slot window contains events for unrequested tables "
-            f"{stray}; advancing would discard them permanently.  "
-            "Replicate them too (replicate_pg_tables), or pass "
-            "strict=False to discard deliberately"
-        )
-
-
-def _apply_table_window(
-    spark: SparkSession,
-    dst_dsn: str,
-    table: str,
-    key_cols: list[str],
-    mine: list[dict],
-    window_epoch: int,
-    col_names: list[str],
-    n_writers: int | None,
-    skip_unapplyable: bool,
-    want: str | None = None,
-) -> int:
-    """Apply one table's change window, splitting on TRUNCATE events
-    (r9, r8 verdict ask #4): each segment — the TRUNCATE (issued on
-    the target inside the transaction, before the ops) plus the ops
-    up to the next boundary — is one epoch-logged ``apply_pg_cdc``
-    call, so replay after a crash skips completed segments and the
-    whole window stays exactly-once.  Returns data rows applied
-    (upserts + deletes; a truncate itself is not counted).  ``want``
-    (the source-table filter) lets the splitter accept cascades fully
-    contained in this one table (r10)."""
-    from pgloader_spark.sources.pg_live import apply_pg_cdc
-
-    schema = (
-        ", ".join(f"`{n}` string" for n in col_names) + ", op string, seq long"
-    )
-    total = 0
-    for trunc, restart, ops, seg_epoch in _split_on_truncate(
-        mine, window_epoch, want
-    ):
-        rows = _changes_to_rows(ops, col_names, skip_unapplyable)
-        df = spark.createDataFrame(rows, schema)
-        total += sum(
-            apply_pg_cdc(
-                df, dst_dsn, table, key_cols=key_cols, seq_col="seq",
-                n_writers=n_writers, epoch_id=seg_epoch,
-                truncate_first=trunc, truncate_restart_identity=restart,
-            )[1:]
-        )
-    return total
-
-
-def _split_window_on_cascade(
+def _split_window_on_truncate(
     changes: list[dict],
 ) -> list[tuple[list[dict], dict | None]]:
-    """Split the WHOLE window (all tables) at multi-table-capable
-    CASCADE truncate boundaries: [(chunk_changes, cascade_event)],
-    the final chunk paired with None.  Per-table apply mechanics
-    cannot replay a cascade that spans tables (each table's epoch-
-    logged transaction truncates only its own target, and PostgreSQL
+    """Split the WHOLE window (all tables) at every TRUNCATE event:
+    [(chunk_changes, truncate_event)], the final chunk paired with
+    None.  A truncate cannot ride inside one table's apply: PostgreSQL
     refuses to truncate an FK-referenced table outside a single
-    statement), so cascades hoist to window level: apply every
-    table's pre-boundary ops, run ONE multi-table TRUNCATE, continue."""
+    statement that names its referrers too (``TRUNCATE p, c``), so
+    truncates hoist to window level: apply every table's pre-boundary
+    ops, run ONE multi-table TRUNCATE, continue."""
     chunks: list[tuple[list[dict], dict | None]] = []
     cur: list[dict] = []
     for c in changes:
-        if c.get("truncate") and "cascade" in c.get("flags", ""):
+        if c.get("truncate"):
             chunks.append((cur, c))
             cur = []
         else:
@@ -539,49 +382,51 @@ def _split_window_on_cascade(
     return chunks
 
 
-def _cascade_targets(
-    event: dict, tables: dict, src_names: dict
-) -> list[str]:
-    """Map every source table a CASCADE reached to its TARGET table;
-    raise when the reach leaves the replicated set (r9 verdict ask
-    #4: the decoded TRUNCATE event lists the full reached closure, so
-    in-set-ness is checkable exactly, per event, with no separate FK
-    introspection)."""
-    out: list[str] = []
-    unclaimed: list[str] = []
-    for s, t in event["tables"]:
-        for target in tables:
-            if _pair_claimed(s, t, src_names.get(target, target)):
-                if target not in out:
-                    out.append(target)
-                break
-        else:
-            unclaimed.append(f"{s}.{t}")
-    if unclaimed:
-        raise ValueError(
-            f"CASCADE TRUNCATE of {', '.join(event['all_tables'])} "
-            f"reaches tables outside the replicated set: {unclaimed}. "
-            "Replaying it would require truncating tables this "
-            "pipeline does not manage.  Replicate them too, or "
-            "TRUNCATE the target tables yourself and advance the slot "
-            "past this window (advance_cdc_slot), or re-snapshot the "
-            "targets"
-        )
-    return out
+def _truncate_targets(event: dict, claims: dict) -> list[str]:
+    """Map the source tables a TRUNCATE event names to their TARGET
+    tables (``claims``: target -> its window's ``_claims`` predicate,
+    in ``tables`` order).  A plain TRUNCATE skips source tables
+    outside the replicated set.  A CASCADE raises when its reach
+    leaves the set (r9 verdict ask #4): the decoded event lists the
+    full reached closure, so in-set-ness is checkable exactly, per
+    event, with no separate FK introspection — and cascading on the
+    target could reach tables this pipeline does not replicate (the
+    target's FK graph may differ)."""
+    pairs = event["tables"]
+    if "cascade" in event.get("flags", ""):
+        unclaimed = [
+            f"{s}.{t}"
+            for s, t in pairs
+            if not any(claimed(s, t) for claimed in claims.values())
+        ]
+        if unclaimed:
+            raise ValueError(
+                f"CASCADE TRUNCATE of {', '.join(event['all_tables'])} "
+                f"reaches tables outside the replicated set: {unclaimed}. "
+                "Replaying it would require truncating tables this "
+                "pipeline does not manage.  Replicate them too, or "
+                "TRUNCATE the target tables yourself and advance the "
+                "slot past this window (advance_cdc_slot), or "
+                "re-snapshot the targets"
+            )
+    return [
+        target
+        for target, claimed in claims.items()
+        if any(claimed(s, t) for s, t in pairs)
+    ]
 
 
-def _apply_cascade_truncate(
+def _apply_truncate(
     dst_dsn: str, targets: list[str], restart: bool, epoch: int
 ) -> None:
-    """Replay an in-set CASCADE truncate as ONE multi-table TRUNCATE
-    statement on the target, exactly-once via a dedicated epoch log
-    (``<first-target>__truncate_epochs`` — separate from the segment
-    logs because the boundary LSN doubles as the pre-boundary
-    segments' epoch id).  One statement, not per-table: PostgreSQL
-    allows truncating FK-linked tables only together, and if some
-    OUT-of-set target table references one of these, the target
-    raises loudly here — exactly the divergent-FK-graph case the
-    refusal protects."""
+    """Replay a source TRUNCATE as ONE multi-table TRUNCATE statement
+    on the target, exactly-once via a dedicated epoch log
+    (``<first-target>__truncate_epochs`` — separate from the apply
+    logs because the boundary LSN doubles as the pre-boundary ops'
+    epoch id).  One statement, not per-table: PostgreSQL allows
+    truncating FK-linked tables only together, and if some OUT-of-set
+    target table references one of these, the target raises loudly
+    here — exactly the divergent-FK-graph case the refusal protects."""
     from pgloader_spark.sources.pg_live import quote_qualified, sibling_table
 
     targets = sorted(targets)
@@ -610,61 +455,52 @@ def replicate_pg_tables(
     slot: str,
     dst_dsn: str,
     tables: dict[str, list[str]],  # target table -> key columns
-    n_writers: int | None = None,
     src_tables: dict[str, str] | None = None,  # target -> source name
-    strict: bool = False,
-    skip_unapplyable: bool = False,
 ) -> dict[str, int]:
     """One slot, N tables: peek the window ONCE, apply each table's
     changes in its own epoch-logged transaction, advance the cursor
     once at the end.  A crash between table applies replays the
     window; per-table epoch logs skip the already-committed tables
-    and re-apply the rest — still exactly-once per table.
+    and re-apply the rest — still exactly-once per table.  Returns
+    data rows applied per target (upserts + deletes; a truncate
+    itself is not counted).
 
-    CASCADE truncates replay when the reached set is FK-closed within
-    the replicated set (r10, r9 verdict ask #4): the window splits at
-    each in-set cascade boundary — every table's pre-boundary ops
-    apply in per-table epoch-logged segments (epoch = boundary LSN),
-    then ONE multi-table TRUNCATE runs in its own epoch-logged
-    transaction, then the tail applies (epoch = window commit LSN) —
-    so crash-replay at any point stays exactly-once.  A cascade
-    reaching any table outside the set still raises before anything
+    Source TRUNCATEs replay at window level: the window splits at
+    every TRUNCATE event — every table's pre-boundary ops apply under
+    epoch = the truncate's LSN, then ONE epoch-logged ``TRUNCATE`` of
+    the in-set targets runs, then the tail applies (epoch = window
+    commit LSN) — so crash-replay at any point stays exactly-once.  A
+    CASCADE reaching any table outside the set raises before anything
     applies.
 
     Events for tables outside ``tables`` are DISCARDED when the
-    cursor advances; ``strict=True`` raises instead (one slot should
-    drive exactly the table set it replicates)."""
-    from pgloader_spark.sources.pg_live import introspect_pg
+    cursor advances (one slot should drive exactly the table set it
+    replicates)."""
+    from pgloader_spark.sources.pg_live import apply_pg_cdc, introspect_pg
 
     changes, max_lsn = peek_cdc_changes(src_dsn, slot)
     applied: dict[str, int] = {}
     if max_lsn is None:
         return applied
     src_names = src_tables or {}
-    if strict:
-        _check_unmatched(
-            changes, [src_names.get(t, t) for t in tables]
-        )
     applied = {t: 0 for t in tables}
     col_cache: dict[str, list[str]] = {}
-    chunks = _split_window_on_cascade(changes)
-    # validate EVERY cascade boundary upfront: an out-of-set reach
+    # resolve every table's reading and map EVERY truncate boundary
+    # upfront: an ambiguous dotted name or an out-of-set cascade
     # anywhere in the window raises with nothing applied (the slot has
     # not advanced, so remediation replays the whole window)
-    casc_targets = {
-        id(casc): _cascade_targets(casc, tables, src_names)
-        for _, casc in chunks
-        if casc is not None
-    }
-    for chunk, casc in chunks:
-        if casc is not None:
-            targets = casc_targets[id(casc)]
-        chunk_epoch = (
-            lsn_to_int(casc["lsn"]) if casc is not None else lsn_to_int(max_lsn)
-        )
+    claims = {t: _claims(changes, src_names.get(t, t)) for t in tables}
+    chunks = _split_window_on_truncate(changes)
+    targets = [
+        _truncate_targets(trunc, claims) if trunc else []
+        for _, trunc in chunks
+    ]
+    for (chunk, trunc), trunc_targets in zip(chunks, targets):
+        epoch = lsn_to_int(trunc["lsn"] if trunc else max_lsn)
         for table, key_cols in tables.items():
-            want = src_names.get(table, table)
-            mine = _select_changes(chunk, want)
+            mine = [
+                c for c in chunk if claims[table](c["schema"], c["table"])
+            ]
             if not mine:
                 continue
             if table not in col_cache:
@@ -672,15 +508,22 @@ def replicate_pg_tables(
                     f.name
                     for f in introspect_pg(dst_dsn)[table.split(".")[-1]]
                 ]
-            applied[table] += _apply_table_window(
-                spark, dst_dsn, table, key_cols, mine, chunk_epoch,
-                col_cache[table], n_writers, skip_unapplyable, want,
+            cols = col_cache[table]
+            df = spark.createDataFrame(
+                _changes_to_rows(mine, cols),
+                ", ".join(f"`{n}` string" for n in cols)
+                + ", op string, seq long",
             )
-        if casc is not None:
-            _apply_cascade_truncate(
-                dst_dsn, targets,
-                "restart_seqs" in casc.get("flags", ""),
-                lsn_to_int(casc["lsn"]),
+            applied[table] += sum(
+                apply_pg_cdc(
+                    df, dst_dsn, table, key_cols=key_cols, seq_col="seq",
+                    epoch_id=epoch,
+                )[1:]
+            )
+        if trunc_targets:
+            _apply_truncate(
+                dst_dsn, trunc_targets,
+                "restart_seqs" in trunc.get("flags", ""), epoch,
             )
     advance_cdc_slot(src_dsn, slot, max_lsn)
     return applied

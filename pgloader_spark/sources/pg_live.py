@@ -23,8 +23,10 @@ Reference parity (dimitri/pgloader):
 Scale notes: the driver only runs small catalog queries (the column
 catalog, and ``pg_relation_size`` to size the ctid ranges); all data
 movement happens executor-side, one connection per task.  COPY text
-parsing reuses the same escape tables as the file-based COPY source,
-so a PG read and a ``.dat`` read are byte-for-byte the same transform.
+parsing (``parse_copy_text``) decodes the seven named backslash escapes
+the server emits with its own ``_UNESCAPE`` table; the file-based COPY
+source (``sources/copytext.py``) has separate Column decoders that also
+read hex and octal escapes.
 """
 
 from __future__ import annotations
@@ -831,14 +833,10 @@ def apply_pg_cdc(
     dsn: str,
     table: str,
     key_cols: list[str],
-    op_col: str = "op",
     seq_col: str | None = None,
-    n_writers: int | None = None,
     epoch_id: int | None = None,
-    truncate_first: bool = False,
-    truncate_restart_identity: bool = False,
 ) -> tuple[int, int, int]:
-    """Apply a CDC batch (op column: I/U/D) in ONE server-side
+    """Apply a CDC batch (``op`` column: I/U/D) in ONE server-side
     transaction: collapsed last-op-per-key semantics — deletes remove,
     inserts/updates upsert, and a key's earlier ops in the same batch
     are superseded by its last (ordered by ``seq_col`` — the LSN/event
@@ -862,18 +860,12 @@ def apply_pg_cdc(
     runs under a session advisory lock keyed on the stage name —
     concurrent applies to the same target queue instead of
     DROP/recreating each other's stage mid-flight.
-
-    ``truncate_first`` empties the target INSIDE the apply
-    transaction before the ops land — how pg_cdc's window splitting
-    replays a source TRUNCATE (``truncate_restart_identity`` maps the
-    stream's restart_seqs flag); transactional, so crash-safety and
-    the epoch guarantee are unchanged.
     """
     staging = sibling_table(table, "__cdc_stage")
     log = quote_qualified(sibling_table(table, "__epochs"))
     q_target = quote_qualified(table)
     q_stage = quote_qualified(staging)
-    data_cols = [c for c in df.columns if c not in (op_col, seq_col)]
+    data_cols = [c for c in df.columns if c not in ("op", seq_col)]
     order_expr = f'"__seq" DESC' if seq_col else "ctid DESC"
     lock = PGConn(dsn)
     lock.query(
@@ -917,10 +909,10 @@ def apply_pg_cdc(
 
         staged_df = df.select(
             *data_cols,
-            F.upper(F.col(op_col).cast("string")).alias("__op"),
+            F.upper(F.col("op").cast("string")).alias("__op"),
             *([F.col(seq_col).cast("long").alias("__seq")] if seq_col else []),
         )
-        staged = write_pg_copy(staged_df, dsn, staging, n_writers=n_writers)
+        staged = write_pg_copy(staged_df, dsn, staging)
         collist = ", ".join(f'"{c}"' for c in data_cols)
         keylist = ", ".join(f'"{c}"' for c in key_cols)
         upd_cols = [c for c in data_cols if c not in key_cols]
@@ -938,19 +930,6 @@ def apply_pg_cdc(
         key_eq = " AND ".join(f't."{k}" = d."{k}"' for k in key_cols)
         with PGConn(dsn) as conn:
             conn.query("BEGIN")
-            if truncate_first:
-                # replayed source TRUNCATE (pg_cdc window splitting):
-                # transactional in PostgreSQL, so a crash before COMMIT
-                # leaves the target untouched and the epoch log keeps
-                # the replay exactly-once like any other segment
-                conn.query(
-                    f"TRUNCATE {q_target}"
-                    + (
-                        " RESTART IDENTITY"
-                        if truncate_restart_identity
-                        else ""
-                    )
-                )
             _, drows = conn.query(
                 f"WITH last AS {last}, del AS ("
                 f"DELETE FROM {q_target} t USING "

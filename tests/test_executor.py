@@ -69,6 +69,25 @@ TARGET TABLE fixed
     assert rows[1]["d"] == "firstline"
 
 
+def test_fixed_inline_skip_header(spark, tmp_path):
+    """``WITH skip header = N`` drops the first N inline lines, as it
+    does for the same data read from a file."""
+    data = "AAAAABBBBB\n00001alpha\n00002beta\n"
+    (tmp_path / "data.fixed").write_text(data)
+    for source in ("inline", f"'{tmp_path / 'data.fixed'}'"):
+        cmd = f"""
+LOAD FIXED
+  FROM {source} ( a from 0 for 5, b from 5 for 5 )
+  INTO postgresql:///pgloader
+TARGET TABLE fixed ( a, b )
+  WITH skip header = 1;
+
+{data if source == "inline" else ""}"""
+        report = run_command_text(spark, cmd, root_dir=str(tmp_path))
+        got = sorted(tuple(r) for r in report.result.collect())
+        assert got == [("00001", "alpha"), ("00002", "beta")], source
+
+
 def test_before_after_load_hooks(spark, tmp_path):
     ran = []
     cmd = """

@@ -6,6 +6,8 @@ from __future__ import annotations
 import pytest
 
 from pgloader_spark.sources.pg_cdc import (
+    _claims,
+    _truncate_targets,
     advance_cdc_slot,
     lsn_to_int,
     parse_test_decoding,
@@ -31,14 +33,28 @@ def drop_cdc_slot(dsn: str, slot: str) -> None:
         c.query(f"SELECT pg_drop_replication_slot('{slot}')")
 
 
-def _drain(spark, dsn, slot, table, src_table, **kw) -> int:
+def _drain(spark, dsn, slot, table, src_table) -> int:
     """One drain of SLOT into TABLE (keyed on ``id``) from SRC_TABLE on
     the same server; returns the changes applied to TABLE."""
     got = replicate_pg_tables(
         spark, dsn, slot, dsn, {table: ["id"]},
-        src_tables={table: src_table}, **kw,
+        src_tables={table: src_table},
     )
     return got.get(table, 0)
+
+
+def _select(changes, want):
+    """The drain's per-table filter: WANT's reading, resolved over the
+    whole window, applied to every event in it."""
+    claimed = _claims(changes, want)
+    return [c for c in changes if claimed(c["schema"], c["table"])]
+
+
+def _targets(event, tables, src_names):
+    """The drain's target mapping for a window holding just EVENT."""
+    return _truncate_targets(
+        event, {t: _claims([event], src_names.get(t, t)) for t in tables}
+    )
 
 
 @pytest.fixture(scope="module")
@@ -113,19 +129,13 @@ def test_changes_to_rows_expansion_and_rejection():
             "cols": {}, "no_tuple_data": True}]
     with pytest.raises(ValueError, match="REPLICA IDENTITY"):
         _changes_to_rows(bad, ["id", "v"])
-    assert _changes_to_rows(bad, ["id", "v"], skip_unapplyable=True) == []
 
 
-def test_table_matching_and_strict_window():
-    from pgloader_spark.sources.pg_cdc import _check_unmatched, _table_matches
-
+def test_table_matching_schema_qualified():
     c = {"schema": "app", "table": "t", "op": "I", "cols": {}}
-    assert _table_matches(c, "t")           # unqualified: name only
-    assert _table_matches(c, "app.t")
-    assert not _table_matches(c, "other.t")  # schema-qualified match
-    with pytest.raises(ValueError, match="unrequested tables"):
-        _check_unmatched([c], ["other.t"])
-    _check_unmatched([c], ["app.t"])  # no stray -> no raise
+    assert _select([c], "t") == [c]       # unqualified: name only
+    assert _select([c], "app.t") == [c]
+    assert _select([c], "other.t") == []  # schema-qualified match
 
 
 def test_select_changes_dotted_precedence():
@@ -133,23 +143,50 @@ def test_select_changes_dotted_precedence():
     a table literally named 'a.b'.  Conventional reading wins; the
     dotted-literal fallback applies only when conventional matches
     nothing in the window; BOTH present raises."""
-    from pgloader_spark.sources.pg_cdc import _select_changes
-
     conv = {"schema": "a", "table": "b", "op": "I", "cols": {}}
     lit = {"schema": "public", "table": "a.b", "op": "I", "cols": {}}
     other = {"schema": "public", "table": "x", "op": "I", "cols": {}}
 
     # conventional-only window: picks schema-a table-b
-    assert _select_changes([conv, other], "a.b") == [conv]
+    assert _select([conv, other], "a.b") == [conv]
     # literal-only window: the dotted fallback still works
-    assert _select_changes([lit, other], "a.b") == [lit]
+    assert _select([lit, other], "a.b") == [lit]
     # both present: refuse rather than merge two source tables
     with pytest.raises(ValueError, match="ambiguous"):
-        _select_changes([conv, lit], "a.b")
+        _select([conv, lit], "a.b")
     # unqualified and unrelated names are untouched by the rule
-    assert _select_changes([conv, lit, other], "x") == [other]
+    assert _select([conv, lit, other], "x") == [other]
     # schema-qualified dotted-literal ('public.a.b') is unambiguous
-    assert _select_changes([conv, lit], "public.a.b") == [lit]
+    assert _select([conv, lit], "public.a.b") == [lit]
+
+
+def test_dotted_reading_resolved_over_whole_window():
+    """The reading of want='a.b' is resolved once over the WHOLE window,
+    counting the tables each TRUNCATE names as well as DML: both
+    readings anywhere in it raise, even when a TRUNCATE boundary
+    separates them or one reading appears only as a TRUNCATE."""
+    conv = {"schema": "a", "table": "b", "op": "I", "cols": {}}
+    lit = {"schema": "public", "table": "a.b", "op": "I", "cols": {}}
+
+    def tr(*pairs):
+        return {"op": "T", "schema": pairs[0][0], "table": pairs[0][1],
+                "cols": {}, "truncate": True, "tables": list(pairs),
+                "all_tables": [f"{s}.{t}" for s, t in pairs], "flags": ""}
+
+    # conventional DML next to a TRUNCATE of public."a.b"
+    with pytest.raises(ValueError, match="ambiguous"):
+        _claims([conv, tr(("public", "a.b"))], "a.b")
+    # literal DML next to a TRUNCATE of a.b
+    with pytest.raises(ValueError, match="ambiguous"):
+        _claims([tr(("a", "b")), lit], "a.b")
+    # the two readings split apart by an unrelated TRUNCATE
+    with pytest.raises(ValueError, match="ambiguous"):
+        _claims([conv, tr(("public", "x")), lit], "a.b")
+    # one reading alone, DML and TRUNCATE alike, resolves to it
+    claimed = _claims([tr(("public", "a.b")), lit], "a.b")
+    assert claimed("public", "a.b") and not claimed("a", "b")
+    claimed = _claims([tr(("a", "b")), conv], "a.b")
+    assert claimed("a", "b") and not claimed("public", "a.b")
 
 
 def test_sibling_table_schema_qualified():
@@ -181,7 +218,7 @@ def test_cdc_capture_and_replicate_end_to_end(logical_dsn, spark):
         changes2, _ = peek_cdc_changes(dsn, "s_rep")
         assert len(changes2) == len(changes)
 
-        applied = _drain(spark, dsn, "s_rep", "cdc_dst", "cdc_src", n_writers=2)
+        applied = _drain(spark, dsn, "s_rep", "cdc_dst", "cdc_src")
         assert applied >= 2  # collapsed upserts + the delete
         with PGConn(dsn) as c:
             _, rows = c.query("SELECT id, v FROM cdc_dst ORDER BY id")
@@ -586,9 +623,7 @@ def test_mid_stream_add_column_rejects_then_recovers(logical_dsn, spark):
 
 def test_parse_truncate_single_and_multi_table():
     """TRUNCATE lines parse (pre-r8: returned None == silently dropped)
-    and match table filters on ANY named table."""
-    from pgloader_spark.sources.pg_cdc import _table_matches
-
+    and map to targets through ANY named table."""
     p = parse_test_decoding
     one = p("table public.widgets: TRUNCATE: (no-flags)")
     assert one["op"] == "T" and one["truncate"] is True
@@ -596,10 +631,15 @@ def test_parse_truncate_single_and_multi_table():
     multi = p("table public.a, other.b: TRUNCATE: restart_seqs cascade")
     assert multi["all_tables"] == ["public.a", "other.b"]
     assert multi["flags"] == "restart_seqs cascade"
-    assert _table_matches(multi, "a")
-    assert _table_matches(multi, "other.b")
-    assert not _table_matches(multi, "public.b")
-    assert not _table_matches(multi, "c")
+    plain = {**multi, "flags": ""}
+
+    def claimed(want):
+        return _targets(plain, {want: ["id"]}, {}) == [want]
+
+    assert claimed("a")
+    assert claimed("other.b")
+    assert not claimed("public.b")
+    assert not claimed("c")
 
 
 def test_changes_to_rows_truncate_raises():
@@ -611,10 +651,6 @@ def test_changes_to_rows_truncate_raises():
     }]
     with pytest.raises(ValueError, match="TRUNCATE of public.t"):
         _changes_to_rows(tr, ["id", "v"])
-    # skip_unapplyable does NOT swallow truncates (dropping one is
-    # silent divergence, unlike a keyless DELETE the caller opted out of)
-    with pytest.raises(ValueError, match="TRUNCATE"):
-        _changes_to_rows(tr, ["id", "v"], skip_unapplyable=True)
 
 
 def test_mid_stream_truncate_replays_and_converges(logical_dsn, spark):
@@ -660,9 +696,11 @@ def test_mid_stream_truncate_replays_and_converges(logical_dsn, spark):
 
 
 def test_split_on_truncate_segments_and_cascade():
-    """Unit: window splitting yields replay-stable epoch-labelled
-    segments; CASCADE truncates stay loud."""
-    from pgloader_spark.sources.pg_cdc import _split_on_truncate
+    """Unit: the window splits at every TRUNCATE into chunks whose
+    boundary event carries the replay-stable epoch (its own LSN; the
+    final chunk takes the window's commit LSN); CASCADE truncates that
+    leave the replicated set stay loud."""
+    from pgloader_spark.sources.pg_cdc import _split_window_on_truncate
 
     def ins(lsn, vid):
         return {"op": "I", "schema": "public", "table": "t",
@@ -676,32 +714,25 @@ def test_split_on_truncate_segments_and_cascade():
     # ops, T, ops, T(T immediately follows), tail ops
     mine = [ins("0/10", "1"), tr("0/20"), ins("0/30", "2"),
             tr("0/40"), tr("0/50"), ins("0/60", "3")]
-    segs = _split_on_truncate(mine, window_epoch=999)
-    # (trunc?, restart?, n_ops, epoch)
-    shape = [(t, r, len(ops), e) for t, r, ops, e in segs]
+    chunks = _split_window_on_truncate(mine)
+    # (n_ops, boundary lsn)
+    shape = [(len(ops), ev and ev["lsn"]) for ops, ev in chunks]
     assert shape == [
-        (False, False, 1, 0x20),  # pre-truncate ops, epoch = T1 lsn
-        (True, False, 1, 0x40),   # T1 + ops, epoch = T2 lsn
-        (True, False, 0, 0x50),   # T2 alone (consecutive), epoch = T3
-        (True, False, 1, 999),    # T3 + tail, window epoch
+        (1, "0/20"),  # pre-truncate ops, epoch = T1 lsn
+        (1, "0/40"),  # ops after T1, epoch = T2 lsn
+        (0, "0/50"),  # T2 alone (consecutive), epoch = T3
+        (1, None),    # tail, window epoch
     ]
-    # restart_seqs flag maps through; cascade raises loudly
-    segs = _split_on_truncate([tr("0/20", "restart_seqs"), ins("0/30", "1")],
-                              window_epoch=7)
-    assert [(t, r) for t, r, _, _ in segs] == [(True, True)]
+    # a cascade beyond the replicated set raises loudly
     with pytest.raises(ValueError, match="CASCADE"):
-        _split_on_truncate([tr("0/20", "restart_seqs cascade")], 7)
+        _targets(tr("0/20", "restart_seqs cascade"), {"u": ["id"]}, {})
 
 
 def test_cascade_unit_split_and_targets():
-    """Unit (r10, r9 ask #4): the window-level cascade splitter, the
-    reached-set -> target mapping with its out-of-set raise, and the
-    single-want allowance in the per-table splitter."""
-    from pgloader_spark.sources.pg_cdc import (
-        _cascade_targets,
-        _split_on_truncate,
-        _split_window_on_cascade,
-    )
+    """Unit (r10, r9 ask #4): the window splitter, the event -> target
+    mapping with its out-of-set CASCADE raise, and a plain TRUNCATE
+    skipping tables outside the set."""
+    from pgloader_spark.sources.pg_cdc import _split_window_on_truncate
 
     def ins(lsn, tbl, vid):
         return {"op": "I", "schema": "public", "table": tbl,
@@ -714,46 +745,45 @@ def test_cascade_unit_split_and_targets():
                 "tables": [("public", t) for t in tabs],
                 "flags": flags, "lsn": lsn}
 
-    # window splitter: cascade events become chunk boundaries; plain
-    # truncates stay inside chunks (per-table mechanics own them)
+    # window splitter: plain and cascade truncates are both boundaries
     win = [ins("0/10", "p", "1"), tr("0/20", ["p"]),
            ins("0/30", "c", "2"), tr("0/40", ["p", "c"], "cascade"),
            ins("0/50", "p", "3")]
-    chunks = _split_window_on_cascade(win)
+    chunks = _split_window_on_truncate(win)
     assert [(len(ch), ev is not None) for ch, ev in chunks] == [
-        (3, True), (1, False),
+        (1, True), (1, True), (1, False),
     ]
 
     # target mapping + out-of-set raise
     tables = {"p_dst": ["id"], "c_dst": ["id"]}
     src = {"p_dst": "p", "c_dst": "c"}
     ev = tr("0/40", ["p", "c"], "cascade")
-    assert _cascade_targets(ev, tables, src) == ["p_dst", "c_dst"]
+    assert _targets(ev, tables, src) == ["p_dst", "c_dst"]
     ev_out = tr("0/40", ["p", "c", "other"], "cascade")
     with pytest.raises(ValueError, match="outside the replicated set"):
-        _cascade_targets(ev_out, tables, src)
+        _targets(ev_out, tables, src)
+    # a plain truncate maps its in-set tables and skips the rest
+    assert _targets(tr("0/40", ["c", "other"]), tables, src) == [
+        "c_dst"
+    ]
+    assert _targets(tr("0/40", ["other"]), tables, src) == []
 
-    # per-table splitter: a cascade fully contained in the one want
-    # (self-referencing FK) collapses to a plain truncate; beyond it
-    # still raises
+    # a self-referencing cascade (reached set = the one table) replays
     self_c = tr("0/20", ["t"], "cascade")
-    segs = _split_on_truncate([self_c, ins("0/30", "t", "1")], 7, want="t")
-    assert [(t, len(ops)) for t, _, ops, _ in segs] == [(True, 1)]
+    assert _targets(self_c, {"t": ["id"]}, {}) == ["t"]
     with pytest.raises(ValueError, match="CASCADE"):
-        _split_on_truncate([tr("0/20", ["t", "u"], "cascade")], 7, want="t")
-    with pytest.raises(ValueError, match="CASCADE"):
-        _split_on_truncate([self_c], 7)  # no want -> conservative raise
+        _targets(tr("0/20", ["t", "u"], "cascade"), {"t": ["id"]}, {})
 
 
 def test_cascade_window_split_property():
-    """Property: for ANY window, _split_window_on_cascade is a lossless
-    order-preserving partition — concatenating chunk_i + [cascade_i]
-    reproduces the original sequence, every cascade event is a boundary
-    (never inside a chunk), plain truncates and DML stay in chunks."""
+    """Property: for ANY window, _split_window_on_truncate is a lossless
+    order-preserving partition — concatenating chunk_i + [truncate_i]
+    reproduces the original sequence, and every TRUNCATE event (plain
+    or cascade) is a chunk boundary, never inside a chunk."""
     from hypothesis import given
     from hypothesis import strategies as st
 
-    from pgloader_spark.sources.pg_cdc import _split_window_on_cascade
+    from pgloader_spark.sources.pg_cdc import _split_window_on_truncate
 
     def ev(kind_flags):
         kind, flags = kind_flags
@@ -776,17 +806,15 @@ def test_cascade_window_split_property():
     @given(events)
     def check(seq):
         window = [ev(e) for e in seq]
-        chunks = _split_window_on_cascade(window)
+        chunks = _split_window_on_truncate(window)
+        assert len(chunks) == sum(1 for c in window if c.get("truncate")) + 1
         rebuilt = []
-        for i, (chunk, casc) in enumerate(chunks):
-            for c in chunk:
-                assert not (
-                    c.get("truncate") and "cascade" in c.get("flags", "")
-                )
+        for i, (chunk, trunc) in enumerate(chunks):
+            assert not any(c.get("truncate") for c in chunk)
             rebuilt.extend(chunk)
-            if casc is not None:
-                assert "cascade" in casc["flags"]
-                rebuilt.append(casc)
+            if trunc is not None:
+                assert trunc["truncate"]
+                rebuilt.append(trunc)
             else:
                 assert i == len(chunks) - 1  # only the final chunk
         assert rebuilt == window
@@ -804,7 +832,7 @@ def test_cascade_truncate_replays_when_fk_closed(logical_dsn, spark):
     pass this test.  Replays of the same truncate epoch are no-ops."""
     from pgloader_spark.plans.verify_load import verify_replication
     from pgloader_spark.sources.pg_cdc import (
-        _apply_cascade_truncate,
+        _apply_truncate,
         replicate_pg_tables,
     )
 
@@ -855,7 +883,7 @@ def test_cascade_truncate_replays_when_fk_closed(logical_dsn, spark):
                 'SELECT epoch FROM "cas_c_dst__truncate_epochs"'
             )
         assert len(logged) == 1
-        _apply_cascade_truncate(
+        _apply_truncate(
             dsn, ["cas_p_dst", "cas_c_dst"], False, int(logged[0][0])
         )
         with PGConn(dsn) as c:
@@ -903,15 +931,131 @@ def test_cascade_truncate_out_of_set_still_raises(logical_dsn, spark):
 def test_parse_quoted_identifiers():
     """Quoted identifiers with commas/dots parse losslessly (r8
     advice: naive split mis-parsed them into bogus table entries)."""
-    from pgloader_spark.sources.pg_cdc import _table_matches
-
     p = parse_test_decoding
     tr = p('table public."we,ird", other."dot.ted": TRUNCATE: (no flags)')
     assert tr["tables"] == [("public", "we,ird"), ("other", "dot.ted")]
-    assert _table_matches(tr, "public.we,ird")
-    assert _table_matches(tr, "dot.ted")        # exact dotted table name
-    assert _table_matches(tr, "other.dot.ted")  # schema-qualified form
-    assert not _table_matches(tr, "public.dot.ted")
-    assert not _table_matches(tr, "ted")
+
+    def claimed(want):
+        return _targets(tr, {want: ["id"]}, {}) == [want]
+
+    assert claimed("public.we,ird")
+    assert claimed("dot.ted")        # exact dotted table name
+    assert claimed("other.dot.ted")  # schema-qualified form
+    assert not claimed("public.dot.ted")
+    assert not claimed("ted")
     ins = p('table "My Schema"."Quo""ted": INSERT: id[integer]:1')
     assert ins["schema"] == "My Schema" and ins["table"] == 'Quo"ted'
+
+
+def test_plain_truncate_of_fk_linked_tables_replays_in_one_statement(
+    logical_dsn, spark
+):
+    """Live: ``TRUNCATE p, c`` (no CASCADE) on FK-linked tables that are
+    both replicated replays as ONE ``TRUNCATE`` over both targets.  The
+    targets carry the same FK, so truncating either target alone fails
+    with 0A000 (cannot truncate a table referenced in a foreign key
+    constraint) and the window could never drain."""
+    from pgloader_spark.plans.verify_load import verify_replication
+
+    dsn = logical_dsn
+    with PGConn(dsn) as c:
+        for side in ("src", "dst"):
+            c.query(
+                f"CREATE TABLE fkt_p_{side} (id bigint PRIMARY KEY, v text)"
+            )
+            c.query(
+                f"CREATE TABLE fkt_c_{side} (id bigint PRIMARY KEY, "
+                f"pid bigint REFERENCES fkt_p_{side}(id))"
+            )
+    create_cdc_slot(dsn, "s_fkt")
+    try:
+        with PGConn(dsn) as c:
+            c.query("INSERT INTO fkt_p_src VALUES (1, 'one'), (2, 'two')")
+            c.query("INSERT INTO fkt_c_src VALUES (10, 1), (20, 2)")
+            c.query("TRUNCATE fkt_p_src, fkt_c_src")
+            c.query("INSERT INTO fkt_p_src VALUES (3, 'three')")
+            c.query("INSERT INTO fkt_c_src VALUES (30, 3)")
+        tables = {"fkt_p_dst": ["id"], "fkt_c_dst": ["id"]}
+        src = {"fkt_p_dst": "fkt_p_src", "fkt_c_dst": "fkt_c_src"}
+        got = replicate_pg_tables(
+            spark, dsn, "s_fkt", dsn, tables, src_tables=src
+        )
+        assert got == {"fkt_p_dst": 3, "fkt_c_dst": 3}
+        for s_tbl, d_tbl in (("fkt_p_src", "fkt_p_dst"),
+                             ("fkt_c_src", "fkt_c_dst")):
+            row = verify_replication(
+                spark, dsn, dsn, s_tbl, d_tbl, ["id"]
+            ).collect()[0]
+            assert row.match, (d_tbl, row)
+        with PGConn(dsn) as c:
+            _, rows = c.query("SELECT id, pid FROM fkt_c_dst ORDER BY id")
+            assert rows == [("30", "3")]
+        got2 = replicate_pg_tables(
+            spark, dsn, "s_fkt", dsn, tables, src_tables=src
+        )
+        assert set(got2.values()) <= {0}
+    finally:
+        drop_cdc_slot(dsn, "s_fkt")
+
+
+def test_plain_truncate_out_of_set_truncates_in_set_only(logical_dsn, spark):
+    """Live: ``TRUNCATE in_set, out_of_set`` without CASCADE truncates
+    only the replicated target and does not raise: the out-of-set
+    table is skipped, as its other events are."""
+    dsn = logical_dsn
+    with PGConn(dsn) as c:
+        c.query("CREATE TABLE pio_in_src (id bigint PRIMARY KEY, v text)")
+        c.query("CREATE TABLE pio_out_src (id bigint PRIMARY KEY)")
+        c.query("CREATE TABLE pio_in_dst (id bigint PRIMARY KEY, v text)")
+    create_cdc_slot(dsn, "s_pio")
+    try:
+        with PGConn(dsn) as c:
+            c.query("INSERT INTO pio_in_src VALUES (1, 'one'), (2, 'two')")
+            c.query("INSERT INTO pio_out_src VALUES (1)")
+            c.query("TRUNCATE pio_in_src, pio_out_src")
+            c.query("INSERT INTO pio_in_src VALUES (3, 'three')")
+        assert _drain(spark, dsn, "s_pio", "pio_in_dst", "pio_in_src") == 3
+        with PGConn(dsn) as c:
+            _, rows = c.query("SELECT id, v FROM pio_in_dst ORDER BY id")
+            assert rows == [("3", "three")]
+            _, logged = c.query('SELECT epoch FROM "pio_in_dst__truncate_epochs"')
+            assert len(logged) == 1
+        # the slot advanced past the truncate
+        changes, _ = peek_cdc_changes(dsn, "s_pio")
+        assert not [c for c in changes if c.get("truncate")
+                    and ("public", "pio_out_src") in c["tables"]]
+    finally:
+        drop_cdc_slot(dsn, "s_pio")
+
+
+def test_truncate_restart_identity_restarts_target_sequence(
+    logical_dsn, spark
+):
+    """Live: a source ``TRUNCATE ... RESTART IDENTITY`` replays with
+    RESTART IDENTITY, so the target's own sequence restarts; a plain
+    TRUNCATE leaves it where it was."""
+    dsn = logical_dsn
+    with PGConn(dsn) as c:
+        c.query("CREATE TABLE rid_src (id bigserial PRIMARY KEY, v text)")
+        c.query("CREATE TABLE rid_dst (id bigserial PRIMARY KEY, v text)")
+        # take the target's sequence to 3
+        c.query("INSERT INTO rid_dst (v) VALUES ('x'), ('y'), ('z')")
+    create_cdc_slot(dsn, "s_rid")
+    try:
+        with PGConn(dsn) as c:
+            c.query("INSERT INTO rid_src (v) VALUES ('a')")
+            c.query("TRUNCATE rid_src")
+        assert _drain(spark, dsn, "s_rid", "rid_dst", "rid_src") == 1
+        with PGConn(dsn) as c:
+            _, seq = c.query("SELECT last_value, is_called FROM rid_dst_id_seq")
+            assert seq == [("3", "t")]
+            c.query("TRUNCATE rid_src RESTART IDENTITY")
+            c.query("INSERT INTO rid_src (v) VALUES ('b')")
+        assert _drain(spark, dsn, "s_rid", "rid_dst", "rid_src") == 1
+        with PGConn(dsn) as c:
+            _, seq = c.query("SELECT last_value, is_called FROM rid_dst_id_seq")
+            assert seq == [("1", "f")]
+            _, rows = c.query("SELECT id, v FROM rid_dst ORDER BY id")
+            assert rows == [("1", "b")]
+    finally:
+        drop_cdc_slot(dsn, "s_rid")

@@ -2745,7 +2745,7 @@ def test_streaming_sink_exactly_once(seeded, spark, tmp_path):
         .load(str(src))
     )
     q = _cdc_stream(
-        stream, seeded, "eo_sink", ["id"], str(tmp_path / "eo_ck"), n_writers=2
+        stream, seeded, "eo_sink", ["id"], str(tmp_path / "eo_ck")
     )
     try:
         q.processAllAvailable()
@@ -2810,7 +2810,7 @@ def test_apply_pg_cdc_collapsed_last_op(seeded, spark):
         "id bigint, v string, op string, seq long",
     )
     staged, ups, dels = apply_pg_cdc(
-        batch, seeded, "cdc_t", key_cols=["id"], seq_col="seq", n_writers=2
+        batch, seeded, "cdc_t", key_cols=["id"], seq_col="seq"
     )
     assert staged == 7
     with PGConn(seeded) as c:
@@ -2848,7 +2848,7 @@ def test_streaming_cdc_exactly_once(seeded, spark, tmp_path):
     )
     q = _cdc_stream(
         stream, seeded, "cdcs_t", ["id"],
-        str(tmp_path / "cdc_ck"), seq_col="seq", n_writers=2,
+        str(tmp_path / "cdc_ck"), seq_col="seq",
     )
     try:
         q.processAllAvailable()

@@ -109,29 +109,6 @@ def test_shuffle_shard_plan_is_a_deterministic_permutation(spark):
     }
 
 
-def test_shuffle_shard_plan_prepartition_single_exchange(spark):
-    """r7 review: with shard_partitions set (the export path), the
-    position window must reuse the explicit repartition's clustering
-    — exactly ONE Exchange in the plan, and the mapping is identical
-    to the default path."""
-    import re
-
-    from pgloader_spark.operators.sampling import shuffle_shard_plan
-
-    df = spark.range(0, 500).select(F.col("id").alias("doc_id"))
-    pre = shuffle_shard_plan(df, 5, seed=2, shard_partitions=5)
-    je = pre._jdf.queryExecution()
-    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-        "formatted"
-    )
-    plan = je.explainString(mode)
-    assert len(re.findall(r"\(\d+\) Exchange", plan)) == 1, plan
-    base = shuffle_shard_plan(df, 5, seed=2)
-    assert {(r["doc_id"], r["shard"], r["pos"]) for r in pre.collect()} == {
-        (r["doc_id"], r["shard"], r["pos"]) for r in base.collect()
-    }
-
-
 def test_weighted_hash_sample_matches_reference_and_is_stable(spark):
     """A-ES selection must equal the top-k of the exact per-row keys
     (independent Python recompute), exclude non-positive weights, and

@@ -71,37 +71,3 @@ def test_using_transform_multi_arg(spark):
         ]
     )
     assert rows(proj.apply(df)) == [("1.2.3.4/31",)]
-
-
-def test_preprocessor_dataframe_hook(spark):
-    """process_fn: the declarative DataFrame-level preprocessor runs
-    before projection (api.lisp:26-27 process-fn slot)."""
-    import pyspark.sql.functions as F
-
-    from pgloader_spark.operators.projection import FieldSpec, Projection
-
-    df = spark.createDataFrame([("a",), ("b",)], "x string")
-    proj = Projection(
-        fields=[FieldSpec("x")],
-        process_fn=lambda d: d.withColumn("x", F.upper("x")),
-    )
-    assert {r["x"] for r in proj.apply(df).collect()} == {"A", "B"}
-
-
-def test_preprocessor_row_hook_drops_and_edits(spark):
-    """process_row_fn: per-row funcallable semantics — edit the row
-    dict or return None to drop it."""
-    from pgloader_spark.operators.projection import FieldSpec, Projection
-
-    df = spark.createDataFrame([(1, "keep"), (2, "drop"), (3, "keep")],
-                               "id long, tag string")
-
-    def fn(row):
-        if row["tag"] == "drop":
-            return None
-        return {"id": row["id"] * 100, "tag": row["tag"].upper()}
-
-    proj = Projection(fields=[FieldSpec("id"), FieldSpec("tag")],
-                      process_row_fn=fn)
-    got = {(r["id"], r["tag"]) for r in proj.apply(df).collect()}
-    assert got == {(100, "KEEP"), (300, "KEEP")}
