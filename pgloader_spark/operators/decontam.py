@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 
 from pgloader_spark.operators.similarity import np_round_half_away
 from pgloader_spark.operators.text import ngrams_of, tokens
+from pgloader_spark.session import skip_unchanged_zip_rereads
 
 
 def eval_ngram_hashes(
@@ -140,6 +141,7 @@ def semantic_decontaminate(
     schema = "id long, contaminated boolean"
 
     def flag(batches):
+        skip_unchanged_zip_rereads()
         import pandas as pd
 
         Em, e_n2 = be.value

@@ -37,6 +37,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from pgloader_spark.session import skip_unchanged_zip_rereads
+
 MEDIA_META_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType()),
@@ -102,6 +104,7 @@ def image_metadata(df: DataFrame, id_col: str = "doc_id", bin_col: str = "payloa
     (no shuffle); scales with input partitions."""
 
     def decode(batches: Iterator) -> Iterator:
+        skip_unchanged_zip_rereads()
         import pandas as pd  # noqa: PLC0415 — executor-side import
 
         for pdf in batches:
@@ -215,6 +218,7 @@ def resize_bitmap(
         return arr[ys][:, xs].tobytes()
 
     def stage(batches: Iterator) -> Iterator:
+        skip_unchanged_zip_rereads()
         import pandas as pd  # noqa: PLC0415
 
         for pdf in batches:
@@ -397,6 +401,7 @@ def media_ahash(
     in the error column instead of killing the job."""
 
     def stage(batches: Iterator) -> Iterator:
+        skip_unchanged_zip_rereads()
         import pandas as pd  # noqa: PLC0415
 
         for pdf in batches:
@@ -490,6 +495,7 @@ def media_audio_fingerprint(
     undecodable payloads isolate into the error column."""
 
     def stage(batches: Iterator) -> Iterator:
+        skip_unchanged_zip_rereads()
         import pandas as pd  # noqa: PLC0415
 
         for pdf in batches:
@@ -625,6 +631,7 @@ def video_frames(
     image_metadata / media_ahash."""
 
     def stage(batches: Iterator) -> Iterator:
+        skip_unchanged_zip_rereads()
         import pandas as pd  # noqa: PLC0415
 
         for pdf in batches:
@@ -1310,6 +1317,7 @@ def media_luma_stats(
     pinned = jpeg_backend
 
     def stats(batches: Iterator) -> Iterator:
+        skip_unchanged_zip_rereads()
         import zlib
 
         import numpy as np

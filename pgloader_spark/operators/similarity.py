@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from pgloader_spark.session import ensure_parallelism as _floor_parallelism
+from pgloader_spark.session import skip_unchanged_zip_rereads
 
 
 # ADC query paths (pq_topk / ivfpq_topk[_encoded]) collect the query
@@ -439,6 +440,7 @@ def cosine_topk_blas(
     bq = sc.broadcast((q_ids, Qm, q_n2))
 
     def score(batches):
+        skip_unchanged_zip_rereads()
         import pandas as pd
 
         q_ids, Qm, q_n2 = bq.value
@@ -826,6 +828,7 @@ def pq_encode(
     dsub = len(codebooks[0][0])
 
     def encode(batches):
+        skip_unchanged_zip_rereads()
         import numpy as np
 
         cbs = [np.array(cb, dtype=np.float64) for cb in codebooks]
@@ -997,6 +1000,7 @@ def ivfpq_encode(
     dsub = len(codebooks[0][0])
 
     def encode(batches):
+        skip_unchanged_zip_rereads()
         import numpy as np
 
         CO = np.array(coarse, dtype=np.float64)

@@ -25,7 +25,7 @@ from dataclasses import dataclass
 
 log = logging.getLogger(__name__)
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pgloader_spark.parsers.loadcmd import LoadCommand
@@ -320,40 +320,45 @@ _PG_TO_SPARK_CAST = {
 
 
 def project(df: DataFrame, cmd: LoadCommand) -> DataFrame:
-    """Field options + column list -> one select (project-fields)."""
-    from pgloader_spark.operators.projection import Projection
+    """Field options + column list -> one select (project-fields), built
+    as Spark SQL text; only ``USING`` transforms are Columns."""
+    from pgloader_spark.operators.projection import (
+        Projection,
+        select_sql,
+        sql_ident,
+        sql_string,
+    )
 
-    proj = Projection(fields=cmd.fields, columns=[])
-    field_cols = {f.name: f.expr() for f in cmd.fields}
     if not cmd.columns:
-        if cmd.fields and cmd.source_kind == "csv" and cmd.source != "inline":
-            return proj.apply(df)
-        if cmd.fields and cmd.source == "inline":
-            # inline read already produced raw columns; apply options
-            return df.select(
-                *[field_cols[f.name].alias(f.name) for f in cmd.fields]
-            )
+        if cmd.fields and (cmd.source_kind == "csv" or cmd.source == "inline"):
+            return Projection(fields=cmd.fields).apply(df)
         return df
-    exprs = []
+    field_sql = {f.name: f.sql() for f in cmd.fields}
+    field_cols: dict[str, Column] | None = None
+    items: list[str | Column] = []
     for col in cmd.columns:
+        cast = _PG_TO_SPARK_CAST.get((col.cast_to or "").split("(")[0].strip().lower())
         if col.transform:
+            if field_cols is None:
+                field_cols = {n: F.expr(t) for n, t in field_sql.items()}
             e = compile_using(col.transform, field_cols)
-        elif col.constant is not None:
+            if cast:
+                e = e.try_cast(cast)
+            items.append(e.alias(col.name))
+            continue
+        if col.constant is not None:
             # `USING "Some-Field"`: a double-quoted USING value that
             # names a declared FIELD is a field reference
             # (csv-non-printable.load); anything else is the constant
             # (udc.load's `using "constant value"`)
-            e = field_cols.get(col.constant, F.lit(col.constant))
+            t = field_sql.get(col.constant, sql_string(col.constant))
         else:
             name = col.source or col.name
-            from pgloader_spark.operators.projection import col_ref
-
-            e = field_cols.get(name, col_ref(name))
-        cast = _PG_TO_SPARK_CAST.get((col.cast_to or "").split("(")[0].strip().lower())
+            t = field_sql.get(name, sql_ident(name))
         if cast:
-            e = e.try_cast(cast)
-        exprs.append(e.alias(col.name))
-    return df.select(*exprs)
+            t = f"TRY_CAST({t} AS {cast})"
+        items.append(f"{t} AS {sql_ident(col.name)}")
+    return select_sql(df, items)
 
 
 def apply_column_casts(df: DataFrame, cmd: LoadCommand) -> DataFrame:

@@ -28,7 +28,7 @@ from pgloader_spark.operators import multimodal as _mm
 from pgloader_spark.operators import dedup, similarity
 from pgloader_spark.operators import text as txt
 from pgloader_spark.operators.projection import ColumnSpec, FieldSpec, Projection
-from pgloader_spark.session import read_table
+from pgloader_spark.session import read_table, skip_unchanged_zip_rereads
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
@@ -1442,6 +1442,7 @@ def multimodal_image_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pgloader_spark.operators.multimodal import media_ahash
 
     def synth(batches):
+        skip_unchanged_zip_rereads()
         import hashlib as _hl
 
         import pandas as _pd
@@ -1500,6 +1501,7 @@ def multimodal_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pgloader_spark.operators.multimodal import video_frames
 
     def synth(batches):
+        skip_unchanged_zip_rereads()
         import pandas as _pd
 
         from pgloader_spark.operators.multimodal import (
@@ -1530,6 +1532,7 @@ def multimodal_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     frames = video_frames(avis)
 
     def dims(batches):
+        skip_unchanged_zip_rereads()
         import pandas as _pd
 
         from pgloader_spark.operators.multimodal import decode_png_gray
@@ -1575,6 +1578,7 @@ def multimodal_audio_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pgloader_spark.operators.multimodal import media_audio_fingerprint
 
     def synth(batches):
+        skip_unchanged_zip_rereads()
         import hashlib as _hl
         import math as _math
 
@@ -1683,6 +1687,7 @@ def multimodal_jpeg_luma_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pgloader_spark.operators.multimodal import media_luma_stats
 
     def synth(batches):
+        skip_unchanged_zip_rereads()
         import pandas as _pd
 
         from pgloader_spark.operators.multimodal import encode_jpeg_gray8

@@ -20,6 +20,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pgloader_spark.operators.projection import sql_ident, sql_string
 from pgloader_spark.session import skip_unchanged_zip_rereads
 
 COPY_NULL = r"\N"
@@ -122,9 +123,24 @@ def read_copy_text(spark: SparkSession, path: str, opts: CopyOptions) -> DataFra
     return df.select(*[decode(F.col(c)).alias(c) for c in df.columns])
 
 
-def encode_copy_escapes(c: Column) -> Column:
-    """Raw text -> COPY-escaped (copy-format.lisp:123-193): backslash
-    first, then control characters.
+# COPY text escapes, as (regex, Java replacement) pairs, backslash first
+_COPY_ESCAPES = (
+    (r"\\", r"\\\\"),
+    ("\t", r"\\t"),
+    ("\n", r"\\n"),
+    ("\r", r"\\r"),
+    ("\x08", r"\\b"),
+    ("\x0c", r"\\f"),
+    ("\x0b", r"\\v"),
+)
+_NEEDS_ESCAPE = "[\\\\\t\n\r\x08\x0c\x0b]"
+_BYTEA_PREFIX = r"\\x"
+
+
+def encode_copy_escapes(c: str) -> str:
+    """Spark SQL text of the string C, COPY-escaped
+    (copy-format.lisp:123-193): backslash first, then control
+    characters.
 
     The 7-regex chain is gated behind one needs-escape probe: almost
     every cell of a real corpus (numbers, timestamps, plain text) has
@@ -133,15 +149,13 @@ def encode_copy_escapes(c: Column) -> Column:
     one regex instead of seven (measured 5x at sf0.1, the difference
     between a COPY sink bound by encode and one bound by the server).
     """
-    needs = c.rlike("[\\\\\t\n\r\x08\x0c\x0b]")
-    full = F.regexp_replace(c, r"\\", r"\\\\")
-    full = F.regexp_replace(full, "\t", r"\\t")
-    full = F.regexp_replace(full, "\n", r"\\n")
-    full = F.regexp_replace(full, "\r", r"\\r")
-    full = F.regexp_replace(full, "\x08", r"\\b")
-    full = F.regexp_replace(full, "\x0c", r"\\f")
-    full = F.regexp_replace(full, "\x0b", r"\\v")
-    return F.when(needs, full).otherwise(c)
+    full = c
+    for pattern, replacement in _COPY_ESCAPES:
+        full = (
+            f"regexp_replace({full}, {sql_string(pattern)}, "
+            f"{sql_string(replacement)})"
+        )
+    return f"CASE WHEN {c} RLIKE {sql_string(_NEEDS_ESCAPE)} THEN {full} ELSE {c} END"
 
 
 # Types whose cast("string") rendering can NEVER contain a COPY
@@ -159,29 +173,23 @@ _ESCAPE_FREE_TYPES = frozenset({
 def to_copy_lines(df: DataFrame, delimiter: str = "\t") -> DataFrame:
     """Encode every column to COPY text and concat into one ``line``
     column — the exact bytes a PostgreSQL COPY sink (or a reject
-    ``.dat`` file, src/utils/reject.lisp:12-34) wants. All Column
-    expressions; distributed end to end.  Escape handling is
-    TYPE-AWARE: only string-ish columns run the escape chain
-    (numerics/timestamps render escape-free by construction)."""
-    from pgloader_spark.operators.projection import col_ref
-
-    dtypes = dict(df.dtypes)
-
-    def enc(c: str) -> Column:
-        # col_ref backtick-quotes so a column NAME containing dots is
-        # not parsed as struct access (fields-with-periods.load)
-        col = col_ref(c)
-        t = dtypes.get(c, "")
+    ``.dat`` file, src/utils/reject.lisp:12-34) wants.  One Spark SQL
+    text, handed to the JVM in one ``selectExpr`` and distributed end
+    to end.  Escape handling is TYPE-AWARE: only string-ish columns
+    run the escape chain (numerics/timestamps render escape-free by
+    construction)."""
+    def enc(c: str, t: str) -> str:
+        col = sql_ident(c)
         if t == "binary":
             # bytea rides COPY text as \x<hex> (one literal backslash,
             # escaped to two on the wire) — raw bytes would smuggle
             # NULs PostgreSQL text parsing rejects
-            payload = F.concat(F.lit("\\\\x"), F.lower(F.hex(col)))
+            payload = f"concat({sql_string(_BYTEA_PREFIX)}, lower(hex({col})))"
         elif t in _ESCAPE_FREE_TYPES or t.startswith("decimal"):
-            payload = col.cast("string")
+            payload = f"CAST({col} AS STRING)"
         else:
-            payload = encode_copy_escapes(col.cast("string"))
-        return F.when(col.isNull(), F.lit(COPY_NULL)).otherwise(payload)
+            payload = encode_copy_escapes(f"CAST({col} AS STRING)")
+        return f"CASE WHEN {col} IS NULL THEN {sql_string(COPY_NULL)} ELSE {payload} END"
 
-    parts = [enc(c) for c in df.columns]
-    return df.select(F.concat_ws(delimiter, *parts).alias("line"))
+    args = [sql_string(delimiter)] + [enc(c, t) for c, t in df.dtypes]
+    return df.selectExpr(f"concat_ws({', '.join(args)}) AS line")

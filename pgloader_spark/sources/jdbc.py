@@ -153,15 +153,13 @@ def range_frame(spark: SparkSession, ranges: list[tuple[int, int]]) -> DataFrame
     LocalTableScanExec rule.  ``createDataFrame`` would slice even one
     range into defaultParallelism partitions, each empty one still a
     Python read task; literal arrays indexed by ``spark.range`` ids add
-    no shuffle and no Python stage."""
-    from pyspark.sql import functions as F
-
+    no shuffle and no Python stage.  Built as one SQL text: a
+    ``lit`` Column per bound would be one Py4J round trip each."""
     k = max(min(len(ranges), spark.sparkContext.defaultParallelism), 1)
-    return spark.range(len(ranges), numPartitions=k).select(
+    return spark.range(len(ranges), numPartitions=k).selectExpr(
         *[
-            F.array(*[F.lit(r[i]) for r in ranges])
-            .cast("array<long>")[F.col("id")]
-            .alias(name)
+            f"CAST(array({', '.join(str(int(r[i])) for r in ranges)})"
+            f" AS array<long>)[id] AS {name}"
             for i, name in enumerate(("lo", "hi"))
         ]
     )

@@ -34,7 +34,7 @@ from __future__ import annotations
 import contextlib
 import itertools
 import os
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -644,24 +644,34 @@ def _copy_batch(
 _MAX_DEFAULT_STREAMS = 64
 
 
-def _cap_copy_streams(lines: "DataFrame", n_writers: int | None) -> "DataFrame":
-    """Resolve the COPY stream layout: explicit ``n_writers`` wins;
-    otherwise keep the input's own partitioning unless it exceeds
-    ``_MAX_DEFAULT_STREAMS`` (repartition + log in that case — a
-    failed load beats a saved shuffle)."""
-    if n_writers:
-        return lines.repartition(n_writers)
-    n_parts = lines.rdd.getNumPartitions()
-    if n_parts > _MAX_DEFAULT_STREAMS:
-        import logging
+def _copy_job(
+    lines: DataFrame, n_writers: int | None, sink: Callable, schema: str
+) -> DataFrame:
+    """``lines.mapInPandas(sink, schema)`` on the COPY stream layout:
+    explicit ``n_writers`` wins; otherwise keep the input's own
+    partitioning unless it exceeds ``_MAX_DEFAULT_STREAMS``
+    (repartition + log in that case — a failed load beats a saved
+    shuffle).
 
-        logging.getLogger("pgloader_spark.pg_live").warning(
-            "COPY sink: input has %d partitions; capping to %d "
-            "concurrent COPY streams (set n_writers / WITH workers to "
-            "override)", n_parts, _MAX_DEFAULT_STREAMS,
-        )
-        return lines.repartition(_MAX_DEFAULT_STREAMS)
-    return lines
+    The partition count comes from the job's own physical plan, the
+    one its ``collect()`` then runs: counting ``lines`` would plan the
+    query a second time, and an adaptive plan's exchange would run its
+    shuffle a second time.  Only a capped input is planned again, over
+    its repartitioned lines."""
+    if n_writers:
+        return lines.repartition(n_writers).mapInPandas(sink, schema)
+    job = lines.mapInPandas(sink, schema)
+    n_parts = job._jdf.queryExecution().toRdd().getNumPartitions()
+    if n_parts <= _MAX_DEFAULT_STREAMS:
+        return job
+    import logging
+
+    logging.getLogger("pgloader_spark.pg_live").warning(
+        "COPY sink: input has %d partitions; capping to %d "
+        "concurrent COPY streams (set n_writers / WITH workers to "
+        "override)", n_parts, _MAX_DEFAULT_STREAMS,
+    )
+    return lines.repartition(_MAX_DEFAULT_STREAMS).mapInPandas(sink, schema)
 
 
 @contextlib.contextmanager
@@ -699,7 +709,7 @@ def write_pg_copy(
 
     Three design rules make this the fast path:
     - The COPY text encode happens JVM-SIDE (``to_copy_lines`` — the
-      same Column-expression escape chain the reject-file sink uses,
+      same SQL escape chain the reject-file sink uses,
       so what its tests prove about encoding holds on the live wire).
     - Rows cross into Python as ARROW BATCHES (``mapInPandas``), and
       each batch becomes one CopyData chunk via a C-speed join.  The
@@ -738,7 +748,7 @@ def write_pg_copy(
         f"COPY {quote_qualified(table)} "
         f'({", ".join(chr(34) + c + chr(34) for c in columns)}) FROM STDIN'
     )
-    lines = _cap_copy_streams(to_copy_lines(df), n_writers)
+    lines = to_copy_lines(df)
 
     isolate = reject_dir is not None
 
@@ -771,8 +781,8 @@ def write_pg_copy(
             "errs": [[e for _, e in rejects]],
         })
 
-    out = lines.mapInPandas(
-        sink, "n long, rejects array<string>, errs array<string>"
+    out = _copy_job(
+        lines, n_writers, sink, "n long, rejects array<string>, errs array<string>"
     )
     # one result row per COPY stream, summed on the driver: an agg()
     # here would add an exchange stage to every COPY

@@ -2172,6 +2172,35 @@ def test_cli_load_database_on_error_stop_fails_fast(seeded, spark, tmp_path):
     assert len(_pg_table_rows(seeded, "db_people")) == 2
 
 
+def test_cli_load_database_column_name_with_backtick(seeded, spark, tmp_path):
+    """A source column whose name holds a backtick loads: the COPY
+    encoder quotes every Spark column name with the backtick doubled."""
+    import sqlite3
+
+    from pgloader_spark.cli import main
+
+    src = tmp_path / "tick.db"
+    con = sqlite3.connect(src)
+    con.execute('CREATE TABLE tick_cols (id integer PRIMARY KEY, "a`b" text, "c.d" text)')
+    con.executemany(
+        "INSERT INTO tick_cols VALUES (?, ?, ?)", [(1, "x", "p"), (2, None, "q")]
+    )
+    con.commit()
+    con.close()
+    with PGConn(seeded) as c:
+        c.query("DROP TABLE IF EXISTS tick_cols")
+    load = tmp_path / "tick.load"
+    load.write_text(
+        f"LOAD DATABASE FROM sqlite://{src} INTO {seeded}\n"
+        "  INCLUDING ONLY TABLE NAMES MATCHING 'tick_cols';\n"
+    )
+    assert main([str(load), "--master", "local[4]",
+                 "--root-dir", str(tmp_path / "root")]) == 0
+    with PGConn(seeded) as c:
+        _, rows = c.query('SELECT id, "a`b", "c.d" FROM tick_cols ORDER BY id')
+    assert rows == [("1", "x", "p"), ("2", None, "q")]
+
+
 def test_cli_load_date_format_and_positional_columns(seeded, spark, tmp_path):
     """The COPY sink aligns the frame to the live target: WITH date
     format parses values PostgreSQL cannot, and a load with no field

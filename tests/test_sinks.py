@@ -104,24 +104,58 @@ def test_encode_rows(spark):
     assert [r.line for r in to_copy_lines(df).collect()] == ["1\t\\N\tx\\ty"]
 
 
+def _count_sink():
+    """A stand-in COPY sink: one row per stream, its line count."""
+
+    def sink(batches):
+        import pandas as pd
+
+        yield pd.DataFrame({"n": [sum(len(b) for b in batches)]})
+
+    return sink
+
+
 def test_copy_stream_cap(spark):
     """r9: with n_writers unset the COPY sink keeps the input's own
     partitioning up to the 64-stream ceiling, then caps — a wide
     cluster input must not map one PG connection per task (stock
-    max_connections is 100)."""
-    from pgloader_spark.sources.pg_live import (
-        _MAX_DEFAULT_STREAMS,
-        _cap_copy_streams,
-    )
+    max_connections is 100).  One result row per COPY stream."""
+    from pgloader_spark.sources.pg_live import _MAX_DEFAULT_STREAMS, _copy_job
+
+    def streams(lines, n_writers):
+        rows = _copy_job(lines, n_writers, _count_sink(), "n long").collect()
+        assert sum(r.n for r in rows) == 1000
+        return len(rows)
 
     lines = spark.range(1000).selectExpr("CAST(id AS STRING) AS line")
-    assert (
-        _cap_copy_streams(lines.repartition(8), None).rdd.getNumPartitions()
-        == 8
-    )
+    assert streams(lines.repartition(8), None) == 8
     wide = lines.repartition(100)
-    assert (
-        _cap_copy_streams(wide, None).rdd.getNumPartitions()
-        == _MAX_DEFAULT_STREAMS
+    assert streams(wide, None) == _MAX_DEFAULT_STREAMS
+    assert streams(wide, 16) == 16
+
+
+def test_copy_job_runs_an_input_shuffle_once(spark):
+    """The stream count is read from the plan the COPY job runs, so an
+    input whose adaptive plan holds an exchange shuffles once: one map
+    stage and one COPY stage, not a second map stage for the count."""
+    from pgloader_spark.sources.pg_live import _copy_job
+
+    sc = spark.sparkContext
+    lines = spark.range(1000, numPartitions=4).selectExpr(
+        "CAST(id AS STRING) AS line"
     )
-    assert _cap_copy_streams(wide, 16).rdd.getNumPartitions() == 16
+    group = "copy-job-shuffle-once"
+    sc.setJobGroup(group, group)
+    try:
+        rows = _copy_job(lines.repartition(8), None, _count_sink(), "n long").collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert (len(rows), sum(r.n for r in rows)) == (8, 1000)
+    st = sc.statusTracker()
+    ran = [
+        sid
+        for job in st.getJobIdsForGroup(group)
+        for sid in st.getJobInfo(job).stageIds
+        if (info := st.getStageInfo(sid)) and info.numCompletedTasks
+    ]
+    assert len(ran) == 2

@@ -123,3 +123,62 @@ def test_read_ranges_tasks_skip_unchanged_rereads(spark):
     if any(r.lazy for r in rows) or not all(r.zips for r in rows):
         pytest.skip("no eager zip importer on the worker path")
     assert [r.reads for r in rows] == [0] * 8
+
+
+def test_query_kernel_leaves_its_worker_skipping_unchanged_rereads(spark):
+    """A query's ``mapInPandas`` kernel (``image_metadata``) installs the
+    guard in its Python worker, so the next task that worker runs reads
+    no unchanged archive.  A unique environment entry gives this test's
+    jobs a Python worker pool of their own, which only the kernel's
+    task has used before the probe task reuses its worker."""
+    import uuid
+
+    from pgloader_spark.operators.multimodal import image_metadata
+
+    def probe(batches):
+        import importlib
+        import sys
+        import zipimport
+
+        import pandas as pd
+
+        for _ in batches:
+            pass
+        zips = sum(
+            isinstance(f, zipimport.zipimporter)
+            for f in sys.path_importer_cache.values()
+        )
+        n = [0]
+        read_directory = zipimport._read_directory
+
+        def counting(path):
+            n[0] += 1
+            return read_directory(path)
+
+        zipimport._read_directory = counting
+        try:
+            importlib.invalidate_caches()
+        finally:
+            zipimport._read_directory = read_directory
+        yield pd.DataFrame(
+            {"reads": [n[0]], "zips": [zips],
+             "lazy": [hasattr(zipimport.zipimporter, "_get_files")]}
+        )
+
+    sc = spark.sparkContext
+    sc.environment["PGLOADER_SPARK_TEST_POOL"] = uuid.uuid4().hex
+    try:
+        docs = spark.createDataFrame(
+            [(1, bytearray(b"not an image"))], "doc_id long, payload binary"
+        ).coalesce(1)
+        assert len(image_metadata(docs).collect()) == 1
+        (row,) = (
+            spark.range(1, numPartitions=1)
+            .mapInPandas(probe, "reads long, zips long, lazy boolean")
+            .collect()
+        )
+    finally:
+        del sc.environment["PGLOADER_SPARK_TEST_POOL"]
+    if row.lazy or not row.zips:
+        pytest.skip("no eager zip importer on the worker path")
+    assert row.reads == 0
